@@ -4,12 +4,10 @@ The reference answers every query by scanning the whole index
 (vector-db.c:165-170): O(N·d) per query, fine at its single-machine
 scale, impossible at 100 TB. The classical scale-out answer is an
 **IVF (inverted-file) index**: partition vectors by nearest coarse
-centroid, persist the index as parquet — (cid, id)-sorted single-dir
-with small row groups by default (r14; row-group min/max stats prune
-the probe), or dir-per-list ``partitionBy(cid)`` as the format option
-(directory pruning) — and at query time score only the ``n_probe``
-closest lists: either pruning mechanism turns the probe into a scan
-of ~n_probe/n_centroids of the data, with the exact kernel
+centroid, persist the index as (cid, id)-sorted parquet with small row
+groups, and at query time score only the ``n_probe`` closest lists:
+row-group min/max stats on cid turn the probe into a scan of
+~n_probe/n_centroids of the data, with the exact kernel
 (operators/topk) applied inside.
 
 Everything is DataFrame ops:
@@ -21,8 +19,8 @@ Everything is DataFrame ops:
 * assignment — crossJoin against the **broadcast** centroid table +
   ``min_by`` (partial-aggregating groupBy: shuffle is N narrow rows,
   never N×C);
-* probe + search — semi-join on the probed centroid ids (partition
-  pruning on a partitioned index), then brute-force top-k with the
+* probe + search — semi-join on the probed centroid ids (row-group
+  pruning on a persisted index), then brute-force top-k with the
   deterministic (dist, id) ordering of the exact operator.
 
 Distances are rounded before argmin/ordering so assignment is
@@ -31,7 +29,6 @@ reproducible across engines (ties broken by centroid id).
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,15 +37,6 @@ from pyspark.sql import functions as F
 from cli_rag_spark.functions.vectors import cosine_distance, l2_sq
 
 _META_NAME = "_ivf_meta.json"
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Delegates to the package's one FileSystem helper
-    (sources/compaction.py) so local, HDFS and s3a:// all work; never
-    driver-local ``os`` calls."""
-    from cli_rag_spark.sources.compaction import _fs
-
-    return _fs(spark, path)
 
 
 def seed_centroids(
@@ -560,197 +548,104 @@ def build_ivf_index(
     refine_iters: int = 0,
     round_digits: int = 6,
     reuse_if_exists: bool = False,
-    layout: str = "sorted",
 ) -> DataFrame:
-    """Write the persisted IVF index in one of two physical layouts:
+    """Build the persisted IVF index at ``path`` and return its coarse
+    quantizer ``(cid, cvec)``.
 
-    * ``layout="sorted"`` (the r14 default — VERDICT r13 #3): ONE
-      parquet directory, rows range-partitioned and sorted by
-      ``(cid, id)``, written with small (8 MB) row groups so each row
-      group's cid min/max footer stats span only a handful of lists —
-      a probe's ``cid IN (...)`` filter prunes at row-group
-      granularity instead of directory granularity. WHY this is the
-      default: the dir-per-list ``partitionBy(cid)`` write was the
-      family's worst measured number — 2,826 s to build the 2M-row
-      f64 index at C=1414 vs 77 s for the same rows' IVFPQ build
-      (SCALING.md r13), ~all of it the 1,414-directory dynamic-
-      partition write; the sorted single-dir write is the same ONE
-      range shuffle but a plain parquet sink (SCALING.md r14 books
-      the measured build + probe walls for both layouts).
-    * ``layout="partitioned"``: the pre-r14 dir-per-list
-      ``partitionBy(cid)`` layout — readers prune probed lists at
-      directory granularity (verified in tests via the input-files
-      count). Kept as the append-compatible format option: an
-      append touches only its lists' directories, and existing
-      artifacts keep their recorded layout (append_ivf_index follows
-      the META's layout, never the current default).
+    Layout: ONE parquet directory, rows range-partitioned and sorted by
+    ``(cid, id)``, written with small (8 MB) row groups so each row
+    group's cid min/max footer stats span only a handful of lists. A
+    probe's ``cid IN (...)`` filter then prunes at row-group
+    granularity. The index reads back as an ``(id, vec, cid)`` frame
+    for knn_join_ivf, ivf_topk_persisted and the judged queries.
 
-    Either way the index reads back as the same (id, vec, cid) frame
-    — every consumer (knn_join_ivf, ivf_topk_persisted, the judged
-    queries) is layout-agnostic by construction; only the physical
-    pruning mechanism differs.
+    Persistence follows the one artifact discipline
+    (:func:`~cli_rag_spark.sources.artifacts.staged_artifact`): the
+    rows, the ACTUAL coarse quantizer as the parquet child
+    ``_centroids`` (underscore prefix: invisible to parquet directory
+    readers) and the ``_ivf_meta.json`` sidecar are written into a
+    staging directory and promoted atomically. The sidecar holds the
+    build identity: n_centroids, column names, refine_iters,
+    round_digits, layout, and the input's ``n_rows`` + ``content_fp``
+    (:func:`~cli_rag_spark.sources.artifacts.content_fingerprint`).
+    :func:`read_ivf_index` checks a probe's ``n_centroids`` against it
+    at open time, and probing or appending never re-derives centroids
+    from data: the quantizer travels with the index.
 
-    ``n_centroids=None`` (the default since r10) sizes the quantizer
-    by the C ~ √N rule (:func:`default_n_centroids`) from the row
-    count the build already computes for its content fingerprint —
-    zero extra jobs. Pass an explicit C to pin a geometry (the judged
-    fixed-C queries and incremental-append pipelines do: an append
-    must reuse the BUILD's C, and callers that later open the index
-    with read_ivf_index(n_centroids=...) must pass the same value).
+    ``n_centroids=None`` sizes the quantizer by the C ~ √N rule
+    (:func:`default_n_centroids`) from the row count the fingerprint
+    agg already computes, at no extra job. Pass an explicit C to pin a
+    geometry (an append reuses the build's C, and callers that open
+    the index with read_ivf_index(n_centroids=...) must pass the same
+    value).
 
     ``refine_iters > 0`` Lloyd-refines the seeded coarse quantizer
     (:func:`kmeans_refine`, components rounded to ``round_digits`` so
-    the refined centroids stay engine-replayable) — the production
-    quality knob; ``0`` keeps the pure seeded contract.
+    the refined centroids stay engine-replayable); ``0`` keeps the
+    pure seeded contract.
 
-    The ACTUAL coarse quantizer is persisted as a parquet sidecar
-    ``<path>/_centroids`` (underscore prefix → invisible to parquet
-    directory readers, like ``_metadata``), and build metadata
-    (n_centroids, refine_iters, column names) as ``_ivf_meta.json`` —
-    so :func:`read_ivf_index` can verify at open time that a probe's
-    ``n_centroids`` matches the build (a persisted index probed with a
-    different coarse quantizer silently degrades recall, ADVICE r2),
-    and probing/appending NEVER re-derives centroids from data (the
-    r4-advice hazard of probing a refined assignment against re-seeded
-    centroids, fixed at the root: the quantizer travels with the
-    index).
+    ``reuse_if_exists=True`` returns the persisted quantizer without
+    rewriting when the stored identity equals this call's: the build
+    is deterministic in (data, params), so an identical-input rebuild
+    is pure waste. The check costs the one fingerprint agg job. Callers
+    that MUTATE the index afterwards (append_ivf_index pipelines) must
+    keep the default False: reusing would re-apply the mutation to an
+    already-mutated index."""
+    from cli_rag_spark.sources.artifacts import content_fingerprint, staged_artifact
 
-    ``path`` is normalized of trailing slashes up front (the staging
-    name derives from it; see artifacts.norm_path).
-
-    ``reuse_if_exists=True`` returns the persisted quantizer WITHOUT
-    rewriting when the path already holds an index whose build params
-    AND input CONTENT match — the build is deterministic in (data,
-    params), so an identical-input rebuild is pure waste (bench r6:
-    an in-query rebuild inflated ivf_recall_stats ~3x). The content
-    check is a row count plus an order-independent 64-bit fingerprint
-    (bit_xor of xxhash64 over each row's id and its FULL vector —
-    xxhash64 hashes array contents, so any component change anywhere
-    flips the fingerprint), computed in the SAME single agg job as
-    the count — ADVICE r7 #2: a row count alone silently reused a
-    stale index over regenerated same-cardinality data. Known
-    limitation: xor cancels even-multiplicity rows, so two datasets
-    differing only by DISTINCT duplicated-row pairs can share count
-    and fingerprint; ids are normally unique per row, which makes
-    that collision require a full duplicated (id, vector) pair —
-    acceptable, but stated (ADVICE r8). Any mismatch
-    (params, count, fingerprint, pre-fingerprint metadata) falls
-    through to a full rebuild. Callers that MUTATE the index
-    afterwards (append_ivf_index pipelines) must keep the default
-    False — reusing would re-apply the mutation to an already-mutated
-    index."""
-    from cli_rag_spark.sources.artifacts import norm_path
-
-    if layout not in ("sorted", "partitioned"):
-        raise ValueError(
-            f"layout must be 'sorted' or 'partitioned', got {layout!r}"
-        )
-    path = norm_path(path)
-    spark_ = vectors.sparkSession
-    stats = vectors.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.col(id_col), F.col(vec_col))).alias("fp"),
-    ).first()
-    # bit_xor over zero rows is NULL — map the empty input to fp=0 so
-    # the reuse_if_exists=False path still builds an empty index
-    # instead of raising an opaque TypeError (ADVICE r8).
-    n_rows = int(stats["n"])
-    content_fp = int(stats["fp"]) if stats["fp"] is not None else 0
+    spark = vectors.sparkSession
+    n_rows, content_fp = content_fingerprint(vectors, id_col, vec_col)
     if n_centroids is None:
         n_centroids = default_n_centroids(n_rows)
-    if reuse_if_exists:
-        fs0, root0 = _hadoop_fs(spark_, path)
-        meta_path0 = spark_._jvm.org.apache.hadoop.fs.Path(root0, _META_NAME)
-        if fs0.exists(meta_path0):
-            meta = _read_ivf_meta(spark_, path)
-            want = {
-                "n_centroids": n_centroids,
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "refine_iters": refine_iters,
-                "n_rows": n_rows,
-                "content_fp": content_fp,
-            }
-            # pre-r14 metas carry no layout key: they are partitioned
-            # by construction, so reuse must not force a rebuild of a
-            # matching legacy artifact when the caller asks for the
-            # layout it actually has
-            if (
-                all(meta.get(k) == v for k, v in want.items())
-                and meta.get("layout", "partitioned") == layout
-            ):
-                return read_ivf_centroids(spark_, path)
-    centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
-    if refine_iters > 0:
-        centroids = kmeans_refine(
-            vectors, centroids, n_iters=refine_iters,
-            id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-        )
-    # materialize the quantizer ONCE: the refine lineage (per-iteration
-    # full-corpus assignment + means) would otherwise re-execute for
-    # the sidecar write after already running inside the assignment
-    # job. C rows of d doubles collect in microseconds and re-enter as
-    # a literal local frame (broadcast-sized by construction).
-    spark = vectors.sparkSession
-    rows = [
-        (int(r["cid"]), [float(x) for x in r["cvec"]])
-        for r in centroids.collect()
-    ]
-    centroids = spark.createDataFrame(rows, "cid long, cvec array<double>")
-    # size-routed assignment (r14): the interpreted-HOF crossJoin this
-    # build used through r13 evaluates N·C·dim element-ops in codegen —
-    # at 2M×1414×64 that alone is ~1.8e11 interpreted ops, a large
-    # share of the 2,826 s r13 build wall. The Arrow/GEMM twin is
-    # bit-identical (pinned in tests) and build_ivfpq_index has routed
-    # through it since r12; n_rows is already known from the
-    # fingerprint agg, so discovery costs nothing extra.
-    assigned = vectors.join(
-        assign_centroids_auto(
-            vectors, centroids, id_col, vec_col, n_rows=n_rows
-        ),
-        id_col,
-    )
-    # Write-atomic build (r10 review): everything lands in a
-    # process-unique STAGING directory promoted by the SHARED helpers
-    # in sources/artifacts.py (one copy of the concurrency-critical
-    # sweep/verify/rename code — age-gated recursive-mtime orphan
-    # sweep, data+_SUCCESS promotion guard, nested-rename TOCTOU
-    # check, verified failed-rename fallback). One shuffle on cid
-    # before the partitioned write so each list is written by exactly
-    # one task → file count ≈ C, not tasks × C: measured at the 100×
-    # rehearsal with the √N default (C=447 under 256 initial
-    # partitions), the probe-side file listing/footer cost dominated
-    # the query (9.24 s unbounded vs 1.84 s) — the classic small-files
-    # failure, paid at build time once instead of by every reader.
-    import os as _os
-    import time as _time
-
-    from cli_rag_spark.sources.artifacts import (
-        promote_staging,
-        sweep_stale_stagings,
-        write_json_sidecar,
-    )
-
-    meta_want = {
+    identity = {
         "n_centroids": n_centroids,
         "id_col": id_col,
         "vec_col": vec_col,
         "refine_iters": refine_iters,
+        # the refined quantizer's components are rounded to it
+        "round_digits": round_digits,
         "n_rows": n_rows,
         "content_fp": content_fp,
-        "layout": layout,
+        "layout": "sorted",
     }
-    sweep_stale_stagings(spark, path)
-    staging = f"{path}.__stage__{_os.getpid()}_{_time.monotonic_ns()}"
-    if layout == "sorted":
+    built: list[DataFrame] = []
+
+    def write(staging: str) -> None:
+        centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
+        if refine_iters > 0:
+            centroids = kmeans_refine(
+                vectors, centroids, n_iters=refine_iters,
+                id_col=id_col, vec_col=vec_col, round_digits=round_digits,
+            )
+        # materialize the quantizer ONCE: the refine lineage
+        # (per-iteration full-corpus assignment + means) would otherwise
+        # re-execute for the _centroids write after already running
+        # inside the assignment job. C rows of d doubles collect in
+        # microseconds and re-enter as a literal local frame
+        # (broadcast-sized by construction).
+        rows = [
+            (int(r["cid"]), [float(x) for x in r["cvec"]])
+            for r in centroids.collect()
+        ]
+        centroids = spark.createDataFrame(rows, "cid long, cvec array<double>")
+        # size-routed assignment: the interpreted-HOF crossJoin
+        # evaluates N·C·dim element-ops in codegen (~1.8e11 at
+        # 2M×1414×64); the Arrow/GEMM twin is bit-identical (pinned in
+        # tests). n_rows is already known from the fingerprint agg.
+        assigned = vectors.join(
+            assign_centroids_auto(
+                vectors, centroids, id_col, vec_col, n_rows=n_rows
+            ),
+            id_col,
+        )
         # dim is free here: the quantizer is already a collected local
         # list, and every indexed vector shares its dimensionality
         dim = len(rows[0][1]) if rows else 0
         n_files = _sorted_ivf_file_count(n_rows, dim)
         # Deterministic cid-bucket shuffle, NOT repartitionByRange:
         # range partitioning runs a SAMPLING job that evaluates the
-        # whole parent lineage — including the N·C·dim assignment —
-        # a second time before the write pass evaluates it again
+        # whole parent lineage, including the N·C·dim assignment, a
+        # second time before the write pass evaluates it again
         # (measured: the 2M build sat in assignment twice as long as
         # the one-pass form). cid occupancy is ~Poisson(N/C) by
         # construction, so floor(cid·F/C) buckets are already
@@ -758,11 +653,8 @@ def build_ivf_index(
         # F partitions is balls-into-bins (ADVICE r14): ~1/e of the
         # output files come out EMPTY and the max-loaded file holds
         # ~ln F / ln ln F buckets at large F, so individual files can
-        # overshoot the 128 MB target several-fold — the per-row-group
-        # min/max stats (8 MB, the actual pruning unit) are unaffected,
-        # and the r15 fixture-scale measurement (scripts/
-        # ivf_layout_r14.py --filestats) is the gate on whether a
-        # sort-based exact placement is worth the extra pass.
+        # overshoot the 128 MB target several-fold. The per-row-group
+        # min/max stats (8 MB, the actual pruning unit) are unaffected.
         (
             assigned.repartition(
                 n_files, _sorted_cid_bucket(n_files, n_centroids)
@@ -772,51 +664,29 @@ def build_ivf_index(
             .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
             .parquet(staging)
         )
-    else:
-        assigned.repartition("cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(staging)
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        f"{staging}/{_CENTROID_DIR}"
-    )
-    write_json_sidecar(spark, staging, _META_NAME, meta_want)
-    promote_staging(spark, staging, path, _META_NAME, meta_want, what="IVF index")
-    return centroids
+        centroids.coalesce(1).write.mode("overwrite").parquet(
+            f"{staging}/{_CENTROID_DIR}"
+        )
+        built.append(centroids)
+
+    if staged_artifact(
+        spark, path, _META_NAME, identity, write,
+        reuse=reuse_if_exists, what="IVF index",
+    ):
+        return built[0]
+    return read_ivf_centroids(spark, path)
 
 
 def read_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
-    """The persisted coarse quantizer of an IVF index — the sidecar
-    written by :func:`build_ivf_index`. Falls back to the seeded
-    recovery (lowest-id index rows) for pre-sidecar indexes, which is
-    only correct when the index was built unrefined — raise otherwise."""
-    fs, root = _hadoop_fs(spark, path)
-    cdir = spark._jvm.org.apache.hadoop.fs.Path(root, _CENTROID_DIR)
-    if fs.exists(cdir):
-        return spark.read.parquet(f"{path}/{_CENTROID_DIR}")
-    meta = _read_ivf_meta(spark, path)
-    if meta.get("refine_iters", 0) > 0:
-        raise ValueError(
-            f"index at {path} was Lloyd-refined but has no centroid "
-            "sidecar — rebuild with this version of build_ivf_index"
-        )
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    index = spark.read.parquet(path)
-    return index.where(F.col(id_col) < meta["n_centroids"]).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    )
+    """The persisted coarse quantizer of an IVF index: the
+    ``_centroids`` child written by :func:`build_ivf_index`."""
+    return spark.read.parquet(f"{path}/{_CENTROID_DIR}")
 
 
 def _read_ivf_meta(spark: SparkSession, path: str) -> dict:
-    fs, root = _hadoop_fs(spark, path)
-    meta_path = spark._jvm.org.apache.hadoop.fs.Path(root, _META_NAME)
-    if not fs.exists(meta_path):
-        raise ValueError(f"no {_META_NAME} at {path}: not a build_ivf_index output")
-    stream = fs.open(meta_path)
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    finally:
-        stream.close()
+    from cli_rag_spark.sources.artifacts import read_index_meta
+
+    return read_index_meta(spark, path, _META_NAME, "build_ivf_index")
 
 
 def ivf_index_ready(
@@ -880,30 +750,33 @@ def append_ivf_index(
     admit a batch of n ≪ N is an O(N) write nobody can afford.
 
     The batch is assigned against the index's EXISTING coarse
-    quantizer — the ``_centroids`` sidecar build_ivf_index persists
-    (works for seeded AND Lloyd-refined builds); for pre-sidecar
-    indexes :func:`read_ivf_centroids` falls back to the seeded
-    recovery (the ``n_centroids`` lowest-id rows still live in the
-    index). New rows land in ``mode("append")`` partition directories —
-    only the touched cid leaves gain files; existing files are never
-    rewritten. The metadata is unchanged (same quantizer), so
-    :func:`read_ivf_index` validation keeps working, and the appended
-    index is row-for-row identical to a one-shot build over the union
-    (locked in tests/test_ann.py).
+    quantizer, the ``_centroids`` child build_ivf_index persists
+    (seeded AND Lloyd-refined builds). New rows land as additional
+    (cid, id)-sorted file(s) with the build's small row groups;
+    existing files are never rewritten. The metadata is unchanged
+    (same quantizer), so :func:`read_ivf_index` validation keeps
+    working, and the appended index is row-for-row identical to a
+    one-shot build over the union (locked in tests/test_ann.py). An
+    index in a retired layout (its meta has no ``layout: sorted``) is
+    refused: appending sorted files into it would mix formats.
 
     Caller contract (same as any append-only ingest): batch ids are
     new — the operator does not dedupe against the existing index
     (compose with dedup_incremental upstream when ingest can replay).
     """
     meta = _read_ivf_meta(spark, path)
+    if meta.get("layout") != "sorted":
+        raise ValueError(
+            f"IVF index at {path} uses a retired layout "
+            f"({meta.get('layout', 'partitioned')!r}); rebuild it with "
+            "build_ivf_index before appending"
+        )
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     index = spark.read.parquet(path)
-    # the index's ACTUAL quantizer: sidecar when present (required for
-    # refined builds), seeded recovery for legacy unrefined indexes
     centroids = read_ivf_centroids(spark, path)
-    # one count serves both the size-routed assignment (r14 — the GEMM
-    # twin past the interpreted-HOF envelope, bit-identical by the
-    # pinned contract) and the sorted layout's file sizing below
+    # one count serves both the size-routed assignment (the GEMM twin
+    # past the interpreted-HOF envelope, bit-identical by the pinned
+    # contract) and the file sizing below
     n_batch = new_vectors.count()
     assigned = new_vectors.join(
         assign_centroids_auto(
@@ -914,40 +787,25 @@ def append_ivf_index(
     # column order must match the existing files (append does not
     # reconcile schemas by name)
     assigned = assigned.select(*index.columns)
-    # the append follows the ARTIFACT's recorded layout, never the
-    # current build default — appending dir-per-list files into a
-    # sorted single-dir index (or vice versa) would silently mix
-    # pruning disciplines (pre-r14 metas carry no key: partitioned)
-    if meta.get("layout", "partitioned") == "sorted":
-        # new batch lands as additional (cid, id)-sorted file(s) with
-        # the same small row groups; their footer stats prune exactly
-        # like the base files' (a batch spans fewer lists, so its
-        # per-file cid ranges are naturally tighter)
-        dim_row = (
-            centroids.select(F.size("cvec").alias("d")).first()
+    # the batch's footer stats prune exactly like the base files' (a
+    # batch spans fewer lists, so its per-file cid ranges are
+    # naturally tighter)
+    dim_row = centroids.select(F.size("cvec").alias("d")).first()
+    dim = int(dim_row["d"]) if dim_row and dim_row["d"] else 0
+    n_files = _sorted_ivf_file_count(n_batch, dim)
+    # same deterministic bucket shuffle as the build (range
+    # partitioning would sample — i.e. recompute — the batch
+    # assignment a second time)
+    (
+        assigned.repartition(
+            n_files,
+            _sorted_cid_bucket(n_files, int(meta["n_centroids"])),
         )
-        dim = int(dim_row["d"]) if dim_row and dim_row["d"] else 0
-        n_files = _sorted_ivf_file_count(n_batch, dim)
-        # same deterministic bucket shuffle as the build (range
-        # partitioning would sample — i.e. recompute — the batch
-        # assignment a second time)
-        (
-            assigned.repartition(
-                n_files,
-                _sorted_cid_bucket(n_files, int(meta["n_centroids"])),
-            )
-            .sortWithinPartitions("cid", id_col)
-            .write.mode("append")
-            .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
-            .parquet(path)
-        )
-    else:
-        # same small-files discipline as the build: one writer task
-        # per touched cid, so an append adds ≈|touched lists| files,
-        # not tasks × lists
-        assigned.repartition("cid").write.mode("append").partitionBy(
-            "cid"
-        ).parquet(path)
+        .sortWithinPartitions("cid", id_col)
+        .write.mode("append")
+        .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
+        .parquet(path)
+    )
 
 
 def ivf_topk(
@@ -1015,7 +873,7 @@ def knn_join_ivf(
     assigned to those lists.
 
     Scale shape: if ``index`` already carries a ``cid`` column — the
-    frame ``build_ivf_index`` persists (either layout) and
+    frame ``build_ivf_index`` persists and
     ``spark.read.parquet`` gives back — it is used as-is, so the
     candidate join filters on cid and reads pruned lists with NO
     re-assignment of the corpus. Otherwise assignment is computed on
@@ -1033,13 +891,10 @@ def knn_join_ivf(
     if "cid" in index.columns:
         if validate_cid:
             # A pre-assigned index built with a DIFFERENT n_centroids
-            # would silently probe the wrong lists (ADVICE r2). Cost
-            # depends on the layout (ADVICE r14): under the legacy
-            # partitionBy(cid) layout cid is a partition column and
-            # the agg reads no data pages; under the r14 sorted
-            # default cid is a physical column, so this is a
-            # cid-column scan over every row group — parquet column
-            # stats keep it cheap, but read_ivf_index() performs the
+            # would silently probe the wrong lists (ADVICE r2). cid is
+            # a physical column, so this is a cid-column scan over
+            # every row group — parquet column stats keep it cheap,
+            # but read_ivf_index() performs the
             # stronger O(1) METADATA check (the meta's n_centroids),
             # which is why every shipped caller goes through it and
             # passes validate_cid=False. Keep this guard for raw
@@ -1099,8 +954,8 @@ def ivf_topk_persisted(
     quantizer it was built with, by construction.
 
     Plan shape at scale: centroid sidecar is tiny (C rows, broadcast);
-    the candidate read is a PartitionFilters-pruned scan of
-    ``n_probe`` cid leaves; top-k is TakeOrderedAndProject.
+    the candidate read is a row-group-pruned scan (cid min/max stats)
+    of the ``n_probe`` probed lists; top-k is TakeOrderedAndProject.
     """
     meta = _read_ivf_meta(spark, path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]

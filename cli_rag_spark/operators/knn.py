@@ -37,6 +37,7 @@ from cli_rag_spark.functions.vectors import (
     dot,
     paired_cosine_distance,
 )
+from cli_rag_spark.sources.artifacts import content_fingerprint, read_json_sidecar
 
 
 def knn_join(
@@ -1158,8 +1159,8 @@ def knn_join_auto(
     scale the artifact IS the index and re-scanning the live frame per
     query would negate it. If the corpus may have changed since the
     build, pass ``verify_index_content=True``: one agg job fingerprints
-    the passed ``index`` (count + bit_xor of xxhash64 over id+vector —
-    the exact fingerprint the builds persist) and the artifact is only
+    the passed ``index`` (artifacts.content_fingerprint — the exact
+    fingerprint the builds persist) and the artifact is only
     eligible when it matches; a mismatched or legacy-meta (no
     recorded fingerprint) artifact falls back to an index-free
     strategy rather than silently serving stale neighbors (ADVICE r10).
@@ -1200,73 +1201,47 @@ def knn_join_auto(
     if verify_index_content and (
         ivf_path is not None or pq_path is not None or ivfpq_path is not None
     ):
-        stats = index.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(F.col(index_id), F.col(index_vec))).alias("fp"),
-        ).first()
-        live_fp = (
-            int(stats["n"]),
-            int(stats["fp"]) if stats["fp"] is not None else 0,
-        )
+        live_fp = content_fingerprint(index, index_id, index_vec)
 
-    def _content_matches(meta: dict) -> bool:
-        if live_fp is None:
-            return True
-        return (
-            meta.get("n_rows") == live_fp[0]
-            and meta.get("content_fp") == live_fp[1]
-        )
+    def _content_matches(meta: dict | None) -> bool:
+        if meta is None:
+            return False
+        return live_fp is None or (
+            meta.get("n_rows"), meta.get("content_fp")
+        ) == live_fp
 
+    spark = queries.sparkSession
     ivf_ok = False
     if ivf_path is not None:
-        from cli_rag_spark.operators.ann import _read_ivf_meta, ivf_index_ready
+        from cli_rag_spark.operators.ann import _META_NAME, ivf_index_ready
 
-        if not n_centroids:
-            # an index built with the r10 C ~ √N default records its
+        ivf_meta = read_json_sidecar(spark, ivf_path, _META_NAME)
+        if not n_centroids and ivf_meta is not None:
+            # an index built with the C ~ √N default records its
             # RESOLVED C only in the meta sidecar — resolve it here
             # (one metadata read) instead of silently falling back to
             # a full LSH/PQ scan when the caller doesn't know a value
             # the build computed for them (r10 review #3)
-            try:
-                n_centroids = int(_read_ivf_meta(
-                    queries.sparkSession, ivf_path)["n_centroids"])
-            except (ValueError, KeyError, TypeError):
-                n_centroids = None
+            n_centroids = ivf_meta.get("n_centroids")
         if n_centroids:
             ivf_ok = ivf_index_ready(
-                queries.sparkSession, ivf_path, n_centroids, dim
-            )
-            if ivf_ok and live_fp is not None:
-                try:
-                    ivf_ok = _content_matches(
-                        _read_ivf_meta(queries.sparkSession, ivf_path)
-                    )
-                except ValueError:
-                    ivf_ok = False
+                spark, ivf_path, int(n_centroids), dim
+            ) and _content_matches(ivf_meta)
     pq_ok = False
     if pq_path is not None:
-        from cli_rag_spark.operators.pq import _read_pq_meta, pq_index_ready
+        from cli_rag_spark.operators.pq import _PQ_META_NAME, pq_index_ready
 
         pq_ok = pq_index_ready(
-            queries.sparkSession, pq_path, dim, pq_m_subspaces
-        )
-        if pq_ok and live_fp is not None:
-            meta = _read_pq_meta(queries.sparkSession, pq_path)
-            pq_ok = meta is not None and _content_matches(meta)
+            spark, pq_path, dim, pq_m_subspaces
+        ) and _content_matches(read_json_sidecar(spark, pq_path, _PQ_META_NAME))
     ivfpq_ok = False
     ivfpq_meta: dict | None = None
     if ivfpq_path is not None:
-        from cli_rag_spark.operators.pq import (
-            _read_ivfpq_meta,
-            ivfpq_index_ready,
-        )
+        from cli_rag_spark.operators.pq import _IVFPQ_META_NAME, ivfpq_index_ready
 
-        ivfpq_ok = ivfpq_index_ready(queries.sparkSession, ivfpq_path, dim)
-        if ivfpq_ok:
-            ivfpq_meta = _read_ivfpq_meta(queries.sparkSession, ivfpq_path)
-            ivfpq_ok = ivfpq_meta is not None and (
-                live_fp is None or _content_matches(ivfpq_meta)
-            )
+        if ivfpq_index_ready(spark, ivfpq_path, dim):
+            ivfpq_meta = read_json_sidecar(spark, ivfpq_path, _IVFPQ_META_NAME)
+            ivfpq_ok = _content_matches(ivfpq_meta)
     strategy = choose_knn_strategy(
         n_queries, n_index, dim, ivf_available=ivf_ok, pq_available=pq_ok,
         ivfpq_available=ivfpq_ok,
@@ -1295,9 +1270,9 @@ def knn_join_auto(
         codes, codebook, assign, cent = read_ivfpq_index(
             queries.sparkSession, ivfpq_path
         )
-        # r15 (VERDICT r14 #1): a residual artifact ships its
-        # precomputed query-independent ADC terms — None for raw or
-        # pre-r15 builds (knn_join_ivfpq then derives them on the fly)
+        # a residual artifact ships its precomputed
+        # query-independent ADC terms — None for raw builds
+        # (knn_join_ivfpq then derives them on the fly)
         terms = read_ivfpq_terms(queries.sparkSession, ivfpq_path)
         c = int(ivfpq_meta["n_centroids"])
         # IVFADC-R is the DEFAULT on this path (VERDICT r12 #1): the

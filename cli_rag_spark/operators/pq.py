@@ -37,24 +37,32 @@ Lloyd-refines each subspace codebook via ann.kmeans_refine on the
 sub-vector frame with the L2 metric — the operators accept any
 codebook DataFrame with columns (m, code, cvec).
 
-Persistence mirrors the IVF standard (ann.build_ivf_index /
-read_ivf_index): codes + codebook parquet under one index root with a
-``_pq_meta.json`` carrying (m_subspaces, k_codes, dim, refine_iters),
-validated O(1) at open time — an index probed with mismatched PQ
-geometry would silently return garbage distances.
+Persistence (:func:`build_pq_index`, :func:`build_ivfpq_index`)
+follows the one artifact discipline of
+:func:`~cli_rag_spark.sources.artifacts.staged_artifact`, like
+ann.build_ivf_index: the parquet children are written into a staging
+directory next to a sidecar carrying the build identity (geometry,
+parameters, input fingerprint) and promoted atomically. Readers
+validate the sidecar's geometry O(1) at open time — an index probed
+with mismatched PQ geometry would silently return garbage distances.
 """
 
 from __future__ import annotations
 
 import functools
-import json
 import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cli_rag_spark.functions.vectors import cosine_distance, dot, l2_sq
-from cli_rag_spark.operators.ann import _hadoop_fs, kmeans_refine
+from cli_rag_spark.operators.ann import kmeans_refine
+from cli_rag_spark.sources.artifacts import (
+    content_fingerprint,
+    read_index_meta,
+    read_json_sidecar,
+    staged_artifact,
+)
 
 __all__ = [
     "l2_sq",
@@ -79,7 +87,7 @@ __all__ = [
     "read_ivfpq_terms",
 ]
 
-_META_NAME = "_pq_meta.json"
+_PQ_META_NAME = "_pq_meta.json"
 
 
 def _d_sub(vec: Column, m_subspaces: int) -> Column:
@@ -908,10 +916,17 @@ def build_pq_index(
 ) -> None:
     """Build and PERSIST the PQ index: ``<path>/codebook`` (M·K rows)
     and ``<path>/codes`` (N·M narrow int rows, ~64× smaller than the
-    vectors) as parquet, plus ``_pq_meta.json`` build metadata so
+    vectors) as parquet, plus the ``_pq_meta.json`` sidecar, so
     :func:`read_pq_index` can reject a geometry-mismatched probe in
-    O(1) — the same standard ann.build_ivf_index sets (VERDICT r3
-    "Next round #2").
+    O(1).
+
+    Both children and the sidecar are written into a staging
+    directory and promoted atomically
+    (:func:`~cli_rag_spark.sources.artifacts.staged_artifact`): a
+    build that fails part-way leaves the previous index and its
+    sidecar as they were. The sidecar holds the build identity (the
+    geometry, refine_iters, round_digits, id column, and the input's
+    ``n_rows`` + ``content_fp``) plus the vector ``dim``.
 
     ``refine_iters=0`` keeps the seeded, SQL-oracle-replayable
     codebook (the judged path); ``refine_iters>0`` Lloyd-refines each
@@ -921,123 +936,70 @@ def build_pq_index(
     The codes scan at query time reads only (id, m, code) — column
     pruning means the ADC path never touches an embedding byte.
 
-    ``reuse_if_exists=True`` (r15, guide §1.2: don't compute things
-    you throw away) returns WITHOUT rewriting when ``path`` already
-    holds a build whose params AND input content match — the
-    build_ivf_index reuse discipline verbatim: the build is
-    deterministic in (data, params), so an identical-input rebuild is
-    pure waste, and before r15 every timed run of the five PQ-family
-    judged queries paid the full rebuild (fingerprint agg + codebook
-    probe + encode + two parquet writes) inside the timed region.
-    The content check is the same single count+bit_xor(xxhash64) agg
-    job the build pays anyway; any mismatch falls through to a full
-    rebuild.
+    ``reuse_if_exists=True`` returns WITHOUT rewriting when the stored
+    identity equals this call's: the build is deterministic in (data,
+    params), so an identical-input rebuild is pure waste. The check
+    costs the one fingerprint agg job the build pays anyway.
     """
-    # one agg job: count + order-independent content fingerprint of the
-    # input (the build_ivf_index discipline, ann.py:236) so dispatchers
-    # can OPTIONALLY verify the persisted codes still describe the
-    # corpus they're asked about (ADVICE r10: index-backed strategies
-    # otherwise answer from the artifact regardless of the live data)
-    stats = vectors.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.col(id_col), F.col(vec_col))).alias("fp"),
-    ).first()
-    n_rows = int(stats["n"])
-    content_fp = int(stats["fp"]) if stats["fp"] is not None else 0
-    if reuse_if_exists:
-        meta = _read_pq_meta(vectors.sparkSession, path)
-        want = {
-            "m_subspaces": m_subspaces,
-            "k_codes": k_codes,
-            "id_col": id_col,
-            "refine_iters": refine_iters,
-            "round_digits": round_digits,
-            "n_rows": n_rows,
-            "content_fp": content_fp,
-        }
-        if meta is not None and all(
-            meta.get(k) == v for k, v in want.items()
-        ):
-            return
-    codebook = build_pq_codebook(vectors, m_subspaces, k_codes, id_col, vec_col)
-    # bounded 1-row probe on the SEEDED codebook, BEFORE refinement and
-    # BEFORE any write: an empty vectors frame (or absent seed ids)
-    # yields an empty seeded codebook, and writing it would leave a
-    # partial index (empty codes/codebook, no _pq_meta.json) behind an
-    # opaque TypeError (ADVICE r4). Probing pre-refinement matters:
-    # first() on the refined frame would execute the full per-iteration
-    # corpus-assignment lineage once for the probe and AGAIN for the
-    # write — the seeded frame is a k-row slice, and refinement
-    # preserves both emptiness and sub-vector geometry.
-    probe = codebook.select(F.size("cvec").alias("ds")).first()
-    if probe is None:
-        raise ValueError(
-            "build_pq_index: seeded codebook is empty (no input vectors, "
-            "or the k_codes lowest-id seed rows are absent) — refusing to "
-            "write an empty index"
-        )
-    if refine_iters > 0:
-        codebook = refine_pq_codebook(
-            vectors, codebook, m_subspaces, refine_iters, id_col, vec_col, round_digits
-        )
-    codebook.write.mode("overwrite").parquet(f"{path}/codebook")
     spark = vectors.sparkSession
-    # re-read the persisted codebook so encode scores against exactly
-    # the bytes future readers will see (and the refine lineage runs
-    # once, not once per encode stage)
-    codebook = spark.read.parquet(f"{path}/codebook")
-    # size-routed encoder (r12, the build_ivfpq_index rule): the HOF
-    # encoder evaluates N·K·dim interpreted element ops; past the
-    # envelope the Arrow/GEMM twin (bit-identical, pinned in tests)
-    # is the only build that finishes in minutes
-    from cli_rag_spark.operators.ann import GEMM_ASSIGN_MIN_OPS
+    n_rows, content_fp = content_fingerprint(vectors, id_col, vec_col)
+    identity = {
+        "m_subspaces": m_subspaces,
+        "k_codes": k_codes,
+        "id_col": id_col,
+        "refine_iters": refine_iters,
+        "round_digits": round_digits,
+        "n_rows": n_rows,
+        "content_fp": content_fp,
+    }
 
-    d_probe = probe["ds"] * m_subspaces
-    if n_rows * k_codes * d_probe > GEMM_ASSIGN_MIN_OPS:
-        codes = pq_encode_gemm(
-            vectors, codebook, m_subspaces, id_col, vec_col, round_digits
+    def write(staging: str) -> dict:
+        codebook = build_pq_codebook(vectors, m_subspaces, k_codes, id_col, vec_col)
+        # bounded 1-row probe on the SEEDED codebook, BEFORE refinement
+        # and BEFORE any write: an empty vectors frame (or absent seed
+        # ids) yields an empty seeded codebook (ADVICE r4). Probing
+        # pre-refinement matters: first() on the refined frame would
+        # execute the full per-iteration corpus-assignment lineage once
+        # for the probe and AGAIN for the write — the seeded frame is a
+        # k-row slice, and refinement preserves both emptiness and
+        # sub-vector geometry.
+        probe = codebook.select(F.size("cvec").alias("ds")).first()
+        if probe is None:
+            raise ValueError(
+                "build_pq_index: seeded codebook is empty (no input vectors, "
+                "or the k_codes lowest-id seed rows are absent) — refusing to "
+                "write an empty index"
+            )
+        if refine_iters > 0:
+            codebook = refine_pq_codebook(
+                vectors, codebook, m_subspaces, refine_iters, id_col, vec_col,
+                round_digits,
+            )
+        codebook.write.mode("overwrite").parquet(f"{staging}/codebook")
+        # re-read the persisted codebook so encode scores against exactly
+        # the bytes future readers will see (and the refine lineage runs
+        # once, not once per encode stage)
+        codebook = spark.read.parquet(f"{staging}/codebook")
+        # size-routed encoder (the build_ivfpq_index rule): the HOF
+        # encoder evaluates N·K·dim interpreted element ops; past the
+        # envelope the Arrow/GEMM twin (bit-identical, pinned in tests)
+        # is the only build that finishes in minutes
+        from cli_rag_spark.operators.ann import GEMM_ASSIGN_MIN_OPS
+
+        dim = probe["ds"] * m_subspaces
+        encode = (
+            pq_encode_gemm if n_rows * k_codes * dim > GEMM_ASSIGN_MIN_OPS
+            else pq_encode
         )
-    else:
-        codes = pq_encode(
+        encode(
             vectors, codebook, m_subspaces, id_col, vec_col, round_digits
-        )
-    codes.write.mode("overwrite").parquet(f"{path}/codes")
+        ).write.mode("overwrite").parquet(f"{staging}/codes")
+        return {"dim": dim}
 
-    # sub-vector length from the pre-write probe (same geometry as the
-    # persisted bytes — the write is a verbatim copy of that lineage)
-    d_sub = probe["ds"]
-    fs, root = _hadoop_fs(spark, path)
-    meta_path = spark._jvm.org.apache.hadoop.fs.Path(root, _META_NAME)
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({
-            "m_subspaces": m_subspaces,
-            "k_codes": k_codes,
-            "dim": d_sub * m_subspaces,
-            "id_col": id_col,
-            "refine_iters": refine_iters,
-            "round_digits": round_digits,
-            "n_rows": n_rows,
-            "content_fp": content_fp,
-        }).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_pq_meta(spark: SparkSession, path: str) -> dict | None:
-    """The ``_pq_meta.json`` sidecar at ``path``, or None if
-    absent/unreadable — one metadata read, no Spark job."""
-    fs, root = _hadoop_fs(spark, path)
-    meta_path = spark._jvm.org.apache.hadoop.fs.Path(root, _META_NAME)
-    if not fs.exists(meta_path):
-        return None
-    stream = fs.open(meta_path)
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    except Exception:
-        return None
-    finally:
-        stream.close()
+    staged_artifact(
+        spark, path, _PQ_META_NAME, identity, write,
+        reuse=reuse_if_exists, what="PQ index",
+    )
 
 
 def pq_index_ready(
@@ -1048,22 +1010,36 @@ def pq_index_ready(
 ) -> bool:
     """Dim-validated availability gate for strategy auto-dispatch
     (operators/knn.py knn_join_auto) — the PQ mirror of
-    ann.ivf_index_ready (VERDICT r9 Next round #2): True iff ``path``
-    holds a ``build_pq_index`` output whose build ``dim`` matches the
-    query vectors' (and, when given, whose ``m_subspaces`` matches the
-    caller's ADC geometry). One metadata read, no Spark job. An ADC
-    join against a codebook of the wrong dimensionality doesn't fail
-    loudly — F.slice past the end returns a short sub-vector and the
-    LUT silently scores garbage — so absence/mismatch returns False
-    and the dispatcher falls back to an index-free strategy."""
-    meta = _read_pq_meta(spark, path)
-    if meta is None:
-        return False
-    if meta.get("dim") != dim:
-        return False
-    if m_subspaces is not None and meta.get("m_subspaces") != m_subspaces:
-        return False
-    return True
+    ann.ivf_index_ready: True iff ``path`` holds a ``build_pq_index``
+    output whose build ``dim`` matches the query vectors' (and, when
+    given, whose ``m_subspaces`` matches the caller's ADC geometry).
+    One metadata read, no Spark job. An ADC join against a codebook
+    of the wrong dimensionality doesn't fail loudly — F.slice past the
+    end returns a short sub-vector and the LUT silently scores
+    garbage — so absence/mismatch returns False and the dispatcher
+    falls back to an index-free strategy."""
+    return _geometry_ready(
+        read_json_sidecar(spark, path, _PQ_META_NAME), dim, m_subspaces
+    )
+
+
+def _geometry_ready(meta: dict | None, dim: int, m_subspaces: int | None) -> bool:
+    return (
+        meta is not None
+        and meta.get("dim") == dim
+        and (m_subspaces is None or meta.get("m_subspaces") == m_subspaces)
+    )
+
+
+def _check_geometry(meta: dict, path: str, what: str, **expected) -> None:
+    """Raise ``ValueError`` when a caller-expected geometry value
+    disagrees with the build's sidecar."""
+    for key, arg in expected.items():
+        if arg is not None and meta[key] != arg:
+            raise ValueError(
+                f"{what} index at {path} was built with {key}={meta[key]}, "
+                f"caller expected {arg}"
+            )
 
 
 def read_pq_index(
@@ -1079,22 +1055,10 @@ def read_pq_index(
     raises ``ValueError`` before a single Spark job runs — ADC sums
     over the wrong M or a truncated LUT don't fail loudly, they
     return silently wrong distances."""
-    fs, root = _hadoop_fs(spark, path)
-    meta_path = spark._jvm.org.apache.hadoop.fs.Path(root, _META_NAME)
-    if not fs.exists(meta_path):
-        raise ValueError(f"no {_META_NAME} at {path}: not a build_pq_index output")
-    stream = fs.open(meta_path)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    meta = json.loads(raw.decode("utf-8"))
-    for arg, key in ((m_subspaces, "m_subspaces"), (k_codes, "k_codes"), (dim, "dim")):
-        if arg is not None and meta[key] != arg:
-            raise ValueError(
-                f"PQ index at {path} was built with {key}={meta[key]}, "
-                f"caller expected {arg}"
-            )
+    meta = read_index_meta(spark, path, _PQ_META_NAME, "build_pq_index")
+    _check_geometry(
+        meta, path, "PQ", m_subspaces=m_subspaces, k_codes=k_codes, dim=dim
+    )
     return (
         spark.read.parquet(f"{path}/codes"),
         spark.read.parquet(f"{path}/codebook"),
@@ -1228,17 +1192,21 @@ def build_ivfpq_index(
     batch strategy (:func:`knn_join_ivfpq`) answers from — WITHOUT
     storing the f64 embeddings (that is the point: this is the
     memory-bound regime where the full-precision index is the thing
-    that doesn't fit). Four parquet children under ``path``:
+    that doesn't fit). Parquet children under ``path``:
 
-    * ``centroids`` — the coarse quantizer (C rows of dim doubles);
-    * ``assign``    — the inverted file as narrow (id, cid) rows;
-    * ``codebook``  — M·K per-subspace codewords;
-    * ``codes``     — N·M (id, m, code) rows, ~1 B/subspace/vector;
+    * ``centroids``   — the coarse quantizer (C rows of dim doubles);
+    * ``assign``      — the inverted file as narrow (id, cid) rows;
+    * ``codebook``    — M·K per-subspace codewords;
+    * ``codes``       — N·M (id, m, code) rows, ~1 B/subspace/vector;
+    * ``resid_terms`` — residual builds only: the C·M·K
+      query-independent ADC terms (:func:`residual_adc_terms`);
 
-    plus ``_ivfpq_meta.json`` (geometry + row count + content
-    fingerprint), written LAST so a partial build is never readable
-    (the build_pq_index convention: meta presence is the validity
-    marker). Defaults: ``n_centroids`` = C~√N
+    plus the ``_ivfpq_meta.json`` sidecar (build identity: geometry,
+    parameters, input ``n_rows`` + ``content_fp``). Children and
+    sidecar are written into a staging directory and promoted
+    atomically (:func:`~cli_rag_spark.sources.artifacts.staged_artifact`),
+    so a build that fails part-way leaves the previous artifact as it
+    was. Defaults: ``n_centroids`` = C~√N
     (ann.default_n_centroids), ``(m_subspaces, k_codes)`` =
     :func:`default_pq_geometry` — all three recorded in the meta so
     :func:`read_ivfpq_index` and the knn_join_auto dispatcher resolve
@@ -1275,76 +1243,47 @@ def build_ivfpq_index(
     lineage adds one narrow assign join + zip_with before the
     encoder).
 
-    ``reuse_if_exists=True`` (r16, VERDICT r15 #2) returns WITHOUT
-    rewriting when ``path`` already holds a build whose params AND
-    input content match — the build_pq_index / build_ivf_index reuse
-    discipline verbatim. The content check is one count +
-    bit_xor(xxhash64) agg over the input (the same fingerprint the
-    build records), so a stale artifact — the fixture regenerated at
-    the same sf_dir, or constants changed — can never be served: any
-    mismatch (content, geometry, residual flag, or a pre-r15 residual
-    build missing its resid_terms child) falls through to a full
-    rebuild. Before r16 the two raw-chain judged queries and the
-    residual twin trusted the PATH alone (`read_ivfpq_index(path)`
-    succeeds → reuse) — the r12 silent-garbage class the fingerprint
-    exists to close."""
+    ``reuse_if_exists=True`` returns WITHOUT rewriting when the stored
+    identity equals this call's (content, resolved geometry, residual
+    flag, and the ``resid_terms`` child a residual build carries); any
+    mismatch rebuilds. The check costs the one fingerprint agg job.
+    When the stored content matches, the stored ``dim`` is the live
+    dim, so reuse resolves the unset geometry defaults without a dim
+    probe."""
     from cli_rag_spark.operators.ann import (
+        GEMM_ASSIGN_MIN_OPS,
         assign_centroids_auto,
         default_n_centroids,
-        kmeans_refine,
         seed_centroids,
     )
-    from cli_rag_spark.sources.artifacts import norm_path
 
-    path = norm_path(path)
     spark = vectors.sparkSession
-    stats = vectors.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.col(id_col), F.col(vec_col))).alias("fp"),
-    ).first()
-    n_rows = int(stats["n"])
-    content_fp = int(stats["fp"]) if stats["fp"] is not None else 0
-    if reuse_if_exists:
-        meta = _read_ivfpq_meta(spark, path)
-        if (
-            meta is not None
-            and meta.get("n_rows") == n_rows
-            and meta.get("content_fp") == content_fp
-        ):
-            # content matches ⇒ the live frame IS the data the artifact
-            # was built from, so the meta's dim is the live dim and the
-            # unset-geometry defaults resolve identically off it
-            geo_m, geo_k = default_pq_geometry(int(meta["dim"]), n_rows)
-            want = {
-                "n_centroids": (
-                    n_centroids if n_centroids is not None
-                    else default_n_centroids(n_rows)
-                ),
-                "m_subspaces": m_subspaces if m_subspaces is not None else geo_m,
-                "k_codes": k_codes if k_codes is not None else geo_k,
-                "id_col": id_col,
-                "refine_iters": refine_iters,
-                "coarse_refine_iters": coarse_refine_iters,
-                "round_digits": round_digits,
-                "residual": residual,
-                # a residual reuse must also carry the decomposed-terms
-                # child (a pre-r15 residual build would silently push
-                # consumers onto the on-the-fly terms path)
-                "resid_terms": residual,
-            }
-            if all(meta.get(k) == v for k, v in want.items()):
-                return
-    row0 = (
-        vectors.where(F.col(vec_col).isNotNull())
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .first()
+    n_rows, content_fp = content_fingerprint(vectors, id_col, vec_col)
+    stored = (
+        read_json_sidecar(spark, path, _IVFPQ_META_NAME)
+        if reuse_if_exists else None
     )
-    if row0 is None or row0["d"] is None or int(row0["d"]) <= 0:
-        raise ValueError(
-            "build_ivfpq_index: no scorable vectors (empty input or "
-            "empty/NULL vector column) — refusing to write an empty index"
+    if (
+        stored is not None
+        and stored.get("n_rows") == n_rows
+        and stored.get("content_fp") == content_fp
+        and stored.get("dim")
+    ):
+        # same content ⇒ the live frame IS the data the artifact was
+        # built from, so the stored dim is the live dim
+        dim = int(stored["dim"])
+    else:
+        row0 = (
+            vectors.where(F.col(vec_col).isNotNull())
+            .select(F.size(F.col(vec_col)).alias("d"))
+            .first()
         )
-    dim = int(row0["d"])
+        if row0 is None or row0["d"] is None or int(row0["d"]) <= 0:
+            raise ValueError(
+                "build_ivfpq_index: no scorable vectors (empty input or "
+                "empty/NULL vector column) — refusing to write an empty index"
+            )
+        dim = int(row0["d"])
     if n_centroids is None:
         n_centroids = default_n_centroids(n_rows)
     geo_m, geo_k = default_pq_geometry(dim, n_rows)
@@ -1358,142 +1297,124 @@ def build_ivfpq_index(
             "the F.slice sub-vector layout would drop trailing "
             "components and score garbage"
         )
-    # coarse quantizer: seed -> optional Lloyd -> materialize ONCE as
-    # a literal local frame (C rows of dim doubles; the
-    # build_ivf_index discipline — the refine lineage must not
-    # re-execute per consumer)
-    centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
-    if coarse_refine_iters > 0:
-        centroids = kmeans_refine(
-            vectors, centroids, n_iters=coarse_refine_iters,
-            id_col=id_col, vec_col=vec_col, round_digits=round_digits,
+    identity = {
+        "n_centroids": n_centroids,
+        "m_subspaces": m_subspaces,
+        "k_codes": k_codes,
+        "dim": dim,
+        "id_col": id_col,
+        "refine_iters": refine_iters,
+        "coarse_refine_iters": coarse_refine_iters,
+        "round_digits": round_digits,
+        "n_rows": n_rows,
+        "content_fp": content_fp,
+        "residual": residual,
+        # a residual artifact carries the decomposed-terms child, so
+        # consumers never fall back to deriving the terms on the fly
+        "resid_terms": residual,
+    }
+
+    def write(staging: str) -> None:
+        # coarse quantizer: seed -> optional Lloyd -> materialize ONCE
+        # as a literal local frame (C rows of dim doubles; the refine
+        # lineage must not re-execute per consumer)
+        centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
+        if coarse_refine_iters > 0:
+            centroids = kmeans_refine(
+                vectors, centroids, n_iters=coarse_refine_iters,
+                id_col=id_col, vec_col=vec_col, round_digits=round_digits,
+            )
+        rows = [
+            (int(r["cid"]), [float(x) for x in r["cvec"]])
+            for r in centroids.collect()
+        ]
+        if not rows:
+            raise ValueError(
+                "build_ivfpq_index: seeded coarse quantizer is empty — "
+                "refusing to write an empty index"
+            )
+        centroids = spark.createDataFrame(rows, "cid long, cvec array<double>")
+        centroids.coalesce(1).write.mode("overwrite").parquet(
+            f"{staging}/centroids"
         )
-    rows = [
-        (int(r["cid"]), [float(x) for x in r["cvec"]])
-        for r in centroids.collect()
-    ]
-    if not rows:
-        raise ValueError(
-            "build_ivfpq_index: seeded coarse quantizer is empty — "
-            "refusing to write an empty index"
+        # re-read persisted bytes so assignment + encode score exactly
+        # what future readers will see (and refine lineages run once)
+        centroids = spark.read.parquet(f"{staging}/centroids")
+        assign_centroids_auto(
+            vectors, centroids, id_col, vec_col, round_digits=round_digits,
+            n_rows=n_rows,
+        ).write.mode("overwrite").parquet(f"{staging}/assign")
+        if residual:
+            # encode x − centroid(x): the codebook trains on — and the
+            # codes describe — the within-list displacement. The
+            # persisted assign parquet feeds the residual lineage so the
+            # (possibly GEMM-computed) assignment runs once, not once
+            # per consumer.
+            assign_p = spark.read.parquet(f"{staging}/assign")
+            enc_src = (
+                vectors.select(
+                    id_col, F.col(vec_col).cast("array<double>").alias("_v")
+                )
+                .join(assign_p.select(id_col, "cid"), id_col)
+                .join(
+                    centroids.select(
+                        "cid", F.col("cvec").cast("array<double>").alias("_c")
+                    ),
+                    "cid",
+                )
+                .select(
+                    id_col, F.zip_with("_v", "_c", lambda x, c: x - c).alias("_r")
+                )
+            )
+            enc_col = "_r"
+            # the residual book MUST seed from nonzero-residual rows: the
+            # lowest-id rows are the coarse-centroid seeds, whose
+            # residuals are identically zero (r13 bug class)
+            codebook = residual_codebook(
+                enc_src, m_subspaces, k_codes, id_col, enc_col
+            )
+        else:
+            enc_src, enc_col = vectors, vec_col
+            codebook = build_pq_codebook(
+                enc_src, m_subspaces, k_codes, id_col, enc_col
+            )
+        # pre-write emptiness guard on the seeded book (the
+        # build_pq_index probe), before the optional Lloyd refinement
+        if codebook.select(F.size("cvec").alias("ds")).first() is None:
+            raise ValueError(
+                "build_ivfpq_index: seeded PQ codebook is empty (the k_codes "
+                "lowest-id seed rows are absent) — refusing to write"
+            )
+        if refine_iters > 0:
+            codebook = refine_pq_codebook(
+                enc_src, codebook, m_subspaces, refine_iters,
+                id_col, enc_col, round_digits,
+            )
+        codebook.write.mode("overwrite").parquet(f"{staging}/codebook")
+        codebook = spark.read.parquet(f"{staging}/codebook")
+        # same size-routing rule as the assignment: the encoder
+        # evaluates N·K·dim element ops (bit-identical twins, pinned in
+        # tests)
+        encode = (
+            pq_encode_gemm if n_rows * k_codes * dim > GEMM_ASSIGN_MIN_OPS
+            else pq_encode
         )
-    centroids = spark.createDataFrame(rows, "cid long, cvec array<double>")
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    # re-read persisted bytes so assignment + encode score exactly what
-    # future readers will see (and refine lineages run once)
-    centroids = spark.read.parquet(f"{path}/centroids")
-    assign = assign_centroids_auto(
-        vectors, centroids, id_col, vec_col, round_digits=round_digits,
-        n_rows=n_rows,
+        encode(
+            enc_src, codebook, m_subspaces, id_col, enc_col, round_digits
+        ).write.mode("overwrite").parquet(f"{staging}/codes")
+        if residual:
+            # the query-independent half of the decomposed residual ADC
+            # (residual_adc_terms): C·M·K narrow rows, priced once at
+            # build so the query path never rebuilds a
+            # per-(query, probed-list) LUT
+            residual_adc_terms(codebook, centroids, round_digits).write.mode(
+                "overwrite"
+            ).parquet(f"{staging}/resid_terms")
+
+    staged_artifact(
+        spark, path, _IVFPQ_META_NAME, identity, write,
+        reuse=reuse_if_exists, what="IVFPQ index",
     )
-    assign.write.mode("overwrite").parquet(f"{path}/assign")
-    if residual:
-        # encode x − centroid(x): the codebook trains on — and the
-        # codes describe — the within-list displacement. The persisted
-        # assign parquet feeds the residual lineage so the (possibly
-        # GEMM-computed) assignment runs once, not once per consumer.
-        assign_p = spark.read.parquet(f"{path}/assign")
-        enc_src = (
-            vectors.select(
-                id_col, F.col(vec_col).cast("array<double>").alias("_v")
-            )
-            .join(assign_p.select(id_col, "cid"), id_col)
-            .join(
-                centroids.select(
-                    "cid", F.col("cvec").cast("array<double>").alias("_c")
-                ),
-                "cid",
-            )
-            .select(
-                id_col, F.zip_with("_v", "_c", lambda x, c: x - c).alias("_r")
-            )
-        )
-        enc_col = "_r"
-    else:
-        enc_src, enc_col = vectors, vec_col
-    # PQ codebook: seed -> probe (pre-write emptiness/geometry guard,
-    # the build_pq_index discipline) -> optional Lloyd. The residual
-    # book MUST seed from nonzero-residual rows (residual_codebook):
-    # the lowest-id rows are the coarse-centroid seeds, whose
-    # residuals are identically zero (r13 bug class).
-    if residual:
-        codebook = residual_codebook(
-            enc_src, m_subspaces, k_codes, id_col, enc_col
-        )
-    else:
-        codebook = build_pq_codebook(
-            enc_src, m_subspaces, k_codes, id_col, enc_col
-        )
-    probe = codebook.select(F.size("cvec").alias("ds")).first()
-    if probe is None:
-        raise ValueError(
-            "build_ivfpq_index: seeded PQ codebook is empty (the k_codes "
-            "lowest-id seed rows are absent) — refusing to write"
-        )
-    if refine_iters > 0:
-        codebook = refine_pq_codebook(
-            enc_src, codebook, m_subspaces, refine_iters,
-            id_col, enc_col, round_digits,
-        )
-    codebook.write.mode("overwrite").parquet(f"{path}/codebook")
-    codebook = spark.read.parquet(f"{path}/codebook")
-    # same size-routing rule as the assignment: the encoder evaluates
-    # N·K·dim element ops (bit-identical twins, pinned in tests)
-    from cli_rag_spark.operators.ann import GEMM_ASSIGN_MIN_OPS
-
-    if n_rows * k_codes * dim > GEMM_ASSIGN_MIN_OPS:
-        codes = pq_encode_gemm(
-            enc_src, codebook, m_subspaces, id_col, enc_col, round_digits
-        )
-    else:
-        codes = pq_encode(
-            enc_src, codebook, m_subspaces, id_col, enc_col, round_digits
-        )
-    codes.write.mode("overwrite").parquet(f"{path}/codes")
-    if residual:
-        # the query-independent half of the decomposed residual ADC
-        # (residual_adc_terms, r15 — VERDICT r14 #1): C·M·K narrow
-        # rows, priced once at build so the query path never rebuilds
-        # a per-(query, probed-list) LUT
-        residual_adc_terms(codebook, centroids, round_digits).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/resid_terms")
-    fs, root = _hadoop_fs(spark, path)
-    meta_path = spark._jvm.org.apache.hadoop.fs.Path(root, _IVFPQ_META_NAME)
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({
-            "n_centroids": n_centroids,
-            "m_subspaces": m_subspaces,
-            "k_codes": k_codes,
-            "dim": dim,
-            "id_col": id_col,
-            "refine_iters": refine_iters,
-            "coarse_refine_iters": coarse_refine_iters,
-            "round_digits": round_digits,
-            "n_rows": n_rows,
-            "content_fp": content_fp,
-            "residual": residual,
-            "resid_terms": residual,
-        }).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_ivfpq_meta(spark: SparkSession, path: str) -> dict | None:
-    """The ``_ivfpq_meta.json`` sidecar at ``path``, or None if
-    absent/unreadable — one metadata read, no Spark job."""
-    fs, root = _hadoop_fs(spark, path)
-    meta_path = spark._jvm.org.apache.hadoop.fs.Path(root, _IVFPQ_META_NAME)
-    if not fs.exists(meta_path):
-        return None
-    stream = fs.open(meta_path)
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    except Exception:
-        return None
-    finally:
-        stream.close()
 
 
 def ivfpq_index_ready(
@@ -1509,14 +1430,9 @@ def ivfpq_index_ready(
     ``m_subspaces`` matches the caller's). One metadata read, no
     Spark job; absence/mismatch returns False and the dispatcher
     falls back rather than probing the wrong geometry."""
-    meta = _read_ivfpq_meta(spark, path)
-    if meta is None:
-        return False
-    if meta.get("dim") != dim:
-        return False
-    if m_subspaces is not None and meta.get("m_subspaces") != m_subspaces:
-        return False
-    return True
+    return _geometry_ready(
+        read_json_sidecar(spark, path, _IVFPQ_META_NAME), dim, m_subspaces
+    )
 
 
 def read_ivfpq_index(
@@ -1533,22 +1449,11 @@ def read_ivfpq_index(
     disagrees with the build metadata raises ``ValueError`` before a
     Spark job runs (the read_pq_index contract: wrong-geometry ADC
     returns silently wrong distances, not errors)."""
-    meta = _read_ivfpq_meta(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"no {_IVFPQ_META_NAME} at {path}: not a build_ivfpq_index output"
-        )
-    for arg, key in (
-        (m_subspaces, "m_subspaces"),
-        (k_codes, "k_codes"),
-        (dim, "dim"),
-        (n_centroids, "n_centroids"),
-    ):
-        if arg is not None and meta[key] != arg:
-            raise ValueError(
-                f"IVFPQ index at {path} was built with {key}={meta[key]}, "
-                f"caller expected {arg}"
-            )
+    meta = read_index_meta(spark, path, _IVFPQ_META_NAME, "build_ivfpq_index")
+    _check_geometry(
+        meta, path, "IVFPQ", m_subspaces=m_subspaces, k_codes=k_codes,
+        dim=dim, n_centroids=n_centroids,
+    )
     return (
         spark.read.parquet(f"{path}/codes"),
         spark.read.parquet(f"{path}/codebook"),
@@ -1560,10 +1465,10 @@ def read_ivfpq_index(
 def read_ivfpq_terms(spark: SparkSession, path: str) -> DataFrame | None:
     """The persisted :func:`residual_adc_terms` child of a residual
     :func:`build_ivfpq_index` artifact — ``[cid, m, code, t2]`` — or
-    ``None`` when the build predates r15 / was raw-encoded (the meta
-    records ``resid_terms``; callers fall back to deriving the terms
-    on the fly, same values by construction)."""
-    meta = _read_ivfpq_meta(spark, path)
+    ``None`` for a raw-encoded build (the meta records
+    ``resid_terms``; callers fall back to deriving the terms on the
+    fly, same values by construction)."""
+    meta = read_json_sidecar(spark, path, _IVFPQ_META_NAME)
     if meta is None or not meta.get("resid_terms"):
         return None
     return spark.read.parquet(f"{path}/resid_terms")

@@ -85,6 +85,33 @@ def scaled_shuffle_width(
     return min(cap, need)
 
 
+# Leaf operators whose partition count is their split count, known at
+# planning time without running anything
+_SCAN_LEAVES = (
+    "FileSourceScanExec", "BatchScanExec", "LocalTableScanExec",
+    "RDDScanExec", "RangeExec",
+)
+
+
+def _is_narrow_scan(df: DataFrame) -> bool:
+    """True iff the frame's physical plan is narrow operators over
+    scans: no exchange, no subquery, no AQE wrapper (which stands for
+    an exchange or a subquery) and no cached relation. Only then does
+    asking for its partition count run nothing. Physical planning
+    itself executes no job."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        if children.isEmpty():
+            if node.getClass().getSimpleName() not in _SCAN_LEAVES:
+                return False
+        elif "Exchange" in node.nodeName() or not node.subqueries().isEmpty():
+            return False
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin a below-parallelism input ahead of CPU-heavy
     per-row work (r16, guide §2.1): a small table is one parquet
@@ -97,14 +124,20 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     splits already exceed the core count, so this is a no-op by
     construction, not a local tuning constant.
 
+    The decision reads the frame's physical plan and never executes
+    it: only a narrow chain over scans (:func:`_is_narrow_scan`) has
+    a partition count that costs nothing to ask for. Any other frame
+    (post-join, post-aggregate, cached) is returned unchanged —
+    asking would plan it and, under AQE, run its upstream shuffles,
+    which the caller's own action would then run again.
+
     Callers must be order-insensitive downstream (exact aggregates,
     sorted collects, min/max, distinct): a round-robin exchange
     permutes row order. Every call site in this repo states why it
     qualifies."""
-    if df.isStreaming:
+    if df.isStreaming or not _is_narrow_scan(df):
         return df
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= par:
         return df
     return df.repartition(par)

@@ -1,32 +1,34 @@
-"""Fingerprinted persisted derived-table artifacts.
+"""The one build discipline for every persisted artifact.
 
-At 100 TB a derived table that several queries share (the trade-edge
-graph, a token vocabulary, an IVF index) must be MATERIALIZED once and
-read by everyone — re-deriving it per query multiplies the most
-expensive join/shuffle in the family by the number of consumers
-(VERDICT r8 "What's wrong #3": seven graph queries each re-derived the
-same 1.1M-edge graph from lineitem). This module is the generic form
-of the IVF-sidecar discipline (operators/ann.py build_ivf_index):
+An artifact is anything derived once and read by many calls: the
+trade-edge graph, the IVF index, the PQ and IVFPQ indexes. Re-deriving
+a shared table per consumer multiplies the most expensive join or
+shuffle of the family by the number of consumers, and trusting a
+persisted directory without checking what it was built from serves
+stale answers. Every artifact therefore goes through
+:func:`staged_artifact`:
 
-* the artifact lives at a deterministic path as plain parquet;
-* a ``_artifact_meta.json`` sidecar records the FINGERPRINT of the
-  inputs it was derived from plus a logic version;
-* :func:`persisted_artifact` reuses the parquet only when the caller's
-  fingerprint matches the sidecar exactly — any input or derivation
-  change falls through to a rebuild.
+* **staged write** - the build callback writes its children into a
+  process-unique ``<path>.__stage__*`` directory, never into ``path``;
+* **identity in the sidecar** - the helper writes a JSON sidecar
+  holding the build's identity (input fingerprint plus every build
+  parameter) as flat top-level keys, next to whatever extra keys the
+  build reports (for example the vector dim);
+* **atomic promote** - :func:`promote_staging` renames the complete
+  staging into place, so a reader sees the old artifact or the new
+  one, never a mix, and a crashed build leaves the old artifact and
+  its sidecar untouched;
+* **reuse by identity** - a call reuses the artifact iff the stored
+  identity equals this call's identity; anything else rebuilds.
 
-Fingerprint choice: for artifacts derived from PERSISTED SOURCE TABLES
-(parquet fixtures / warehouse tables), the input identity is the file
-listing — (relative path, length, modificationTime) per data file, via
-:func:`table_files_fingerprint`. That is O(#files) metadata calls with
-zero data scan, and it is the same identity Spark's own FileIndex uses
-for scan caching: an immutable table IS its files, and any rewrite
-(fixture regeneration, compaction) changes the listing. The IVF index
-instead hashes CONTENT (bit_xor of xxhash64) because its input is an
-arbitrary in-session DataFrame with no file identity — use that
-discipline when the input isn't a stored table. A content scan per
-consumer here would cost a full read of the source each query and
-negate the artifact at scale.
+Identity choice. For an artifact derived from STORED tables (parquet
+fixtures, warehouse tables) the input identity is the file listing -
+(relative path, length, modificationTime) per data file, from
+:func:`table_files_fingerprint`: O(#files) metadata calls, no data
+scan, the identity Spark's own FileIndex uses. For an arbitrary
+in-session frame, which has no file identity, it is the content
+fingerprint of :func:`content_fingerprint` (row count plus an
+order-independent hash of every row), one agg job per call.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _META_NAME = "_artifact_meta.json"
 
@@ -99,6 +102,27 @@ def dir_bytes(spark: SparkSession, path: str) -> int:
     return total
 
 
+def content_fingerprint(
+    df: DataFrame, id_col: str, vec_col: str
+) -> tuple[int, int]:
+    """``(n_rows, content_fp)`` of an in-session vector frame in ONE
+    agg job: the row count plus the bit_xor of xxhash64 over each
+    row's id and FULL vector. xxhash64 hashes array contents, so a
+    change to any component of any row flips the fingerprint, and
+    the xor makes it independent of row order and partitioning.
+
+    Known limitation: xor cancels even-multiplicity rows, so two
+    inputs that differ only by DISTINCT duplicated (id, vector) pairs
+    share count and fingerprint. Ids are normally unique, which makes
+    that collision require a full duplicated row pair. The empty
+    input maps to fingerprint 0 (bit_xor over zero rows is NULL)."""
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(F.col(id_col), F.col(vec_col))).alias("fp"),
+    ).first()
+    return int(stats["n"]), int(stats["fp"]) if stats["fp"] is not None else 0
+
+
 def norm_path(path: str) -> str:
     """Strip trailing slashes (scheme-safe): ``f"{path}.__stage__…"``
     with a trailing slash would otherwise place the staging INSIDE the
@@ -136,8 +160,16 @@ def write_json_sidecar(
         out.close()
 
 
-def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    return read_json_sidecar(spark, path, _META_NAME)
+def read_index_meta(
+    spark: SparkSession, path: str, name: str, producer: str
+) -> dict:
+    """The sidecar ``<path>/<name>`` an artifact's readers require:
+    one metadata read, no Spark job. Raises ``ValueError`` naming the
+    ``producer`` when it is absent or unreadable."""
+    meta = read_json_sidecar(spark, path, name)
+    if meta is None:
+        raise ValueError(f"no {name} at {path}: not a {producer} output")
+    return meta
 
 
 def _newest_mtime_ms(fs, jpath, now_ms: int) -> int:
@@ -253,54 +285,81 @@ def promote_staging(
         )
 
 
+def staged_artifact(
+    spark: SparkSession,
+    path: str,
+    meta_name: str,
+    identity: dict,
+    write: Callable[[str], dict | None],
+    reuse: bool = True,
+    what: str = "artifact",
+) -> bool:
+    """Build-and-promote the artifact at ``path`` unless the one stored
+    there already has this call's identity. Returns True when it built.
+
+    ``identity`` holds everything the artifact depends on: the input
+    fingerprint (:func:`table_files_fingerprint` or
+    :func:`content_fingerprint`), every build parameter, and a version
+    tag when the derivation logic itself may change. With ``reuse``
+    the artifact is reused iff each identity key of the stored
+    ``meta_name`` sidecar equals this call's value. A sidecar missing
+    a key (an older format) never matches.
+
+    Otherwise ``write(staging)`` writes every child the artifact needs
+    into ``staging``, a fresh process-unique ``<path>.__stage__*``
+    directory, and may return extra sidecar keys it learned on the way
+    (for example the vector dim). The sidecar is then written into the
+    staging as ``{**identity, **extra}`` and the staging is renamed
+    into place by :func:`promote_staging`.
+
+    Concurrency and crash contract: builders never write into ``path``.
+    A reader sees either the complete old artifact with its sidecar or
+    the complete new one. Two concurrent builders each produce a
+    complete artifact and the last rename wins (wasted work, never a
+    mixed artifact). A reader racing the replace can get a transient
+    read error on the briefly absent path, a clean retry. A build that
+    raises has its staging removed and leaves the old artifact as it
+    was. A process killed mid-build leaves only an orphaned staging,
+    swept by the next builder once it is at least an hour old (a
+    younger one may belong to a live builder)."""
+    path = norm_path(path)
+    if reuse:
+        stored = read_json_sidecar(spark, path, meta_name)
+        if stored is not None and all(
+            stored.get(k) == v for k, v in identity.items()
+        ):
+            return False
+    sweep_stale_stagings(spark, path)
+    staging = f"{path}.__stage__{os.getpid()}_{time.monotonic_ns()}"
+    try:
+        extra = write(staging) or {}
+    except BaseException:
+        fs, sroot = _fs(spark, staging)
+        if fs.exists(sroot):
+            fs.delete(sroot, True)
+        raise
+    meta = {**identity, **extra}
+    write_json_sidecar(spark, staging, meta_name, meta)
+    promote_staging(spark, staging, path, meta_name, meta, what=what)
+    return True
+
+
 def persisted_artifact(
     spark: SparkSession,
     path: str,
     fingerprint: dict,
     build: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Return the artifact at ``path``, rebuilding iff the persisted
-    sidecar fingerprint differs from ``fingerprint``.
+    """Return the single-table artifact at ``path``, rebuilding iff the
+    persisted fingerprint differs from ``fingerprint``: the
+    :func:`staged_artifact` discipline for an artifact that is one
+    parquet table, with the sidecar ``{"fingerprint": fingerprint}``.
 
-    The caller's fingerprint must capture everything the derivation
-    depends on: input-table identities (:func:`table_files_fingerprint`)
-    AND a version tag for the derivation logic itself — bump the tag
-    when the build changes, exactly like the IVF meta invalidates old
-    sidecars on a formula change (r8 lesson (i)).
-
-    On reuse AND after a build the returned DataFrame READS the
+    On reuse and after a build the returned DataFrame READS the
     parquet, so every consumer's plan starts from the materialized
-    artifact scan, never the derivation lineage.
-
-    Concurrency contract (r9 review, hardened per ADVICE r9): builders
-    NEVER write into the final path. The build lands in a
-    process-unique STAGING directory (meta sidecar included) which is
-    renamed into place — renames are atomic, so a reader sees either a
-    complete artifact (with its meta) or none, never interleaved part
-    files from two writers. Two concurrent builders both produce
-    complete, deterministic artifacts and the last rename wins (wasted
-    work, never a mixed artifact); a reader racing the replace window
-    can get a transient read error on the briefly-absent path — a
-    clean retry, not silent corruption. A crash mid-stage leaves only
-    an orphaned ``<path>.__stage__*`` directory, swept by the next
-    builder ONLY once it is ≥1h old (a younger one may belong to a
-    live builder — deleting it mid-write could otherwise leave a
-    data-less dir to be promoted). Before promoting, the builder
-    re-verifies its own staging still holds data files + the expected
-    meta, so a swept-and-recreated staging can never be renamed into
-    place; after a failed rename it verifies a complete matching
-    artifact actually exists at ``path`` before discarding its own
-    output, and raises a descriptive error otherwise instead of
-    masking the real fault with a path-missing read error."""
-    path = norm_path(path)
-    meta = _read_meta(spark, path)
-    if meta is not None and meta.get("fingerprint") == fingerprint:
-        return spark.read.parquet(path)
-    sweep_stale_stagings(spark, path)
-    staging = f"{path}.__stage__{os.getpid()}_{time.monotonic_ns()}"
-    df = build()
-    df.write.mode("overwrite").parquet(staging)
-    expected = {"fingerprint": fingerprint}
-    write_json_sidecar(spark, staging, _META_NAME, expected)
-    promote_staging(spark, staging, path, _META_NAME, expected, what="artifact")
+    artifact scan, never the derivation lineage."""
+    staged_artifact(
+        spark, path, _META_NAME, {"fingerprint": fingerprint},
+        lambda staging: build().write.mode("overwrite").parquet(staging),
+    )
     return spark.read.parquet(path)

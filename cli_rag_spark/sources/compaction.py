@@ -26,7 +26,7 @@ Policy encoded here:
   was already swapped in, so the backup is garbage, or the swap
   half-finished and the backup IS the table, so it is restored);
   :func:`_recover` handles both before compacting.
-* partitioned layouts (e.g. the IVF index's partitionBy(cid)) must
+* partitioned layouts (``partitionBy`` writes) must
   be compacted per leaf directory — a root containing ``key=value``
   subdirectories is rejected rather than silently flattened.
 """

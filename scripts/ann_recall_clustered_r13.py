@@ -97,8 +97,8 @@ def stage_main(spark, args) -> None:
         knn_join_lsh,
         rerank_exact,
     )
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         ivfpq_index_ready,
         knn_join_ivfpq,
@@ -130,10 +130,10 @@ def stage_main(spark, args) -> None:
         build_ivfpq_index(emb, ivfpq_path, residual=False)
         print(json.dumps({"row": "ivfpq_build",
                           "sec": round(time.perf_counter() - t0, 2),
-                          "meta": _read_ivfpq_meta(spark, ivfpq_path)}),
+                          "meta": read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")}),
               flush=True)
     codes, cb, assign, cent = read_ivfpq_index(spark, ivfpq_path)
-    meta = _read_ivfpq_meta(spark, ivfpq_path)
+    meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     n_probe = default_n_probe(c)
 
@@ -212,8 +212,8 @@ def stage_residual(spark, args) -> None:
     rows, plus the dispatched default chain."""
     from cli_rag_spark.operators.ann import default_n_probe
     from cli_rag_spark.operators.knn import knn_join_gemm, rerank_exact
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         default_rerank_depth,
         ivfpq_index_ready,
@@ -248,10 +248,10 @@ def stage_residual(spark, args) -> None:
         )
         print(json.dumps({"row": "ivfpq_residual_build",
                           "sec": round(time.perf_counter() - t0, 2),
-                          "meta": _read_ivfpq_meta(spark, path)}),
+                          "meta": read_json_sidecar(spark, path, "_ivfpq_meta.json")}),
               flush=True)
     codes, cb, assign, cent = read_ivfpq_index(spark, path)
-    meta = _read_ivfpq_meta(spark, path)
+    meta = read_json_sidecar(spark, path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     n_probe = default_n_probe(c)
     r_ladder = [k] + args.r_ladder
@@ -310,8 +310,8 @@ def stage_dim192(spark, args) -> None:
         knn_join_lsh,
         rerank_exact,
     )
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         build_pq_index,
         default_rerank_depth,
@@ -372,10 +372,10 @@ def stage_dim192(spark, args) -> None:
         build_ivfpq_index(emb, ivfpq_path)  # r14 default: residual
         print(json.dumps({"row": "ivfpq_default_build",
                           "sec": round(time.perf_counter() - t0, 2),
-                          "meta": _read_ivfpq_meta(spark, ivfpq_path)}),
+                          "meta": read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")}),
               flush=True)
     codes2, cb2, assign2, cent2 = read_ivfpq_index(spark, ivfpq_path)
-    meta = _read_ivfpq_meta(spark, ivfpq_path)
+    meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     r_depth = default_rerank_depth(k, n_index, c)
     t0 = time.perf_counter()
@@ -399,8 +399,8 @@ def stage_n8m(spark, args) -> None:
     (linear in N) vs the IVFPQ probe (N^(3/4)) at N=8M."""
     from cli_rag_spark.operators.ann import default_n_probe
     from cli_rag_spark.operators.knn import knn_join_gemm, rerank_exact
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         ivfpq_index_ready,
         knn_join_ivfpq,
@@ -430,7 +430,7 @@ def stage_n8m(spark, args) -> None:
                           "sec": round(time.perf_counter() - t0, 2)}),
               flush=True)
     codes, cb, assign, cent = read_ivfpq_index(spark, ivfpq_path)
-    meta = _read_ivfpq_meta(spark, ivfpq_path)
+    meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     t0 = time.perf_counter()
     # the DEFAULT dispatched chain: probe at R=default depth + rerank

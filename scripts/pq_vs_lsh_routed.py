@@ -82,8 +82,8 @@ def main() -> None:
         knn_join_gemm,
         topk_recall,
     )
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         build_pq_index,
         default_pq_geometry,
@@ -175,7 +175,7 @@ def main() -> None:
         build_sec = round(time.perf_counter() - t0, 2)
     else:
         build_sec = 0.0  # reused from a prior run
-    meta = _read_ivfpq_meta(spark, ivfpq_path)
+    meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     print(json.dumps({"ivfpq_build_sec": build_sec, "meta": meta}),
           flush=True)
 

@@ -1,6 +1,6 @@
 """IVF ANN operator tests (operators/ann.py): Lloyd refinement,
-partitioned index build, and the partition-pruning claim behind the
-probe path."""
+the persisted sorted index build and append, reuse, and the
+row-group pruning claim behind the probe path."""
 
 from __future__ import annotations
 
@@ -43,75 +43,31 @@ def test_refined_assignment_covers_all_vectors(spark, sf_dir):
     assert assign.where(F.col("cid").isNull()).count() == 0
 
 
-def test_build_ivf_index_prunes_partitions(spark, sf_dir, tmp_path):
-    """Probing one list must scan only that list's parquet files —
-    the dir-per-list layout's physical pruning property (kept as the
-    layout="partitioned" format option since r14)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, n_centroids=4, layout="partitioned")
-    assert len(glob.glob(f"{path}/cid=*")) >= 2
-    idx = spark.read.parquet(path)
-    pruned = idx.where(F.col("cid") == idx.select(F.min("cid")).collect()[0][0])
-    files = pruned.select(F.input_file_name()).distinct().collect()
-    all_files = idx.select(F.input_file_name()).distinct().count()
-    assert 0 < len(files) < all_files
-
-
 def test_build_ivf_index_sorted_layout_roundtrip(spark, sf_dir, tmp_path):
-    """The r14 default layout (VERDICT r13 #3): ONE parquet directory,
-    rows (cid, id)-sorted with small row groups. It must (a) record
-    layout in the meta, (b) read back row-for-row identical to the
-    dir-per-list layout, (c) push the probe's cid filter down to the
+    """The IVF layout: ONE parquet directory, rows (cid, id)-sorted with
+    small row groups. It must (a) record layout in the meta and write
+    no cid=* leaves, and (c) push the probe's cid filter down to the
     parquet scan (row-group min/max pruning is the physical property
-    that replaces directory pruning), and (d) answer knn_join_ivf
-    identically to the partitioned artifact."""
-    from cli_rag_spark.operators.ann import (
-        _read_ivf_meta,
-        knn_join_ivf,
-        read_ivf_index,
-    )
+    the probe relies on)."""
+    from cli_rag_spark.operators.ann import _read_ivf_meta
 
     emb = load_table(spark, sf_dir, "embeddings")
     sorted_path = str(tmp_path / "ivf_sorted")
-    part_path = str(tmp_path / "ivf_part")
-    build_ivf_index(emb, sorted_path, n_centroids=8)  # default layout
-    build_ivf_index(emb, part_path, n_centroids=8, layout="partitioned")
+    build_ivf_index(emb, sorted_path, n_centroids=8)
     assert _read_ivf_meta(spark, sorted_path)["layout"] == "sorted"
-    assert _read_ivf_meta(spark, part_path)["layout"] == "partitioned"
     # single directory, no cid=* leaves
     assert glob.glob(f"{sorted_path}/cid=*") == []
     srt = spark.read.parquet(sorted_path)
-    prt = spark.read.parquet(part_path)
-    norm = lambda df: sorted(
-        (int(r["vec_id"]), int(r["cid"]), tuple(r["embedding"] or ()))
-        for r in df.collect()
-    )
-    assert norm(srt) == norm(prt)
     # (c) the cid predicate reaches the parquet scan as a pushed filter
     plan = srt.where(F.col("cid").isin([0, 1]))._jdf.queryExecution(
     ).executedPlan().toString()
     assert "PushedFilters" in plan and "cid" in plan.split("PushedFilters", 1)[1][:200]
-    # (d) probe parity through the real consumer
-    q = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = knn_join_ivf(
-        q, read_ivf_index(spark, sorted_path), k=3, n_centroids=8, n_probe=2,
-        validate_cid=False,
-    )
-    b = knn_join_ivf(
-        q, read_ivf_index(spark, part_path), k=3, n_centroids=8, n_probe=2,
-        validate_cid=False,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_append_ivf_index_follows_sorted_layout(spark, sf_dir, tmp_path):
     """Appending to a sorted-layout index must keep the single-dir
     discipline (no cid=* leaves appear) and stay row-for-row identical
-    to a one-shot sorted build over the union — the same contract the
-    partitioned append pins below."""
+    to a one-shot sorted build over the union."""
     from cli_rag_spark.operators.ann import append_ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -234,41 +190,6 @@ def test_knn_join_ivf_rejects_mismatched_cid(spark, sf_dir, tmp_path):
     )
     with pytest.raises(ValueError, match="different coarse quantizer"):
         knn_join_ivf(q, persisted, k=3, n_centroids=4, n_probe=2)
-
-
-def test_append_ivf_index_equals_one_shot_build(spark, sf_dir, tmp_path):
-    """Base build + batch append must be row-for-row identical to a
-    one-shot build over the union — same cid assignment (the appended
-    batch is quantized by the ORIGINAL coarse quantizer, which seeded
-    centroids make identical to the union build's), same row contents,
-    and only the touched cid leaves gain files."""
-    from cli_rag_spark.operators.ann import append_ivf_index, read_ivf_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") < 300)
-    batch = emb.where((F.col("vec_id") >= 300) & (F.col("vec_id") < 400))
-
-    inc_path = str(tmp_path / "ivf_inc")
-    # partitioned: this test pins the dir-per-list append contract
-    # ("only the touched cid leaves gain files"); the sorted-layout
-    # append is pinned in test_append_ivf_index_follows_sorted_layout
-    build_ivf_index(base, inc_path, n_centroids=8, layout="partitioned")
-    files_before = set(glob.glob(f"{inc_path}/cid=*/*.parquet"))
-    append_ivf_index(spark, inc_path, batch)
-    files_after = set(glob.glob(f"{inc_path}/cid=*/*.parquet"))
-    assert files_before <= files_after  # append never rewrites a file
-
-    oneshot_path = str(tmp_path / "ivf_oneshot")
-    build_ivf_index(
-        emb.where(F.col("vec_id") < 400), oneshot_path, n_centroids=8,
-        layout="partitioned",
-    )
-
-    key = lambda df: sorted(
-        (r.vec_id, r.cid, tuple(r.embedding)) for r in df.collect()
-    )
-    inc = read_ivf_index(spark, inc_path, n_centroids=8)
-    assert key(inc) == key(read_ivf_index(spark, oneshot_path, n_centroids=8))
 
 
 def test_append_ivf_index_requires_index(spark, sf_dir, tmp_path):

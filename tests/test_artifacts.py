@@ -208,3 +208,24 @@ def test_sweep_treats_vanished_staging_as_live(spark, tmp_path):
     os.makedirs(str(tmp_path / "art.__stage__123_456"), exist_ok=True)
     sweep_stale_stagings(spark, dest)
     assert os.path.isdir(str(tmp_path / "art.__stage__123_456"))
+
+
+def test_indexes_stay_on_the_one_artifact_path():
+    """Spark-free guard: no operator module opens or creates a sidecar
+    file itself (they go through sources/artifacts.py), and the content
+    fingerprint expression is defined exactly once in the package."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "cli_rag_spark"
+    for mod in sorted((pkg / "operators").glob("*.py")):
+        src = mod.read_text()
+        for needle in ("readAllBytes", "fs.create("):
+            assert needle not in src, f"{mod.name} uses {needle} directly"
+    fp_expr = re.compile(r"bit_xor\(\s*F\.xxhash64\(")
+    hits = [
+        (mod.relative_to(pkg).as_posix(), len(fp_expr.findall(mod.read_text())))
+        for mod in sorted(pkg.rglob("*.py"))
+    ]
+    hits = [(name, n) for name, n in hits if n]
+    assert hits == [("sources/artifacts.py", 1)], hits

@@ -11,9 +11,14 @@ from cli_rag_spark.operators.pq import (
     pq_adc_scores,
     pq_encode,
 )
+from cli_rag_spark.sources.artifacts import read_json_sidecar
 from cli_rag_spark.sources.documents import load_table
 
 M, KC = 4, 16
+
+
+def _ivfpq_meta(spark, path):
+    return read_json_sidecar(spark, path, "_ivfpq_meta.json")
 
 
 def test_codebook_shape(spark, sf_dir):
@@ -587,7 +592,6 @@ def test_knn_join_ivfpq_residual_matches_single_query_form(spark, sf_dir, tmp_pa
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         ivfpq_residual_topk,
         knn_join_ivfpq,
@@ -602,7 +606,7 @@ def test_knn_join_ivfpq_residual_matches_single_query_form(spark, sf_dir, tmp_pa
     build_ivfpq_index(
         emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=True
     )
-    assert _read_ivfpq_meta(spark, path)["residual"] is True
+    assert _ivfpq_meta(spark, path)["residual"] is True
     codes, cb, assign, cent = read_ivfpq_index(spark, path)
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
@@ -638,7 +642,7 @@ def test_build_ivfpq_residual_flag_default_and_optout(spark, sf_dir, tmp_path):
     key) and raw builds both score through the raw-vector LUT."""
     from pyspark.sql import functions as F
 
-    from cli_rag_spark.operators.pq import _read_ivfpq_meta, build_ivfpq_index
+    from cli_rag_spark.operators.pq import build_ivfpq_index
     from cli_rag_spark.sources.documents import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").where(
@@ -646,13 +650,13 @@ def test_build_ivfpq_residual_flag_default_and_optout(spark, sf_dir, tmp_path):
     )
     path = str(tmp_path / "ivfpq_default_flag")
     build_ivfpq_index(emb, path, n_centroids=8, m_subspaces=4, k_codes=16)
-    assert _read_ivfpq_meta(spark, path)["residual"] is True
+    assert _ivfpq_meta(spark, path)["residual"] is True
     raw_path = str(tmp_path / "ivfpq_raw_flag")
     build_ivfpq_index(
         emb, raw_path, n_centroids=8, m_subspaces=4, k_codes=16,
         residual=False,
     )
-    assert _read_ivfpq_meta(spark, raw_path)["residual"] is False
+    assert _ivfpq_meta(spark, raw_path)["residual"] is False
 
 
 def test_residual_adc_terms_persisted_matches_on_the_fly(
@@ -670,7 +674,6 @@ def test_residual_adc_terms_persisted_matches_on_the_fly(
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.pq import (
-        _read_ivfpq_meta,
         build_ivfpq_index,
         knn_join_ivfpq,
         read_ivfpq_index,
@@ -686,7 +689,7 @@ def test_residual_adc_terms_persisted_matches_on_the_fly(
     build_ivfpq_index(
         emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=True
     )
-    assert _read_ivfpq_meta(spark, path)["resid_terms"] is True
+    assert _ivfpq_meta(spark, path)["resid_terms"] is True
     codes, cb, assign, cent = read_ivfpq_index(spark, path)
     persisted = read_ivfpq_terms(spark, path)
     assert persisted is not None
@@ -821,3 +824,84 @@ def test_ivfpq_reuse_if_exists_rebuilds_on_param_or_terms_mismatch(
         assert _json.load(f)["resid_terms"] is True, (
             "a residual reuse without the terms child must rebuild"
         )
+
+
+def _flip_component_2(emb):
+    """Same count, ids and dim — one interior component flips."""
+    return emb.withColumn(
+        "embedding",
+        F.transform("embedding", lambda x, i: F.when(i == 2, -x).otherwise(x)),
+    )
+
+
+def _crash_encoders(monkeypatch):
+    import cli_rag_spark.operators.pq as pq_mod
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("encoder crashed")
+
+    monkeypatch.setattr(pq_mod, "pq_encode", boom)
+    monkeypatch.setattr(pq_mod, "pq_encode_gemm", boom)
+
+
+def _assert_crashed_rebuild_keeps_artifact(
+    spark, sf_dir, tmp_path, monkeypatch, build, meta_name, **params
+):
+    """Build over A; a forced rebuild over B that crashes in the
+    encoder must leave A's sidecar and A's codebook as they were, and
+    a reuse over A must then serve A's codebook without a rebuild."""
+    import glob as _glob
+    import os
+
+    import pytest
+
+    a = load_table(spark, sf_dir, "embeddings").where(
+        F.col("vec_id") < 300
+    )
+    path = str(tmp_path / "torn")
+    build(a, path, **params)
+    meta_file = os.path.join(path, meta_name)
+    with open(meta_file) as f:
+        meta_before = f.read()
+    mtime_before = os.path.getmtime(meta_file)
+
+    def codebook():
+        return sorted(
+            (r["m"], r["code"], tuple(r["cvec"]))
+            for r in spark.read.parquet(f"{path}/codebook").collect()
+        )
+
+    cb_before = codebook()
+    with monkeypatch.context() as m:
+        _crash_encoders(m)
+        with pytest.raises(RuntimeError, match="encoder crashed"):
+            build(_flip_component_2(a), path, **params)
+    with open(meta_file) as f:
+        assert f.read() == meta_before
+    assert codebook() == cb_before
+    assert _glob.glob(f"{path}.__stage__*") == []
+    build(a, path, reuse_if_exists=True, **params)
+    assert os.path.getmtime(meta_file) == mtime_before, "reuse must not rebuild"
+    assert codebook() == cb_before
+
+
+def test_build_pq_index_crashed_rebuild_keeps_old_artifact(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    from cli_rag_spark.operators.pq import build_pq_index
+
+    _assert_crashed_rebuild_keeps_artifact(
+        spark, sf_dir, tmp_path, monkeypatch, build_pq_index, "_pq_meta.json",
+        m_subspaces=M, k_codes=KC,
+    )
+
+
+def test_build_ivfpq_index_crashed_rebuild_keeps_old_artifact(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    from cli_rag_spark.operators.pq import build_ivfpq_index
+
+    _assert_crashed_rebuild_keeps_artifact(
+        spark, sf_dir, tmp_path, monkeypatch, build_ivfpq_index, "_ivfpq_meta.json",
+        n_centroids=8, m_subspaces=M, k_codes=KC,
+    )

@@ -142,3 +142,29 @@ def test_spread_small_input_conditions(spark):
 
     wide = small.repartition(par)
     assert spread_small_input(wide) is wide  # no-op, not a new plan
+
+
+def test_spread_small_input_leaves_post_aggregate_frame_unexecuted(spark):
+    """A post-aggregate frame is returned unchanged, and deciding so
+    runs nothing: the upstream per-row work executes exactly once, in
+    the caller's own action (asking the frame for its partition count
+    would plan it and, under AQE, run its upstream shuffle first)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from cli_rag_spark.session import spread_small_input
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        calls.add(1)
+        return v % 7
+
+    key = F.udf(counted, LongType())
+    src = spark.range(200).coalesce(1)
+    agg = src.groupBy(key("id").alias("k")).agg(F.count(F.lit(1)).alias("n"))
+    spread = spread_small_input(agg)
+    assert calls.value == 0
+    assert spread is agg
+    assert sum(r["n"] for r in spread.collect()) == 200
+    assert calls.value == 200
