@@ -71,7 +71,8 @@ def assign_centroids(
     Plan: crossJoin(broadcast(centroids)) → rounded dist →
     ``min_by(cid, (dist, cid))`` — the N×C candidate rows exist only
     inside one partial-aggregating stage; the shuffle carries N narrow
-    (id, min-struct) rows.
+    (id, min-struct) rows. NULL vectors are unscorable and dropped, as
+    in :func:`assign_centroids_gemm`.
     """
     if metric == "cosine":
         dist = cosine_distance(F.col(vec_col), F.col("cvec"))
@@ -84,6 +85,7 @@ def assign_centroids(
         raise ValueError(f"unknown metric {metric!r} (cosine|l2)")
     scored = (
         vectors.select(id_col, vec_col)
+        .where(F.col(vec_col).isNotNull())
         .crossJoin(F.broadcast(centroids))
         .withColumn("_d", F.round(dist, round_digits))
     )
@@ -452,8 +454,8 @@ def tune_n_probe(
     c = int(meta["n_centroids"])
     index = read_ivf_index(spark, path)
     if exact is None:
-        # the meta sidecar doesn't record dim (ivf_index_ready reads
-        # it from the centroids parquet) — one bounded probe row does
+        # one bounded probe row gives dim and rejects an index with no
+        # scorable vectors before the ground-truth GEMM
         row0 = (
             index.where(F.col("embedding").isNotNull())
             .select(F.size("embedding").alias("d"))
@@ -567,7 +569,8 @@ def build_ivf_index(
     staging directory and promoted atomically. The sidecar holds the
     build identity: n_centroids, column names, refine_iters,
     round_digits, layout, and the input's ``n_rows`` + ``content_fp``
-    (:func:`~cli_rag_spark.sources.artifacts.content_fingerprint`).
+    (:func:`~cli_rag_spark.sources.artifacts.content_fingerprint`),
+    plus the vector ``dim`` :func:`ivf_index_ready` checks.
     :func:`read_ivf_index` checks a probe's ``n_centroids`` against it
     at open time, and probing or appending never re-derives centroids
     from data: the quantizer travels with the index.
@@ -607,10 +610,14 @@ def build_ivf_index(
         "n_rows": n_rows,
         "content_fp": content_fp,
         "layout": "sorted",
+        # 2: the sidecar records dim; an older sidecar never matches,
+        # so reuse rebuilds it instead of serving an index the
+        # dispatcher's dim gate can never accept
+        "version": 2,
     }
     built: list[DataFrame] = []
 
-    def write(staging: str) -> None:
+    def write(staging: str) -> dict:
         centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
         if refine_iters > 0:
             centroids = kmeans_refine(
@@ -668,6 +675,7 @@ def build_ivf_index(
             f"{staging}/{_CENTROID_DIR}"
         )
         built.append(centroids)
+        return {"dim": dim}
 
     if staged_artifact(
         spark, path, _META_NAME, identity, write,
@@ -694,30 +702,22 @@ def ivf_index_ready(
 ) -> bool:
     """Dim-validated availability gate for strategy auto-dispatch
     (operators/knn.py knn_join_auto): True iff ``path`` holds a
-    ``build_ivf_index`` output whose build ``n_centroids`` matches AND
-    whose persisted coarse centroids have dimension ``dim``. A probe
-    against an index of the wrong dimensionality would fail deep
-    inside the distance kernel (or worse, an index built for a
-    different embedding column would silently return garbage
-    neighbours); this check is one metadata read plus one row of the
-    k-row centroid sidecar. Any absence/mismatch returns False — the
-    dispatcher falls back to an index-free strategy rather than
-    erroring."""
-    try:
-        meta = _read_ivf_meta(spark, path)
-    except ValueError:
-        return False
-    if meta.get("n_centroids") != n_centroids:
-        return False
-    try:
-        row = (
-            read_ivf_centroids(spark, path)
-            .select(F.size("cvec").alias("d"))
-            .first()
-        )
-    except Exception:
-        return False
-    return row is not None and row["d"] == dim
+    ``build_ivf_index`` output whose build ``n_centroids`` and ``dim``
+    match. A probe against an index of the wrong dimensionality would
+    fail deep inside the distance kernel (or worse, an index built for
+    a different embedding column would silently return garbage
+    neighbours). One sidecar read, no Spark job: it runs on every
+    dispatch. Any absence/mismatch, including a sidecar that does not
+    record ``dim``, returns False — the dispatcher falls back to an
+    index-free strategy rather than erroring."""
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
+
+    meta = read_json_sidecar(spark, path, _META_NAME)
+    return (
+        meta is not None
+        and meta.get("n_centroids") == n_centroids
+        and meta.get("dim") == dim
+    )
 
 
 def read_ivf_index(

@@ -924,7 +924,7 @@ GEMM_MAX_QUERIES = 1_000_000
 # = 32 GB). 64e6 elements = the same ~0.5 GB the row cap was sized
 # for, now independent of dim.
 GEMM_MAX_QUERY_ELEMS = 64_000_000
-# GEMM_MAX_PAIR_OPS — MEASURED r11 (scripts/pq_vs_lsh_routed.py, the
+# GEMM_MAX_PAIR_OPS — MEASURED r11 (SCALING.md, the routed run on the
 # 2M-vector 1000× replica index, 400 queries, dim 64): the full
 # 5.12e10-pair-op GEMM ran END-TO-END in 9.17 s on this box —
 # ~5.6e9 pair-ops/s single-node including the parquet scan — while
@@ -946,72 +946,6 @@ GEMM_MAX_QUERY_ELEMS = 64_000_000
 # the answer is the SUB-LINEAR persisted IVF/IVFPQ probe, never a
 # flat-cost path with a worse constant.
 GEMM_MAX_PAIR_OPS = 1_000_000_000_000
-# PQ_MAX_ADC_ROWS — pq_knn_join's shuffle carries one narrow sum row
-# per (query, index) pair (the LUT join fans out in-stage; the groupBy
-# key is unique per pair so map-side combine cannot shrink it), so ADC
-# is linear in Q·N REGARDLESS of dim; its structural wins over LSH are
-# that it never reads an embedding byte (the codes scan is ~M bytes a
-# row) and its per-pair work is M lookups, not a dim-wide verify.
-# MEASURED at the routed shape r11 (scripts/pq_vs_lsh_routed.py,
-# Q=400 × N=2M, dim 64): ADC sustains 1.5e6 pair-rows/s end-to-end
-# (529.5 s at 8e8 pair rows — 2× the r10 floor-shadowed calibration
-# rate), LSH 3.2e6 pair-rows/s at the same shape (251.5 s) — at
-# dim 64 LSH beats ADC on wall AND recall (0.69 vs 0.11 @10; the
-# default m=4×16-code geometry carries 16 bits of structure, far too
-# coarse at 2M rows — scale m·log2(k_codes) with dim, or compose
-# through ivfpq_topk, before trusting ADC recall). Per-pair costs:
-# LSH ≈ 1.9e-8 s × dim × ~25% structural collisions (4 sign bits per
-# band → 1/16 × 4 bands), ADC ≈ 6.6e-7 s dim-free → wall crossover
-# at dim ≈ 139; PQ_MIN_DIM below gates ADC to the high-dim region
-# where its dim-free scan is the measured winner. The 2e9 cap stays
-# as the shuffle-volume envelope (~50 GB of narrow sum rows) — past
-# it, neither flat-cost path is right and the answer is tighter
-# banding or an IVF restriction of the codes (ivfpq_topk).
-PQ_MAX_ADC_ROWS = 2_000_000_000
-# PQ_MIN_DIM — the constant's HISTORY is three successive direct
-# refutations, each from a measured run at the routed shape:
-# r11 extrapolated a dim-139 wall crossover vs LSH from dim-64
-# per-pair costs and shipped 160; the r12 direct dim-192 run (Q=200 ×
-# N=700k, fixed 16/4 LSH geometry) measured a wall TIE with LSH far
-# ahead on recall (0.494 vs 0.109 @10) and the gate rose to 256; the
-# r13 clustered-corpus re-run (scripts/ann_recall_clustered_r13.py
-# --stage dim192, Q=400 × N=2M × dim 192) REFUTED 256 in turn,
-# because the r13 default_lsh_geometry rule changed LSH's cost
-# structure: at the rule geometry (88 planes / 8 bands at 2M) LSH
-# measured 37.0 s / recall 0.996 vs flat ADC's 140.6 s / 0.105 —
-# 3.8× FASTER at 9.5× the recall, where the old fixed 16/4 geometry
-# had measured 311.9 s (its Θ(Q·N) structural-collision verify was
-# what made ADC look wall-competitive). With rule-LSH wall dominated
-# by the signature GEMM (∝ dim: 37 s at 192) and ADC dim-free
-# (~141 s at 8e8 pair rows), the projected wall crossover sits near
-# dim ≈ 730; 768 (the next standard embedding width) ships as the
-# gate, and below it the dispatcher keeps the strategy that wins
-# wall AND recall on every measured point (dim 64 and 192, both the
-# clustered and sign-flip corpora). ADC's structural win region is
-# unchanged in kind — scans that cannot afford embedding bytes
-# (M bytes/row vs dim·8) — but it must now be HIGH-dim enough that
-# reading embeddings once for signatures costs more than scanning
-# codes Q times. Reachability (ADVICE r11): in the OPS-capped region
-# the PQ branch only opens where the gate is moot; when GEMM is
-# blocked by the QUERY-side caps (GEMM_MAX_QUERIES /
-# GEMM_MAX_QUERY_ELEMS), PQ is reachable at ANY dim and this gate is
-# load-bearing (tests/test_knn.py pins the routing on both sides of
-# it, symbolically).
-# r14 — MEASURED AT THE GATE (VERDICT r13 #2; the first value of
-# this constant to survive a direct run): clustered 2M × dim 768,
-# Q=400, same protocol as the dim-192 stage — flat ADC 224.9 s vs
-# rule-LSH 297.8 s. The wall crossover the 768 gate was projected
-# from is REAL (ADC's scan is dim-free; LSH's signature GEMM paid
-# dim = 768), so 768 stands. The honest nuance the same run books
-# (SCALING.md r14): recall does NOT cross — 0.104 (ADC at the
-# 16-bit protocol geometry) vs 0.997 (LSH), and even the dispatched
-# residual-IVFPQ chain reads 727 s / 0.978 at this N — so when live
-# embeddings are available for signatures, LSH keeps the dispatch
-# below AND at the gate; the flat branch's niche stays what the
-# precedence order always encoded: a persisted codes artifact when
-# re-reading f64 embeddings is unaffordable, at dims where the
-# dim-free scan beats signature cost on wall.
-PQ_MIN_DIM = 768
 
 
 def choose_knn_strategy(
@@ -1019,19 +953,17 @@ def choose_knn_strategy(
     n_index: int,
     dim: int,
     ivf_available: bool = False,
-    pq_available: bool = False,
     ivfpq_available: bool = False,
 ) -> str:
-    """Pick the E7 physical strategy from the workload shape —
-    ``"exact"`` (expression kNN), ``"gemm"`` (BLAS brute force),
+    """Pick the E7 physical strategy from the workload shape — one of
+    five: ``"exact"`` (expression kNN), ``"gemm"`` (BLAS brute force),
     ``"ivf"`` (persisted inverted-file probe), ``"ivfpq"`` (persisted
     coarse-list-pruned ADC join — the sub-linear escape past the GEMM
-    envelope, VERDICT r11 #1), ``"pq"`` (persisted flat ADC join) or
-    ``"lsh"`` (hyperplane banding). Pure arithmetic on three numbers,
-    so the choice is deterministic, testable, and free (the
-    fuzzy-join analog, choose_fuzzy_strategy, must sample the data
-    because gram selectivity isn't visible in row counts; here
-    pair-ops = Q·N·dim IS the cost model).
+    envelope, VERDICT r11 #1) or ``"lsh"`` (hyperplane banding). Pure
+    arithmetic on three numbers, so the choice is deterministic,
+    testable, and free (the fuzzy-join analog, choose_fuzzy_strategy,
+    must sample the data because gram selectivity isn't visible in
+    row counts; here pair-ops = Q·N·dim IS the cost model).
 
     Precedence: exact expression while the whole workload sits at the
     job floor; exact GEMM while brute force is affordable and the
@@ -1043,17 +975,15 @@ def choose_knn_strategy(
     candidate); else IVFPQ when a persisted build_ivfpq_index
     artifact validates (the same list pruning over ~M-byte code rows
     instead of dim·8-byte embeddings — candidates Q·n_probe·(N/C)·M
-    narrow rows; the r11 routed measurement proved BOTH flat paths
-    lose 27-57× per pair-op past the GEMM envelope, so a reachable
-    sub-linear strategy must win the dispatch over them); else the
-    flat fallbacks — PQ-ADC when a persisted codebook+codes index
-    exists, the workload is HIGH-DIM (dim ≥ PQ_MIN_DIM — below the
-    r13-projected ~dim-730 wall crossover, rule-geometry LSH beats
-    ADC on wall AND recall at every measured point), and the Q·N
-    pair-row shuffle is affordable
-    (memory-bound: never reads an embedding byte, linear in pairs
-    but dim-free); else LSH banding (index-free, candidate cost
-    O(colliding pairs × dim))."""
+    narrow rows; the r11 routed measurement put the flat Θ(Q·N)
+    paths 27-57× behind per pair-op past the GEMM envelope); else
+    LSH banding (index-free, candidate cost O(colliding pairs ×
+    dim)).
+
+    There is no flat-PQ strategy: flat ADC is IVFADC probing every
+    list, so it is the ``"ivfpq"`` route over a raw
+    (``residual=False``) artifact with ``n_probe`` = C (see
+    :func:`knn_join_auto`)."""
     if n_queries < 0 or n_index < 0 or dim < 0:
         raise ValueError(
             f"shape must be non-negative, got ({n_queries}, {n_index}, {dim})"
@@ -1071,12 +1001,6 @@ def choose_knn_strategy(
         return "ivf"
     if ivfpq_available:
         return "ivfpq"
-    if (
-        pq_available
-        and dim >= PQ_MIN_DIM
-        and n_queries * n_index <= PQ_MAX_ADC_ROWS
-    ):
-        return "pq"
     return "lsh"
 
 
@@ -1097,8 +1021,6 @@ def knn_join_auto(
     ivf_path: str | None = None,
     n_centroids: int | None = None,
     n_probe: int | None = None,
-    pq_path: str | None = None,
-    pq_m_subspaces: int = 4,
     lsh_planes: int | None = None,
     lsh_bands: int | None = None,
     lsh_seed: int = 42,
@@ -1107,63 +1029,61 @@ def knn_join_auto(
     ivfpq_rerank: int | None = None,
 ) -> DataFrame:
     """E7 with the physical strategy chosen by
-    :func:`choose_knn_strategy` — same ``[query_id, index_id, dist,
-    rank]`` contract as every member strategy. The ``dist`` column
-    carries each strategy's native score: exact/GEMM/IVF/LSH emit
-    cosine distance; the PQ branch emits the ADC squared-L2 estimate
-    (rank-equivalent to cosine on unit-normalized vectors) — ranks,
-    not raw scores, are the cross-strategy contract on the
-    approximate paths.
+    :func:`choose_knn_strategy` (exact, gemm, ivf, ivfpq or lsh) —
+    same ``[query_id, index_id, dist, rank]`` contract as every member
+    strategy. The ``dist`` column carries each strategy's native
+    score: exact/GEMM/IVF/LSH and the reranked IVFPQ route emit
+    cosine distance; the IVFPQ route with ``ivfpq_rerank=0`` emits the
+    ADC squared-L2 estimate (rank-equivalent to cosine on
+    unit-normalized vectors) — ranks, not raw scores, are the
+    cross-strategy contract on the approximate paths.
 
     Shape discovery costs at most three tiny jobs (a count per side
     plus one row for dim), all skippable by passing ``n_queries`` /
     ``n_index`` / ``dim`` — at 100 TB those numbers come from table
-    metadata, not a scan. IVF is only eligible when ``ivf_path`` +
-    ``n_centroids`` are given AND :func:`~cli_rag_spark.operators.ann.
-    ivf_index_ready` dim-validates the persisted index (wrong
-    n_centroids or dimensionality falls back to LSH rather than
-    probing the wrong lists); PQ-ADC (the 5th strategy, memory-bound —
-    the right path when the f64 index exceeds executor memory but a
-    persisted codes+codebook index exists) is eligible when
-    ``pq_path`` is given AND :func:`~cli_rag_spark.operators.pq.
-    pq_index_ready` dim-validates it, and is chosen over LSH only for
-    HIGH-dim workloads (dim ≥ PQ_MIN_DIM — the r13 clustered-corpus
-    dim-192 run put rule-geometry LSH ahead 3.8× on wall and 9.5× on
-    recall, moving the projected crossover to ~dim 730) while the
-    Q·N ADC pair-row shuffle stays under PQ_MAX_ADC_ROWS. IVFPQ (the
-    6th strategy, r12 — VERDICT r11 #1: the sub-linear escape past
-    the GEMM envelope must be REACHABLE) is eligible when
+    metadata, not a scan. The index gates read sidecars only, no
+    Spark job. IVF is only eligible when ``ivf_path`` holds an index
+    that :func:`~cli_rag_spark.operators.ann.ivf_index_ready`
+    validates against ``n_centroids`` (resolved from the sidecar when
+    unset) and ``dim`` — a mismatch falls back rather than probing
+    the wrong lists. IVFPQ (r12 — VERDICT r11 #1: the sub-linear
+    escape past the GEMM envelope must be REACHABLE) is eligible when
     ``ivfpq_path`` holds a dim-validated
     :func:`~cli_rag_spark.operators.pq.build_ivfpq_index` artifact
     (coarse quantizer + inverted file + codes + codebook in one
-    root); it outranks both flat fallbacks and yields only to the
-    full-precision IVF probe. Its probe width defaults to √C from
-    the artifact's recorded C, its PQ geometry comes from the build
-    metadata (default_pq_geometry-sized at build time), and — r13,
-    VERDICT r12 #1 — it RERANKS BY DEFAULT: ``ivfpq_rerank=None``
-    exact-rescores the ADC top-``default_rerank_depth(k)`` shortlist
-    (R = max(10·k, 100, ceil(N/C)) — the home-list occupancy term is
-    the clustered-corpus-measured knee) so ``dist`` is true cosine and
-    recall sits
-    at the shortlist's measured coverage instead of the raw ADC
-    order's 0.33; ``ivfpq_rerank=0`` opts OUT (raw ADC order,
-    ``dist`` = the squared-L2 estimate like the PQ branch) and a
-    positive value sets R explicitly. LSH geometry likewise defaults
-    to the corpus-sized rule :func:`default_lsh_geometry` when
+    root); it yields only to the full-precision IVF probe. Its probe
+    width defaults to √C from the artifact's recorded C, its PQ
+    geometry and scoring form (raw or residual) come from the build
+    metadata, and — r13, VERDICT r12 #1 — it RERANKS BY DEFAULT:
+    ``ivfpq_rerank=None`` exact-rescores the ADC
+    top-``default_rerank_depth(k)`` shortlist (R = max(10·k, 100,
+    ceil(N/C)) — the home-list occupancy term is the
+    clustered-corpus-measured knee) so ``dist`` is true cosine and
+    recall sits at the shortlist's measured coverage instead of the
+    raw ADC order's 0.33; ``ivfpq_rerank=0`` opts OUT (raw ADC order)
+    and a positive value sets R explicitly.
+
+    **Flat ADC** (every code row scored, no list pruning) is the
+    probe-all case of IVFADC: pass ``ivfpq_path`` = a raw
+    (``build_ivfpq_index(residual=False)``) artifact, ``n_probe`` = its
+    C and ``ivfpq_rerank=0``. The plan then scans the persisted codes
+    and never an embedding column. LSH geometry defaults to the
+    corpus-sized rule :func:`default_lsh_geometry` when
     ``lsh_planes``/``lsh_bands`` are unset (VERDICT r12 #3).
 
     **Index-backed strategies answer from the PERSISTED artifact.**
-    When the IVF/PQ path is chosen, neighbors come from the parquet at
-    ``ivf_path``/``pq_path`` — the passed ``index`` DataFrame's CONTENT
-    is ignored (only its count feeds the cost model), by design: at
-    scale the artifact IS the index and re-scanning the live frame per
-    query would negate it. If the corpus may have changed since the
-    build, pass ``verify_index_content=True``: one agg job fingerprints
-    the passed ``index`` (artifacts.content_fingerprint — the exact
-    fingerprint the builds persist) and the artifact is only
-    eligible when it matches; a mismatched or legacy-meta (no
-    recorded fingerprint) artifact falls back to an index-free
-    strategy rather than silently serving stale neighbors (ADVICE r10).
+    When the IVF/IVFPQ path is chosen, neighbors come from the parquet
+    at ``ivf_path``/``ivfpq_path`` — the passed ``index`` DataFrame's
+    CONTENT is ignored (only its count feeds the cost model, and the
+    IVFPQ rerank reads its shortlist vectors), by design: at scale the
+    artifact IS the index and re-scanning the live frame per query
+    would negate it. If the corpus may have changed since the build,
+    pass ``verify_index_content=True``: one agg job fingerprints the
+    passed ``index`` (artifacts.content_fingerprint — the exact
+    fingerprint the builds persist) and the artifact is only eligible
+    when it matches; a mismatched or legacy-meta (no recorded
+    fingerprint) artifact falls back to an index-free strategy rather
+    than silently serving stale neighbors (ADVICE r10).
 
     ``exclude_self`` on the approximate strategies (which lack the
     flag natively) is honored by requesting k+1, dropping self rows,
@@ -1198,9 +1118,7 @@ def knn_join_auto(
     if n_queries is None:
         n_queries = queries.count()
     live_fp: tuple[int, int] | None = None
-    if verify_index_content and (
-        ivf_path is not None or pq_path is not None or ivfpq_path is not None
-    ):
+    if verify_index_content and (ivf_path is not None or ivfpq_path is not None):
         live_fp = content_fingerprint(index, index_id, index_vec)
 
     def _content_matches(meta: dict | None) -> bool:
@@ -1220,20 +1138,13 @@ def knn_join_auto(
             # an index built with the C ~ √N default records its
             # RESOLVED C only in the meta sidecar — resolve it here
             # (one metadata read) instead of silently falling back to
-            # a full LSH/PQ scan when the caller doesn't know a value
+            # a full LSH scan when the caller doesn't know a value
             # the build computed for them (r10 review #3)
             n_centroids = ivf_meta.get("n_centroids")
         if n_centroids:
             ivf_ok = ivf_index_ready(
                 spark, ivf_path, int(n_centroids), dim
             ) and _content_matches(ivf_meta)
-    pq_ok = False
-    if pq_path is not None:
-        from cli_rag_spark.operators.pq import _PQ_META_NAME, pq_index_ready
-
-        pq_ok = pq_index_ready(
-            spark, pq_path, dim, pq_m_subspaces
-        ) and _content_matches(read_json_sidecar(spark, pq_path, _PQ_META_NAME))
     ivfpq_ok = False
     ivfpq_meta: dict | None = None
     if ivfpq_path is not None:
@@ -1243,8 +1154,7 @@ def knn_join_auto(
             ivfpq_meta = read_json_sidecar(spark, ivfpq_path, _IVFPQ_META_NAME)
             ivfpq_ok = _content_matches(ivfpq_meta)
     strategy = choose_knn_strategy(
-        n_queries, n_index, dim, ivf_available=ivf_ok, pq_available=pq_ok,
-        ivfpq_available=ivfpq_ok,
+        n_queries, n_index, dim, ivf_available=ivf_ok, ivfpq_available=ivfpq_ok
     )
     if strategy == "exact":
         return knn_join(
@@ -1328,17 +1238,6 @@ def knn_join_auto(
             )
         else:
             out = out.withColumnRenamed("est_d2", dist_col)
-    elif strategy == "pq":
-        from cli_rag_spark.operators.pq import pq_knn_join, read_pq_index
-
-        codes, codebook = read_pq_index(
-            queries.sparkSession, pq_path, m_subspaces=pq_m_subspaces, dim=dim
-        )
-        out = pq_knn_join(
-            queries, codes, codebook, k_fetch, pq_m_subspaces,
-            query_id, query_vec, index_id,
-            round_digits if round_digits is not None else 6,
-        ).withColumnRenamed("est_d2", dist_col)
     elif strategy == "ivf":
         from cli_rag_spark.operators.ann import (
             default_n_probe,

@@ -32,19 +32,25 @@ Scale shapes:
 
 The seeded codebook (sub-slices of the ``k_codes`` lowest-id vectors)
 is the SQL-replayable initializer, mirroring ann.seed_centroids; the
-production build (:func:`build_pq_index` with ``refine_iters > 0``)
+production build (:func:`build_ivfpq_index` with ``refine_iters > 0``)
 Lloyd-refines each subspace codebook via ann.kmeans_refine on the
 sub-vector frame with the L2 metric — the operators accept any
 codebook DataFrame with columns (m, code, cvec).
 
-Persistence (:func:`build_pq_index`, :func:`build_ivfpq_index`)
-follows the one artifact discipline of
+Persistence (:func:`build_ivfpq_index`, opened by
+:func:`read_ivfpq_index`) follows the one artifact discipline of
 :func:`~cli_rag_spark.sources.artifacts.staged_artifact`, like
 ann.build_ivf_index: the parquet children are written into a staging
 directory next to a sidecar carrying the build identity (geometry,
 parameters, input fingerprint) and promoted atomically. Readers
 validate the sidecar's geometry O(1) at open time — an index probed
 with mismatched PQ geometry would silently return garbage distances.
+
+Flat (unpruned) ADC is the probe-all case of IVFADC (Jégou §IV): a
+raw (``residual=False``) IVFPQ artifact persists the same seeded
+codebook and codes a flat PQ index would, and :func:`knn_join_ivfpq`
+with ``n_probe`` = C scores every list — the same rows, the same
+estimates. There is therefore no separate flat-PQ artifact type.
 """
 
 from __future__ import annotations
@@ -70,11 +76,8 @@ __all__ = [
     "pq_encode",
     "pq_adc_scores",
     "refine_pq_codebook",
-    "build_pq_index",
-    "read_pq_index",
     "ivfpq_topk",
     "ivfpq_residual_topk",
-    "pq_knn_join",
     "knn_join_ivfpq",
     "pq_encode_gemm",
     "default_pq_geometry",
@@ -86,8 +89,6 @@ __all__ = [
     "read_ivfpq_index",
     "read_ivfpq_terms",
 ]
-
-_PQ_META_NAME = "_pq_meta.json"
 
 
 def _d_sub(vec: Column, m_subspaces: int) -> Column:
@@ -184,8 +185,9 @@ def pq_encode(
     round_digits: int = 6,
 ) -> DataFrame:
     """[id_col, m, code]: each vector's per-subspace nearest codeword
-    (squared L2, rounded, ties → lowest code)."""
-    v = vectors.select(
+    (squared L2, rounded, ties → lowest code). NULL vectors are
+    unscorable and dropped, as in :func:`pq_encode_gemm`."""
+    v = vectors.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
     ds = _d_sub(F.col("_v"), m_subspaces)
@@ -351,7 +353,7 @@ def ivfpq_topk(
     time, and the scan that is read is both list-pruned (IVF) and
     ~64× narrower (PQ).
 
-    Pass ``codes``/``codebook`` from :func:`read_pq_index`, a
+    Pass ``codes``/``codebook`` from :func:`read_ivfpq_index`, a
     persisted cid-carrying ``assign`` frame (e.g. ann.read_ivf_index
     output), and the ``centroids`` frame [cid, cvec] that BUILT that
     assignment to run fully against persisted artifacts; anything
@@ -524,71 +526,6 @@ def ivfpq_residual_topk(
     )
 
 
-def pq_knn_join(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    k: int,
-    m_subspaces: int = 4,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Batch kNN JOIN on the PQ index — the 5th E7 physical strategy
-    next to knn_join (exact window), knn_join_gemm (exact BLAS),
-    knn_join_lsh (hyperplane bands), and knn_join_ivf (list pruning):
-    this is the MEMORY-bound path, where the index is the ~M-byte/row
-    codes table and no embedding is read per query.
-
-    Plan: one LUT frame of Q·M·K rows (queries × codebook — tiny:
-    every query's per-subspace codeword distances), broadcast; the
-    codes scan equi-joins it on (m, code) and partial-aggregates the
-    ADC sums per (query, id) — the Q-way fan-out lives inside one
-    map-side-combining stage, the shuffle carries Q·N narrow sum rows;
-    then the per-query top-k window, same deterministic
-    (est_d2, id) contract as every other strategy.
-
-    Scale: for large Q compose with IVF — pass the codes of the
-    probed lists only (ivfpq_topk's candidate shape) or block the
-    query side like knn_join_gemm. Output [query_id, id_col, est_d2,
-    rank].
-    """
-    from pyspark.sql import Window
-
-    ds = _d_sub(F.col(query_vec).cast("array<double>"), m_subspaces)
-    lut = (
-        codebook.crossJoin(queries.select(query_id, query_vec))
-        .select(
-            query_id,
-            "m",
-            "code",
-            F.round(
-                l2_sq(
-                    F.col("cvec"),
-                    F.slice(
-                        F.col(query_vec).cast("array<double>"),
-                        F.col("m") * ds + 1,
-                        ds,
-                    ),
-                ),
-                round_digits,
-            ).alias("d2"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("est_d2").asc(), F.col(id_col).asc()
-    )
-    return (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .groupBy(query_id, id_col)
-        .agg(F.round(F.sum("d2"), round_digits).alias("est_d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, id_col, "est_d2", "rank")
-    )
-
-
 def residual_adc_terms(
     codebook: DataFrame,
     centroids: DataFrame,
@@ -664,7 +601,7 @@ def knn_join_ivfpq(
     """Batch IVFADC kNN JOIN — :func:`ivfpq_topk` generalized from one
     query to a query TABLE, and the answer to what the r11 routed
     measurement proved about the flat paths (SCALING.md): at Q·N
-    scale, pq_knn_join's ADC shuffle and knn_join_lsh's collision
+    scale, a flat (unpruned) ADC shuffle and knn_join_lsh's collision
     verify are both Θ(Q·N) with constants 27-57× worse than plain
     GEMM, so past the GEMM envelope the only right shape is
     SUB-linear — IVF prunes the rows per query, PQ shrinks the bytes:
@@ -676,17 +613,17 @@ def knn_join_ivfpq(
     — the codes scan joins the cid assignment once, then the
     broadcast (query, cid) probe list — this inner join IS the
     pruning, fanning each code row out only to the queries that probe
-    its list; (3) the per-query LUT (Q·M·K rows, broadcast — the
-    pq_knn_join spelling) scores candidates by (query, m, code), and
+    its list; (3) the per-query LUT (Q·M·K rows, broadcast) scores candidates by (query, m, code), and
     the partial-agg groupBy sums M lookups per (query, id). Same
     deterministic (est_d2, id) contract and [query_id, id, est_d2,
     rank] shape as every other E7 strategy.
 
-    Pass ``codes``/``codebook`` from :func:`read_pq_index` /
-    :func:`read_ivfpq_index` and ``assign``/``centroids`` from the
+    Pass ``codes``/``codebook`` from :func:`read_ivfpq_index` and ``assign``/``centroids`` from the
     persisted artifact (the coarse quantizer travels with its
     assignment — the ivfpq_topk ADVICE r4 rule); everything
-    downstream of the artifacts is SQL-oracle-replayable.
+    downstream of the artifacts is SQL-oracle-replayable. ``n_probe``
+    = C probes every list: over a raw artifact that is flat ADC, every
+    code row scored.
 
     The codebook's subspace set is validated against ``m_subspaces``
     up front (one tiny agg on the broadcast-sized M·K frame): scoring
@@ -720,7 +657,7 @@ def knn_join_ivfpq(
         # one tiny collect on the broadcast-sized M·K frame. r15
         # (guide §1.2): this is a driver-blocking Spark job on EVERY
         # call, redundant when the codebook was opened through
-        # read_pq_index / read_ivfpq_index — those already verified
+        # read_ivfpq_index — which already verified
         # m_subspaces against the build meta in O(1) — so
         # artifact-validated callers (knn_join_auto's dispatcher, the
         # judged artifact queries) pass validate_geometry=False; raw
@@ -901,168 +838,6 @@ def refine_pq_codebook(
             out.select(F.lit(m).alias("m"), F.col("cid").alias("code"), "cvec")
         )
     return functools.reduce(DataFrame.unionByName, refined)
-
-
-def build_pq_index(
-    vectors: DataFrame,
-    path: str,
-    m_subspaces: int = 4,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iters: int = 0,
-    round_digits: int = 6,
-    reuse_if_exists: bool = False,
-) -> None:
-    """Build and PERSIST the PQ index: ``<path>/codebook`` (M·K rows)
-    and ``<path>/codes`` (N·M narrow int rows, ~64× smaller than the
-    vectors) as parquet, plus the ``_pq_meta.json`` sidecar, so
-    :func:`read_pq_index` can reject a geometry-mismatched probe in
-    O(1).
-
-    Both children and the sidecar are written into a staging
-    directory and promoted atomically
-    (:func:`~cli_rag_spark.sources.artifacts.staged_artifact`): a
-    build that fails part-way leaves the previous index and its
-    sidecar as they were. The sidecar holds the build identity (the
-    geometry, refine_iters, round_digits, id column, and the input's
-    ``n_rows`` + ``content_fp``) plus the vector ``dim``.
-
-    ``refine_iters=0`` keeps the seeded, SQL-oracle-replayable
-    codebook (the judged path); ``refine_iters>0`` Lloyd-refines each
-    subspace codebook (L2 metric) before encoding — higher recall,
-    same persisted layout (recall ordering proven in tests/test_pq.py).
-
-    The codes scan at query time reads only (id, m, code) — column
-    pruning means the ADC path never touches an embedding byte.
-
-    ``reuse_if_exists=True`` returns WITHOUT rewriting when the stored
-    identity equals this call's: the build is deterministic in (data,
-    params), so an identical-input rebuild is pure waste. The check
-    costs the one fingerprint agg job the build pays anyway.
-    """
-    spark = vectors.sparkSession
-    n_rows, content_fp = content_fingerprint(vectors, id_col, vec_col)
-    identity = {
-        "m_subspaces": m_subspaces,
-        "k_codes": k_codes,
-        "id_col": id_col,
-        "refine_iters": refine_iters,
-        "round_digits": round_digits,
-        "n_rows": n_rows,
-        "content_fp": content_fp,
-    }
-
-    def write(staging: str) -> dict:
-        codebook = build_pq_codebook(vectors, m_subspaces, k_codes, id_col, vec_col)
-        # bounded 1-row probe on the SEEDED codebook, BEFORE refinement
-        # and BEFORE any write: an empty vectors frame (or absent seed
-        # ids) yields an empty seeded codebook (ADVICE r4). Probing
-        # pre-refinement matters: first() on the refined frame would
-        # execute the full per-iteration corpus-assignment lineage once
-        # for the probe and AGAIN for the write — the seeded frame is a
-        # k-row slice, and refinement preserves both emptiness and
-        # sub-vector geometry.
-        probe = codebook.select(F.size("cvec").alias("ds")).first()
-        if probe is None:
-            raise ValueError(
-                "build_pq_index: seeded codebook is empty (no input vectors, "
-                "or the k_codes lowest-id seed rows are absent) — refusing to "
-                "write an empty index"
-            )
-        if refine_iters > 0:
-            codebook = refine_pq_codebook(
-                vectors, codebook, m_subspaces, refine_iters, id_col, vec_col,
-                round_digits,
-            )
-        codebook.write.mode("overwrite").parquet(f"{staging}/codebook")
-        # re-read the persisted codebook so encode scores against exactly
-        # the bytes future readers will see (and the refine lineage runs
-        # once, not once per encode stage)
-        codebook = spark.read.parquet(f"{staging}/codebook")
-        # size-routed encoder (the build_ivfpq_index rule): the HOF
-        # encoder evaluates N·K·dim interpreted element ops; past the
-        # envelope the Arrow/GEMM twin (bit-identical, pinned in tests)
-        # is the only build that finishes in minutes
-        from cli_rag_spark.operators.ann import GEMM_ASSIGN_MIN_OPS
-
-        dim = probe["ds"] * m_subspaces
-        encode = (
-            pq_encode_gemm if n_rows * k_codes * dim > GEMM_ASSIGN_MIN_OPS
-            else pq_encode
-        )
-        encode(
-            vectors, codebook, m_subspaces, id_col, vec_col, round_digits
-        ).write.mode("overwrite").parquet(f"{staging}/codes")
-        return {"dim": dim}
-
-    staged_artifact(
-        spark, path, _PQ_META_NAME, identity, write,
-        reuse=reuse_if_exists, what="PQ index",
-    )
-
-
-def pq_index_ready(
-    spark: SparkSession,
-    path: str,
-    dim: int,
-    m_subspaces: int | None = None,
-) -> bool:
-    """Dim-validated availability gate for strategy auto-dispatch
-    (operators/knn.py knn_join_auto) — the PQ mirror of
-    ann.ivf_index_ready: True iff ``path`` holds a ``build_pq_index``
-    output whose build ``dim`` matches the query vectors' (and, when
-    given, whose ``m_subspaces`` matches the caller's ADC geometry).
-    One metadata read, no Spark job. An ADC join against a codebook
-    of the wrong dimensionality doesn't fail loudly — F.slice past the
-    end returns a short sub-vector and the LUT silently scores
-    garbage — so absence/mismatch returns False and the dispatcher
-    falls back to an index-free strategy."""
-    return _geometry_ready(
-        read_json_sidecar(spark, path, _PQ_META_NAME), dim, m_subspaces
-    )
-
-
-def _geometry_ready(meta: dict | None, dim: int, m_subspaces: int | None) -> bool:
-    return (
-        meta is not None
-        and meta.get("dim") == dim
-        and (m_subspaces is None or meta.get("m_subspaces") == m_subspaces)
-    )
-
-
-def _check_geometry(meta: dict, path: str, what: str, **expected) -> None:
-    """Raise ``ValueError`` when a caller-expected geometry value
-    disagrees with the build's sidecar."""
-    for key, arg in expected.items():
-        if arg is not None and meta[key] != arg:
-            raise ValueError(
-                f"{what} index at {path} was built with {key}={meta[key]}, "
-                f"caller expected {arg}"
-            )
-
-
-def read_pq_index(
-    spark: SparkSession,
-    path: str,
-    m_subspaces: int | None = None,
-    k_codes: int | None = None,
-    dim: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Open a persisted PQ index → ``(codes, codebook)`` DataFrames,
-    verifying build metadata first: any caller-expected geometry
-    (m_subspaces / k_codes / query dim) that disagrees with the build
-    raises ``ValueError`` before a single Spark job runs — ADC sums
-    over the wrong M or a truncated LUT don't fail loudly, they
-    return silently wrong distances."""
-    meta = read_index_meta(spark, path, _PQ_META_NAME, "build_pq_index")
-    _check_geometry(
-        meta, path, "PQ", m_subspaces=m_subspaces, k_codes=k_codes, dim=dim
-    )
-    return (
-        spark.read.parquet(f"{path}/codes"),
-        spark.read.parquet(f"{path}/codebook"),
-    )
 
 
 # --- persisted IVFPQ index (r12, VERDICT r11 "Next round #1") ---------
@@ -1378,8 +1153,9 @@ def build_ivfpq_index(
             codebook = build_pq_codebook(
                 enc_src, m_subspaces, k_codes, id_col, enc_col
             )
-        # pre-write emptiness guard on the seeded book (the
-        # build_pq_index probe), before the optional Lloyd refinement
+        # pre-write emptiness guard on the seeded book (a k-row slice),
+        # before the optional Lloyd refinement: probing the refined frame
+        # would run its corpus-assignment lineage once more
         if codebook.select(F.size("cvec").alias("ds")).first() is None:
             raise ValueError(
                 "build_ivfpq_index: seeded PQ codebook is empty (the k_codes "
@@ -1424,14 +1200,17 @@ def ivfpq_index_ready(
     m_subspaces: int | None = None,
 ) -> bool:
     """Dim-validated availability gate for strategy auto-dispatch —
-    the IVFPQ mirror of pq_index_ready/ann.ivf_index_ready: True iff
+    the IVFPQ mirror of ann.ivf_index_ready: True iff
     ``path`` holds a :func:`build_ivfpq_index` output whose build
     ``dim`` matches the query vectors' (and, when given, whose
     ``m_subspaces`` matches the caller's). One metadata read, no
     Spark job; absence/mismatch returns False and the dispatcher
     falls back rather than probing the wrong geometry."""
-    return _geometry_ready(
-        read_json_sidecar(spark, path, _IVFPQ_META_NAME), dim, m_subspaces
+    meta = read_json_sidecar(spark, path, _IVFPQ_META_NAME)
+    return (
+        meta is not None
+        and meta.get("dim") == dim
+        and (m_subspaces is None or meta.get("m_subspaces") == m_subspaces)
     )
 
 
@@ -1447,13 +1226,19 @@ def read_ivfpq_index(
     centroids)`` — exactly the four frames :func:`knn_join_ivfpq`
     takes, in its argument order. Any caller-expected geometry that
     disagrees with the build metadata raises ``ValueError`` before a
-    Spark job runs (the read_pq_index contract: wrong-geometry ADC
-    returns silently wrong distances, not errors)."""
+    Spark job runs: wrong-geometry ADC returns silently wrong
+    distances, not errors."""
     meta = read_index_meta(spark, path, _IVFPQ_META_NAME, "build_ivfpq_index")
-    _check_geometry(
-        meta, path, "IVFPQ", m_subspaces=m_subspaces, k_codes=k_codes,
-        dim=dim, n_centroids=n_centroids,
+    expected = dict(
+        m_subspaces=m_subspaces, k_codes=k_codes, dim=dim,
+        n_centroids=n_centroids,
     )
+    for key, arg in expected.items():
+        if arg is not None and meta[key] != arg:
+            raise ValueError(
+                f"IVFPQ index at {path} was built with {key}={meta[key]}, "
+                f"caller expected {arg}"
+            )
     return (
         spark.read.parquet(f"{path}/codes"),
         spark.read.parquet(f"{path}/codebook"),

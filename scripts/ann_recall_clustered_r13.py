@@ -4,7 +4,7 @@
 (VERDICT r12 #1 and #3).
 
 Why: every r11/r12 recall constant — raw-ADC 0.329, rerank coverage
-0.670/0.836 at R=100/300, LSH 0.693, PQ_MIN_DIM=256, the N≈50M
+0.670/0.836 at R=100/300, LSH 0.693, the flat-PQ dim gate, the N≈50M
 GEMM↔IVFPQ crossover — was calibrated on the SIGN-FLIP replica corpus,
 whose cross-replica neighbors form a near-equidistant shell the
 builder's own r12 diagnosis calls near-pathological for quantized
@@ -25,11 +25,12 @@ Stages (all print one JSON line per row; paste into SCALING.md):
         2M) wall + recall vs the old fixed 16/4 (--flat-lsh to
         include; ~4 min on the sign-flip corpus in r11);
       persisted f64 IVF, probe sqrt(C): wall + recall.
-  --stage dim192 clustered N=2M, dim 192, Q=400, k=10: the
-      PQ_MIN_DIM boundary re-run (r12 measured a wall TIE with LSH
-      far ahead on recall on sign-flip data at the FIXED 16/4 LSH
-      geometry; the r13 rule geometry re-decided it — measured LSH
-      37.0 s/0.996 vs flat ADC 140.6 s/0.105, gate raised to 768).
+  --stage dim192 clustered N=2M, dim 192 (--dim to change), Q=400,
+      k=10: LSH (rule geometry, optionally the old fixed 16/4) vs the
+      dispatched IVFPQ chain at high dim — the IVFPQ-vs-LSH gate run.
+      (The flat-ADC row it once booked, 140.6 s/0.105 vs LSH
+      37.0 s/0.996 at dim 192, is in SCALING.md; flat ADC is now the
+      probe-all IVFPQ route.)
   --stage n8m    clustered N=8M, dim 64, Q=400: one measured point
       between 2M and the predicted ~50M GEMM↔IVFPQ crossover
       (VERDICT r12 #7) — GEMM wall vs IVFPQ probe wall validates the
@@ -290,19 +291,15 @@ def stage_residual(spark, args) -> None:
 
 
 def stage_dim192(spark, args) -> None:
-    """The PQ_MIN_DIM boundary on clustered data — the r12 confirm's
-    comparison at the full routed shape (flat ADC at the m=4x16
-    fixture geometry vs LSH at both the rule and the old fixed
-    geometry). Generalized over --dim in r14 (VERDICT r13 #2: the
-    gate's own history is three refuted extrapolations — 160, 256,
-    768 — so the shipped 768 must be measured AT the gate, not
-    projected from dim 64/192): beside the original protocol it books
-    the DISPATCHED chain the PQ family would actually run at the
-    probed dim — a default (residual) build_ivfpq_index artifact,
-    probe at default_n_probe(C), exact rerank at
-    default_rerank_depth — wall + recall, so the LSH-vs-PQ routing
-    decision at dim ~768 compares the two strategies as dispatched,
-    not a strawman flat scan alone."""
+    """The high-dim LSH-vs-IVFPQ comparison on clustered data at the
+    full routed shape, over --dim (r14, VERDICT r13 #2: a dim gate
+    must be measured AT the gate, not projected from dim 64/192):
+    LSH at the rule geometry (and, with --flat-lsh, the old fixed
+    16/4) vs the DISPATCHED chain the PQ family runs at the probed
+    dim — a default (residual) build_ivfpq_index artifact, probe at
+    default_n_probe(C), exact rerank at default_rerank_depth — wall +
+    recall, so the routing decision compares the two strategies as
+    dispatched."""
     from cli_rag_spark.operators.ann import default_n_probe
     from cli_rag_spark.operators.knn import (
         default_lsh_geometry,
@@ -313,14 +310,10 @@ def stage_dim192(spark, args) -> None:
     from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
         build_ivfpq_index,
-        build_pq_index,
         default_rerank_depth,
         ivfpq_index_ready,
         knn_join_ivfpq,
-        pq_index_ready,
-        pq_knn_join,
         read_ivfpq_index,
-        read_pq_index,
     )
 
     n, dim, nq, k = args.n or 2_000_000, args.dim or 192, args.nq, args.k
@@ -335,21 +328,6 @@ def stage_dim192(spark, args) -> None:
     print(json.dumps({"row": "gemm_exact",
                       "sec": round(time.perf_counter() - t0, 2)}),
           flush=True)
-    pq_path = f"{scratch_root()}/cli_rag_spark_r13pq{dim}_gm{n}"
-    t0 = time.perf_counter()
-    if not pq_index_ready(spark, pq_path, dim, 4):
-        build_pq_index(emb, pq_path, m_subspaces=4, k_codes=16)
-    print(json.dumps({"row": "pq_build",
-                      "sec": round(time.perf_counter() - t0, 2)}),
-          flush=True)
-    codes, cbk = read_pq_index(spark, pq_path, m_subspaces=4)
-    t0 = time.perf_counter()
-    adc = pq_knn_join(queries, codes, cbk, k=k, m_subspaces=4)
-    adc = adc.localCheckpoint(eager=True)
-    print(json.dumps({
-        "row": "pq_adc_flat", "sec": round(time.perf_counter() - t0, 2),
-        "recall_at_k": _recall(exact, adc, k),
-    }), flush=True)
     for label, (planes, bands) in (
         ("rule", default_lsh_geometry(n_index)),
         ("fixed16x4", (16, 4)),
@@ -460,8 +438,8 @@ def main() -> None:
                     help="corpus rows (default: 2M main/dim192, 8M n8m)")
     ap.add_argument("--dim", type=int, default=None,
                     help="embedding width for the dim192 stage (r14: "
-                         "the PQ_MIN_DIM gate must be measured AT the "
-                         "gate — run with --dim 768)")
+                         "a dim gate must be measured AT the gate — "
+                         "run with --dim 768)")
     ap.add_argument("--nq", type=int, default=400)
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--r-ladder", nargs="*", type=int,

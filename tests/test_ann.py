@@ -172,6 +172,48 @@ def test_read_ivf_index_validates_build_metadata(spark, sf_dir, tmp_path):
         read_ivf_index(spark, bare)
 
 
+def test_ivf_index_ready_reads_sidecar_only(spark, sf_dir, tmp_path):
+    """The dispatch gate runs on every knn_join_auto call with an
+    ivf_path, so it must answer from the sidecar alone: zero Spark
+    jobs, the build's dim recorded there, and a wrong dim, a wrong C
+    or a sidecar without dim all read as not ready."""
+    import json as _json
+    import os
+    import uuid
+
+    from cli_rag_spark.operators.ann import ivf_index_ready
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf_ready")
+    build_ivf_index(emb, path, n_centroids=8)
+    sc = spark.sparkContext
+    group = f"ivf_ready_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ivf_index_ready")
+    try:
+        verdicts = [
+            ivf_index_ready(spark, path, 8, 64),
+            ivf_index_ready(spark, path, 8, 128),
+            ivf_index_ready(spark, path, 16, 64),
+            ivf_index_ready(spark, str(tmp_path / "missing"), 8, 64),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert verdicts == [True, False, False, False]
+
+    meta_file = os.path.join(path, "_ivf_meta.json")
+    with open(meta_file) as f:
+        meta = _json.load(f)
+    assert meta["dim"] == 64
+    del meta["dim"]
+    with open(meta_file, "w") as f:
+        _json.dump(meta, f)
+    crc = os.path.join(path, "._ivf_meta.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert not ivf_index_ready(spark, path, 8, 64)
+
+
 def test_knn_join_ivf_rejects_mismatched_cid(spark, sf_dir, tmp_path):
     """A persisted index probed with a smaller n_centroids must fail
     loudly, not silently probe the wrong lists (ADVICE r2)."""

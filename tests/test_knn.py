@@ -571,55 +571,6 @@ def test_choose_knn_strategy_gemm_elems_gate():
     assert choose_knn_strategy(q, n, 64) == "gemm"
 
 
-def test_choose_knn_strategy_pq_branch_pinned():
-    """The 5th strategy (VERDICT r9 #2, re-gated by the r11 routed
-    measurement): PQ-ADC is chosen when brute force is out of the
-    MEASURED GEMM envelope, no IVF index exists, a PQ index does, the
-    workload is high-dim (dim ≥ PQ_MIN_DIM — at dim 64 the 2M-row
-    measurement read LSH 251 s/recall 0.69 vs ADC 530 s/recall 0.11,
-    so low-dim never routes pq), and the Q·N ADC pair-row shuffle is
-    affordable; IVF outranks it (sub-N probe beats a full-codes
-    scan); past PQ_MAX_ADC_ROWS the collision-bounded LSH candidates
-    win."""
-    from cli_rag_spark.operators.knn import (
-        GEMM_MAX_PAIR_OPS,
-        GEMM_MAX_QUERY_ELEMS,
-        PQ_MAX_ADC_ROWS,
-        PQ_MIN_DIM,
-        choose_knn_strategy,
-    )
-
-    # the high-dim memory-bound niche: past the measured GEMM ops cap,
-    # under the ADC shuffle cap, query matrix collectable
-    q, n, dim = 1_000, 1_500_000, 4096
-    assert q * n * dim > GEMM_MAX_PAIR_OPS and q * n <= PQ_MAX_ADC_ROWS
-    assert q * dim <= GEMM_MAX_QUERY_ELEMS and dim >= PQ_MIN_DIM
-    assert choose_knn_strategy(q, n, dim, pq_available=True) == "pq"
-    assert choose_knn_strategy(q, n, dim, pq_available=False) == "lsh"
-    assert (
-        choose_knn_strategy(q, n, dim, ivf_available=True, pq_available=True)
-        == "ivf"
-    )
-    # the dim gate in isolation: a huge query side blocks GEMM via the
-    # row/elems caps (not ops), the ADC shuffle is affordable — then
-    # dim decides: 64 (the measured LSH-wins region) routes lsh, the
-    # same shape at PQ_MIN_DIM routes pq
-    from cli_rag_spark.operators.knn import GEMM_MAX_QUERIES
-
-    qbig, nsmall = 2_000_000, 500
-    assert qbig > GEMM_MAX_QUERIES and qbig * nsmall <= PQ_MAX_ADC_ROWS
-    assert qbig * nsmall * PQ_MIN_DIM <= GEMM_MAX_PAIR_OPS
-    assert choose_knn_strategy(qbig, nsmall, 64, pq_available=True) == "lsh"
-    assert (
-        choose_knn_strategy(qbig, nsmall, PQ_MIN_DIM, pq_available=True)
-        == "pq"
-    )
-    # past the ADC shuffle envelope: LSH even at high dim
-    big_q, big_n = 10_000_000, 1_000_000_000
-    assert big_q * big_n > PQ_MAX_ADC_ROWS
-    assert choose_knn_strategy(big_q, big_n, 4096, pq_available=True) == "lsh"
-
-
 def test_gemm_query_elems_guard(spark, sf_dir):
     """knn_join_gemm bounds the driver collect in ELEMENTS: with dim
     passed the cap applies BEFORE the collect (row_cap = elems/dim);
@@ -638,72 +589,61 @@ def test_gemm_query_elems_guard(spark, sf_dir):
     assert {tuple(r) for r in ok.collect()} == want
 
 
-def test_knn_join_auto_pq_path_with_validated_index(spark, sf_dir, tmp_path):
-    """With a dim-validated persisted PQ index, no IVF index, and a
-    shape in the measured PQ niche (HIGH-dim, GEMM blocked by the
-    query-side caps via hints, ADC shuffle affordable — r11: dim 64
-    can never route pq, the 2M-row measurement put LSH ahead on wall
-    and recall there), auto routes to PQ-ADC: result matches
-    pq_knn_join run directly (modulo the contract rename est_d2 ->
-    dist) and the executed plan scans the persisted codes parquet —
-    never an embedding column."""
-    from cli_rag_spark.operators.knn import PQ_MIN_DIM, knn_join_auto
-    from cli_rag_spark.operators.pq import (
-        build_pq_index,
-        pq_index_ready,
-        pq_knn_join,
-        read_pq_index,
-    )
+def _raw_ivfpq(spark, sf_dir, tmp_path, name):
+    """(embeddings, artifact path) with a raw (residual=False) IVFPQ
+    artifact of the fixture built at C=8, m=4, K=16."""
+    from cli_rag_spark.operators.pq import build_ivfpq_index
 
-    # synthetic high-dim frame: the fixture's 64-dim vectors tiled to
-    # PQ_MIN_DIM (per-subspace structure preserved; values real)
-    hd = F.slice(
-        F.flatten(F.array_repeat(F.col("embedding"), PQ_MIN_DIM // 64 + 1)),
-        1,
-        PQ_MIN_DIM,
+    emb = load_table(spark, sf_dir, "embeddings").where(
+        F.col("embedding").isNotNull()
     )
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", hd.alias("embedding"))
+    path = str(tmp_path / name)
+    build_ivfpq_index(
+        emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=False
     )
-    path = str(tmp_path / "pq_auto")
-    build_pq_index(emb, path, m_subspaces=4, k_codes=16)
-    assert pq_index_ready(spark, path, PQ_MIN_DIM, 4)
-    assert not pq_index_ready(spark, path, 64, 4)   # wrong dim
-    assert not pq_index_ready(spark, path, PQ_MIN_DIM, 8)  # wrong geometry
-    assert not pq_index_ready(spark, str(tmp_path / "missing"), PQ_MIN_DIM, 4)
-    q = _queries(emb, 5)
-    # hinted 2e6 queries x 1e3 rows: GEMM blocked by the row AND elems
-    # caps (2e6 > 1e6 rows; 2e6·dim > 64e6 elems), ADC rows 2e9 at the
-    # cap, dim >= PQ_MIN_DIM -> "pq"
+    return emb, path
+
+
+def test_knn_join_auto_flat_adc_via_raw_ivfpq(spark, sf_dir, tmp_path):
+    """Flat ADC through the dispatcher: past the GEMM envelope (cost-
+    model hints), a raw IVFPQ artifact probed over all C lists with
+    the rerank off equals knn_join_ivfpq run directly (modulo the
+    contract rename est_d2 -> dist), and the executed plan scans the
+    persisted codes — never an embedding column. IVF still outranks
+    IVFPQ when both indexes are ready."""
+    from cli_rag_spark.operators.knn import knn_join_auto
+    from cli_rag_spark.operators.pq import knn_join_ivfpq, read_ivfpq_index
+
+    emb, path = _raw_ivfpq(spark, sf_dir, tmp_path, "ivfpq_raw")
+    # a literal query frame, so every file scan in the plan is the index
+    q = spark.createDataFrame(_queries(emb, 5).collect())
+    big = dict(n_queries=10_000, n_index=2_000_000)  # 1.28e12 pair-ops
     auto = knn_join_auto(
-        q, emb, k=3, n_queries=2_000_000, n_index=1_000,
-        pq_path=path, pq_m_subspaces=4,
+        q, emb, k=3, dim=64, ivfpq_path=path, n_probe=8, ivfpq_rerank=0,
+        **big,
     )
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "est_d2" in plan  # the ADC estimate, renamed to the contract
-    # the routing, plan-asserted: the scan reads the persisted codes
-    assert any("pq_auto/codes" in f for f in auto.inputFiles())
-    codes, cb = read_pq_index(spark, path, m_subspaces=4)
-    direct = pq_knn_join(q, codes, cb, k=3, m_subspaces=4).withColumnRenamed(
-        "est_d2", "dist"
-    )
+    assert any("ivfpq_raw/codes" in f for f in auto.inputFiles())
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert scans and not any("embedding" in ln for ln in scans), scans
+    codes, cb, assign, cent = read_ivfpq_index(spark, path)
+    direct = knn_join_ivfpq(
+        q, codes, cb, assign, cent, k=3, n_probe=8
+    ).withColumnRenamed("est_d2", "dist")
     assert {tuple(r) for r in auto.collect()} == {
         tuple(r) for r in direct.collect()
     }
-    # IVF still outranks PQ when both indexes are ready
     from cli_rag_spark.operators.ann import build_ivf_index
 
     ivf_path = str(tmp_path / "ivf_pref")
     build_ivf_index(emb, ivf_path, n_centroids=8)
     both = knn_join_auto(
-        q, emb, k=3, n_queries=2_000_000, n_index=1_000,
-        ivf_path=ivf_path, n_centroids=8, n_probe=2,
-        pq_path=path, pq_m_subspaces=4,
+        q, emb, k=3, dim=64, ivf_path=ivf_path, n_centroids=8, n_probe=2,
+        ivfpq_path=path, ivfpq_rerank=0, **big,
     )
     files = " ".join(both.inputFiles())
-    assert "ivf_pref" in files and "pq_auto" not in files
+    assert "ivf_pref" in files and "ivfpq_raw" not in files
 
 
 def test_knn_join_auto_resolves_default_c_from_meta(spark, sf_dir, tmp_path):
@@ -737,22 +677,21 @@ def test_knn_join_auto_resolves_default_c_from_meta(spark, sf_dir, tmp_path):
 
 
 def test_knn_join_auto_pq_exclude_self(spark, sf_dir, tmp_path):
-    """exclude_self on the PQ route: k+1 fetch, self-row drop, re-rank
-    — no result row may pair a query with itself, ranks stay 1..k."""
+    """exclude_self on the dispatched IVFPQ route (flat ADC: raw
+    artifact, all lists probed, rerank off): k+1 fetch, self-row drop,
+    re-rank — no result row may pair a query with itself, ranks stay
+    1..k."""
     from cli_rag_spark.operators.knn import knn_join_auto
-    from cli_rag_spark.operators.pq import build_pq_index
 
-    from cli_rag_spark.sources.documents import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "pq_self")
-    build_pq_index(emb, path, m_subspaces=4, k_codes=16)
+    emb, path = _raw_ivfpq(spark, sf_dir, tmp_path, "pq_self")
     q = _queries(emb, 5)
-    out = knn_join_auto(
-        q, emb, k=3, exclude_self=True,
-        n_index=200_000_000, pq_path=path, pq_m_subspaces=4,
-    ).collect()
-    assert out, "pq route returned nothing"
+    auto = knn_join_auto(
+        q, emb, k=3, exclude_self=True, n_queries=10_000, n_index=2_000_000,
+        ivfpq_path=path, n_probe=8, ivfpq_rerank=0,
+    )
+    assert any("pq_self/codes" in f for f in auto.inputFiles())
+    out = auto.collect()
+    assert out, "ivfpq route returned nothing"
     for r in out:
         assert r["query_id"] != r["vec_id"]
         assert 1 <= r["rank"] <= 3
@@ -872,8 +811,7 @@ def test_choose_knn_strategy_ivfpq_branch_pinned():
     """r12 (VERDICT r11 #1): past the GEMM envelope the dispatcher
     must be able to reach the sub-linear IVFPQ strategy — full IVF
     still outranks it (exact distances in the probed lists), but with
-    only coded artifacts it wins over BOTH flat fallbacks the r11
-    measurement proved lose 27-57x per pair-op."""
+    only coded artifacts it wins over the flat LSH fallback."""
     from cli_rag_spark.operators.knn import (
         GEMM_MAX_PAIR_OPS,
         choose_knn_strategy,
@@ -885,13 +823,6 @@ def test_choose_knn_strategy_ivfpq_branch_pinned():
     assert (
         choose_knn_strategy(q, n, dim, ivf_available=True, ivfpq_available=True)
         == "ivf"
-    )
-    # ivfpq beats the flat PQ branch even where PQ is itself eligible
-    assert (
-        choose_knn_strategy(
-            200_000, 10_000, 500, pq_available=True, ivfpq_available=True
-        )
-        == "ivfpq"
     )
     assert choose_knn_strategy(q, n, dim) == "lsh"
 

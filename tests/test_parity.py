@@ -61,8 +61,29 @@ def _norm_rows(cols, rows):
 QUERY_NAMES = sorted(entrymod.queries().keys())
 
 
+@pytest.fixture(scope="module")
+def oracle_results(sf_dir):
+    """Each oracle runs ONCE per query name: its result is materialized
+    as a table in one module-scoped DuckDB connection and both tests
+    below read that table. A stored table keeps the result's DuckDB
+    column types, so fetchall() and df() see the values and dtypes a
+    direct run gives."""
+    con = _duck_con(sf_dir)
+    done: dict[str, str] = {}
+
+    def result(name: str, sql: str) -> duckdb.DuckDBPyConnection:
+        if name not in done:
+            table = f'"oracle_{name}"'
+            con.execute(f"CREATE TABLE {table} AS {sql}")
+            done[name] = table
+        return con.execute(f"SELECT * FROM {done[name]}")
+
+    yield result
+    con.close()
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, sf_dir, name):
+def test_query_matches_oracle(spark, sf_dir, oracle_results, name):
     qfn = entrymod.queries()[name]
     sdf = qfn(spark, sf_dir)
     spark_rows = sdf.collect()
@@ -74,8 +95,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
         assert len(spark_rows) >= 0
         pytest.skip(f"{name}: no oracle (rows-only check)")
 
-    con = _duck_con(sf_dir)
-    res = con.execute(oracle)
+    res = oracle_results(name, oracle)
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
 
@@ -92,7 +112,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_dtype_parity(spark, sf_dir, name):
+def test_query_dtype_parity(spark, sf_dir, oracle_results, name):
     """Pandas dtype vectors must MATCH between the Spark result and the
     DuckDB oracle result — the driver's value hash is representation
     sensitive, so a benign engine-typing divergence (DuckDB types
@@ -107,7 +127,7 @@ def test_query_dtype_parity(spark, sf_dir, name):
         pytest.skip(f"{name}: no oracle (rows-only check)")
     qfn = entrymod.queries()[name]
     spark_pdf = qfn(spark, sf_dir).toPandas()
-    duck_pdf = _duck_con(sf_dir).execute(oracle).df()
+    duck_pdf = oracle_results(name, oracle).df()
     s_dtypes = {c: str(spark_pdf[c].dtype) for c in spark_pdf.columns}
     d_dtypes = {c: str(duck_pdf[c].dtype) for c in duck_pdf.columns}
     assert s_dtypes == d_dtypes, (

@@ -97,33 +97,38 @@ def test_encode_deterministic_across_partitionings(spark, sf_dir):
 
 
 def test_persisted_index_round_trip_and_validation(spark, sf_dir, tmp_path):
-    """build_pq_index → read_pq_index returns exactly the codes the
-    on-the-fly encode computes, and the O(1) metadata check rejects a
+    """A raw (residual=False) build_ivfpq_index persists exactly the
+    seeded codebook and the codes the on-the-fly encode computes — the
+    flat-PQ index it replaces — and the O(1) metadata check rejects a
     geometry-mismatched open before any Spark job runs."""
     import pytest
 
-    from cli_rag_spark.operators.pq import build_pq_index, read_pq_index
+    from cli_rag_spark.operators.pq import build_ivfpq_index, read_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "pq_index")
-    build_pq_index(emb, path, M, KC)
-    codes, cb = read_pq_index(spark, path, m_subspaces=M, k_codes=KC)
+    build_ivfpq_index(
+        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC, residual=False
+    )
+    codes, cb, _, _ = read_ivfpq_index(spark, path, m_subspaces=M, k_codes=KC)
+    seeded = build_pq_codebook(emb, M, KC)
     want = sorted(
-        (r.vec_id, r.m, r.code)
-        for r in pq_encode(emb, build_pq_codebook(emb, M, KC), M).collect()
+        (r.vec_id, r.m, r.code) for r in pq_encode(emb, seeded, M).collect()
     )
     got = sorted((r.vec_id, r.m, r.code) for r in codes.collect())
     assert got == want
-    assert cb.count() == M * KC
+    assert sorted(
+        (r.m, r.code, tuple(r.cvec)) for r in cb.collect()
+    ) == sorted((r.m, r.code, tuple(r.cvec)) for r in seeded.collect())
 
     with pytest.raises(ValueError, match="m_subspaces=4"):
-        read_pq_index(spark, path, m_subspaces=8)
+        read_ivfpq_index(spark, path, m_subspaces=8)
     with pytest.raises(ValueError, match="k_codes=16"):
-        read_pq_index(spark, path, k_codes=32)
+        read_ivfpq_index(spark, path, k_codes=32)
     with pytest.raises(ValueError, match="dim="):
-        read_pq_index(spark, path, dim=1024)
-    with pytest.raises(ValueError, match="not a build_pq_index output"):
-        read_pq_index(spark, str(tmp_path / "nowhere"))
+        read_ivfpq_index(spark, path, dim=1024)
+    with pytest.raises(ValueError, match="not a build_ivfpq_index output"):
+        read_ivfpq_index(spark, str(tmp_path / "nowhere"))
 
 
 def _mean_recall_at_50(emb, cb, codes, qids=range(5)):
@@ -160,8 +165,10 @@ def test_refined_codebook_recall_at_least_seeded(spark, sf_dir, tmp_path):
     the encoder uses) must not lose recall vs the seeded codebook —
     the VERDICT r3 acceptance bar for the refine path. Measured at
     sf0.01 (mean recall@50, query ids 0–4): seeded 0.384,
-    refined(1 iter) 0.436, refined(2) 0.408."""
-    from cli_rag_spark.operators.pq import build_pq_index, read_pq_index
+    refined(1 iter) 0.436, refined(2) 0.408. The refined book is
+    persisted through a raw IVFPQ build, whose codes are the flat ADC
+    index."""
+    from cli_rag_spark.operators.pq import build_ivfpq_index, read_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     seeded_cb = build_pq_codebook(emb, M, KC)
@@ -169,8 +176,11 @@ def test_refined_codebook_recall_at_least_seeded(spark, sf_dir, tmp_path):
     seeded = _mean_recall_at_50(emb, seeded_cb, seeded_codes)
 
     path = str(tmp_path / "pq_refined")
-    build_pq_index(emb, path, M, KC, refine_iters=1)
-    codes, cb = read_pq_index(spark, path, m_subspaces=M, k_codes=KC)
+    build_ivfpq_index(
+        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
+        refine_iters=1, residual=False,
+    )
+    codes, cb, _, _ = read_ivfpq_index(spark, path, m_subspaces=M, k_codes=KC)
     refined = _mean_recall_at_50(emb, cb, codes.cache())
     assert refined >= seeded, (refined, seeded)
 
@@ -236,20 +246,26 @@ def test_ivfpq_scores_only_probed_lists(spark, sf_dir):
     assert 0 in {r.vec_id for r in hits.collect()}
 
 
-def test_pq_knn_join_matches_per_query_adc(spark, sf_dir):
-    """The batch ADC join must produce, for each query, exactly the
-    single-query ADC operator's top-k (same scores, same tie-break)."""
-    from cli_rag_spark.operators.pq import pq_knn_join
+def test_knn_join_ivfpq_full_probe_matches_per_query_adc(spark, sf_dir):
+    """Flat batch ADC is knn_join_ivfpq probing all C lists: it must
+    produce, for each query, exactly the single-query ADC operator's
+    top-k over every code row (same scores, same tie-break)."""
+    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
+    from cli_rag_spark.operators.pq import knn_join_ivfpq
 
     emb = load_table(spark, sf_dir, "embeddings")
     cb = build_pq_codebook(emb, M, KC)
     codes = pq_encode(emb, cb, M).cache()
+    cent = seed_centroids(emb, 8)
+    assign = assign_centroids(emb, cent)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     batch = {
         (r.query_id, r.rank): (r.vec_id, r.est_d2)
-        for r in pq_knn_join(queries, codes, cb, k=5, m_subspaces=M).collect()
+        for r in knn_join_ivfpq(
+            queries, codes, cb, assign, cent, k=5, n_probe=8, m_subspaces=M
+        ).collect()
     }
     for qid in range(3):
         q = emb.where(F.col("vec_id") == qid).select(
@@ -302,23 +318,6 @@ def test_residual_ivfpq_recall_at_least_raw(spark, sf_dir):
     raw = mean_recall(ivfpq_topk)
     residual = mean_recall(ivfpq_residual_topk)
     assert residual >= raw, (residual, raw)
-
-
-def test_build_pq_index_empty_input_raises_before_writing(spark, sf_dir, tmp_path):
-    """An empty vectors frame must fail with a clear ValueError BEFORE
-    any index file is written — no partial codes/codebook parquet with
-    a missing _pq_meta.json left behind (ADVICE r4)."""
-    import os
-
-    import pytest
-
-    from cli_rag_spark.operators.pq import build_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 0)
-    path = str(tmp_path / "pq_empty")
-    with pytest.raises(ValueError, match="codebook is empty"):
-        build_pq_index(emb, path, M, KC)
-    assert not os.path.exists(path)
 
 
 def test_ivfpq_topk_explicit_centroids(spark, sf_dir):
@@ -509,20 +508,33 @@ def test_build_ivfpq_index_roundtrip_and_validation(spark, sf_dir, tmp_path):
 
 
 def test_build_ivfpq_index_empty_input_raises(spark, tmp_path):
+    """An empty vectors frame fails with a clear ValueError before any
+    index file is written (ADVICE r4)."""
+    import os
+
     import pytest
 
     from cli_rag_spark.operators.pq import build_ivfpq_index
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    path = str(tmp_path / "empty_ivfpq")
     with pytest.raises(ValueError, match="no scorable vectors"):
-        build_ivfpq_index(empty, str(tmp_path / "empty_ivfpq"))
+        build_ivfpq_index(empty, path)
+    assert not os.path.exists(path)
+
+
+def _with_null_vector_row(spark, emb):
+    """The fixture's non-NULL vectors plus one row with a NULL vector."""
+    emb = emb.where(F.col("embedding").isNotNull()).select("vec_id", "embedding")
+    null_row = spark.createDataFrame([(10**9, None)], emb.schema)
+    return emb.unionByName(null_row)
 
 
 def test_assign_centroids_gemm_matches_hof(spark, sf_dir):
     """The Arrow/GEMM assignment twin is bit-identical to the
     interpreted-HOF crossJoin form under both metrics — the contract
     that lets build_ivfpq_index route by size without changing any
-    persisted artifact."""
+    persisted artifact — including a NULL vector, which both drop."""
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.ann import (
@@ -533,8 +545,8 @@ def test_assign_centroids_gemm_matches_hof(spark, sf_dir):
     )
     from cli_rag_spark.sources.documents import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
+    emb = _with_null_vector_row(
+        spark, load_table(spark, sf_dir, "embeddings")
     )
     cent = seed_centroids(emb, 8)
     for metric in ("cosine", "l2"):
@@ -564,7 +576,8 @@ def test_assign_centroids_gemm_matches_hof(spark, sf_dir):
 def test_pq_encode_gemm_matches_hof(spark, sf_dir):
     """The Arrow/GEMM encoder twin is bit-identical to the
     interpreted-HOF pq_encode — the build_ivfpq_index size-routing
-    contract (same rounded-then-argmin, ties -> lowest code)."""
+    contract (same rounded-then-argmin, ties -> lowest code; a NULL
+    vector gets no code in either)."""
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.pq import (
@@ -574,8 +587,8 @@ def test_pq_encode_gemm_matches_hof(spark, sf_dir):
     )
     from cli_rag_spark.sources.documents import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
+    emb = _with_null_vector_row(
+        spark, load_table(spark, sf_dir, "embeddings")
     )
     cb = build_pq_codebook(emb, 4, 16)
     hof = {tuple(r) for r in pq_encode(emb, cb, 4).collect()}
@@ -729,7 +742,7 @@ def test_ivfpq_reuse_if_exists_skips_rebuild_on_identical_input(
 ):
     """build_ivfpq_index(reuse_if_exists=True) on byte-identical
     (data, params) returns without rewriting any artifact file — the
-    build_ivf_index/build_pq_index reuse discipline (r16, VERDICT r15
+    build_ivf_index reuse discipline (r16, VERDICT r15
     #2: the judged IVFPQ queries serve from these artifacts every
     timed run)."""
     import os
@@ -883,17 +896,6 @@ def _assert_crashed_rebuild_keeps_artifact(
     build(a, path, reuse_if_exists=True, **params)
     assert os.path.getmtime(meta_file) == mtime_before, "reuse must not rebuild"
     assert codebook() == cb_before
-
-
-def test_build_pq_index_crashed_rebuild_keeps_old_artifact(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    from cli_rag_spark.operators.pq import build_pq_index
-
-    _assert_crashed_rebuild_keeps_artifact(
-        spark, sf_dir, tmp_path, monkeypatch, build_pq_index, "_pq_meta.json",
-        m_subspaces=M, k_codes=KC,
-    )
 
 
 def test_build_ivfpq_index_crashed_rebuild_keeps_old_artifact(

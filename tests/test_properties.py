@@ -586,9 +586,9 @@ def test_dedup_spans_output_names_reserved(spark):
     n=st.integers(min_value=0, max_value=10**12),
     dim=st.integers(min_value=0, max_value=10**5),
     ivf=st.booleans(),
-    pq=st.booleans(),
+    ivfpq=st.booleans(),
 )
-def test_choose_knn_strategy_total_and_safe(q, n, dim, ivf, pq):
+def test_choose_knn_strategy_total_and_safe(q, n, dim, ivf, ivfpq):
     """The E7 dispatcher is TOTAL over non-negative shapes, never
     returns an unavailable index strategy, and never routes a shape
     past the driver-collect element budget to gemm (the ADVICE r9
@@ -600,12 +600,14 @@ def test_choose_knn_strategy_total_and_safe(q, n, dim, ivf, pq):
         choose_knn_strategy,
     )
 
-    s = choose_knn_strategy(q, n, dim, ivf_available=ivf, pq_available=pq)
-    assert s in ("exact", "gemm", "ivf", "pq", "lsh")
+    s = choose_knn_strategy(
+        q, n, dim, ivf_available=ivf, ivfpq_available=ivfpq
+    )
+    assert s in ("exact", "gemm", "ivf", "ivfpq", "lsh")
     if s == "ivf":
         assert ivf
-    if s == "pq":
-        assert pq
+    if s == "ivfpq":
+        assert ivfpq
     if s == "gemm":
         assert q <= GEMM_MAX_QUERIES
         assert q * dim <= GEMM_MAX_QUERY_ELEMS
