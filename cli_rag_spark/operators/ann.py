@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cli_rag_spark.functions.vectors import cosine_distance, l2_sq
@@ -266,6 +266,66 @@ def kmeans_refine(
     return centroids
 
 
+def _train_quantizer(
+    vectors: DataFrame,
+    n_centroids: int,
+    refine_iters: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+) -> tuple[DataFrame, int]:
+    """The coarse quantizer of every IVF-family build: the seeded rows,
+    Lloyd-refined by :func:`kmeans_refine` when ``refine_iters > 0``
+    (components rounded to ``round_digits`` so the refined centroids
+    stay engine-replayable), collected ONCE and returned as a literal
+    local ``(cid, cvec)`` frame with its dim (0 when empty). The
+    collect keeps the refine lineage (per-iteration full-corpus
+    assignment + means) from re-executing for every consumer; C rows
+    of dim doubles are broadcast-sized by construction."""
+    centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
+    if refine_iters > 0:
+        centroids = kmeans_refine(
+            vectors, centroids, n_iters=refine_iters,
+            id_col=id_col, vec_col=vec_col, round_digits=round_digits,
+        )
+    rows = [
+        (int(r["cid"]), [float(x) for x in r["cvec"]])
+        for r in centroids.collect()
+    ]
+    local = vectors.sparkSession.createDataFrame(
+        rows, "cid long, cvec array<double>"
+    )
+    return local, len(rows[0][1]) if rows else 0
+
+
+def _probe_lists(
+    centroids: DataFrame,
+    queries: DataFrame,
+    n_probe: int,
+    query_vec: str = "query_vec",
+    query_id: str | None = None,
+    round_digits: int = 6,
+) -> DataFrame:
+    """The one probe ranking of the IVF family: each query's
+    ``n_probe`` nearest coarse lists by rounded cosine, ties broken by
+    the lower cid. Returns the queries × broadcast centroids rows that
+    survive, with every input column plus ``_d``. With ``query_id``
+    the cut is a per-query window and the rows carry the list rank
+    ``_rn`` (1 = nearest), so a wider probe's lists are a prefix of
+    its rank; without it ``queries`` is a single query and the cut is
+    one global top-``n_probe``."""
+    order = (F.col("_d").asc(), F.col("cid").asc())
+    scored = queries.crossJoin(F.broadcast(centroids)).withColumn(
+        "_d",
+        F.round(cosine_distance(F.col(query_vec), F.col("cvec")), round_digits),
+    )
+    if query_id is None:
+        return scored.orderBy(*order).limit(n_probe)
+    return scored.withColumn(
+        "_rn", F.row_number().over(Window.partitionBy(query_id).orderBy(*order))
+    ).where(F.col("_rn") <= n_probe)
+
+
 _CENTROID_DIR = "_centroids"
 
 
@@ -336,37 +396,15 @@ def _ivf_rung_recalls(
     per query instead of one join per rung (the rung-at-a-time walk
     pays sum(widths) ≈ 2·max for a doubling ladder), and ONE
     driver-blocking collect for the whole batch."""
-    from pyspark.sql import Window
-
     query_id, query_vec = "query_id", "query_vec"
     index_id, index_vec = "vec_id", "embedding"
-    wmax = max(widths)
-    centroids = seed_centroids(index, n_centroids, index_id, index_vec)
-    if "cid" in index.columns:
-        assigned = index
-    else:
-        assigned = index.join(
-            assign_centroids(index, centroids, index_id, index_vec,
-                             round_digits),
-            index_id,
-        )
-    w_probe = Window.partitionBy(query_id).orderBy(
-        F.col("_d").asc(), F.col("cid").asc()
+    centroids, assigned = _ivf_quantizer(
+        index, n_centroids, index_id, index_vec, round_digits
     )
-    qprobe = (
-        queries.select(query_id, query_vec)
-        .crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "_d",
-            F.round(
-                cosine_distance(F.col(query_vec), F.col("cvec")),
-                round_digits,
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .where(F.col("_rn") <= wmax)
-        .select(query_id, query_vec, "cid", "_rn")
-    )
+    qprobe = _probe_lists(
+        centroids, queries.select(query_id, query_vec), max(widths),
+        query_vec, query_id, round_digits,
+    ).select(query_id, query_vec, "cid", "_rn")
     rung = F.explode(F.array(*[F.lit(w) for w in widths])).alias("_w")
     wk = Window.partitionBy("_w", query_id).orderBy(
         F.col("dist").asc(), F.col(index_id).asc()
@@ -454,16 +492,11 @@ def tune_n_probe(
     c = int(meta["n_centroids"])
     index = read_ivf_index(spark, path)
     if exact is None:
-        # one bounded probe row gives dim and rejects an index with no
-        # scorable vectors before the ground-truth GEMM
-        row0 = (
-            index.where(F.col("embedding").isNotNull())
-            .select(F.size("embedding").alias("d"))
-            .first()
-        )
-        if row0 is None or not row0["d"] or row0["d"] <= 0:
+        # the sidecar's dim and row count reject an index with no
+        # scorable vectors before the ground-truth GEMM, with no job
+        dim = int(meta.get("dim") or 0)
+        if not meta.get("n_rows") or dim <= 0:
             raise ValueError(f"IVF index at {path} has no scorable vectors")
-        dim = int(row0["d"])
         # exact ground truth over the index's own vectors, computed once
         exact = knn_join_gemm(
             queries, index, k=k, dim=dim
@@ -618,23 +651,9 @@ def build_ivf_index(
     built: list[DataFrame] = []
 
     def write(staging: str) -> dict:
-        centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
-        if refine_iters > 0:
-            centroids = kmeans_refine(
-                vectors, centroids, n_iters=refine_iters,
-                id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-            )
-        # materialize the quantizer ONCE: the refine lineage
-        # (per-iteration full-corpus assignment + means) would otherwise
-        # re-execute for the _centroids write after already running
-        # inside the assignment job. C rows of d doubles collect in
-        # microseconds and re-enter as a literal local frame
-        # (broadcast-sized by construction).
-        rows = [
-            (int(r["cid"]), [float(x) for x in r["cvec"]])
-            for r in centroids.collect()
-        ]
-        centroids = spark.createDataFrame(rows, "cid long, cvec array<double>")
+        centroids, dim = _train_quantizer(
+            vectors, n_centroids, refine_iters, id_col, vec_col, round_digits
+        )
         # size-routed assignment: the interpreted-HOF crossJoin
         # evaluates N·C·dim element-ops in codegen (~1.8e11 at
         # 2M×1414×64); the Arrow/GEMM twin is bit-identical (pinned in
@@ -645,9 +664,6 @@ def build_ivf_index(
             ),
             id_col,
         )
-        # dim is free here: the quantizer is already a collected local
-        # list, and every indexed vector shares its dimensionality
-        dim = len(rows[0][1]) if rows else 0
         n_files = _sorted_ivf_file_count(n_rows, dim)
         # Deterministic cid-bucket shuffle, NOT repartitionByRange:
         # range partitioning runs a SAMPLING job that evaluates the
@@ -687,8 +703,64 @@ def build_ivf_index(
 
 def read_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
     """The persisted coarse quantizer of an IVF index: the
-    ``_centroids`` child written by :func:`build_ivf_index`."""
-    return spark.read.parquet(f"{path}/{_CENTROID_DIR}")
+    ``_centroids`` child written by :func:`build_ivf_index`. The schema
+    is the build's, so opening it infers nothing and runs no job."""
+    return spark.read.schema("cid long, cvec array<double>").parquet(
+        f"{path}/{_CENTROID_DIR}"
+    )
+
+
+def _ivf_quantizer(
+    index: DataFrame,
+    n_centroids: int,
+    index_id: str,
+    index_vec: str,
+    round_digits: int,
+    validate_cid: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """``(centroids, assigned)`` for a batch probe over ``index``.
+
+    A cid-carrying frame whose files all sit in one
+    :func:`build_ivf_index` artifact probes with that artifact's own
+    ``_centroids``, the quantizer its rows were assigned by (refined or
+    seeded). The root is the one parent of ``index.inputFiles()`` and
+    the sidecar's ``n_centroids`` is checked against the probe's, so
+    the lookup runs no Spark job. Any other cid-carrying frame probes
+    with the seeded quantizer, after one cid scan checks that no cid
+    reaches ``n_centroids`` (when ``validate_cid``); a frame without
+    cid is assigned on the fly against the seeds."""
+    from cli_rag_spark.sources.artifacts import read_json_sidecar
+
+    seeds = seed_centroids(index, n_centroids, index_id, index_vec)
+    if "cid" not in index.columns:
+        return seeds, index.join(
+            assign_centroids(index, seeds, index_id, index_vec, round_digits),
+            index_id,
+        )
+    roots = {f.rsplit("/", 1)[0] for f in index.inputFiles()}
+    root = roots.pop() if len(roots) == 1 else None
+    meta = (
+        None if root is None
+        else read_json_sidecar(index.sparkSession, root, _META_NAME)
+    )
+    if meta is not None:
+        if meta.get("n_centroids") != n_centroids:
+            raise ValueError(
+                f"IVF index at {root} was built with n_centroids="
+                f"{meta.get('n_centroids')} but probe assumes "
+                f"n_centroids={n_centroids}: a different coarse quantizer"
+            )
+        return read_ivf_centroids(index.sparkSession, root), index
+    if validate_cid:
+        max_cid = index.agg(F.max("cid").alias("m")).collect()[0]["m"]
+        if max_cid is not None and max_cid >= n_centroids:
+            raise ValueError(
+                f"index carries cid up to {max_cid} but probe assumes "
+                f"n_centroids={n_centroids}: index was built with a "
+                "different coarse quantizer (use read_ivf_index to "
+                "validate via build metadata)"
+            )
+    return seeds, index
 
 
 def _read_ivf_meta(spark: SparkSession, path: str) -> dict:
@@ -827,16 +899,9 @@ def ivf_topk(
     """
     centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
     assign = assign_centroids(vectors, centroids, id_col, vec_col, round_digits)
-    probed = (
-        centroids.crossJoin(F.broadcast(query_vec_df))
-        .select(
-            "cid",
-            F.round(cosine_distance(F.col("cvec"), F.col("query_vec")), round_digits).alias("_d"),
-        )
-        .orderBy(F.col("_d").asc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select("cid")
-    )
+    probed = _probe_lists(
+        centroids, query_vec_df, n_probe, round_digits=round_digits
+    ).select("cid")
     candidates = (
         vectors.join(assign, id_col)
         .join(F.broadcast(probed), "cid", "semi")
@@ -873,58 +938,27 @@ def knn_join_ivf(
     assigned to those lists.
 
     Scale shape: if ``index`` already carries a ``cid`` column — the
-    frame ``build_ivf_index`` persists and
-    ``spark.read.parquet`` gives back — it is used as-is, so the
-    candidate join filters on cid and reads pruned lists with NO
-    re-assignment of the corpus. Otherwise assignment is computed on
-    the fly (broadcast crossJoin + partial-agg, the operators above).
-    Candidate generation is ONE equi-join on the narrow cid key
-    (cost O(rows in probed lists), never Q·N), then exact rescoring
-    and a per-query top-k window — same deterministic (dist, id)
-    contract as every other strategy. Recall tunes with n_probe
-    exactly like single-query IVF. When passing a pre-assigned index,
-    ``n_centroids`` must match the one used at build time (the seeded
-    centroid ids are the lowest ``n_centroids`` index ids in both
-    cases, so the probe targets the same lists).
+    frame ``build_ivf_index`` persists and ``spark.read.parquet`` gives
+    back — it is used as-is, with NO re-assignment of the corpus, and
+    the lists are ranked by the quantizer it was built with (the
+    artifact's own ``_centroids``; see :func:`_ivf_quantizer`).
+    Otherwise assignment is computed on the fly against the seeded
+    quantizer (broadcast crossJoin + partial-agg, the operators above).
+    Candidate generation is ONE equi-join on the narrow cid key (cost
+    O(rows in probed lists), never Q·N), then exact rescoring and a
+    per-query top-k window — same deterministic (dist, id) contract as
+    every other strategy. Recall tunes with n_probe exactly like
+    single-query IVF. ``validate_cid`` guards only a cid-carrying frame
+    without a build sidecar: one cid scan rejects a cid at or past
+    ``n_centroids``.
     """
-    centroids = seed_centroids(index, n_centroids, index_id, index_vec)
-    if "cid" in index.columns:
-        if validate_cid:
-            # A pre-assigned index built with a DIFFERENT n_centroids
-            # would silently probe the wrong lists (ADVICE r2). cid is
-            # a physical column, so this is a cid-column scan over
-            # every row group — parquet column stats keep it cheap,
-            # but read_ivf_index() performs the
-            # stronger O(1) METADATA check (the meta's n_centroids),
-            # which is why every shipped caller goes through it and
-            # passes validate_cid=False. Keep this guard for raw
-            # frames that never had a meta sidecar.
-            max_cid = index.agg(F.max("cid").alias("m")).collect()[0]["m"]
-            if max_cid is not None and max_cid >= n_centroids:
-                raise ValueError(
-                    f"index carries cid up to {max_cid} but probe assumes "
-                    f"n_centroids={n_centroids}: index was built with a "
-                    "different coarse quantizer (use read_ivf_index to "
-                    "validate via build metadata)"
-                )
-        assigned = index
-    else:
-        iassign = assign_centroids(index, centroids, index_id, index_vec, round_digits)
-        assigned = index.join(iassign, index_id)
-
-    from pyspark.sql import Window
-
-    w_probe = Window.partitionBy(query_id).orderBy(F.col("_d").asc(), F.col("cid").asc())
-    qprobe = (
-        queries.select(query_id, query_vec)
-        .crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "_d", F.round(cosine_distance(F.col(query_vec), F.col("cvec")), round_digits)
-        )
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .where(F.col("_rn") <= n_probe)
-        .select(query_id, query_vec, "cid")
+    centroids, assigned = _ivf_quantizer(
+        index, n_centroids, index_id, index_vec, round_digits, validate_cid
     )
+    qprobe = _probe_lists(
+        centroids, queries.select(query_id, query_vec), n_probe,
+        query_vec, query_id, round_digits,
+    ).select(query_id, query_vec, "cid")
     cand = assigned.join(qprobe, "cid")
     w = Window.partitionBy(query_id).orderBy(F.col(dist_col).asc(), F.col(index_id).asc())
     return (
@@ -959,19 +993,11 @@ def ivf_topk_persisted(
     """
     meta = _read_ivf_meta(spark, path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    centroids = read_ivf_centroids(spark, path)
-    probed = (
-        centroids.crossJoin(F.broadcast(query_vec_df))
-        .select(
-            "cid",
-            F.round(
-                cosine_distance(F.col("cvec"), F.col("query_vec")), round_digits
-            ).alias("_d"),
-        )
-        .orderBy(F.col("_d").asc(), F.col("cid").asc())
-        .limit(n_probe)
+    probed = _probe_lists(
+        read_ivf_centroids(spark, path), query_vec_df, n_probe,
+        round_digits=round_digits,
     )
-    probe_cids = [r["cid"] for r in probed.collect()]
+    probe_cids = [r["cid"] for r in probed.select("cid").collect()]
     index = spark.read.parquet(path)
     candidates = index.where(F.col("cid").isin(probe_cids))
     return (

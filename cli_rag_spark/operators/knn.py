@@ -1255,7 +1255,6 @@ def knn_join_auto(
             n_probe if n_probe is not None else default_n_probe(n_centroids),
             query_id, query_vec, index_id, index_vec, dist_col,
             round_digits if round_digits is not None else 6,
-            validate_cid=False,  # ivf_index_ready already checked the build
         )
     else:
         # geometry unset -> the corpus-sized rule (VERDICT r12 #3: the

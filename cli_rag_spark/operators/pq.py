@@ -61,8 +61,17 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cli_rag_spark.functions.vectors import cosine_distance, dot, l2_sq
-from cli_rag_spark.operators.ann import kmeans_refine
+from cli_rag_spark.functions.vectors import dot, l2_sq
+from cli_rag_spark.operators.ann import (
+    GEMM_ASSIGN_MIN_OPS,
+    _probe_lists,
+    _train_quantizer,
+    assign_centroids,
+    assign_centroids_auto,
+    default_n_centroids,
+    kmeans_refine,
+    seed_centroids,
+)
 from cli_rag_spark.sources.artifacts import (
     content_fingerprint,
     read_index_meta,
@@ -370,8 +379,6 @@ def ivfpq_topk(
     the bytes; output [id_col, est_d2] matches pq_adc_scores' shape
     with the same (est_d2, id) deterministic ordering.
     """
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-
     cent = (
         centroids
         if centroids is not None
@@ -383,18 +390,9 @@ def ivfpq_topk(
         codebook = build_pq_codebook(vectors, m_subspaces, k_codes, id_col, vec_col)
     if codes is None:
         codes = pq_encode(vectors, codebook, m_subspaces, id_col, vec_col, round_digits)
-    probed = (
-        cent.crossJoin(F.broadcast(query))
-        .select(
-            "cid",
-            F.round(
-                cosine_distance(F.col("cvec"), F.col(query_col)), round_digits
-            ).alias("_d"),
-        )
-        .orderBy(F.col("_d").asc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select("cid")
-    )
+    probed = _probe_lists(
+        cent, query, n_probe, query_col, round_digits=round_digits
+    ).select("cid")
     cand = (
         codes.join(assign.select(id_col, "cid"), id_col)
         .join(F.broadcast(probed), "cid", "semi")
@@ -443,8 +441,6 @@ def ivfpq_residual_topk(
     candidates are the probed lists' narrow code rows; embeddings are
     touched only at one-time build.
     """
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-
     cent = seed_centroids(vectors, n_centroids, id_col, vec_col)
     assign = assign_centroids(vectors, cent, id_col, vec_col, round_digits)
     v = vectors.select(
@@ -468,24 +464,17 @@ def ivfpq_residual_topk(
         assign, id_col
     )
 
-    probed = (
-        cent.crossJoin(F.broadcast(query))
-        .select(
-            "cid",
-            F.col("cvec").cast("array<double>").alias("_c"),
-            F.round(
-                cosine_distance(F.col("cvec"), F.col(query_col)), round_digits
-            ).alias("_d"),
-            F.col(query_col).cast("array<double>").alias("_q"),
-        )
-        .orderBy(F.col("_d").asc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select(
-            "cid",
-            F.round(l2_sq(F.col("_q"), F.col("_c")), round_digits).alias(
-                "_qc2"
+    probed = _probe_lists(
+        cent, query, n_probe, query_col, round_digits=round_digits
+    ).select(
+        "cid",
+        F.round(
+            l2_sq(
+                F.col(query_col).cast("array<double>"),
+                F.col("cvec").cast("array<double>"),
             ),
-        )
+            round_digits,
+        ).alias("_qc2"),
     )
     terms = residual_adc_terms(
         codebook, cent.join(probed.select("cid"), "cid", "semi"), round_digits
@@ -608,8 +597,9 @@ def knn_join_ivfpq(
     candidate volume is Q · n_probe · (N/C) · M narrow code rows
     instead of Q·N, and no embedding is read at query time.
 
-    Plan: (1) per-query probe — centroids × broadcast queries, one
-    window top-``n_probe`` per query (C·Q tiny rows); (2) candidates
+    Plan: (1) per-query probe — queries × broadcast centroids, one
+    window top-``n_probe`` per query (the IVF family's one probe
+    ranking, C·Q tiny rows); (2) candidates
     — the codes scan joins the cid assignment once, then the
     broadcast (query, cid) probe list — this inner join IS the
     pruning, fanning each code row out only to the queries that probe
@@ -673,26 +663,8 @@ def knn_join_ivfpq(
                 "geometry returns silently wrong distances"
             )
     q = queries.select(query_id, query_vec)
-    probed = (
-        centroids.crossJoin(F.broadcast(q))
-        .select(
-            query_id,
-            "cid",
-            F.col("cvec").cast("array<double>").alias("_cv"),
-            F.col(query_vec).cast("array<double>").alias("_qv"),
-            F.round(
-                cosine_distance(F.col("cvec"), F.col(query_vec)), round_digits
-            ).alias("_d"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(query_id).orderBy(
-                    F.col("_d").asc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("_rn") <= n_probe)
+    probed = _probe_lists(
+        centroids, q, n_probe, query_vec, query_id, round_digits
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("est_d2").asc(), F.col(id_col).asc()
@@ -706,9 +678,13 @@ def knn_join_ivfpq(
         probed = probed.select(
             query_id,
             "cid",
-            F.round(l2_sq(F.col("_qv"), F.col("_cv")), round_digits).alias(
-                "_qc2"
-            ),
+            F.round(
+                l2_sq(
+                    F.col(query_vec).cast("array<double>"),
+                    F.col("cvec").cast("array<double>"),
+                ),
+                round_digits,
+            ).alias("_qc2"),
         )
         if resid_terms is None:
             resid_terms = residual_adc_terms(
@@ -1025,13 +1001,6 @@ def build_ivfpq_index(
     When the stored content matches, the stored ``dim`` is the live
     dim, so reuse resolves the unset geometry defaults without a dim
     probe."""
-    from cli_rag_spark.operators.ann import (
-        GEMM_ASSIGN_MIN_OPS,
-        assign_centroids_auto,
-        default_n_centroids,
-        seed_centroids,
-    )
-
     spark = vectors.sparkSession
     n_rows, content_fp = content_fingerprint(vectors, id_col, vec_col)
     stored = (
@@ -1090,25 +1059,15 @@ def build_ivfpq_index(
     }
 
     def write(staging: str) -> None:
-        # coarse quantizer: seed -> optional Lloyd -> materialize ONCE
-        # as a literal local frame (C rows of dim doubles; the refine
-        # lineage must not re-execute per consumer)
-        centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
-        if coarse_refine_iters > 0:
-            centroids = kmeans_refine(
-                vectors, centroids, n_iters=coarse_refine_iters,
-                id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-            )
-        rows = [
-            (int(r["cid"]), [float(x) for x in r["cvec"]])
-            for r in centroids.collect()
-        ]
-        if not rows:
+        centroids, coarse_dim = _train_quantizer(
+            vectors, n_centroids, coarse_refine_iters, id_col, vec_col,
+            round_digits,
+        )
+        if not coarse_dim:
             raise ValueError(
                 "build_ivfpq_index: seeded coarse quantizer is empty — "
                 "refusing to write an empty index"
             )
-        centroids = spark.createDataFrame(rows, "cid long, cvec array<double>")
         centroids.coalesce(1).write.mode("overwrite").parquet(
             f"{staging}/centroids"
         )

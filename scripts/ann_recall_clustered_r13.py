@@ -193,7 +193,7 @@ def stage_main(spark, args) -> None:
     t0 = time.perf_counter()
     out = knn_join_ivf(
         queries, idx, k=k, n_centroids=c_ivf,
-        n_probe=default_n_probe(c_ivf), validate_cid=False,
+        n_probe=default_n_probe(c_ivf),
     ).localCheckpoint(eager=True)
     sec = round(time.perf_counter() - t0, 2)
     print(json.dumps({

@@ -183,7 +183,6 @@ def _knn_ivf_sqrtc(m: int, n_probe=2):
         probe = default_n_probe(c) if n_probe == "rule" else n_probe
         return knn_join_ivf(
             queries, index, k=3, n_centroids=c, n_probe=probe,
-            validate_cid=False,
         )
 
     return run
@@ -229,7 +228,6 @@ def _ivf_recall_at_scale(spark, sf_dir) -> dict:
         for label, probe in (("fixed2", 2), ("rule", default_n_probe(c))):
             approx = knn_join_ivf(
                 qset, index, k=3, n_centroids=c, n_probe=probe,
-                validate_cid=False,
             )
             row = (
                 topk_recall(exact, approx, k=3)

@@ -234,6 +234,63 @@ def test_knn_join_ivf_rejects_mismatched_cid(spark, sf_dir, tmp_path):
         knn_join_ivf(q, persisted, k=3, n_centroids=4, n_probe=2)
 
 
+def test_knn_join_auto_probes_refined_index_with_its_quantizer(spark, tmp_path):
+    """A Lloyd-refined index assigns its rows by the refined centroids,
+    so its batch probe must rank lists by the same centroids: the
+    dispatcher's ivf route reads the index's own ``_centroids`` (found
+    from the frame's files without a Spark job), scans the index root
+    only once, and recalls at least as much as the seeded build on a
+    clustered corpus whose lowest ids seed the clusters unevenly."""
+    import uuid
+
+    import numpy as np
+
+    from cli_rag_spark.operators.ann import knn_join_ivf, read_ivf_index
+    from cli_rag_spark.operators.knn import knn_join, knn_join_auto, topk_recall
+
+    n, dim, c, k = 1000, 16, 16, 10
+    rng = np.random.default_rng(0)
+    centers = rng.normal(size=(c, dim))
+    x = centers[rng.integers(0, c, n)] + 0.5 * rng.normal(size=(n, dim))
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id long, embedding array<float>",
+    )
+    q = emb.where(F.col("vec_id") < 40).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    exact = knn_join(q, emb, k=k).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    recall = {}
+    for refine in (0, 2):
+        path = str(tmp_path / f"ivf_refine{refine}")
+        build_ivf_index(emb, path, n_centroids=c, refine_iters=refine)
+        out = knn_join_auto(
+            q, emb, k=k, n_index=10_000_000_000, ivf_path=path,
+            n_centroids=c, n_probe=2,
+        )
+        # FileScan locations print in full only under a wide metadata cap
+        spark.conf.set("spark.sql.maxMetadataStringLength", 100_000)
+        try:
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.unset("spark.sql.maxMetadataStringLength")
+        assert f"{path}/_centroids]" in plan
+        assert plan.count(f"{path}]") == 1, plan
+        recall[refine] = topk_recall(exact, out, k=k).agg(
+            F.avg("recall").alias("r")
+        ).first()["r"]
+        index = read_ivf_index(spark, path, c)
+        group = f"ivf_quantizer_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "persisted quantizer lookup")
+        try:
+            knn_join_ivf(q, index, k, c, 2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert recall[2] >= recall[0], recall
+
+
 def test_append_ivf_index_requires_index(spark, sf_dir, tmp_path):
     import pytest
 
@@ -402,7 +459,9 @@ def test_reuse_if_exists_rejects_pre_fingerprint_metadata(spark, sf_dir, tmp_pat
 def test_build_ivf_index_empty_input(spark, tmp_path):
     # ADVICE r8 low: bit_xor over zero rows is NULL — the empty input
     # must map to fp=0 and build an empty index, not raise TypeError
-    from cli_rag_spark.operators.ann import build_ivf_index
+    import pytest
+
+    from cli_rag_spark.operators.ann import build_ivf_index, tune_n_probe
 
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<double>"
@@ -410,6 +469,11 @@ def test_build_ivf_index_empty_input(spark, tmp_path):
     path = str(tmp_path / "ivf_empty")
     centroids = build_ivf_index(empty, path, n_centroids=4)
     assert centroids.count() == 0
+    with pytest.raises(ValueError, match="no scorable vectors"):
+        tune_n_probe(spark, path, empty.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        ))
 
 
 def test_default_n_centroids_sqrt_rule():

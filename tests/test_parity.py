@@ -82,12 +82,31 @@ def oracle_results(sf_dir):
     con.close()
 
 
+@pytest.fixture(scope="module")
+def spark_results(spark, sf_dir):
+    """Each query runs ONCE per name: its frame is persisted, and the
+    columns, rows and pandas dtypes both tests below read all come from
+    that one execution."""
+    done: dict[str, tuple] = {}
+
+    def result(name: str) -> tuple:
+        if name not in done:
+            sdf = entrymod.queries()[name](spark, sf_dir).persist()
+            try:
+                rows = sdf.collect()
+                pdf = sdf.toPandas()
+            finally:
+                sdf.unpersist()
+            dtypes = {c: str(pdf[c].dtype) for c in pdf.columns}
+            done[name] = (sdf.columns, rows, dtypes)
+        return done[name]
+
+    return result
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, sf_dir, oracle_results, name):
-    qfn = entrymod.queries()[name]
-    sdf = qfn(spark, sf_dir)
-    spark_rows = sdf.collect()
-    spark_cols = sdf.columns
+def test_query_matches_oracle(spark_results, oracle_results, name):
+    spark_cols, spark_rows, _ = spark_results(name)
 
     oracle = entrymod.oracle_sql().get(name)
     if oracle is None:
@@ -112,7 +131,7 @@ def test_query_matches_oracle(spark, sf_dir, oracle_results, name):
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_dtype_parity(spark, sf_dir, oracle_results, name):
+def test_query_dtype_parity(spark_results, oracle_results, name):
     """Pandas dtype vectors must MATCH between the Spark result and the
     DuckDB oracle result — the driver's value hash is representation
     sensitive, so a benign engine-typing divergence (DuckDB types
@@ -125,10 +144,8 @@ def test_query_dtype_parity(spark, sf_dir, oracle_results, name):
     oracle = entrymod.oracle_sql().get(name)
     if oracle is None:
         pytest.skip(f"{name}: no oracle (rows-only check)")
-    qfn = entrymod.queries()[name]
-    spark_pdf = qfn(spark, sf_dir).toPandas()
+    _, _, s_dtypes = spark_results(name)
     duck_pdf = oracle_results(name, oracle).df()
-    s_dtypes = {c: str(spark_pdf[c].dtype) for c in spark_pdf.columns}
     d_dtypes = {c: str(duck_pdf[c].dtype) for c in duck_pdf.columns}
     assert s_dtypes == d_dtypes, (
         f"{name}: pandas dtype divergence (driver hash would differ)\n"
