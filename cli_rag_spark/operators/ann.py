@@ -19,9 +19,12 @@ Everything is DataFrame ops:
 * assignment — crossJoin against the **broadcast** centroid table +
   ``min_by`` (partial-aggregating groupBy: shuffle is N narrow rows,
   never N×C);
-* probe + search — semi-join on the probed centroid ids (row-group
-  pruning on a persisted index), then brute-force top-k with the
-  deterministic (dist, id) ordering of the exact operator.
+* probe + search — each query's ``n_probe`` nearest lists
+  (:func:`_probe_lists`), candidates joined on cid (a literal cid
+  list for :func:`ivf_topk_persisted`, so row groups are pruned), then
+  exact re-scoring with the deterministic (dist, id) ordering of the
+  exact operator. One query is a one-row query table of
+  :func:`knn_join_ivf`.
 
 Distances are rounded before argmin/ordering so assignment is
 reproducible across engines (ties broken by centroid id).
@@ -603,7 +606,9 @@ def build_ivf_index(
     build identity: n_centroids, column names, refine_iters,
     round_digits, layout, and the input's ``n_rows`` + ``content_fp``
     (:func:`~cli_rag_spark.sources.artifacts.content_fingerprint`),
-    plus the vector ``dim`` :func:`ivf_index_ready` checks.
+    plus the vector ``dim`` :func:`ivf_index_ready` checks and the
+    rows' ``schema``, so :func:`read_ivf_index` opens the index
+    without a schema-inference job.
     :func:`read_ivf_index` checks a probe's ``n_centroids`` against it
     at open time, and probing or appending never re-derives centroids
     from data: the quantizer travels with the index.
@@ -643,10 +648,10 @@ def build_ivf_index(
         "n_rows": n_rows,
         "content_fp": content_fp,
         "layout": "sorted",
-        # 2: the sidecar records dim; an older sidecar never matches,
-        # so reuse rebuilds it instead of serving an index the
-        # dispatcher's dim gate can never accept
-        "version": 2,
+        # 3: the sidecar records dim and the rows' schema; an older
+        # sidecar never matches, so reuse rebuilds it instead of
+        # serving an index the readers refuse
+        "version": 3,
     }
     built: list[DataFrame] = []
 
@@ -691,7 +696,7 @@ def build_ivf_index(
             f"{staging}/{_CENTROID_DIR}"
         )
         built.append(centroids)
-        return {"dim": dim}
+        return {"dim": dim, "schema": _read_back_schema(assigned.schema)}
 
     if staged_artifact(
         spark, path, _META_NAME, identity, write,
@@ -708,6 +713,24 @@ def read_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema("cid long, cvec array<double>").parquet(
         f"{path}/{_CENTROID_DIR}"
     )
+
+
+def _read_back_schema(schema) -> dict:
+    """``schema`` as parquet reads it back, in JSON form: Spark writes
+    every column and array element nullable, so the recorded schema
+    equals the one inference would find."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    def nullable(t):
+        if isinstance(t, StructType):
+            return StructType(
+                [StructField(f.name, nullable(f.dataType), True) for f in t]
+            )
+        if isinstance(t, ArrayType):
+            return ArrayType(nullable(t.elementType), True)
+        return t
+
+    return nullable(schema).jsonValue()
 
 
 def _ivf_quantizer(
@@ -780,8 +803,9 @@ def ivf_index_ready(
     a different embedding column would silently return garbage
     neighbours). One sidecar read, no Spark job: it runs on every
     dispatch. Any absence/mismatch, including a sidecar that does not
-    record ``dim``, returns False — the dispatcher falls back to an
-    index-free strategy rather than erroring."""
+    record ``dim`` or the row schema :func:`read_ivf_index` needs,
+    returns False — the dispatcher falls back to an index-free
+    strategy rather than erroring."""
     from cli_rag_spark.sources.artifacts import read_json_sidecar
 
     meta = read_json_sidecar(spark, path, _META_NAME)
@@ -789,6 +813,7 @@ def ivf_index_ready(
         meta is not None
         and meta.get("n_centroids") == n_centroids
         and meta.get("dim") == dim
+        and "schema" in meta
     )
 
 
@@ -799,16 +824,24 @@ def read_ivf_index(
 
     Raises ``ValueError`` if the caller's intended ``n_centroids``
     differs from the one the index was built with — the O(1),
-    no-Spark-job guard against probing the wrong lists. Returns the
-    cid-carrying DataFrame ready for :func:`knn_join_ivf` /
-    partition-pruned scans."""
+    no-Spark-job guard against probing the wrong lists — or if the
+    sidecar predates the recorded row schema. Returns the cid-carrying
+    DataFrame ready for :func:`knn_join_ivf` / partition-pruned scans,
+    opened with the build's schema: no inference, no Spark job."""
+    from pyspark.sql.types import StructType
+
     meta = _read_ivf_meta(spark, path)
     if n_centroids is not None and meta["n_centroids"] != n_centroids:
         raise ValueError(
             f"IVF index at {path} was built with n_centroids="
             f"{meta['n_centroids']}, probe requested {n_centroids}"
         )
-    return spark.read.parquet(path)
+    if "schema" not in meta:
+        raise ValueError(
+            f"IVF index at {path} records no row schema; rebuild it with "
+            "build_ivf_index"
+        )
+    return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(path)
 
 
 def append_ivf_index(
@@ -830,7 +863,9 @@ def append_ivf_index(
     working, and the appended index is row-for-row identical to a
     one-shot build over the union (locked in tests/test_ann.py). An
     index in a retired layout (its meta has no ``layout: sorted``) is
-    refused: appending sorted files into it would mix formats.
+    refused: appending sorted files into it would mix formats. So is
+    an index whose sidecar lacks the ``dim`` or row schema a current
+    build records: rebuild it.
 
     Caller contract (same as any append-only ingest): batch ids are
     new — the operator does not dedupe against the existing index
@@ -843,8 +878,13 @@ def append_ivf_index(
             f"({meta.get('layout', 'partitioned')!r}); rebuild it with "
             "build_ivf_index before appending"
         )
+    if "dim" not in meta:
+        raise ValueError(
+            f"IVF index at {path} records no vector dim; rebuild it with "
+            "build_ivf_index before appending"
+        )
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    index = spark.read.parquet(path)
+    index = read_ivf_index(spark, path)
     centroids = read_ivf_centroids(spark, path)
     # one count serves both the size-routed assignment (the GEMM twin
     # past the interpreted-HOF envelope, bit-identical by the pinned
@@ -862,9 +902,7 @@ def append_ivf_index(
     # the batch's footer stats prune exactly like the base files' (a
     # batch spans fewer lists, so its per-file cid ranges are
     # naturally tighter)
-    dim_row = centroids.select(F.size("cvec").alias("d")).first()
-    dim = int(dim_row["d"]) if dim_row and dim_row["d"] else 0
-    n_files = _sorted_ivf_file_count(n_batch, dim)
+    n_files = _sorted_ivf_file_count(n_batch, int(meta["dim"]))
     # same deterministic bucket shuffle as the build (range
     # partitioning would sample — i.e. recompute — the batch
     # assignment a second time)
@@ -877,43 +915,6 @@ def append_ivf_index(
         .write.mode("append")
         .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
         .parquet(path)
-    )
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    query_vec_df: DataFrame,
-    k: int,
-    n_centroids: int,
-    n_probe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Approximate top-k: score only vectors whose centroid is among
-    the query's ``n_probe`` nearest centroids.
-
-    ``query_vec_df`` is a 1-row DataFrame with column ``query_vec``
-    (broadcast everywhere it is used). Output [id_col, dist], the same
-    shape as the exact operator — recall is tuned by n_probe.
-    """
-    centroids = seed_centroids(vectors, n_centroids, id_col, vec_col)
-    assign = assign_centroids(vectors, centroids, id_col, vec_col, round_digits)
-    probed = _probe_lists(
-        centroids, query_vec_df, n_probe, round_digits=round_digits
-    ).select("cid")
-    candidates = (
-        vectors.join(assign, id_col)
-        .join(F.broadcast(probed), "cid", "semi")
-    )
-    return (
-        candidates.crossJoin(F.broadcast(query_vec_df))
-        .select(
-            id_col,
-            F.round(cosine_distance(F.col(vec_col), F.col("query_vec")), round_digits).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
     )
 
 
@@ -947,10 +948,10 @@ def knn_join_ivf(
     Candidate generation is ONE equi-join on the narrow cid key (cost
     O(rows in probed lists), never Q·N), then exact rescoring and a
     per-query top-k window — same deterministic (dist, id) contract as
-    every other strategy. Recall tunes with n_probe exactly like
-    single-query IVF. ``validate_cid`` guards only a cid-carrying frame
-    without a build sidecar: one cid scan rejects a cid at or past
-    ``n_centroids``.
+    every other strategy; a single query is a one-row ``queries``
+    table. Recall tunes with n_probe. ``validate_cid`` guards only a
+    cid-carrying frame without a build sidecar: one cid scan rejects a
+    cid at or past ``n_centroids``.
     """
     centroids, assigned = _ivf_quantizer(
         index, n_centroids, index_id, index_vec, round_digits, validate_cid
@@ -998,8 +999,9 @@ def ivf_topk_persisted(
         round_digits=round_digits,
     )
     probe_cids = [r["cid"] for r in probed.select("cid").collect()]
-    index = spark.read.parquet(path)
-    candidates = index.where(F.col("cid").isin(probe_cids))
+    candidates = read_ivf_index(spark, path).where(
+        F.col("cid").isin(probe_cids)
+    )
     return (
         candidates.crossJoin(F.broadcast(query_vec_df))
         .select(

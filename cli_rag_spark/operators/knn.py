@@ -1053,8 +1053,9 @@ def knn_join_auto(
     (coarse quantizer + inverted file + codes + codebook in one
     root); it yields only to the full-precision IVF probe. Its probe
     width defaults to √C from the artifact's recorded C, its PQ
-    geometry and scoring form (raw or residual) come from the build
-    metadata, and — r13, VERDICT r12 #1 — it RERANKS BY DEFAULT:
+    geometry comes from the build metadata and its scoring form (raw
+    or residual) from the artifact's ``resid_terms`` child, and — r13,
+    VERDICT r12 #1 — it RERANKS BY DEFAULT:
     ``ivfpq_rerank=None`` exact-rescores the ADC
     top-``default_rerank_depth(k)`` shortlist (R = max(10·k, 100,
     ceil(N/C)) — the home-list occupancy term is the
@@ -1180,9 +1181,9 @@ def knn_join_auto(
         codes, codebook, assign, cent = read_ivfpq_index(
             queries.sparkSession, ivfpq_path
         )
-        # a residual artifact ships its precomputed
-        # query-independent ADC terms — None for raw builds
-        # (knn_join_ivfpq then derives them on the fly)
+        # a residual artifact ships its query-independent ADC terms
+        # (None for raw builds); passing them selects the residual
+        # scoring form, so residual codes never meet the raw LUT
         terms = read_ivfpq_terms(queries.sparkSession, ivfpq_path)
         c = int(ivfpq_meta["n_centroids"])
         # IVFADC-R is the DEFAULT on this path (VERDICT r12 #1): the
@@ -1217,12 +1218,8 @@ def knn_join_auto(
             m_subspaces=int(ivfpq_meta["m_subspaces"]),
             query_id=query_id, query_vec=query_vec, id_col=index_id,
             round_digits=round_digits if round_digits is not None else 6,
-            # the artifact decides the scoring form: residual codes
-            # scored with the raw-vector LUT (or vice versa) are the
-            # same silent-garbage class as a geometry mismatch (r13)
-            residual=bool(ivfpq_meta.get("residual", False)),
             resid_terms=terms,
-            # m_subspaces/residual are sourced FROM the artifact's own
+            # m_subspaces is sourced FROM the artifact's own
             # meta above, so an in-plan geometry collect could only
             # re-derive what the meta already states — a redundant
             # per-call Spark job (r15; comment reworded r16 per ADVICE

@@ -24,8 +24,8 @@ Scale shapes:
   inside one partial-aggregating stage (same shape as
   ann.assign_centroids); encode is the one-time index build;
 * ADC scan: the codes table (N·M narrow int rows) broadcast-joins the
-  M·K lookup table and sums — the per-query work is a map over codes,
-  no vector arithmetic, no shuffle of embeddings;
+  per-query M·K lookup table and sums — the per-query work is a map
+  over codes, no vector arithmetic, no shuffle of embeddings;
 * determinism: every distance is rounded to ``round_digits`` before
   any argmin/sum, ties broken by lowest code id — identical under any
   partition order and exactly replayable in the DuckDB oracle.
@@ -46,11 +46,14 @@ parameters, input fingerprint) and promoted atomically. Readers
 validate the sidecar's geometry O(1) at open time — an index probed
 with mismatched PQ geometry would silently return garbage distances.
 
-Flat (unpruned) ADC is the probe-all case of IVFADC (Jégou §IV): a
-raw (``residual=False``) IVFPQ artifact persists the same seeded
-codebook and codes a flat PQ index would, and :func:`knn_join_ivfpq`
-with ``n_probe`` = C scores every list — the same rows, the same
-estimates. There is therefore no separate flat-PQ artifact type.
+Search has one operator, :func:`knn_join_ivfpq`, for any number of
+queries (one query is a one-row query table). Flat (unpruned) ADC is
+the probe-all case of IVFADC (Jégou §IV): a raw (``residual=False``)
+artifact persists the same seeded codebook and codes a flat PQ index
+would, and ``n_probe`` = C scores every list — the same rows, the same
+estimates. Of the search path, only :func:`read_ivfpq_index` and
+:func:`knn_join_ivfpq` touch the codes/assign layout
+:func:`build_ivfpq_index` writes.
 """
 
 from __future__ import annotations
@@ -66,11 +69,9 @@ from cli_rag_spark.operators.ann import (
     GEMM_ASSIGN_MIN_OPS,
     _probe_lists,
     _train_quantizer,
-    assign_centroids,
     assign_centroids_auto,
     default_n_centroids,
     kmeans_refine,
-    seed_centroids,
 )
 from cli_rag_spark.sources.artifacts import (
     content_fingerprint,
@@ -83,10 +84,7 @@ __all__ = [
     "l2_sq",
     "build_pq_codebook",
     "pq_encode",
-    "pq_adc_scores",
     "refine_pq_codebook",
-    "ivfpq_topk",
-    "ivfpq_residual_topk",
     "knn_join_ivfpq",
     "pq_encode_gemm",
     "default_pq_geometry",
@@ -294,227 +292,6 @@ def pq_encode_gemm(
     )
 
 
-def pq_adc_scores(
-    codes: DataFrame,
-    codebook: DataFrame,
-    query: DataFrame,
-    m_subspaces: int = 4,
-    id_col: str = "vec_id",
-    query_col: str = "query_vec",
-    round_digits: int = 6,
-) -> DataFrame:
-    """[id_col, est_d2]: ADC — estimated squared L2 of every encoded
-    vector to the single-row ``query`` frame's vector.
-
-    The M×K lookup table is built once (codebook × query, broadcast);
-    the scan is codes ⋈ LUT + a sum — no embedding ever touches the
-    query path."""
-    ds = _d_sub(F.col(query_col).cast("array<double>"), m_subspaces)
-    lut = (
-        codebook.crossJoin(F.broadcast(query))
-        .select(
-            "m",
-            "code",
-            F.round(
-                l2_sq(
-                    F.col("cvec"),
-                    F.slice(
-                        F.col(query_col).cast("array<double>"),
-                        F.col("m") * ds + 1,
-                        ds,
-                    ),
-                ),
-                round_digits,
-            ).alias("d2"),
-        )
-    )
-    return (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .groupBy(id_col)
-        .agg(F.round(F.sum("d2"), round_digits).alias("est_d2"))
-    )
-
-
-def ivfpq_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int,
-    n_centroids: int,
-    n_probe: int,
-    m_subspaces: int = 4,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "query_vec",
-    round_digits: int = 6,
-    codes: DataFrame | None = None,
-    codebook: DataFrame | None = None,
-    assign: DataFrame | None = None,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVFADC (Jégou, Douze, Schmid 2011 §IV): the composition of the
-    IVF coarse quantizer and PQ residual-free ADC scoring — the
-    canonical billion-scale ANN layout. The query probes its
-    ``n_probe`` nearest coarse lists (cosine, the engine's coarse
-    metric), then ADC-scores ONLY the codes of vectors assigned to
-    those lists: per-query cost is O(n_probe/n_centroids · N) table
-    lookups over ~M bytes/vector — no embedding is ever read at query
-    time, and the scan that is read is both list-pruned (IVF) and
-    ~64× narrower (PQ).
-
-    Pass ``codes``/``codebook`` from :func:`read_ivfpq_index`, a
-    persisted cid-carrying ``assign`` frame (e.g. ann.read_ivf_index
-    output), and the ``centroids`` frame [cid, cvec] that BUILT that
-    assignment to run fully against persisted artifacts; anything
-    omitted is computed on the fly from ``vectors`` with the
-    deterministic seeded initializers, keeping the whole operator
-    SQL-replayable. Supplying ``assign`` without its ``centroids``
-    would probe Lloyd-refined lists with seeded coarse coordinates —
-    a silent recall degradation (ADVICE r4) — so the coarse quantizer
-    travels with its assignment, and when both are supplied
-    ``vectors`` is never scanned at query time.
-
-    Reference parity: this supersedes the reference's whole-index scan
-    (vector-db.c:165-170) twice over — IVF prunes the rows, PQ shrinks
-    the bytes; output [id_col, est_d2] matches pq_adc_scores' shape
-    with the same (est_d2, id) deterministic ordering.
-    """
-    cent = (
-        centroids
-        if centroids is not None
-        else seed_centroids(vectors, n_centroids, id_col, vec_col)
-    )
-    if assign is None:
-        assign = assign_centroids(vectors, cent, id_col, vec_col, round_digits)
-    if codebook is None:
-        codebook = build_pq_codebook(vectors, m_subspaces, k_codes, id_col, vec_col)
-    if codes is None:
-        codes = pq_encode(vectors, codebook, m_subspaces, id_col, vec_col, round_digits)
-    probed = _probe_lists(
-        cent, query, n_probe, query_col, round_digits=round_digits
-    ).select("cid")
-    cand = (
-        codes.join(assign.select(id_col, "cid"), id_col)
-        .join(F.broadcast(probed), "cid", "semi")
-    )
-    return (
-        pq_adc_scores(cand, codebook, query, m_subspaces, id_col, query_col, round_digits)
-        .orderBy(F.col("est_d2").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def ivfpq_residual_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int,
-    n_centroids: int,
-    n_probe: int,
-    m_subspaces: int = 4,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "query_vec",
-    round_digits: int = 6,
-) -> DataFrame:
-    """IVFADC with RESIDUAL encoding — the full Jégou §IV formulation
-    (:func:`ivfpq_topk` encodes raw vectors; production IVFADC encodes
-    ``x − centroid(x)``): residuals concentrate near the origin, so a
-    K-codeword budget spends its resolution on the within-list
-    displacement instead of re-describing the coarse structure the
-    centroid already captured — better distance estimates from the
-    same ~M bytes/vector.
-
-    Since r15 the estimate is DECOMPOSED exactly like the batch form
-    (:func:`knn_join_ivfpq` ``residual=True`` — VERDICT r14 #1; the
-    two forms must stay bit-identical per query, pinned in
-    tests/test_pq.py): per subspace ``||(q−c) − r||² = ||q−c||² −
-    2·q_m·r + (2·c_m·r + r·r)``, so the query side is a broadcast
-    M·K table of ``2·q_m·r`` plus the probe's per-cid ``||q−c||²``
-    scalar, and the query-independent ``(2·c_m·r + r·r)`` terms come
-    from :func:`residual_adc_terms` over the probed centroids.
-
-    Fully deterministic (seeded centroids, lowest-NONZERO-id residual
-    seeds — see :func:`residual_codebook` for why plain lowest-id
-    seeding degenerates — rounded argmins) — the entire pipeline,
-    residuals included, is SQL-oracle-replayable. Scale shape identical to ivfpq_topk:
-    candidates are the probed lists' narrow code rows; embeddings are
-    touched only at one-time build.
-    """
-    cent = seed_centroids(vectors, n_centroids, id_col, vec_col)
-    assign = assign_centroids(vectors, cent, id_col, vec_col, round_digits)
-    v = vectors.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("_v")
-    )
-    resid = (
-        v.join(assign, id_col)
-        .join(cent.select("cid", F.col("cvec").cast("array<double>").alias("_c")), "cid")
-        .select(
-            id_col,
-            "cid",
-            F.zip_with("_v", "_c", lambda x, c: x - c).alias("_r"),
-        )
-    )
-    # nonzero-residual seeding (residual_codebook): the lowest-id rows
-    # are the coarse-centroid seeds with identically-zero residuals —
-    # the plain lowest-id rule wastes (or with k_codes <= C, zeroes)
-    # the book (r13)
-    codebook = residual_codebook(resid, m_subspaces, k_codes, id_col, "_r")
-    codes = pq_encode(resid, codebook, m_subspaces, id_col, "_r", round_digits).join(
-        assign, id_col
-    )
-
-    probed = _probe_lists(
-        cent, query, n_probe, query_col, round_digits=round_digits
-    ).select(
-        "cid",
-        F.round(
-            l2_sq(
-                F.col(query_col).cast("array<double>"),
-                F.col("cvec").cast("array<double>"),
-            ),
-            round_digits,
-        ).alias("_qc2"),
-    )
-    terms = residual_adc_terms(
-        codebook, cent.join(probed.select("cid"), "cid", "semi"), round_digits
-    )
-    ds = _d_sub(F.col(query_col).cast("array<double>"), m_subspaces)
-    lut = (
-        codebook.crossJoin(F.broadcast(query))
-        .select(
-            "m",
-            "code",
-            F.round(
-                F.lit(2.0)
-                * dot(
-                    F.slice(
-                        F.col(query_col).cast("array<double>"),
-                        F.col("m") * ds + 1,
-                        ds,
-                    ),
-                    F.col("cvec").cast("array<double>"),
-                ),
-                round_digits,
-            ).alias("_l2x"),
-        )
-    )
-    return (
-        codes.join(F.broadcast(probed), "cid")
-        .join(F.broadcast(terms), ["cid", "m", "code"])
-        .join(F.broadcast(lut), ["m", "code"])
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.min("_qc2") + F.sum(F.col("t2") - F.col("_l2x")),
-                round_digits,
-            ).alias("est_d2")
-        )
-        .orderBy(F.col("est_d2").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def residual_adc_terms(
     codebook: DataFrame,
     centroids: DataFrame,
@@ -537,11 +314,10 @@ def residual_adc_terms(
     a query. r14 shipped the undecomposed form: a per-(query,
     probed-list) LUT of Q·n_probe·M·K rows whose AQE shuffle join
     doubled knn_join_ivfpq's per-query CPU the round residual became
-    the build default (VERDICT r14 "What's wrong #1"). Precomputed and
-    persisted by :func:`build_ivfpq_index` (the ``resid_terms``
-    artifact child); computed on the fly from (codebook × probed
-    centroids) when an artifact is absent — either way the values are
-    the same rounded deterministic arithmetic, so the SQL oracle
+    the build default (VERDICT r14 "What's wrong #1"). Computed once
+    and persisted by :func:`build_ivfpq_index` (the ``resid_terms``
+    artifact child, part of every residual build's identity); the
+    values are rounded deterministic arithmetic, so the SQL oracle
     replays them verbatim."""
     dsub = F.size(F.col("_r"))  # codewords live in the d/M sub-space
     return (
@@ -583,12 +359,12 @@ def knn_join_ivfpq(
     query_vec: str = "query_vec",
     id_col: str = "vec_id",
     round_digits: int = 6,
-    residual: bool = False,
     resid_terms: DataFrame | None = None,
     validate_geometry: bool = True,
 ) -> DataFrame:
-    """Batch IVFADC kNN JOIN — :func:`ivfpq_topk` generalized from one
-    query to a query TABLE, and the answer to what the r11 routed
+    """Batch IVFADC kNN JOIN (Jégou, Douze, Schmid 2011 §IV) — the one
+    IVFADC search operator, for a query TABLE of any size (a single
+    query is a one-row table), and the answer to what the r11 routed
     measurement proved about the flat paths (SCALING.md): at Q·N
     scale, a flat (unpruned) ADC shuffle and knn_join_lsh's collision
     verify are both Θ(Q·N) with constants 27-57× worse than plain
@@ -599,21 +375,35 @@ def knn_join_ivfpq(
 
     Plan: (1) per-query probe — queries × broadcast centroids, one
     window top-``n_probe`` per query (the IVF family's one probe
-    ranking, C·Q tiny rows); (2) candidates
-    — the codes scan joins the cid assignment once, then the
-    broadcast (query, cid) probe list — this inner join IS the
-    pruning, fanning each code row out only to the queries that probe
-    its list; (3) the per-query LUT (Q·M·K rows, broadcast) scores candidates by (query, m, code), and
-    the partial-agg groupBy sums M lookups per (query, id). Same
+    ranking, C·Q tiny rows); (2) candidates — the codes scan joins the
+    cid assignment once, then the broadcast (query, cid) probe list —
+    this inner join IS the pruning, fanning each code row out only to
+    the queries that probe its list; (3) the per-query LUT (Q·M·K
+    rows, broadcast) scores candidates by (query, m, code), and the
+    partial-agg groupBy sums M lookups per (query, id). Same
     deterministic (est_d2, id) contract and [query_id, id, est_d2,
     rank] shape as every other E7 strategy.
 
-    Pass ``codes``/``codebook`` from :func:`read_ivfpq_index` and ``assign``/``centroids`` from the
-    persisted artifact (the coarse quantizer travels with its
-    assignment — the ivfpq_topk ADVICE r4 rule); everything
-    downstream of the artifacts is SQL-oracle-replayable. ``n_probe``
-    = C probes every list: over a raw artifact that is flat ADC, every
-    code row scored.
+    Pass the four frames of :func:`read_ivfpq_index`: the coarse
+    quantizer travels with its assignment (probing Lloyd-refined lists
+    with seeded coordinates would silently lose recall), and
+    everything downstream of the artifact is SQL-oracle-replayable.
+    ``n_probe`` = C probes every list: over a raw artifact that is
+    flat ADC, every code row scored.
+
+    The scoring form follows from the inputs. Without ``resid_terms``
+    the codes are raw-vector codes and the LUT holds ``||q_m − r||²``.
+    With ``resid_terms`` (:func:`read_ivfpq_terms` of a residual
+    artifact) the codes describe ``x − centroid(x)`` and the estimate
+    is DECOMPOSED (r15): per subspace ``||(q−c) − r||² = ||q−c||² −
+    2·q_m·r + (2·c_m·r + r·r)``, so the query side builds only the
+    broadcastable ``2·q_m·r`` table (Q·M·K, the raw LUT's shape) plus
+    the per-(query, cid) scalar ``||q−c||²`` the probe rows already
+    hold, and the query-independent terms come from the artifact.
+    Scoring residual codes with the raw LUT (or the reverse) returns
+    silently wrong distances, which is why the terms are part of the
+    residual artifact's identity and the caller passes what the
+    artifact carries.
 
     The codebook's subspace set is validated against ``m_subspaces``
     up front (one tiny agg on the broadcast-sized M·K frame): scoring
@@ -621,26 +411,7 @@ def knn_join_ivfpq(
     wrong-width query sub-vectors and the zip_with pads with NULLs —
     it silently returns garbage distances (r12: this exact mistake
     produced a 0.10-recall measurement that looked like an honest
-    number).
-
-    ``residual=True`` (r13) scores RESIDUAL-encoded codes (a
-    ``build_ivfpq_index(residual=True)`` artifact — passing the wrong
-    flag for the artifact is the same silent-garbage class as the
-    geometry mismatch, which is why knn_join_auto reads it from the
-    meta). Since r15 the residual estimate is DECOMPOSED (VERDICT r14
-    #1 — the r13/r14 spelling built a per-(query, probed-list) LUT of
-    Q·n_probe·M·K rows whose shuffle join doubled per-query CPU the
-    round residual became the build default): per subspace,
-    ``||(q−c) − r||² = ||q−c||² − 2·q_m·r + (2·c_m·r + r·r)``, so the
-    query side builds only the broadcastable ``L[q, m, code] =
-    2·q_m·r`` table (Q·M·K — the raw path's LUT shape) plus the
-    per-(query, cid) scalar ``||q−c||²`` the probe rows already hold,
-    and the query-independent ``T[cid, m, code]`` table
-    (:func:`residual_adc_terms`) comes from the persisted artifact
-    (``resid_terms``) or is derived from the probed centroids ×
-    codebook on the fly. Candidates and every other stage are
-    unchanged — still Q·n_probe·(N/C)·M narrow code rows, still no
-    embedding read at query time."""
+    number)."""
     from pyspark.sql import Window
 
     if validate_geometry:
@@ -666,102 +437,39 @@ def knn_join_ivfpq(
     probed = _probe_lists(
         centroids, q, n_probe, query_vec, query_id, round_digits
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("est_d2").asc(), F.col(id_col).asc()
-    )
-    if residual:
-        # decomposed residual ADC (r15, VERDICT r14 #1): the probe
-        # rows carry the per-(query, cid) scalar ||q − c||²; L is the
-        # broadcastable 2·q_m·r table (Q·M·K — the raw path's shape);
-        # T is query-independent (residual_adc_terms — from the
-        # persisted artifact, else probed-centroids × codebook).
+    qv = F.col(query_vec).cast("array<double>")
+    ds = _d_sub(qv, m_subspaces)
+    q_sub = F.slice(qv, F.col("m") * ds + 1, ds)
+    if resid_terms is None:
+        probed = probed.select(query_id, "cid")
+        lut = l2_sq(F.col("cvec"), q_sub)
+        est = F.sum("_l")
+    else:
         probed = probed.select(
             query_id,
             "cid",
             F.round(
-                l2_sq(
-                    F.col(query_vec).cast("array<double>"),
-                    F.col("cvec").cast("array<double>"),
-                ),
-                round_digits,
+                l2_sq(qv, F.col("cvec").cast("array<double>")), round_digits
             ).alias("_qc2"),
         )
-        if resid_terms is None:
-            resid_terms = residual_adc_terms(
-                codebook,
-                centroids.join(
-                    probed.select("cid").distinct(), "cid", "semi"
-                ),
-                round_digits,
-            )
-        ds = _d_sub(F.col(query_vec).cast("array<double>"), m_subspaces)
-        lut = (
-            codebook.crossJoin(F.broadcast(q))
-            .select(
-                query_id,
-                "m",
-                "code",
-                F.round(
-                    F.lit(2.0)
-                    * dot(
-                        F.slice(
-                            F.col(query_vec).cast("array<double>"),
-                            F.col("m") * ds + 1,
-                            ds,
-                        ),
-                        F.col("cvec").cast("array<double>"),
-                    ),
-                    round_digits,
-                ).alias("_l2x"),
-            )
-        )
-        cand = (
-            codes.join(assign.select(id_col, "cid"), id_col)
-            .join(F.broadcast(probed), "cid")
-        )
-        return (
-            cand.join(resid_terms, ["cid", "m", "code"])
-            .join(F.broadcast(lut), [query_id, "m", "code"])
-            .groupBy(query_id, id_col)
-            .agg(
-                F.round(
-                    F.min("_qc2") + F.sum(F.col("t2") - F.col("_l2x")),
-                    round_digits,
-                ).alias("est_d2")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_id, id_col, "est_d2", "rank")
-        )
-    ds = _d_sub(F.col(query_vec).cast("array<double>"), m_subspaces)
-    lut = (
-        codebook.crossJoin(F.broadcast(q))
-        .select(
-            query_id,
-            "m",
-            "code",
-            F.round(
-                l2_sq(
-                    F.col("cvec"),
-                    F.slice(
-                        F.col(query_vec).cast("array<double>"),
-                        F.col("m") * ds + 1,
-                        ds,
-                    ),
-                ),
-                round_digits,
-            ).alias("d2"),
-        )
+        lut = F.lit(2.0) * dot(q_sub, F.col("cvec").cast("array<double>"))
+        est = F.min("_qc2") + F.sum(F.col("t2") - F.col("_l"))
+    lut = codebook.crossJoin(F.broadcast(q)).select(
+        query_id, "m", "code", F.round(lut, round_digits).alias("_l")
     )
-    probed = probed.select(query_id, "cid")
     cand = (
         codes.join(assign.select(id_col, "cid"), id_col)
         .join(F.broadcast(probed), "cid")
     )
+    if resid_terms is not None:
+        cand = cand.join(resid_terms, ["cid", "m", "code"])
+    w = Window.partitionBy(query_id).orderBy(
+        F.col("est_d2").asc(), F.col(id_col).asc()
+    )
     return (
         cand.join(F.broadcast(lut), [query_id, "m", "code"])
         .groupBy(query_id, id_col)
-        .agg(F.round(F.sum("d2"), round_digits).alias("est_d2"))
+        .agg(F.round(est, round_digits).alias("est_d2"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(query_id, id_col, "est_d2", "rank")
@@ -973,8 +681,7 @@ def build_ivfpq_index(
 
     ``residual=True`` — the DEFAULT since r14 (VERDICT r13 #1) —
     trains the PQ codebook on, and encodes, ``x − centroid(x)``
-    instead of raw vectors: the full Jégou §IV formulation
-    (:func:`ivfpq_residual_topk` is the single-query form). The r13
+    instead of raw vectors: the full Jégou §IV formulation. The r13
     clustered-corpus measurement is WHY it is the default: with
     per-cluster spread small against the coarse quantizer's cell
     size, the raw-code ADC order within a query's home list is noise
@@ -985,11 +692,13 @@ def build_ivfpq_index(
     exactly the within-list displacement the coarse structure can't.
     ``residual=False`` is the explicit opt-out (raw-vector codes —
     only right when the corpus has no cluster structure to subtract,
-    e.g. the sign-flip adversarial bound). The flag is recorded in
-    the meta so :func:`~cli_rag_spark.operators.knn.knn_join_auto`
-    routes the matching (per-list-LUT) scoring form automatically;
-    query-side cost grows only in the LUT (Q·n_probe·M·K rows instead
-    of Q·M·K — see knn_join_ivfpq). Build-side price tag: SCALING.md
+    e.g. the sign-flip adversarial bound). A residual build also
+    persists the ``resid_terms`` child, and passing it
+    (:func:`read_ivfpq_terms`) is what makes :func:`knn_join_ivfpq`
+    score residual codes, so
+    :func:`~cli_rag_spark.operators.knn.knn_join_auto` scores each
+    artifact in its own form. The query-side LUT stays Q·M·K rows in
+    both forms (the r15 decomposition). Build-side price tag: SCALING.md
     r14 books the residual-vs-raw build walls at 2M (the residual
     lineage adds one narrow assign join + zip_with before the
     encoder).
@@ -1053,8 +762,8 @@ def build_ivfpq_index(
         "n_rows": n_rows,
         "content_fp": content_fp,
         "residual": residual,
-        # a residual artifact carries the decomposed-terms child, so
-        # consumers never fall back to deriving the terms on the fly
+        # a residual artifact carries the decomposed-terms child: its
+        # presence selects knn_join_ivfpq's residual scoring form
         "resid_terms": residual,
     }
 
@@ -1210,8 +919,8 @@ def read_ivfpq_terms(spark: SparkSession, path: str) -> DataFrame | None:
     """The persisted :func:`residual_adc_terms` child of a residual
     :func:`build_ivfpq_index` artifact — ``[cid, m, code, t2]`` — or
     ``None`` for a raw-encoded build (the meta records
-    ``resid_terms``; callers fall back to deriving the terms on the
-    fly, same values by construction)."""
+    ``resid_terms``). Passed to :func:`knn_join_ivfpq` as is, it picks
+    the scoring form that matches the artifact's codes."""
     meta = read_json_sidecar(spark, path, _IVFPQ_META_NAME)
     if meta is None or not meta.get("resid_terms"):
         return None

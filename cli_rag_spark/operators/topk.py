@@ -94,7 +94,7 @@ def matryoshka_topk(
     an MRL deployment stores the prefix as its own column/index — then
     the coarse scan is genuinely d_c/d cheaper, the point of MRL), and
     both stages are TakeOrderedAndProject: bounded heaps, no shuffle,
-    no full sort. The funnel mirrors ivf_topk's probe-then-score but
+    no full sort. The funnel mirrors knn_join_ivf's probe-then-score but
     trades a trained prefix for trained centroids — no index build at
     all.
 
@@ -152,7 +152,7 @@ def maxsim_topk(
     |parts|·|qparts| sims down to |docs| rows on the first shuffle
     key (id, qpart). Top-k is TakeOrderedAndProject. At 100 TB this
     is exactly the late-interaction scoring pass ColBERT runs AFTER
-    an ANN candidate stage — compose with ivf_topk/knn_join to
+    an ANN candidate stage — compose with knn_join_ivf/knn_join to
     pre-select candidates and this operator reranks them.
     """
     if k <= 0:

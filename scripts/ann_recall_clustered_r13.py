@@ -220,6 +220,7 @@ def stage_residual(spark, args) -> None:
         ivfpq_index_ready,
         knn_join_ivfpq,
         read_ivfpq_index,
+        read_ivfpq_terms,
     )
 
     n, dim, nq, k = args.n or 2_000_000, 64, args.nq, args.k
@@ -257,10 +258,11 @@ def stage_residual(spark, args) -> None:
     n_probe = default_n_probe(c)
     r_ladder = [k] + args.r_ladder
     t0 = time.perf_counter()
+    terms = read_ivfpq_terms(spark, path)
     deep = knn_join_ivfpq(
         queries, codes, cb, assign, cent, k=max(r_ladder),
         n_probe=n_probe, m_subspaces=int(meta["m_subspaces"]),
-        residual=True,
+        resid_terms=terms,
     ).localCheckpoint(eager=True)
     deep_sec = round(time.perf_counter() - t0, 2)
     raw = deep.where(F.col("rank") <= k)
@@ -280,7 +282,7 @@ def stage_residual(spark, args) -> None:
     r_depth = default_rerank_depth(k, n_index, c)
     short = knn_join_ivfpq(
         queries, codes, cb, assign, cent, k=r_depth, n_probe=n_probe,
-        m_subspaces=int(meta["m_subspaces"]), residual=True,
+        m_subspaces=int(meta["m_subspaces"]), resid_terms=terms,
     )
     out = rerank_exact(short, queries, emb, k=k).localCheckpoint(eager=True)
     print(json.dumps({
@@ -314,6 +316,7 @@ def stage_dim192(spark, args) -> None:
         ivfpq_index_ready,
         knn_join_ivfpq,
         read_ivfpq_index,
+        read_ivfpq_terms,
     )
 
     n, dim, nq, k = args.n or 2_000_000, args.dim or 192, args.nq, args.k
@@ -360,7 +363,7 @@ def stage_dim192(spark, args) -> None:
     short = knn_join_ivfpq(
         queries, codes2, cb2, assign2, cent2, k=r_depth,
         n_probe=default_n_probe(c), m_subspaces=int(meta["m_subspaces"]),
-        residual=bool(meta.get("residual")),
+        resid_terms=read_ivfpq_terms(spark, ivfpq_path),
     )
     out = rerank_exact(short, queries, emb, k=k).localCheckpoint(eager=True)
     print(json.dumps({

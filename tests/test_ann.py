@@ -11,11 +11,29 @@ from pyspark.sql import functions as F
 from cli_rag_spark.operators.ann import (
     assign_centroids,
     build_ivf_index,
-    ivf_topk,
     kmeans_refine,
+    knn_join_ivf,
     seed_centroids,
 )
 from cli_rag_spark.sources.documents import load_table
+
+
+def _drop_ivf_sidecar_key(path, key):
+    """Rewrite the IVF sidecar at ``path`` without ``key`` (an older
+    build's format), dropping the local-FS checksum the rewrite
+    invalidates."""
+    import json as _json
+    import os
+
+    meta_file = os.path.join(path, "_ivf_meta.json")
+    with open(meta_file) as f:
+        meta = _json.load(f)
+    del meta[key]
+    with open(meta_file, "w") as f:
+        _json.dump(meta, f)
+    crc = os.path.join(path, "._ivf_meta.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
 
 
 def test_kmeans_refine_produces_valid_centroids(spark, sf_dir):
@@ -89,18 +107,21 @@ def test_append_ivf_index_follows_sorted_layout(spark, sf_dir, tmp_path):
 
 def test_ivf_recall_vs_exact(spark, sf_dir):
     """Probing all lists == exact top-k; fewer lists is a subset-style
-    approximation that still returns k rows."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    exact = ivf_topk(emb, q, k=5, n_centroids=4, n_probe=4)
+    approximation that still returns k rows. One query is a one-row
+    query table of the batch join."""
     from cli_rag_spark.operators.topk import topk
 
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") == 0).select(
+        F.lit(0).alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    exact = knn_join_ivf(q, emb, k=5, n_centroids=4, n_probe=4)
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]]
     brute = topk(emb.select("vec_id", "embedding"), qvec, 5)
-    assert sorted(map(tuple, exact.collect())) == sorted(
+    assert sorted(map(tuple, exact.select("vec_id", "dist").collect())) == sorted(
         map(tuple, brute.select("vec_id", "dist").collect())
     )
-    approx = ivf_topk(emb, q, k=5, n_centroids=4, n_probe=1)
+    approx = knn_join_ivf(q, emb, k=5, n_centroids=4, n_probe=1)
     assert approx.count() == 5
 
 
@@ -172,6 +193,35 @@ def test_read_ivf_index_validates_build_metadata(spark, sf_dir, tmp_path):
         read_ivf_index(spark, bare)
 
 
+def test_read_ivf_index_opens_with_recorded_schema(spark, sf_dir, tmp_path):
+    """The build records the rows' schema in the sidecar, so opening
+    the index runs no schema-inference job, and the recorded schema is
+    the one inference would find. A sidecar without it is not ready
+    for dispatch and is refused."""
+    import uuid
+
+    import pytest
+
+    from cli_rag_spark.operators.ann import ivf_index_ready, read_ivf_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf_schema")
+    build_ivf_index(emb, path, n_centroids=8)
+    sc = spark.sparkContext
+    group = f"ivf_read_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_ivf_index")
+    try:
+        index = read_ivf_index(spark, path, n_centroids=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert index.schema == spark.read.parquet(path).schema
+    _drop_ivf_sidecar_key(path, "schema")
+    assert not ivf_index_ready(spark, path, 8, 64)
+    with pytest.raises(ValueError, match="rebuild"):
+        read_ivf_index(spark, path)
+
+
 def test_ivf_index_ready_reads_sidecar_only(spark, sf_dir, tmp_path):
     """The dispatch gate runs on every knn_join_auto call with an
     ivf_path, so it must answer from the sidecar alone: zero Spark
@@ -201,16 +251,9 @@ def test_ivf_index_ready_reads_sidecar_only(spark, sf_dir, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert verdicts == [True, False, False, False]
 
-    meta_file = os.path.join(path, "_ivf_meta.json")
-    with open(meta_file) as f:
-        meta = _json.load(f)
-    assert meta["dim"] == 64
-    del meta["dim"]
-    with open(meta_file, "w") as f:
-        _json.dump(meta, f)
-    crc = os.path.join(path, "._ivf_meta.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    with open(os.path.join(path, "_ivf_meta.json")) as f:
+        assert _json.load(f)["dim"] == 64
+    _drop_ivf_sidecar_key(path, "dim")
     assert not ivf_index_ready(spark, path, 8, 64)
 
 
@@ -299,6 +342,22 @@ def test_append_ivf_index_requires_index(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="not a build_ivf_index output"):
         append_ivf_index(spark, str(tmp_path / "nothing"), emb)
+
+
+def test_append_ivf_index_refuses_sidecar_without_dim(spark, sf_dir, tmp_path):
+    """The append sizes its files from the sidecar's dim, so a sidecar
+    without it (an older build) is refused with a rebuild hint instead
+    of a job on the index's _centroids."""
+    import pytest
+
+    from cli_rag_spark.operators.ann import append_ivf_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf_no_dim")
+    build_ivf_index(emb.where(F.col("vec_id") < 300), path, n_centroids=8)
+    _drop_ivf_sidecar_key(path, "dim")
+    with pytest.raises(ValueError, match="rebuild"):
+        append_ivf_index(spark, path, emb.where(F.col("vec_id") >= 300))
 
 
 def test_refined_build_persists_quantizer_sidecar(spark, sf_dir, tmp_path):

@@ -1091,16 +1091,17 @@ def test_default_lsh_geometry_rule():
 
 def test_knn_join_auto_routes_residual_ivfpq(spark, sf_dir, tmp_path):
     """A DEFAULT build_ivfpq_index artifact (residual-encoded since
-    r14) dispatches with residual=True read from the meta (a raw-LUT
-    scoring of residual codes would be silent garbage) and RERANKS by
-    default — equal to the hand-composed residual probe + exact
-    rerank."""
+    r14) dispatches with the artifact's persisted resid_terms, so its
+    codes are scored in residual form (a raw-LUT scoring of residual
+    codes would be silent garbage), and RERANKS by default — equal to
+    the hand-composed residual probe + exact rerank."""
     from cli_rag_spark.operators.knn import knn_join_auto, rerank_exact
     from cli_rag_spark.operators.pq import (
         build_ivfpq_index,
         default_rerank_depth,
         knn_join_ivfpq,
         read_ivfpq_index,
+        read_ivfpq_terms,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").where(
@@ -1113,10 +1114,11 @@ def test_knn_join_auto_routes_residual_ivfpq(spark, sf_dir, tmp_path):
     big = dict(n_queries=10_000, n_index=2_000_000)
     auto = knn_join_auto(q, emb, k=3, dim=64, ivfpq_path=path, **big)
     codes, cb, assign, cent = read_ivfpq_index(spark, path)
+    terms = read_ivfpq_terms(spark, path)
     short = knn_join_ivfpq(
         q, codes, cb, assign, cent,
         k=default_rerank_depth(3, big["n_index"], 8), n_probe=2,
-        residual=True,
+        resid_terms=terms,
     )
     direct = rerank_exact(short, q, emb, k=3)
     assert {tuple(r) for r in auto.collect()} == {
@@ -1127,7 +1129,7 @@ def test_knn_join_auto_routes_residual_ivfpq(spark, sf_dir, tmp_path):
         q, emb, k=3, dim=64, ivfpq_path=path, ivfpq_rerank=0, **big
     )
     direct_raw = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=3, n_probe=2, residual=True
+        q, codes, cb, assign, cent, k=3, n_probe=2, resid_terms=terms
     ).withColumnRenamed("est_d2", "dist")
     assert {tuple(r) for r in auto_raw.collect()} == {
         tuple(r) for r in direct_raw.collect()

@@ -5,11 +5,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
 from cli_rag_spark.operators.pq import (
+    build_ivfpq_index,
     build_pq_codebook,
+    knn_join_ivfpq,
     l2_sq,
-    pq_adc_scores,
     pq_encode,
+    read_ivfpq_index,
 )
 from cli_rag_spark.sources.artifacts import read_json_sidecar
 from cli_rag_spark.sources.documents import load_table
@@ -19,6 +22,49 @@ M, KC = 4, 16
 
 def _ivfpq_meta(spark, path):
     return read_json_sidecar(spark, path, "_ivfpq_meta.json")
+
+
+def _queries(emb, qids):
+    return emb.where(F.col("vec_id").isin(list(qids))).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
+def _seeded_frames(emb, n_centroids=8):
+    """(codes, codebook, assign, centroids) of the seeded raw IVFPQ
+    geometry, computed live from ``emb``."""
+    cb = build_pq_codebook(emb, M, KC)
+    cent = seed_centroids(emb, n_centroids)
+    return pq_encode(emb, cb, M), cb, assign_centroids(emb, cent), cent
+
+
+def _exact_l2_top(emb, qid, k):
+    """The ``k`` ids nearest to vector ``qid`` by exact squared L2."""
+    q = emb.where(F.col("vec_id") == qid).select(
+        F.col("embedding").alias("query_vec")
+    )
+    return [
+        r.vec_id
+        for r in emb.crossJoin(F.broadcast(q))
+        .select(
+            "vec_id",
+            l2_sq(
+                F.col("embedding").cast("array<double>"),
+                F.col("query_vec").cast("array<double>"),
+            ).alias("d2"),
+        )
+        .orderBy("d2", "vec_id")
+        .limit(k)
+        .collect()
+    ]
+
+
+def _adc_tops(hits):
+    """{query_id: [vec_id, ...] in rank order} of a knn_join_ivfpq result."""
+    tops: dict[int, list] = {}
+    for r in hits.orderBy("query_id", "rank").collect():
+        tops.setdefault(r.query_id, []).append(r.vec_id)
+    return tops
 
 
 def test_codebook_shape(spark, sf_dir):
@@ -54,34 +100,16 @@ def test_adc_estimate_tracks_exact_distance(spark, sf_dir):
     """ADC is approximate — assert the rank correlation that makes it
     usable: the true nearest neighbor set is substantially recovered
     (recall@50 ≥ 0.3 with seeded codebooks; measured 0.42 at sf0.01)
-    and the query vector itself lands in the ADC top set."""
+    and the query vector itself lands in the ADC top set. Flat ADC is
+    knn_join_ivfpq probing all C lists."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = build_pq_codebook(emb, M, KC)
-    codes = pq_encode(emb, cb, M)
-    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    adc_top = [
-        r.vec_id
-        for r in pq_adc_scores(codes, cb, q, M)
-        .orderBy("est_d2", "vec_id")
-        .limit(50)
-        .collect()
-    ]
-    exact_top = [
-        r.vec_id
-        for r in emb.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            l2_sq(
-                F.col("embedding").cast("array<double>"),
-                F.col("query_vec").cast("array<double>"),
-            ).alias("d2"),
-        )
-        .orderBy("d2", "vec_id")
-        .limit(50)
-        .collect()
-    ]
+    codes, cb, assign, cent = _seeded_frames(emb)
+    adc_top = _adc_tops(
+        knn_join_ivfpq(_queries(emb, [0]), codes, cb, assign, cent, k=50,
+                       n_probe=8, m_subspaces=M)
+    )[0]
     assert 0 in adc_top
-    assert len(set(adc_top) & set(exact_top)) >= 15
+    assert len(set(adc_top) & set(_exact_l2_top(emb, 0, 50))) >= 15
 
 
 def test_encode_deterministic_across_partitionings(spark, sf_dir):
@@ -131,58 +159,44 @@ def test_persisted_index_round_trip_and_validation(spark, sf_dir, tmp_path):
         read_ivfpq_index(spark, str(tmp_path / "nowhere"))
 
 
-def _mean_recall_at_50(emb, cb, codes, qids=range(5)):
-    """Mean recall@50 vs exact L2 over several query vectors — a
-    single query's recall is too noisy to compare codebooks on."""
-    total = 0.0
-    for qid in qids:
-        q = emb.where(F.col("vec_id") == qid).select(
-            F.col("embedding").alias("query_vec")
+def _mean_recall_at_50(spark, emb, path, n_probe, qids=range(5)):
+    """Mean recall@50 vs exact L2 of the IVFPQ artifact at ``path``
+    over several query vectors — a single query's recall is too noisy
+    to compare codebooks on. A residual artifact is scored with its
+    persisted terms."""
+    from cli_rag_spark.operators.pq import read_ivfpq_terms
+
+    codes, cb, assign, cent = read_ivfpq_index(spark, path)
+    tops = _adc_tops(
+        knn_join_ivfpq(
+            _queries(emb, qids), codes, cb, assign, cent, k=50,
+            n_probe=n_probe, m_subspaces=M,
+            resid_terms=read_ivfpq_terms(spark, path),
         )
-        adc_top = [
-            r.vec_id
-            for r in pq_adc_scores(codes, cb, q, M)
-            .orderBy("est_d2", "vec_id").limit(50).collect()
-        ]
-        exact_top = [
-            r.vec_id
-            for r in emb.crossJoin(F.broadcast(q))
-            .select(
-                "vec_id",
-                l2_sq(
-                    F.col("embedding").cast("array<double>"),
-                    F.col("query_vec").cast("array<double>"),
-                ).alias("d2"),
-            )
-            .orderBy("d2", "vec_id").limit(50).collect()
-        ]
-        total += len(set(adc_top) & set(exact_top)) / 50.0
-    return total / len(list(qids))
+    )
+    return sum(
+        len(set(tops[qid]) & set(_exact_l2_top(emb, qid, 50))) / 50.0
+        for qid in qids
+    ) / len(list(qids))
 
 
 def test_refined_codebook_recall_at_least_seeded(spark, sf_dir, tmp_path):
     """Lloyd-refining the per-subspace codebooks (L2 metric, the one
     the encoder uses) must not lose recall vs the seeded codebook —
     the VERDICT r3 acceptance bar for the refine path. Measured at
-    sf0.01 (mean recall@50, query ids 0–4): seeded 0.384,
-    refined(1 iter) 0.436, refined(2) 0.408. The refined book is
-    persisted through a raw IVFPQ build, whose codes are the flat ADC
-    index."""
-    from cli_rag_spark.operators.pq import build_ivfpq_index, read_ivfpq_index
-
+    sf0.01 (mean recall@50, query ids 0–4, flat ADC over raw IVFPQ
+    artifacts): seeded 0.384, refined(1 iter) 0.436, refined(2)
+    0.408."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seeded_cb = build_pq_codebook(emb, M, KC)
-    seeded_codes = pq_encode(emb, seeded_cb, M).cache()
-    seeded = _mean_recall_at_50(emb, seeded_cb, seeded_codes)
-
-    path = str(tmp_path / "pq_refined")
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
-        refine_iters=1, residual=False,
-    )
-    codes, cb, _, _ = read_ivfpq_index(spark, path, m_subspaces=M, k_codes=KC)
-    refined = _mean_recall_at_50(emb, cb, codes.cache())
-    assert refined >= seeded, (refined, seeded)
+    recall = {}
+    for iters in (0, 1):
+        path = str(tmp_path / f"pq_refine{iters}")
+        build_ivfpq_index(
+            emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
+            refine_iters=iters, residual=False,
+        )
+        recall[iters] = _mean_recall_at_50(spark, emb, path, n_probe=8)
+    assert recall[1] >= recall[0], recall
 
 
 def test_refined_codebook_deterministic(spark, sf_dir):
@@ -203,41 +217,16 @@ def test_refined_codebook_deterministic(spark, sf_dir):
     assert a == b
 
 
-def test_ivfpq_full_probe_equals_plain_adc(spark, sf_dir):
-    """With n_probe = n_centroids nothing is pruned, so IVFADC must
-    reduce exactly to the plain ADC top-k."""
-    from cli_rag_spark.operators.pq import ivfpq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = build_pq_codebook(emb, M, KC)
-    codes = pq_encode(emb, cb, M).cache()
-    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    full = ivfpq_topk(
-        emb, q, k=10, n_centroids=8, n_probe=8,
-        m_subspaces=M, k_codes=KC, codes=codes, codebook=cb,
-    )
-    plain = (
-        pq_adc_scores(codes, cb, q, M)
-        .orderBy(F.col("est_d2").asc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-    assert [tuple(r) for r in full.collect()] == [tuple(r) for r in plain.collect()]
-
-
 def test_ivfpq_scores_only_probed_lists(spark, sf_dir):
     """Every IVFADC hit must come from a probed coarse list (the
     pruning contract), and the query vector itself must be found
     (vec_id 0 is both a centroid and its own nearest code)."""
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-    from cli_rag_spark.operators.pq import ivfpq_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    hits = ivfpq_topk(
-        emb, q, k=50, n_centroids=8, n_probe=2, m_subspaces=M, k_codes=KC
+    codes, cb, assign, cent = _seeded_frames(emb)
+    hits = knn_join_ivfpq(
+        _queries(emb, [0]), codes, cb, assign, cent, k=50, n_probe=2,
+        m_subspaces=M,
     )
-    cent = seed_centroids(emb, 8)
-    assign = assign_centroids(emb, cent)
     got_cids = {
         r.cid
         for r in hits.join(assign, "vec_id").select("cid").distinct().collect()
@@ -246,110 +235,45 @@ def test_ivfpq_scores_only_probed_lists(spark, sf_dir):
     assert 0 in {r.vec_id for r in hits.collect()}
 
 
-def test_knn_join_ivfpq_full_probe_matches_per_query_adc(spark, sf_dir):
-    """Flat batch ADC is knn_join_ivfpq probing all C lists: it must
-    produce, for each query, exactly the single-query ADC operator's
-    top-k over every code row (same scores, same tie-break)."""
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-    from cli_rag_spark.operators.pq import knn_join_ivfpq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = build_pq_codebook(emb, M, KC)
-    codes = pq_encode(emb, cb, M).cache()
-    cent = seed_centroids(emb, 8)
-    assign = assign_centroids(emb, cent)
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    batch = {
-        (r.query_id, r.rank): (r.vec_id, r.est_d2)
-        for r in knn_join_ivfpq(
-            queries, codes, cb, assign, cent, k=5, n_probe=8, m_subspaces=M
-        ).collect()
-    }
-    for qid in range(3):
-        q = emb.where(F.col("vec_id") == qid).select(
-            F.col("embedding").alias("query_vec")
-        )
-        single = (
-            pq_adc_scores(codes, cb, q, M)
-            .orderBy(F.col("est_d2").asc(), F.col("vec_id").asc())
-            .limit(5)
-            .collect()
-        )
-        for rank, r in enumerate(single, start=1):
-            assert batch[(qid, rank)] == (r.vec_id, r.est_d2), (qid, rank)
-
-
-def test_residual_ivfpq_recall_at_least_raw(spark, sf_dir):
+def test_residual_ivfpq_recall_at_least_raw(spark, sf_dir, tmp_path):
     """Residual encoding must not lose recall vs raw-vector IVFADC —
     the point of Jégou §IV's formulation (codewords resolve within-
     list displacement). Measured at sf0.01, mean recall@50 over query
-    ids 0-4: residual 0.588 vs raw 0.508."""
-    from cli_rag_spark.operators.pq import ivfpq_residual_topk, ivfpq_topk
-
+    ids 0-4 at n_probe 2 of 8: residual 0.532 vs raw 0.508."""
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def mean_recall(fn):
-        total = 0.0
-        for qid in range(5):
-            q = emb.where(F.col("vec_id") == qid).select(
-                F.col("embedding").alias("query_vec")
-            )
-            approx = [
-                r.vec_id
-                for r in fn(emb, q, k=50, n_centroids=8, n_probe=2).collect()
-            ]
-            exact = [
-                r.vec_id
-                for r in emb.crossJoin(F.broadcast(q))
-                .select(
-                    "vec_id",
-                    l2_sq(
-                        F.col("embedding").cast("array<double>"),
-                        F.col("query_vec").cast("array<double>"),
-                    ).alias("d2"),
-                )
-                .orderBy("d2", "vec_id").limit(50).collect()
-            ]
-            total += len(set(approx) & set(exact)) / 50.0
-        return total / 5
-
-    raw = mean_recall(ivfpq_topk)
-    residual = mean_recall(ivfpq_residual_topk)
-    assert residual >= raw, (residual, raw)
+    recall = {}
+    for residual in (False, True):
+        path = str(tmp_path / f"ivfpq_residual_{residual}")
+        build_ivfpq_index(
+            emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
+            residual=residual,
+        )
+        recall[residual] = _mean_recall_at_50(spark, emb, path, n_probe=2)
+    assert recall[True] >= recall[False], recall
 
 
 def test_ivfpq_topk_explicit_centroids(spark, sf_dir):
-    """Passing the coarse quantizer explicitly must (a) reproduce the
-    default seeded result when given the seeded centroids, and (b) be
-    honored as THE probe geometry when given a refined quantizer with
-    its matching assignment — every hit's list id must be probed under
-    those refined centroids (ADVICE r4: a persisted index's actual
-    coarse quantizer travels with its assign frame)."""
-    from cli_rag_spark.operators.ann import assign_centroids, kmeans_refine, seed_centroids
-    from cli_rag_spark.operators.pq import ivfpq_topk
+    """A refined coarse quantizer passed with its matching assignment
+    is honored as THE probe geometry: every hit's list id must be
+    probed under those refined centroids (ADVICE r4: a persisted
+    index's actual coarse quantizer travels with its assign frame)."""
+    from cli_rag_spark.functions.vectors import cosine_distance
+    from cli_rag_spark.operators.ann import kmeans_refine
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    seeded = seed_centroids(emb, 8)
-    default_out = [tuple(r) for r in ivfpq_topk(emb, q, 10, 8, 2).collect()]
-    explicit_out = [
-        tuple(r) for r in ivfpq_topk(emb, q, 10, 8, 2, centroids=seeded).collect()
-    ]
-    assert explicit_out == default_out
-
+    codes, cb, _, seeded = _seeded_frames(emb)
     refined = kmeans_refine(emb, seeded, n_iters=1)
     assign = assign_centroids(emb, refined)
-    out = ivfpq_topk(emb, q, 10, 8, 2, assign=assign, centroids=refined)
+    q = _queries(emb, [0])
+    out = knn_join_ivfpq(
+        q, codes, cb, assign, refined, k=10, n_probe=2, m_subspaces=M
+    )
     hit_cids = {
         r.cid
         for r in assign.join(
             out.select("vec_id"), "vec_id"
         ).select("cid").collect()
     }
-    from cli_rag_spark.functions.vectors import cosine_distance
-
     probed = {
         r.cid
         for r in refined.crossJoin(F.broadcast(q))
@@ -365,51 +289,6 @@ def test_ivfpq_topk_explicit_centroids(spark, sf_dir):
         .collect()
     }
     assert hit_cids and hit_cids <= probed
-
-
-def test_knn_join_ivfpq_matches_per_query_topk(spark, sf_dir):
-    """The batch IVFADC join must reproduce ivfpq_topk run per query —
-    same probe, same LUT, same ADC sums, same (est_d2, id) ranking."""
-    from pyspark.sql import functions as F
-
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-    from cli_rag_spark.operators.pq import (
-        build_pq_codebook,
-        ivfpq_topk,
-        knn_join_ivfpq,
-        pq_encode,
-    )
-    from cli_rag_spark.sources.documents import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    cb = build_pq_codebook(emb, 4, 16)
-    codes = pq_encode(emb, cb, 4)
-    cent = seed_centroids(emb, 8)
-    assign = assign_centroids(emb, cent)
-    q = emb.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    batch = {
-        (r["query_id"], r["vec_id"], r["est_d2"], r["rank"])
-        for r in knn_join_ivfpq(
-            q, codes, cb, assign, cent, k=3, n_probe=2
-        ).collect()
-    }
-    single = set()
-    for qid in range(4):
-        one = emb.where(F.col("vec_id") == qid).select(
-            F.col("embedding").alias("query_vec")
-        )
-        rows = ivfpq_topk(
-            emb, one, k=3, n_centroids=8, n_probe=2,
-            codes=codes, codebook=cb, assign=assign, centroids=cent,
-        ).collect()
-        for rank, r in enumerate(rows, start=1):
-            single.add((qid, r["vec_id"], r["est_d2"], rank))
-    assert batch == single
 
 
 def test_default_pq_geometry_pinned():
@@ -596,56 +475,6 @@ def test_pq_encode_gemm_matches_hof(spark, sf_dir):
     assert hof == gemm
 
 
-def test_knn_join_ivfpq_residual_matches_single_query_form(spark, sf_dir, tmp_path):
-    """Batch residual IVFADC (r13) against its single-query ancestor:
-    a build_ivfpq_index(residual=True) artifact scored through
-    knn_join_ivfpq(residual=True) must reproduce ivfpq_residual_topk
-    per query — same seeded centroids, same residual codebook seeds
-    (k lowest-id RESIDUAL rows), same per-list LUT arithmetic."""
-    from pyspark.sql import functions as F
-
-    from cli_rag_spark.operators.pq import (
-        build_ivfpq_index,
-        ivfpq_residual_topk,
-        knn_join_ivfpq,
-        read_ivfpq_index,
-    )
-    from cli_rag_spark.sources.documents import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    path = str(tmp_path / "ivfpq_res")
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=True
-    )
-    assert _ivfpq_meta(spark, path)["residual"] is True
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
-    q = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    batch = {
-        (r["query_id"], r["vec_id"], r["est_d2"])
-        for r in knn_join_ivfpq(
-            q, codes, cb, assign, cent, k=5, n_probe=2, m_subspaces=4,
-            residual=True,
-        ).collect()
-    }
-    for qid in range(3):
-        q1 = emb.where(F.col("vec_id") == qid).select(
-            F.col("embedding").alias("query_vec")
-        )
-        single = {
-            (qid, r["vec_id"], r["est_d2"])
-            for r in ivfpq_residual_topk(
-                emb, q1, k=5, n_centroids=8, n_probe=2, m_subspaces=4,
-                k_codes=16,
-            ).collect()
-        }
-        assert len(single) == 5 and single <= batch
-
-
 def test_build_ivfpq_residual_flag_default_and_optout(spark, sf_dir, tmp_path):
     """The DEFAULT build is residual-encoded (r14, VERDICT r13 #1 —
     residual books ~double shortlist coverage at every R on clustered
@@ -678,12 +507,10 @@ def test_residual_adc_terms_persisted_matches_on_the_fly(
     """The r15 decomposition's query-independent terms table (VERDICT
     r14 #1): a residual build persists ``resid_terms`` = [cid, m,
     code, 2·c_m·r + r·r] and read_ivfpq_terms returns it; the values
-    are bit-identical to residual_adc_terms derived on the fly from
-    the same persisted codebook + centroids (the fallback path for
-    pre-r15 artifacts), so the two scoring paths cannot diverge; a
-    raw artifact has no terms child and the reader answers None; and
-    knn_join_ivfpq scores identically with and without the persisted
-    frame."""
+    are bit-identical to residual_adc_terms derived from the same
+    persisted codebook + centroids, so knn_join_ivfpq scores the same
+    with either frame; a raw artifact has no terms child and the
+    reader answers None."""
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.pq import (
@@ -714,21 +541,17 @@ def test_residual_adc_terms_persisted_matches_on_the_fly(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    with_terms = {
-        tuple(r)
-        for r in knn_join_ivfpq(
-            q, codes, cb, assign, cent, k=5, n_probe=2, m_subspaces=4,
-            residual=True, resid_terms=persisted,
-        ).collect()
-    }
-    without = {
-        tuple(r)
-        for r in knn_join_ivfpq(
-            q, codes, cb, assign, cent, k=5, n_probe=2, m_subspaces=4,
-            residual=True,
-        ).collect()
-    }
-    assert with_terms == without and len(with_terms) == 15
+    with_persisted, with_derived = (
+        {
+            tuple(r)
+            for r in knn_join_ivfpq(
+                q, codes, cb, assign, cent, k=5, n_probe=2, m_subspaces=4,
+                resid_terms=terms,
+            ).collect()
+        }
+        for terms in (persisted, residual_adc_terms(cb, cent))
+    )
+    assert with_persisted == with_derived and len(with_persisted) == 15
     raw_path = str(tmp_path / "ivfpq_terms_raw")
     build_ivfpq_index(
         emb, raw_path, n_centroids=8, m_subspaces=4, k_codes=16,
