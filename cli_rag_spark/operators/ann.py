@@ -554,27 +554,52 @@ _SORTED_ROWGROUP_BYTES = 8 * 1024 * 1024
 _SORTED_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
-def _sorted_cid_bucket(n_files: int, n_centroids: int):
-    """Shuffle key for the sorted layout: cid's file bucket,
-    floor(cid·n_files/C) clamped to the last bucket — deterministic
-    (no range-sampling pass over the assignment lineage) and
-    contiguous in cid, so each written file spans one narrow cid
-    range even before the within-partition sort."""
-    return F.least(
+def _write_sorted_lists(
+    rows: DataFrame,
+    path: str,
+    n_rows: int,
+    width: int,
+    n_centroids: int,
+    id_col: str,
+    mode: str = "overwrite",
+) -> None:
+    """The one writer of the IVF family's list layout, used by
+    :func:`build_ivf_index`, :func:`append_ivf_index` and
+    pq.build_ivfpq_index: ``rows`` (each carrying its list's ``cid``)
+    go out ``(cid, id)``-sorted with small (8 MB) row groups, so a
+    probe's ``cid IN (...)`` filter prunes at row-group granularity.
+
+    Files hold ~128 MB of estimated payload each (``width`` 8-byte
+    values plus narrow id/cid per row), never zero: the count scales
+    with DATA, not with the cluster's task count. The shuffle key is
+    cid's file bucket, floor(cid·F/C) clamped to the last bucket —
+    deterministic and contiguous in cid, so each file spans one narrow
+    cid range even before the within-partition sort. NOT
+    repartitionByRange: range partitioning runs a SAMPLING job that
+    evaluates the whole parent lineage, including the N·C·dim
+    assignment, a second time before the write pass evaluates it again
+    (measured: the 2M build sat in assignment twice as long as the
+    one-pass form). cid occupancy is ~Poisson(N/C) by construction, so
+    the buckets are already row-balanced to a few percent. Hashing F
+    bucket values into F partitions is balls-into-bins (ADVICE r14):
+    ~1/e of the files come out EMPTY and the max-loaded file holds
+    ~ln F / ln ln F buckets at large F, so files can overshoot the
+    128 MB target several-fold; the per-row-group min/max stats (the
+    actual pruning unit) are unaffected."""
+    n_files = max(
+        1, -(-n_rows * (width * 8 + 16) // _SORTED_TARGET_FILE_BYTES)
+    )
+    bucket = F.least(
         F.lit(n_files - 1),
         F.floor(F.col("cid") * n_files / max(1, n_centroids)),
     ).cast("int")
-
-
-def _sorted_ivf_file_count(n_rows: int, dim: int) -> int:
-    """Files for the sorted layout: ~128 MB of estimated f64 payload
-    each (dim doubles + narrow id/cid per row), never zero. The count
-    scales with DATA, not with the cluster's task count — a fixture
-    index is one file, a 100 TB index is ~800k range-sorted files; the
-    range shuffle before the write is what keeps each file a single
-    contiguous cid span."""
-    bytes_est = n_rows * (dim * 8 + 16)
-    return max(1, -(-bytes_est // _SORTED_TARGET_FILE_BYTES))
+    (
+        rows.repartition(n_files, bucket)
+        .sortWithinPartitions("cid", id_col)
+        .write.mode(mode)
+        .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
+        .parquet(path)
+    )
 
 
 def build_ivf_index(
@@ -669,28 +694,8 @@ def build_ivf_index(
             ),
             id_col,
         )
-        n_files = _sorted_ivf_file_count(n_rows, dim)
-        # Deterministic cid-bucket shuffle, NOT repartitionByRange:
-        # range partitioning runs a SAMPLING job that evaluates the
-        # whole parent lineage, including the N·C·dim assignment, a
-        # second time before the write pass evaluates it again
-        # (measured: the 2M build sat in assignment twice as long as
-        # the one-pass form). cid occupancy is ~Poisson(N/C) by
-        # construction, so floor(cid·F/C) buckets are already
-        # row-balanced to a few percent. Hashing F bucket values into
-        # F partitions is balls-into-bins (ADVICE r14): ~1/e of the
-        # output files come out EMPTY and the max-loaded file holds
-        # ~ln F / ln ln F buckets at large F, so individual files can
-        # overshoot the 128 MB target several-fold. The per-row-group
-        # min/max stats (8 MB, the actual pruning unit) are unaffected.
-        (
-            assigned.repartition(
-                n_files, _sorted_cid_bucket(n_files, n_centroids)
-            )
-            .sortWithinPartitions("cid", id_col)
-            .write.mode("overwrite")
-            .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
-            .parquet(staging)
+        _write_sorted_lists(
+            assigned, staging, n_rows, dim, n_centroids, id_col
         )
         centroids.coalesce(1).write.mode("overwrite").parquet(
             f"{staging}/{_CENTROID_DIR}"
@@ -902,19 +907,9 @@ def append_ivf_index(
     # the batch's footer stats prune exactly like the base files' (a
     # batch spans fewer lists, so its per-file cid ranges are
     # naturally tighter)
-    n_files = _sorted_ivf_file_count(n_batch, int(meta["dim"]))
-    # same deterministic bucket shuffle as the build (range
-    # partitioning would sample — i.e. recompute — the batch
-    # assignment a second time)
-    (
-        assigned.repartition(
-            n_files,
-            _sorted_cid_bucket(n_files, int(meta["n_centroids"])),
-        )
-        .sortWithinPartitions("cid", id_col)
-        .write.mode("append")
-        .option("parquet.block.size", _SORTED_ROWGROUP_BYTES)
-        .parquet(path)
+    _write_sorted_lists(
+        assigned, path, n_batch, int(meta["dim"]), int(meta["n_centroids"]),
+        id_col, mode="append",
     )
 
 

@@ -23,9 +23,11 @@ Scale shapes:
   codebook, ``min_by`` argmin — the N·M·K candidate evaluations live
   inside one partial-aggregating stage (same shape as
   ann.assign_centroids); encode is the one-time index build;
-* ADC scan: the codes table (N·M narrow int rows) broadcast-joins the
-  per-query M·K lookup table and sums — the per-query work is a map
-  over codes, no vector arithmetic, no shuffle of embeddings;
+* ADC scan: the probed lists' packed code rows (one ``(cid, id,
+  codes)`` row of M narrow ints per vector) posexplode and
+  broadcast-join the per-query M·K lookup table, then sum — the
+  per-query work is a map over codes, no vector arithmetic, no
+  shuffle of embeddings;
 * determinism: every distance is rounded to ``round_digits`` before
   any argmin/sum, ties broken by lowest code id — identical under any
   partition order and exactly replayable in the DuckDB oracle.
@@ -37,23 +39,26 @@ Lloyd-refines each subspace codebook via ann.kmeans_refine on the
 sub-vector frame with the L2 metric — the operators accept any
 codebook DataFrame with columns (m, code, cvec).
 
-Persistence (:func:`build_ivfpq_index`, opened by
-:func:`read_ivfpq_index`) follows the one artifact discipline of
-:func:`~cli_rag_spark.sources.artifacts.staged_artifact`, like
-ann.build_ivf_index: the parquet children are written into a staging
-directory next to a sidecar carrying the build identity (geometry,
-parameters, input fingerprint) and promoted atomically. Readers
-validate the sidecar's geometry O(1) at open time — an index probed
-with mismatched PQ geometry would silently return garbage distances.
+Persistence (:func:`build_ivfpq_index`) follows the one artifact
+discipline of :func:`~cli_rag_spark.sources.artifacts.staged_artifact`,
+like ann.build_ivf_index, and stores its inverted lists in the IVF
+family's one list layout (ann._write_sorted_lists): each vector is one
+``(cid, id, codes)`` row, ``(cid, id)``-sorted in small row groups
+(Jégou §IV: each inverted list holds its own codes). The children are
+written into a staging directory next to a sidecar carrying the build
+identity (geometry, parameters, input fingerprint) and every child's
+schema, and promoted atomically.
 
 Search has one operator, :func:`knn_join_ivfpq`, for any number of
-queries (one query is a one-row query table). Flat (unpruned) ADC is
-the probe-all case of IVFADC (Jégou §IV): a raw (``residual=False``)
-artifact persists the same seeded codebook and codes a flat PQ index
-would, and ``n_probe`` = C scores every list — the same rows, the same
-estimates. Of the search path, only :func:`read_ivfpq_index` and
-:func:`knn_join_ivfpq` touch the codes/assign layout
-:func:`build_ivfpq_index` writes.
+queries (one query is a one-row query table). It takes the artifact's
+path and reads geometry, id column and scoring form from the sidecar,
+so a caller cannot pair codes with a codebook of another geometry.
+Flat (unpruned) ADC is the probe-all case of IVFADC (Jégou §IV): a raw
+(``residual=False``) artifact persists the same seeded codebook and
+codes a flat PQ index would, and ``n_probe`` = C scores every list —
+the same rows, the same estimates. Only :func:`build_ivfpq_index`, the
+private opener :func:`_open_ivfpq` and :func:`knn_join_ivfpq` touch the
+artifact's children.
 """
 
 from __future__ import annotations
@@ -68,7 +73,9 @@ from cli_rag_spark.functions.vectors import dot, l2_sq
 from cli_rag_spark.operators.ann import (
     GEMM_ASSIGN_MIN_OPS,
     _probe_lists,
+    _read_back_schema,
     _train_quantizer,
+    _write_sorted_lists,
     assign_centroids_auto,
     default_n_centroids,
     kmeans_refine,
@@ -93,8 +100,6 @@ __all__ = [
     "residual_adc_terms",
     "build_ivfpq_index",
     "ivfpq_index_ready",
-    "read_ivfpq_index",
-    "read_ivfpq_terms",
 ]
 
 
@@ -348,99 +353,65 @@ def residual_adc_terms(
 
 def knn_join_ivfpq(
     queries: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    assign: DataFrame,
-    centroids: DataFrame,
+    path: str,
     k: int,
     n_probe: int,
-    m_subspaces: int = 4,
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    id_col: str = "vec_id",
     round_digits: int = 6,
-    resid_terms: DataFrame | None = None,
-    validate_geometry: bool = True,
 ) -> DataFrame:
-    """Batch IVFADC kNN JOIN (Jégou, Douze, Schmid 2011 §IV) — the one
-    IVFADC search operator, for a query TABLE of any size (a single
-    query is a one-row table), and the answer to what the r11 routed
+    """Batch IVFADC kNN JOIN (Jégou, Douze, Schmid 2011 §IV) over the
+    :func:`build_ivfpq_index` artifact at ``path`` — the one IVFADC
+    search operator, for a query TABLE of any size (a single query is
+    a one-row table), and the answer to what the r11 routed
     measurement proved about the flat paths (SCALING.md): at Q·N
     scale, a flat (unpruned) ADC shuffle and knn_join_lsh's collision
     verify are both Θ(Q·N) with constants 27-57× worse than plain
     GEMM, so past the GEMM envelope the only right shape is
     SUB-linear — IVF prunes the rows per query, PQ shrinks the bytes:
-    candidate volume is Q · n_probe · (N/C) · M narrow code rows
-    instead of Q·N, and no embedding is read at query time.
+    candidate volume is Q · n_probe · (N/C) packed code rows instead
+    of Q·N, and no embedding is read at query time.
 
     Plan: (1) per-query probe — queries × broadcast centroids, one
     window top-``n_probe`` per query (the IVF family's one probe
-    ranking, C·Q tiny rows); (2) candidates — the codes scan joins the
-    cid assignment once, then the broadcast (query, cid) probe list —
-    this inner join IS the pruning, fanning each code row out only to
-    the queries that probe its list; (3) the per-query LUT (Q·M·K
-    rows, broadcast) scores candidates by (query, m, code), and the
+    ranking, C·Q tiny rows); (2) candidates — the broadcast (query,
+    cid) probe list joins the ``lists`` child on cid; this inner join
+    IS the pruning, fanning each vector's one ``(cid, id, codes)`` row
+    out only to the queries that probe its list, and ``posexplode``
+    turns its codes into (m, code); (3) the per-query LUT (Q·M·K rows,
+    broadcast) scores candidates by (query, m, code), and the
     partial-agg groupBy sums M lookups per (query, id). Same
     deterministic (est_d2, id) contract and [query_id, id, est_d2,
-    rank] shape as every other E7 strategy.
+    rank] shape as every other E7 strategy; the id column is the
+    build's ``id_col``. ``n_probe`` = C probes every list: over a raw
+    artifact that is flat ADC, every code row scored.
 
-    Pass the four frames of :func:`read_ivfpq_index`: the coarse
-    quantizer travels with its assignment (probing Lloyd-refined lists
-    with seeded coordinates would silently lose recall), and
-    everything downstream of the artifact is SQL-oracle-replayable.
-    ``n_probe`` = C probes every list: over a raw artifact that is
-    flat ADC, every code row scored.
-
-    The scoring form follows from the inputs. Without ``resid_terms``
-    the codes are raw-vector codes and the LUT holds ``||q_m − r||²``.
-    With ``resid_terms`` (:func:`read_ivfpq_terms` of a residual
-    artifact) the codes describe ``x − centroid(x)`` and the estimate
-    is DECOMPOSED (r15): per subspace ``||(q−c) − r||² = ||q−c||² −
+    Everything the scoring needs comes from the artifact: the coarse
+    quantizer its lists were assigned by (probing Lloyd-refined lists
+    with seeded coordinates would silently lose recall), the PQ
+    geometry, and the scoring form. A raw artifact's codes are
+    raw-vector codes and the LUT holds ``||q_m − r||²``. A residual
+    artifact's codes describe ``x − centroid(x)`` and the estimate is
+    DECOMPOSED (r15): per subspace ``||(q−c) − r||² = ||q−c||² −
     2·q_m·r + (2·c_m·r + r·r)``, so the query side builds only the
     broadcastable ``2·q_m·r`` table (Q·M·K, the raw LUT's shape) plus
     the per-(query, cid) scalar ``||q−c||²`` the probe rows already
-    hold, and the query-independent terms come from the artifact.
-    Scoring residual codes with the raw LUT (or the reverse) returns
-    silently wrong distances, which is why the terms are part of the
-    residual artifact's identity and the caller passes what the
-    artifact carries.
-
-    The codebook's subspace set is validated against ``m_subspaces``
-    up front (one tiny agg on the broadcast-sized M·K frame): scoring
-    an m=8 codebook with the m=4 default doesn't fail — F.slice cuts
-    wrong-width query sub-vectors and the zip_with pads with NULLs —
-    it silently returns garbage distances (r12: this exact mistake
-    produced a 0.10-recall measurement that looked like an honest
-    number)."""
+    hold, and the query-independent terms come from the artifact's
+    ``resid_terms`` child. Opening the artifact reads the sidecar's
+    recorded schemas and runs no Spark job."""
     from pyspark.sql import Window
 
-    if validate_geometry:
-        # one tiny collect on the broadcast-sized M·K frame. r15
-        # (guide §1.2): this is a driver-blocking Spark job on EVERY
-        # call, redundant when the codebook was opened through
-        # read_ivfpq_index — which already verified
-        # m_subspaces against the build meta in O(1) — so
-        # artifact-validated callers (knn_join_auto's dispatcher, the
-        # judged artifact queries) pass validate_geometry=False; raw
-        # DataFrame callers keep the guard (the r12 silent-garbage
-        # class).
-        got_m = sorted(
-            int(r["m"]) for r in codebook.select("m").distinct().collect()
-        )
-        if got_m != list(range(m_subspaces)):
-            raise ValueError(
-                f"codebook carries subspaces {got_m} but m_subspaces="
-                f"{m_subspaces} was passed — an ADC join with mismatched "
-                "geometry returns silently wrong distances"
-            )
+    meta, child = _open_ivfpq(queries.sparkSession, path)
+    id_col = meta["id_col"]
+    terms = child.get("resid_terms")
     q = queries.select(query_id, query_vec)
     probed = _probe_lists(
-        centroids, q, n_probe, query_vec, query_id, round_digits
+        child["centroids"], q, n_probe, query_vec, query_id, round_digits
     )
     qv = F.col(query_vec).cast("array<double>")
-    ds = _d_sub(qv, m_subspaces)
+    ds = _d_sub(qv, int(meta["m_subspaces"]))
     q_sub = F.slice(qv, F.col("m") * ds + 1, ds)
-    if resid_terms is None:
+    if terms is None:
         probed = probed.select(query_id, "cid")
         lut = l2_sq(F.col("cvec"), q_sub)
         est = F.sum("_l")
@@ -454,15 +425,16 @@ def knn_join_ivfpq(
         )
         lut = F.lit(2.0) * dot(q_sub, F.col("cvec").cast("array<double>"))
         est = F.min("_qc2") + F.sum(F.col("t2") - F.col("_l"))
-    lut = codebook.crossJoin(F.broadcast(q)).select(
+    lut = child["codebook"].crossJoin(F.broadcast(q)).select(
         query_id, "m", "code", F.round(lut, round_digits).alias("_l")
     )
     cand = (
-        codes.join(assign.select(id_col, "cid"), id_col)
-        .join(F.broadcast(probed), "cid")
+        child["lists"].join(F.broadcast(probed), "cid")
+        .select("*", F.posexplode("codes").alias("m", "code"))
+        .drop("codes")
     )
-    if resid_terms is not None:
-        cand = cand.join(resid_terms, ["cid", "m", "code"])
+    if terms is not None:
+        cand = cand.join(terms, ["cid", "m", "code"])
     w = Window.partitionBy(query_id).orderBy(
         F.col("est_d2").asc(), F.col(id_col).asc()
     )
@@ -654,21 +626,25 @@ def build_ivfpq_index(
     that doesn't fit). Parquet children under ``path``:
 
     * ``centroids``   — the coarse quantizer (C rows of dim doubles);
-    * ``assign``      — the inverted file as narrow (id, cid) rows;
     * ``codebook``    — M·K per-subspace codewords;
-    * ``codes``       — N·M (id, m, code) rows, ~1 B/subspace/vector;
+    * ``lists``       — the inverted file with its codes: one ``(cid,
+      id, codes)`` row per vector, ``codes`` the M code ids in
+      subspace order, written by the IVF family's one sorted-list
+      writer (``(cid, id)``-sorted, 8 MB row groups);
     * ``resid_terms`` — residual builds only: the C·M·K
       query-independent ADC terms (:func:`residual_adc_terms`);
 
     plus the ``_ivfpq_meta.json`` sidecar (build identity: geometry,
-    parameters, input ``n_rows`` + ``content_fp``). Children and
-    sidecar are written into a staging directory and promoted
-    atomically (:func:`~cli_rag_spark.sources.artifacts.staged_artifact`),
+    parameters, input ``n_rows`` + ``content_fp``; and each child's
+    read-back schema, so opening the artifact infers nothing).
+    Children and sidecar are written into a staging directory and
+    promoted atomically
+    (:func:`~cli_rag_spark.sources.artifacts.staged_artifact`),
     so a build that fails part-way leaves the previous artifact as it
     was. Defaults: ``n_centroids`` = C~√N
     (ann.default_n_centroids), ``(m_subspaces, k_codes)`` =
     :func:`default_pq_geometry` — all three recorded in the meta so
-    :func:`read_ivfpq_index` and the knn_join_auto dispatcher resolve
+    :func:`knn_join_ivfpq` and the knn_join_auto dispatcher resolve
     them without the caller knowing what the build computed.
 
     ``coarse_refine_iters`` Lloyd-refines the coarse quantizer before
@@ -677,7 +653,10 @@ def build_ivfpq_index(
     The corpus-side assignment goes through
     :func:`~cli_rag_spark.operators.ann.assign_centroids_auto` — the
     GEMM twin takes over past the interpreted-HOF envelope, pinned
-    bit-identical at fixture scale in tests/test_pq.py.
+    bit-identical at fixture scale in tests/test_pq.py. It is computed
+    once per build and feeds both the residual lineage and ``lists``;
+    the encoders' ``(id, m, code)`` rows are packed into ``lists`` once,
+    at build time.
 
     ``residual=True`` — the DEFAULT since r14 (VERDICT r13 #1) —
     trains the PQ codebook on, and encodes, ``x − centroid(x)``
@@ -693,11 +672,9 @@ def build_ivfpq_index(
     ``residual=False`` is the explicit opt-out (raw-vector codes —
     only right when the corpus has no cluster structure to subtract,
     e.g. the sign-flip adversarial bound). A residual build also
-    persists the ``resid_terms`` child, and passing it
-    (:func:`read_ivfpq_terms`) is what makes :func:`knn_join_ivfpq`
-    score residual codes, so
-    :func:`~cli_rag_spark.operators.knn.knn_join_auto` scores each
-    artifact in its own form. The query-side LUT stays Q·M·K rows in
+    persists the ``resid_terms`` child, whose presence is what makes
+    :func:`knn_join_ivfpq` score residual codes, so every caller scores
+    each artifact in its own form. The query-side LUT stays Q·M·K rows in
     both forms (the r15 decomposition). Build-side price tag: SCALING.md
     r14 books the residual-vs-raw build walls at 2M (the residual
     lineage adds one narrow assign join + zip_with before the
@@ -765,9 +742,23 @@ def build_ivfpq_index(
         # a residual artifact carries the decomposed-terms child: its
         # presence selects knn_join_ivfpq's residual scoring form
         "resid_terms": residual,
+        # 2: one packed (cid, id, codes) lists child and the children's
+        # schemas in the sidecar; an older sidecar never matches, so
+        # reuse rebuilds it instead of serving a layout no reader opens
+        "version": 2,
     }
 
-    def write(staging: str) -> None:
+    def write(staging: str) -> dict:
+        schemas: dict[str, dict] = {}
+
+        def write_child(df: DataFrame, name: str) -> DataFrame:
+            # re-read the persisted bytes, with the recorded schema, so
+            # every later stage scores exactly what future readers see
+            # (and refine lineages run once)
+            df.write.mode("overwrite").parquet(f"{staging}/{name}")
+            schemas[name] = _read_back_schema(df.schema)
+            return _read_child(spark, staging, name, schemas[name])
+
         centroids, coarse_dim = _train_quantizer(
             vectors, n_centroids, coarse_refine_iters, id_col, vec_col,
             round_digits,
@@ -777,28 +768,22 @@ def build_ivfpq_index(
                 "build_ivfpq_index: seeded coarse quantizer is empty — "
                 "refusing to write an empty index"
             )
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{staging}/centroids"
-        )
-        # re-read persisted bytes so assignment + encode score exactly
-        # what future readers will see (and refine lineages run once)
-        centroids = spark.read.parquet(f"{staging}/centroids")
-        assign_centroids_auto(
+        centroids = write_child(centroids.coalesce(1), "centroids")
+        # the N·C assignment runs once: it feeds the residual lineage
+        # (read by the codebook seed, the refinement and the encoder)
+        # and the lists
+        assign = assign_centroids_auto(
             vectors, centroids, id_col, vec_col, round_digits=round_digits,
             n_rows=n_rows,
-        ).write.mode("overwrite").parquet(f"{staging}/assign")
+        ).localCheckpoint(eager=True)
         if residual:
             # encode x − centroid(x): the codebook trains on — and the
-            # codes describe — the within-list displacement. The
-            # persisted assign parquet feeds the residual lineage so the
-            # (possibly GEMM-computed) assignment runs once, not once
-            # per consumer.
-            assign_p = spark.read.parquet(f"{staging}/assign")
+            # codes describe — the within-list displacement
             enc_src = (
                 vectors.select(
                     id_col, F.col(vec_col).cast("array<double>").alias("_v")
                 )
-                .join(assign_p.select(id_col, "cid"), id_col)
+                .join(assign, id_col)
                 .join(
                     centroids.select(
                         "cid", F.col("cvec").cast("array<double>").alias("_c")
@@ -834,8 +819,7 @@ def build_ivfpq_index(
                 enc_src, codebook, m_subspaces, refine_iters,
                 id_col, enc_col, round_digits,
             )
-        codebook.write.mode("overwrite").parquet(f"{staging}/codebook")
-        codebook = spark.read.parquet(f"{staging}/codebook")
+        codebook = write_child(codebook, "codebook")
         # same size-routing rule as the assignment: the encoder
         # evaluates N·K·dim element ops (bit-identical twins, pinned in
         # tests)
@@ -843,17 +827,35 @@ def build_ivfpq_index(
             pq_encode_gemm if n_rows * k_codes * dim > GEMM_ASSIGN_MIN_OPS
             else pq_encode
         )
-        encode(
-            enc_src, codebook, m_subspaces, id_col, enc_col, round_digits
-        ).write.mode("overwrite").parquet(f"{staging}/codes")
+        # pack each vector's M (m, code) rows into one codes array in
+        # subspace order, next to its list id
+        lists = (
+            encode(enc_src, codebook, m_subspaces, id_col, enc_col, round_digits)
+            .groupBy(id_col)
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("m", "code"))),
+                    lambda s: s["code"],
+                ).alias("codes")
+            )
+            .join(assign, id_col)
+            .select("cid", id_col, "codes")
+        )
+        _write_sorted_lists(
+            lists, f"{staging}/lists", n_rows, m_subspaces, n_centroids,
+            id_col,
+        )
+        schemas["lists"] = _read_back_schema(lists.schema)
         if residual:
             # the query-independent half of the decomposed residual ADC
             # (residual_adc_terms): C·M·K narrow rows, priced once at
             # build so the query path never rebuilds a
             # per-(query, probed-list) LUT
-            residual_adc_terms(codebook, centroids, round_digits).write.mode(
-                "overwrite"
-            ).parquet(f"{staging}/resid_terms")
+            write_child(
+                residual_adc_terms(codebook, centroids, round_digits),
+                "resid_terms",
+            )
+        return {"schemas": schemas}
 
     staged_artifact(
         spark, path, _IVFPQ_META_NAME, identity, write,
@@ -861,67 +863,48 @@ def build_ivfpq_index(
     )
 
 
-def ivfpq_index_ready(
-    spark: SparkSession,
-    path: str,
-    dim: int,
-    m_subspaces: int | None = None,
-) -> bool:
+def ivfpq_index_ready(spark: SparkSession, path: str, dim: int) -> bool:
     """Dim-validated availability gate for strategy auto-dispatch —
-    the IVFPQ mirror of ann.ivf_index_ready: True iff
-    ``path`` holds a :func:`build_ivfpq_index` output whose build
-    ``dim`` matches the query vectors' (and, when given, whose
-    ``m_subspaces`` matches the caller's). One metadata read, no
-    Spark job; absence/mismatch returns False and the dispatcher
-    falls back rather than probing the wrong geometry."""
+    the IVFPQ mirror of ann.ivf_index_ready: True iff ``path`` holds a
+    :func:`build_ivfpq_index` output whose build ``dim`` matches the
+    query vectors' and whose sidecar records the children's schemas
+    :func:`knn_join_ivfpq` opens them with. One metadata read, no
+    Spark job; absence/mismatch (including an older artifact without
+    the recorded schemas) returns False and the dispatcher falls back
+    rather than probing it."""
     meta = read_json_sidecar(spark, path, _IVFPQ_META_NAME)
-    return (
-        meta is not None
-        and meta.get("dim") == dim
-        and (m_subspaces is None or meta.get("m_subspaces") == m_subspaces)
-    )
+    return meta is not None and meta.get("dim") == dim and "schemas" in meta
 
 
-def read_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    m_subspaces: int | None = None,
-    k_codes: int | None = None,
-    dim: int | None = None,
-    n_centroids: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Open a persisted IVFPQ index → ``(codes, codebook, assign,
-    centroids)`` — exactly the four frames :func:`knn_join_ivfpq`
-    takes, in its argument order. Any caller-expected geometry that
-    disagrees with the build metadata raises ``ValueError`` before a
-    Spark job runs: wrong-geometry ADC returns silently wrong
-    distances, not errors."""
+def _open_ivfpq(
+    spark: SparkSession, path: str
+) -> tuple[dict, dict[str, DataFrame]]:
+    """``(meta, children)`` of the :func:`build_ivfpq_index` artifact at
+    ``path``: the sidecar and each parquet child (``lists``,
+    ``codebook``, ``centroids`` and, for a residual build,
+    ``resid_terms``) opened with the schema the build recorded — no
+    inference, no Spark job. The only reader of the artifact's layout.
+    A path that is not an IVFPQ artifact, or one built before the
+    schemas were recorded, raises ``ValueError``."""
     meta = read_index_meta(spark, path, _IVFPQ_META_NAME, "build_ivfpq_index")
-    expected = dict(
-        m_subspaces=m_subspaces, k_codes=k_codes, dim=dim,
-        n_centroids=n_centroids,
-    )
-    for key, arg in expected.items():
-        if arg is not None and meta[key] != arg:
-            raise ValueError(
-                f"IVFPQ index at {path} was built with {key}={meta[key]}, "
-                f"caller expected {arg}"
-            )
-    return (
-        spark.read.parquet(f"{path}/codes"),
-        spark.read.parquet(f"{path}/codebook"),
-        spark.read.parquet(f"{path}/assign"),
-        spark.read.parquet(f"{path}/centroids"),
-    )
+    if "schemas" not in meta:
+        raise ValueError(
+            f"IVFPQ index at {path} records no child schemas; rebuild it "
+            "with build_ivfpq_index"
+        )
+    return meta, {
+        name: _read_child(spark, path, name, schema)
+        for name, schema in meta["schemas"].items()
+    }
 
 
-def read_ivfpq_terms(spark: SparkSession, path: str) -> DataFrame | None:
-    """The persisted :func:`residual_adc_terms` child of a residual
-    :func:`build_ivfpq_index` artifact — ``[cid, m, code, t2]`` — or
-    ``None`` for a raw-encoded build (the meta records
-    ``resid_terms``). Passed to :func:`knn_join_ivfpq` as is, it picks
-    the scoring form that matches the artifact's codes."""
-    meta = read_json_sidecar(spark, path, _IVFPQ_META_NAME)
-    if meta is None or not meta.get("resid_terms"):
-        return None
-    return spark.read.parquet(f"{path}/resid_terms")
+def _read_child(
+    spark: SparkSession, root: str, name: str, schema: dict
+) -> DataFrame:
+    """The parquet child ``<root>/<name>`` opened with its recorded
+    (JSON) schema: no inference job."""
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(schema)).parquet(
+        f"{root}/{name}"
+    )

@@ -32,8 +32,6 @@ from cli_rag_spark.operators.mmr import mmr_oracle_sql, mmr_rerank
 from cli_rag_spark.operators.pq import (
     build_ivfpq_index,
     knn_join_ivfpq,
-    read_ivfpq_index,
-    read_ivfpq_terms,
 )
 from cli_rag_spark.operators.quantize import dequantize, quantize_int8
 from cli_rag_spark.sources.documents import load_table
@@ -297,17 +295,14 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw IVFPQ artifact (_persisted_ivfpq), probing all 8 lists: a raw
     build persists exactly the seeded codebook and codes a flat PQ
     index would, and flat ADC is IVFADC probing every list, so the
-    unpruned scan here reads the same narrow codes table — at 100 TB
-    the encode is a one-time build and queries touch ~4 B/vector. The
-    Lloyd-refined variant (same persisted layout, higher recall) is
+    unpruned scan here reads every list's packed codes — at 100 TB
+    the encode is a one-time build and queries touch ~4 codes/vector.
+    The Lloyd-refined variant (same persisted layout, higher recall) is
     exercised in tests/test_pq.py; the judged path keeps the seeded
     codebook so the oracle can replay it."""
-    emb, codes, cb, assign, cent, _ = _persisted_ivfpq(spark, sf_dir, False)
+    emb, path = _persisted_ivfpq(spark, sf_dir, False)
     return _ranked(
-        knn_join_ivfpq(
-            _query0(emb), codes, cb, assign, cent, k=K,
-            n_probe=IVF_CENTROIDS, m_subspaces=PQ_M, validate_geometry=False,
-        ),
+        knn_join_ivfpq(_query0(emb), path, k=K, n_probe=IVF_CENTROIDS),
         "est_d2",
     )
 
@@ -318,32 +313,27 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 nearest of 8 coarse lists, then estimate distances from the
     persisted PQ codes of just those lists. The 100 TB query path in
     full: the scan is 2/8 of the rows at ~4 B each, embeddings
-    untouched. Codes, codebook, the seeded coarse quantizer and its
-    assignment all come from the persisted metadata-validated raw
-    IVFPQ artifact, so no query run re-derives them from the corpus;
-    every stage is deterministic, so the entire approximate result is
-    oracle-replayed (assignment argmin, probe, encode argmin, LUT, ADC
-    sum — all in SQL)."""
-    emb, codes, cb, assign, cent, _ = _persisted_ivfpq(spark, sf_dir, False)
+    untouched. The codebook, the seeded coarse quantizer and the lists
+    (each vector's list id with its codes) all come from the persisted
+    raw IVFPQ artifact, so no query run re-derives them from the
+    corpus; every stage is deterministic, so the entire approximate
+    result is oracle-replayed (assignment argmin, probe, encode argmin,
+    LUT, ADC sum — all in SQL)."""
+    emb, path = _persisted_ivfpq(spark, sf_dir, False)
     return _ranked(
-        knn_join_ivfpq(
-            _query0(emb), codes, cb, assign, cent, k=K, n_probe=IVF_PROBE,
-            m_subspaces=PQ_M, validate_geometry=False,
-        ),
-        "est_d2",
+        knn_join_ivfpq(_query0(emb), path, k=K, n_probe=IVF_PROBE), "est_d2"
     )
 
 
 def _persisted_ivfpq(spark: SparkSession, sf_dir: str, residual: bool):
-    """(embeddings, codes, codebook, assign, centroids, resid_terms) of
-    the seeded C=IVF_CENTROIDS, PQ_M × PQ_K IVFPQ artifact every
-    IVFADC judged query reads, raw or residual-encoded: built once per
-    sf_dir at a stable scratch path and opened through
-    read_ivfpq_index's O(1) geometry check. ``resid_terms`` is the
-    residual artifact's persisted terms child (None for the raw one),
-    which selects knn_join_ivfpq's scoring form. The path IS the
-    version: raw v1; residual v3 = the r15 decomposed-terms artifact
-    (v2 = the r13 nonzero-seed fix).
+    """(embeddings, artifact path) of the seeded C=IVF_CENTROIDS,
+    PQ_M × PQ_K IVFPQ artifact every IVFADC judged query reads, raw or
+    residual-encoded: built once per sf_dir at a stable scratch path;
+    knn_join_ivfpq reads its geometry and scoring form from the
+    sidecar. The path names the query family's artifact generation:
+    raw v1; residual v3 = the r15 decomposed-terms artifact (v2 = the
+    r13 nonzero-seed fix). A build whose sidecar predates the current
+    layout fails the reuse identity and is rebuilt in place.
 
     No query run re-derives the quantizer, the N·C assignment scan or
     the codes from the corpus — at 100 TB an N-scan per query batch is
@@ -369,11 +359,7 @@ def _persisted_ivfpq(spark: SparkSession, sf_dir: str, residual: bool):
         n_centroids=IVF_CENTROIDS, m_subspaces=PQ_M, k_codes=PQ_K,
         residual=residual, reuse_if_exists=True,
     )
-    codes, cb, assign, cent = read_ivfpq_index(
-        spark, path, m_subspaces=PQ_M, k_codes=PQ_K,
-        n_centroids=IVF_CENTROIDS,
-    )
-    return emb, codes, cb, assign, cent, read_ivfpq_terms(spark, path)
+    return emb, path
 
 
 def q_knn_join_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,15 +375,12 @@ def q_knn_join_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, values unchanged). Probe, encode argmin, per-query
     LUT, and ADC sum are all seeded/deterministic, so the 10-query
     batch is oracle-replayed end to end."""
-    emb, codes, cb, assign, cent, _ = _persisted_ivfpq(spark, sf_dir, False)
+    emb, path = _persisted_ivfpq(spark, sf_dir, False)
     q = emb.where(F.col("vec_id") < LSH_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    out = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=K, n_probe=IVF_PROBE,
-        m_subspaces=PQ_M, validate_geometry=False,
-    )
+    out = knn_join_ivfpq(q, path, k=K, n_probe=IVF_PROBE)
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
         "query_id", "rank"
     )
@@ -418,15 +401,12 @@ def q_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one SQL statement."""
     from cli_rag_spark.operators.knn import rerank_exact
 
-    emb, codes, cb, assign, cent, _ = _persisted_ivfpq(spark, sf_dir, False)
+    emb, path = _persisted_ivfpq(spark, sf_dir, False)
     q = emb.where(F.col("vec_id") < LSH_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    cand = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=RERANK_R, n_probe=IVF_PROBE,
-        m_subspaces=PQ_M, validate_geometry=False,
-    )
+    cand = knn_join_ivfpq(q, path, k=RERANK_R, n_probe=IVF_PROBE)
     out = rerank_exact(cand, q, emb, k=TUNE_K)
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
         "query_id", "rank"
@@ -451,15 +431,12 @@ def q_knn_join_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms table, and the decomposed ADC sum are all
     seeded/deterministic, so the batch is oracle-replayed end to
     end."""
-    emb, codes, cb, assign, cent, terms = _persisted_ivfpq(spark, sf_dir, True)
+    emb, path = _persisted_ivfpq(spark, sf_dir, True)
     q = emb.where(F.col("vec_id") < LSH_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    out = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=K, n_probe=IVF_PROBE,
-        m_subspaces=PQ_M, resid_terms=terms, validate_geometry=False,
-    )
+    out = knn_join_ivfpq(q, path, k=K, n_probe=IVF_PROBE)
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
         "query_id", "rank"
     )
@@ -477,13 +454,9 @@ def q_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw-vector IVFADC (locked ≥ in tests/test_pq.py). Deterministic
     end to end — residuals, argmins, terms and LUT all
     SQL-oracle-replayed."""
-    emb, codes, cb, assign, cent, terms = _persisted_ivfpq(spark, sf_dir, True)
+    emb, path = _persisted_ivfpq(spark, sf_dir, True)
     return _ranked(
-        knn_join_ivfpq(
-            _query0(emb), codes, cb, assign, cent, k=K, n_probe=IVF_PROBE,
-            m_subspaces=PQ_M, resid_terms=terms, validate_geometry=False,
-        ),
-        "est_d2",
+        knn_join_ivfpq(_query0(emb), path, k=K, n_probe=IVF_PROBE), "est_d2"
     )
 
 
@@ -492,17 +465,14 @@ def q_knn_join_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/pq.py knn_join_ivfpq with n_probe = all 8 lists — flat
     ADC is IVFADC probing every list): per-query codeword LUTs
     broadcast (Q·M·K tiny rows), ADC sums partial-aggregated per
-    (query, id) over the ~4 B/vector codes scan, per-query top-3
-    window. No embedding is read per query — the memory-bound
+    (query, id) over the scan of every list's packed codes, per-query
+    top-3 window. No embedding is read per query — the memory-bound
     complement to the compute-bound GEMM path."""
-    emb, codes, cb, assign, cent, _ = _persisted_ivfpq(spark, sf_dir, False)
+    emb, path = _persisted_ivfpq(spark, sf_dir, False)
     queries = emb.where(F.col("vec_id") < LSH_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = knn_join_ivfpq(
-        queries, codes, cb, assign, cent, k=3, n_probe=IVF_CENTROIDS,
-        m_subspaces=PQ_M, validate_geometry=False,
-    )
+    out = knn_join_ivfpq(queries, path, k=3, n_probe=IVF_CENTROIDS)
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy(
         "query_id", "rank"
     )

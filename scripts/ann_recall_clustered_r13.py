@@ -103,7 +103,6 @@ def stage_main(spark, args) -> None:
         build_ivfpq_index,
         ivfpq_index_ready,
         knn_join_ivfpq,
-        read_ivfpq_index,
     )
 
     n, dim, nq, k = args.n or 2_000_000, 64, args.nq, args.k
@@ -133,7 +132,6 @@ def stage_main(spark, args) -> None:
                           "sec": round(time.perf_counter() - t0, 2),
                           "meta": read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")}),
               flush=True)
-    codes, cb, assign, cent = read_ivfpq_index(spark, ivfpq_path)
     meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     n_probe = default_n_probe(c)
@@ -144,8 +142,7 @@ def stage_main(spark, args) -> None:
     r_ladder = [k] + args.r_ladder
     t0 = time.perf_counter()
     deep = knn_join_ivfpq(
-        queries, codes, cb, assign, cent, k=max(r_ladder),
-        n_probe=n_probe, m_subspaces=int(meta["m_subspaces"]),
+        queries, ivfpq_path, k=max(r_ladder), n_probe=n_probe
     ).localCheckpoint(eager=True)
     deep_sec = round(time.perf_counter() - t0, 2)
     raw = deep.where(F.col("rank") <= k)
@@ -219,8 +216,6 @@ def stage_residual(spark, args) -> None:
         default_rerank_depth,
         ivfpq_index_ready,
         knn_join_ivfpq,
-        read_ivfpq_index,
-        read_ivfpq_terms,
     )
 
     n, dim, nq, k = args.n or 2_000_000, 64, args.nq, args.k
@@ -252,17 +247,13 @@ def stage_residual(spark, args) -> None:
                           "sec": round(time.perf_counter() - t0, 2),
                           "meta": read_json_sidecar(spark, path, "_ivfpq_meta.json")}),
               flush=True)
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
     meta = read_json_sidecar(spark, path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     n_probe = default_n_probe(c)
     r_ladder = [k] + args.r_ladder
     t0 = time.perf_counter()
-    terms = read_ivfpq_terms(spark, path)
     deep = knn_join_ivfpq(
-        queries, codes, cb, assign, cent, k=max(r_ladder),
-        n_probe=n_probe, m_subspaces=int(meta["m_subspaces"]),
-        resid_terms=terms,
+        queries, path, k=max(r_ladder), n_probe=n_probe
     ).localCheckpoint(eager=True)
     deep_sec = round(time.perf_counter() - t0, 2)
     raw = deep.where(F.col("rank") <= k)
@@ -280,10 +271,7 @@ def stage_residual(spark, args) -> None:
     # the dispatched default chain on the residual artifact
     t0 = time.perf_counter()
     r_depth = default_rerank_depth(k, n_index, c)
-    short = knn_join_ivfpq(
-        queries, codes, cb, assign, cent, k=r_depth, n_probe=n_probe,
-        m_subspaces=int(meta["m_subspaces"]), resid_terms=terms,
-    )
+    short = knn_join_ivfpq(queries, path, k=r_depth, n_probe=n_probe)
     out = rerank_exact(short, queries, emb, k=k).localCheckpoint(eager=True)
     print(json.dumps({
         "row": "ivfpq_residual_rerank_default", "R": r_depth,
@@ -315,8 +303,6 @@ def stage_dim192(spark, args) -> None:
         default_rerank_depth,
         ivfpq_index_ready,
         knn_join_ivfpq,
-        read_ivfpq_index,
-        read_ivfpq_terms,
     )
 
     n, dim, nq, k = args.n or 2_000_000, args.dim or 192, args.nq, args.k
@@ -355,15 +341,12 @@ def stage_dim192(spark, args) -> None:
                           "sec": round(time.perf_counter() - t0, 2),
                           "meta": read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")}),
               flush=True)
-    codes2, cb2, assign2, cent2 = read_ivfpq_index(spark, ivfpq_path)
     meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     r_depth = default_rerank_depth(k, n_index, c)
     t0 = time.perf_counter()
     short = knn_join_ivfpq(
-        queries, codes2, cb2, assign2, cent2, k=r_depth,
-        n_probe=default_n_probe(c), m_subspaces=int(meta["m_subspaces"]),
-        resid_terms=read_ivfpq_terms(spark, ivfpq_path),
+        queries, ivfpq_path, k=r_depth, n_probe=default_n_probe(c)
     )
     out = rerank_exact(short, queries, emb, k=k).localCheckpoint(eager=True)
     print(json.dumps({
@@ -385,7 +368,6 @@ def stage_n8m(spark, args) -> None:
         build_ivfpq_index,
         ivfpq_index_ready,
         knn_join_ivfpq,
-        read_ivfpq_index,
     )
 
     n, dim, nq, k = args.n or 8_000_000, 64, args.nq, args.k
@@ -410,7 +392,6 @@ def stage_n8m(spark, args) -> None:
         print(json.dumps({"row": "ivfpq_build",
                           "sec": round(time.perf_counter() - t0, 2)}),
               flush=True)
-    codes, cb, assign, cent = read_ivfpq_index(spark, ivfpq_path)
     meta = read_json_sidecar(spark, ivfpq_path, "_ivfpq_meta.json")
     c = int(meta["n_centroids"])
     t0 = time.perf_counter()
@@ -419,8 +400,7 @@ def stage_n8m(spark, args) -> None:
 
     r_depth = default_rerank_depth(k, n_index, c)
     short = knn_join_ivfpq(
-        queries, codes, cb, assign, cent, k=r_depth,
-        n_probe=default_n_probe(c), m_subspaces=int(meta["m_subspaces"]),
+        queries, ivfpq_path, k=r_depth, n_probe=default_n_probe(c)
     )
     out = rerank_exact(short, queries, emb, k=k).localCheckpoint(eager=True)
     sec = round(time.perf_counter() - t0, 2)

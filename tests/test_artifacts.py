@@ -212,8 +212,11 @@ def test_sweep_treats_vanished_staging_as_live(spark, tmp_path):
 
 def test_indexes_stay_on_the_one_artifact_path():
     """Spark-free guard: no operator module opens or creates a sidecar
-    file itself (they go through sources/artifacts.py), and the content
-    fingerprint expression is defined exactly once in the package."""
+    file itself (they go through sources/artifacts.py), every index
+    child in operators/ann.py and operators/pq.py opens with an explicit
+    schema (``spark.read.schema(...).parquet``, never an inferring
+    ``spark.read.parquet(``), and the content fingerprint expression is
+    defined exactly once in the package."""
     import re
     from pathlib import Path
 
@@ -222,6 +225,11 @@ def test_indexes_stay_on_the_one_artifact_path():
         src = mod.read_text()
         for needle in ("readAllBytes", "fs.create("):
             assert needle not in src, f"{mod.name} uses {needle} directly"
+    for name in ("ann.py", "pq.py"):
+        src = (pkg / "operators" / name).read_text()
+        assert not re.search(r"\.read\s*\.parquet\(", src), (
+            f"{name} opens parquet without .schema("
+        )
     fp_expr = re.compile(r"bit_xor\(\s*F\.xxhash64\(")
     hits = [
         (mod.relative_to(pkg).as_posix(), len(fp_expr.findall(mod.read_text())))

@@ -609,10 +609,10 @@ def test_knn_join_auto_flat_adc_via_raw_ivfpq(spark, sf_dir, tmp_path):
     model hints), a raw IVFPQ artifact probed over all C lists with
     the rerank off equals knn_join_ivfpq run directly (modulo the
     contract rename est_d2 -> dist), and the executed plan scans the
-    persisted codes — never an embedding column. IVF still outranks
+    persisted lists — never an embedding column. IVF still outranks
     IVFPQ when both indexes are ready."""
     from cli_rag_spark.operators.knn import knn_join_auto
-    from cli_rag_spark.operators.pq import knn_join_ivfpq, read_ivfpq_index
+    from cli_rag_spark.operators.pq import knn_join_ivfpq
 
     emb, path = _raw_ivfpq(spark, sf_dir, tmp_path, "ivfpq_raw")
     # a literal query frame, so every file scan in the plan is the index
@@ -624,13 +624,12 @@ def test_knn_join_auto_flat_adc_via_raw_ivfpq(spark, sf_dir, tmp_path):
     )
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "est_d2" in plan  # the ADC estimate, renamed to the contract
-    assert any("ivfpq_raw/codes" in f for f in auto.inputFiles())
+    assert any("ivfpq_raw/lists" in f for f in auto.inputFiles())
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert scans and not any("embedding" in ln for ln in scans), scans
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
-    direct = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=3, n_probe=8
-    ).withColumnRenamed("est_d2", "dist")
+    direct = knn_join_ivfpq(q, path, k=3, n_probe=8).withColumnRenamed(
+        "est_d2", "dist"
+    )
     assert {tuple(r) for r in auto.collect()} == {
         tuple(r) for r in direct.collect()
     }
@@ -689,7 +688,7 @@ def test_knn_join_auto_pq_exclude_self(spark, sf_dir, tmp_path):
         q, emb, k=3, exclude_self=True, n_queries=10_000, n_index=2_000_000,
         ivfpq_path=path, n_probe=8, ivfpq_rerank=0,
     )
-    assert any("pq_self/codes" in f for f in auto.inputFiles())
+    assert any("pq_self/lists" in f for f in auto.inputFiles())
     out = auto.collect()
     assert out, "ivfpq route returned nothing"
     for r in out:
@@ -835,26 +834,14 @@ def test_knn_join_auto_routes_ivfpq(spark, sf_dir, tmp_path):
     probe width — and content verification must reject a drifted
     corpus back to LSH."""
     from cli_rag_spark.operators.knn import knn_join_auto, knn_join_lsh
-    from cli_rag_spark.operators.pq import (
-        build_ivfpq_index,
-        knn_join_ivfpq,
-        read_ivfpq_index,
-    )
+    from cli_rag_spark.operators.pq import knn_join_ivfpq
 
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    path = str(tmp_path / "ivfpq_route")
-    # residual=False: this test pins the RAW-artifact dispatch (the
-    # hand-composed comparison scores the raw LUT); the default build
-    # is residual since r14 — test_knn_join_auto_routes_residual_ivfpq
-    # covers the default
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=False
-    )
+    # residual=False: this test pins the RAW-artifact dispatch; the
+    # default build is residual since r14 —
+    # test_knn_join_auto_routes_residual_ivfpq covers the default
+    emb, path = _raw_ivfpq(spark, sf_dir, tmp_path, "ivfpq_route")
     q = _queries(emb, 5)
     big = dict(n_queries=10_000, n_index=2_000_000)  # 1.28e12 pair-ops
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
     # DEFAULT = IVFADC-R (VERDICT r12 #1): ivfpq_rerank unset resolves
     # R through default_rerank_depth(k) and exact-rescores — equal to
     # composing the operators by hand with the rule depth
@@ -864,8 +851,7 @@ def test_knn_join_auto_routes_ivfpq(spark, sf_dir, tmp_path):
     auto = knn_join_auto(q, emb, k=3, dim=64, ivfpq_path=path, **big)
     # the rule sees the cost model's n_index and the artifact's C
     short = knn_join_ivfpq(
-        q, codes, cb, assign, cent,
-        k=default_rerank_depth(3, big["n_index"], 8), n_probe=2,
+        q, path, k=default_rerank_depth(3, big["n_index"], 8), n_probe=2
     )
     reranked = rerank_exact(short, q, emb, k=3)
     assert {tuple(r) for r in auto.collect()} == {
@@ -876,7 +862,7 @@ def test_knn_join_auto_routes_ivfpq(spark, sf_dir, tmp_path):
         q, emb, k=3, dim=64, ivfpq_path=path, ivfpq_rerank=0, **big
     )
     direct = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=3, n_probe=2  # default_n_probe(8)=2
+        q, path, k=3, n_probe=2  # default_n_probe(8)=2
     ).withColumnRenamed("est_d2", "dist")
     assert {tuple(r) for r in auto_raw.collect()} == {
         tuple(r) for r in direct.collect()
@@ -892,9 +878,9 @@ def test_knn_join_auto_routes_ivfpq(spark, sf_dir, tmp_path):
         q, emb, k=3, dim=64, ivfpq_path=path, n_probe=8, ivfpq_rerank=0,
         **big,
     )
-    direct_w = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=3, n_probe=8
-    ).withColumnRenamed("est_d2", "dist")
+    direct_w = knn_join_ivfpq(q, path, k=3, n_probe=8).withColumnRenamed(
+        "est_d2", "dist"
+    )
     assert {tuple(r) for r in auto_w.collect()} == {
         tuple(r) for r in direct_w.collect()
     }
@@ -935,31 +921,18 @@ def test_rerank_exact_full_candidates_equals_knn_join(spark, sf_dir):
     assert got == want
 
 
-def test_rerank_lifts_ivfpq_recall_to_coverage(spark, sf_dir):
+def test_rerank_lifts_ivfpq_recall_to_coverage(spark, sf_dir, tmp_path):
     """The rerank's contract: recall@k after exact re-scoring equals
     the shortlist's COVERAGE of the true top-k (rerank orders exactly,
     so it finds every true neighbor the shortlist contains) — and is
     therefore >= the raw ADC ordering's recall."""
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
     from cli_rag_spark.operators.knn import rerank_exact, topk_recall
-    from cli_rag_spark.operators.pq import (
-        build_pq_codebook,
-        knn_join_ivfpq,
-        pq_encode,
-    )
+    from cli_rag_spark.operators.pq import knn_join_ivfpq
 
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    cb = build_pq_codebook(emb, 4, 16)
-    codes = pq_encode(emb, cb, 4).cache()
-    cent = seed_centroids(emb, 8)
-    assign = assign_centroids(emb, cent)
+    emb, path = _raw_ivfpq(spark, sf_dir, tmp_path, "ivfpq_cov")
     q = _queries(emb, 5)
     exact = knn_join(q, emb, k=3).localCheckpoint(eager=True)
-    short = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=12, n_probe=2
-    ).localCheckpoint(eager=True)
+    short = knn_join_ivfpq(q, path, k=12, n_probe=2).localCheckpoint(eager=True)
     raw3 = short.where(F.col("rank") <= 3)
 
     def avg_recall(approx):
@@ -976,33 +949,6 @@ def test_rerank_lifts_ivfpq_recall_to_coverage(spark, sf_dir):
     assert avg_recall(reranked) >= avg_recall(raw3) - 1e-9
 
 
-def test_knn_join_ivfpq_rejects_mismatched_codebook_geometry(spark, sf_dir):
-    """r12 guard: scoring an m=8 codebook with m_subspaces=4 does not
-    fail — F.slice mis-cuts and zip_with NULL-pads — it silently
-    returns garbage (this exact mistake produced a bogus 0.10-recall
-    measurement in the r12 rehearsal). The operator must refuse."""
-    import pytest
-
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-    from cli_rag_spark.operators.pq import (
-        build_pq_codebook,
-        knn_join_ivfpq,
-        pq_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    cb8 = build_pq_codebook(emb, 8, 16)
-    codes8 = pq_encode(emb, cb8, 8)
-    cent = seed_centroids(emb, 8)
-    assign = assign_centroids(emb, cent)
-    q = _queries(emb, 3)
-    with pytest.raises(ValueError, match="mismatched"):
-        knn_join_ivfpq(q, codes8, cb8, assign, cent, k=3, n_probe=2,
-                       m_subspaces=4)
-
-
 def test_knn_join_auto_ivfpq_rerank_option(spark, sf_dir, tmp_path):
     """ivfpq_rerank=R on the dispatched IVFPQ path: the ADC top-R
     shortlist is exact-reranked to k with true cosine in the dist
@@ -1011,26 +957,15 @@ def test_knn_join_auto_ivfpq_rerank_option(spark, sf_dir, tmp_path):
         knn_join_auto,
         rerank_exact,
     )
-    from cli_rag_spark.operators.pq import (
-        build_ivfpq_index,
-        knn_join_ivfpq,
-        read_ivfpq_index,
-    )
+    from cli_rag_spark.operators.pq import knn_join_ivfpq
 
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    path = str(tmp_path / "ivfpq_rr")
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=False
-    )
+    emb, path = _raw_ivfpq(spark, sf_dir, tmp_path, "ivfpq_rr")
     q = _queries(emb, 5)
     big = dict(n_queries=10_000, n_index=2_000_000)
     auto = knn_join_auto(
         q, emb, k=3, dim=64, ivfpq_path=path, ivfpq_rerank=12, **big
     )
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
-    short = knn_join_ivfpq(q, codes, cb, assign, cent, k=12, n_probe=2)
+    short = knn_join_ivfpq(q, path, k=12, n_probe=2)
     direct = rerank_exact(short, q, emb, k=3)
     assert {tuple(r) for r in auto.collect()} == {
         tuple(r) for r in direct.collect()
@@ -1100,8 +1035,6 @@ def test_knn_join_auto_routes_residual_ivfpq(spark, sf_dir, tmp_path):
         build_ivfpq_index,
         default_rerank_depth,
         knn_join_ivfpq,
-        read_ivfpq_index,
-        read_ivfpq_terms,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").where(
@@ -1113,12 +1046,8 @@ def test_knn_join_auto_routes_residual_ivfpq(spark, sf_dir, tmp_path):
     q = _queries(emb, 5)
     big = dict(n_queries=10_000, n_index=2_000_000)
     auto = knn_join_auto(q, emb, k=3, dim=64, ivfpq_path=path, **big)
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
-    terms = read_ivfpq_terms(spark, path)
     short = knn_join_ivfpq(
-        q, codes, cb, assign, cent,
-        k=default_rerank_depth(3, big["n_index"], 8), n_probe=2,
-        resid_terms=terms,
+        q, path, k=default_rerank_depth(3, big["n_index"], 8), n_probe=2
     )
     direct = rerank_exact(short, q, emb, k=3)
     assert {tuple(r) for r in auto.collect()} == {
@@ -1128,9 +1057,9 @@ def test_knn_join_auto_routes_residual_ivfpq(spark, sf_dir, tmp_path):
     auto_raw = knn_join_auto(
         q, emb, k=3, dim=64, ivfpq_path=path, ivfpq_rerank=0, **big
     )
-    direct_raw = knn_join_ivfpq(
-        q, codes, cb, assign, cent, k=3, n_probe=2, resid_terms=terms
-    ).withColumnRenamed("est_d2", "dist")
+    direct_raw = knn_join_ivfpq(q, path, k=3, n_probe=2).withColumnRenamed(
+        "est_d2", "dist"
+    )
     assert {tuple(r) for r in auto_raw.collect()} == {
         tuple(r) for r in direct_raw.collect()
     }

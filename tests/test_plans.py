@@ -218,14 +218,22 @@ def test_lm_perplexity_hybrid_broadcast_head(spark, sf_dir):
 
 def test_pq_family_plan_shapes(spark, sf_dir):
     """The r4 ANN additions must keep the PQ scale contract: every
-    join broadcast (codes⋈LUT, codes⋈assign — the big side never
+    join broadcast (lists⋈probe, codes⋈LUT — the big side never
     shuffles for a join), the only wide exchanges the partial-agg
-    groupBys / windows, and never a cartesian or sort-merge join."""
+    groupBys / windows, and never a cartesian or sort-merge join. The
+    IVFPQ artifact's lists carry their own codes: one scan of
+    ``lists``, and no ``assign`` child read."""
     for name in ("ivfpq_topk", "knn_join_pq"):
-        plan = _plan(spark, sf_dir, name)
+        df = entrymod.queries()[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, name
         assert "SortMergeJoin" not in plan, name
         assert "BroadcastHashJoin" in plan, name
+        files = df.inputFiles()
+        assert not any("/assign/" in f for f in files), name
+        assert any("/lists/" in f for f in files), name
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+        assert sum("codes#" in ln for ln in scans) == 1, name
     # zorder write: the clustering shuffle is ONE range partitioning
     plan = _plan(spark, sf_dir, "zorder_roundtrip")
     assert plan.count("Exchange rangepartitioning") == 1

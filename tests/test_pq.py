@@ -3,16 +3,17 @@ semantics, ADC estimate quality, determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
 from cli_rag_spark.operators.pq import (
     build_ivfpq_index,
     build_pq_codebook,
+    ivfpq_index_ready,
     knn_join_ivfpq,
     l2_sq,
     pq_encode,
-    read_ivfpq_index,
 )
 from cli_rag_spark.sources.artifacts import read_json_sidecar
 from cli_rag_spark.sources.documents import load_table
@@ -24,18 +25,51 @@ def _ivfpq_meta(spark, path):
     return read_json_sidecar(spark, path, "_ivfpq_meta.json")
 
 
+def _rewrite_ivfpq_sidecar(path, edit):
+    """Rewrite the IVFPQ sidecar at ``path`` through ``edit(meta)``
+    (simulating an older build's format), dropping the local-FS
+    checksum the rewrite invalidates."""
+    import json as _json
+    import os
+
+    meta_file = os.path.join(path, "_ivfpq_meta.json")
+    with open(meta_file) as f:
+        meta = _json.load(f)
+    edit(meta)
+    with open(meta_file, "w") as f:
+        _json.dump(meta, f)
+    crc = os.path.join(path, "._ivfpq_meta.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
 def _queries(emb, qids):
     return emb.where(F.col("vec_id").isin(list(qids))).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
 
 
-def _seeded_frames(emb, n_centroids=8):
-    """(codes, codebook, assign, centroids) of the seeded raw IVFPQ
-    geometry, computed live from ``emb``."""
-    cb = build_pq_codebook(emb, M, KC)
-    cent = seed_centroids(emb, n_centroids)
-    return pq_encode(emb, cb, M), cb, assign_centroids(emb, cent), cent
+@pytest.fixture(scope="module")
+def ivfpq_paths(spark, sf_dir, tmp_path_factory):
+    """{residual: path} of the seeded C=8, M × KC IVFPQ artifacts of the
+    fixture, raw (False) and residual (True), built once per module.
+    Tests that rewrite an artifact copy it first."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    root = tmp_path_factory.mktemp("ivfpq")
+    paths = {}
+    for residual in (False, True):
+        paths[residual] = str(root / f"seeded_{residual}")
+        build_ivfpq_index(
+            emb, paths[residual], n_centroids=8, m_subspaces=M, k_codes=KC,
+            residual=residual,
+        )
+    return paths
+
+
+def _lists(spark, path):
+    """The artifact's ``lists`` child: one (cid, vec_id, codes) row per
+    vector."""
+    return spark.read.parquet(f"{path}/lists")
 
 
 def _exact_l2_top(emb, qid, k):
@@ -96,17 +130,15 @@ def test_encode_codewords_are_fixed_points(spark, sf_dir):
     ).count() == 0
 
 
-def test_adc_estimate_tracks_exact_distance(spark, sf_dir):
+def test_adc_estimate_tracks_exact_distance(spark, sf_dir, ivfpq_paths):
     """ADC is approximate — assert the rank correlation that makes it
     usable: the true nearest neighbor set is substantially recovered
     (recall@50 ≥ 0.3 with seeded codebooks; measured 0.42 at sf0.01)
     and the query vector itself lands in the ADC top set. Flat ADC is
-    knn_join_ivfpq probing all C lists."""
+    knn_join_ivfpq probing all C lists of a raw artifact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    codes, cb, assign, cent = _seeded_frames(emb)
     adc_top = _adc_tops(
-        knn_join_ivfpq(_queries(emb, [0]), codes, cb, assign, cent, k=50,
-                       n_probe=8, m_subspaces=M)
+        knn_join_ivfpq(_queries(emb, [0]), ivfpq_paths[False], k=50, n_probe=8)
     )[0]
     assert 0 in adc_top
     assert len(set(adc_top) & set(_exact_l2_top(emb, 0, 50))) >= 15
@@ -124,39 +156,41 @@ def test_encode_deterministic_across_partitionings(spark, sf_dir):
     assert a == b
 
 
-def test_persisted_index_round_trip_and_validation(spark, sf_dir, tmp_path):
+def test_persisted_index_round_trip_and_validation(
+    spark, sf_dir, tmp_path, ivfpq_paths
+):
     """A raw (residual=False) build_ivfpq_index persists exactly the
     seeded codebook and the codes the on-the-fly encode computes — the
-    flat-PQ index it replaces — and the O(1) metadata check rejects a
-    geometry-mismatched open before any Spark job runs."""
-    import pytest
-
-    from cli_rag_spark.operators.pq import build_ivfpq_index, read_ivfpq_index
+    flat-PQ index it replaces — packed one ``lists`` row per vector
+    (N rows, codes in subspace order) with no assign or codes child;
+    a path that is not an artifact is refused before any Spark job."""
+    import os
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "pq_index")
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC, residual=False
-    )
-    codes, cb, _, _ = read_ivfpq_index(spark, path, m_subspaces=M, k_codes=KC)
+    path = ivfpq_paths[False]
     seeded = build_pq_codebook(emb, M, KC)
     want = sorted(
         (r.vec_id, r.m, r.code) for r in pq_encode(emb, seeded, M).collect()
     )
-    got = sorted((r.vec_id, r.m, r.code) for r in codes.collect())
+    lists = _lists(spark, path)
+    got = sorted(
+        (r.vec_id, r.m, r.code)
+        for r in lists.select(
+            "vec_id", F.posexplode("codes").alias("m", "code")
+        ).collect()
+    )
     assert got == want
+    assert lists.count() * M == len(want)
+    assert not {"assign", "codes"} & set(os.listdir(path))
+    cb = spark.read.parquet(f"{path}/codebook")
     assert sorted(
         (r.m, r.code, tuple(r.cvec)) for r in cb.collect()
     ) == sorted((r.m, r.code, tuple(r.cvec)) for r in seeded.collect())
 
-    with pytest.raises(ValueError, match="m_subspaces=4"):
-        read_ivfpq_index(spark, path, m_subspaces=8)
-    with pytest.raises(ValueError, match="k_codes=16"):
-        read_ivfpq_index(spark, path, k_codes=32)
-    with pytest.raises(ValueError, match="dim="):
-        read_ivfpq_index(spark, path, dim=1024)
     with pytest.raises(ValueError, match="not a build_ivfpq_index output"):
-        read_ivfpq_index(spark, str(tmp_path / "nowhere"))
+        knn_join_ivfpq(
+            _queries(emb, [0]), str(tmp_path / "nowhere"), k=3, n_probe=2
+        )
 
 
 def _mean_recall_at_50(spark, emb, path, n_probe, qids=range(5)):
@@ -164,15 +198,8 @@ def _mean_recall_at_50(spark, emb, path, n_probe, qids=range(5)):
     over several query vectors — a single query's recall is too noisy
     to compare codebooks on. A residual artifact is scored with its
     persisted terms."""
-    from cli_rag_spark.operators.pq import read_ivfpq_terms
-
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
     tops = _adc_tops(
-        knn_join_ivfpq(
-            _queries(emb, qids), codes, cb, assign, cent, k=50,
-            n_probe=n_probe, m_subspaces=M,
-            resid_terms=read_ivfpq_terms(spark, path),
-        )
+        knn_join_ivfpq(_queries(emb, qids), path, k=50, n_probe=n_probe)
     )
     return sum(
         len(set(tops[qid]) & set(_exact_l2_top(emb, qid, 50))) / 50.0
@@ -180,7 +207,9 @@ def _mean_recall_at_50(spark, emb, path, n_probe, qids=range(5)):
     ) / len(list(qids))
 
 
-def test_refined_codebook_recall_at_least_seeded(spark, sf_dir, tmp_path):
+def test_refined_codebook_recall_at_least_seeded(
+    spark, sf_dir, tmp_path, ivfpq_paths
+):
     """Lloyd-refining the per-subspace codebooks (L2 metric, the one
     the encoder uses) must not lose recall vs the seeded codebook —
     the VERDICT r3 acceptance bar for the refine path. Measured at
@@ -188,14 +217,15 @@ def test_refined_codebook_recall_at_least_seeded(spark, sf_dir, tmp_path):
     artifacts): seeded 0.384, refined(1 iter) 0.436, refined(2)
     0.408."""
     emb = load_table(spark, sf_dir, "embeddings")
-    recall = {}
-    for iters in (0, 1):
-        path = str(tmp_path / f"pq_refine{iters}")
-        build_ivfpq_index(
-            emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
-            refine_iters=iters, residual=False,
-        )
-        recall[iters] = _mean_recall_at_50(spark, emb, path, n_probe=8)
+    path = str(tmp_path / "pq_refine1")
+    build_ivfpq_index(
+        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
+        refine_iters=1, residual=False,
+    )
+    recall = {
+        iters: _mean_recall_at_50(spark, emb, p, n_probe=8)
+        for iters, p in ((0, ivfpq_paths[False]), (1, path))
+    }
     assert recall[1] >= recall[0], recall
 
 
@@ -217,60 +247,57 @@ def test_refined_codebook_deterministic(spark, sf_dir):
     assert a == b
 
 
-def test_ivfpq_scores_only_probed_lists(spark, sf_dir):
+def test_ivfpq_scores_only_probed_lists(spark, sf_dir, ivfpq_paths):
     """Every IVFADC hit must come from a probed coarse list (the
     pruning contract), and the query vector itself must be found
     (vec_id 0 is both a centroid and its own nearest code)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    codes, cb, assign, cent = _seeded_frames(emb)
-    hits = knn_join_ivfpq(
-        _queries(emb, [0]), codes, cb, assign, cent, k=50, n_probe=2,
-        m_subspaces=M,
-    )
+    path = ivfpq_paths[False]
+    hits = knn_join_ivfpq(_queries(emb, [0]), path, k=50, n_probe=2)
     got_cids = {
         r.cid
-        for r in hits.join(assign, "vec_id").select("cid").distinct().collect()
+        for r in hits.join(_lists(spark, path), "vec_id")
+        .select("cid").distinct().collect()
     }
     assert len(got_cids) <= 2
     assert 0 in {r.vec_id for r in hits.collect()}
 
 
-def test_residual_ivfpq_recall_at_least_raw(spark, sf_dir, tmp_path):
+def test_residual_ivfpq_recall_at_least_raw(spark, sf_dir, ivfpq_paths):
     """Residual encoding must not lose recall vs raw-vector IVFADC —
     the point of Jégou §IV's formulation (codewords resolve within-
     list displacement). Measured at sf0.01, mean recall@50 over query
     ids 0-4 at n_probe 2 of 8: residual 0.532 vs raw 0.508."""
     emb = load_table(spark, sf_dir, "embeddings")
-    recall = {}
-    for residual in (False, True):
-        path = str(tmp_path / f"ivfpq_residual_{residual}")
-        build_ivfpq_index(
-            emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
-            residual=residual,
-        )
-        recall[residual] = _mean_recall_at_50(spark, emb, path, n_probe=2)
+    recall = {
+        residual: _mean_recall_at_50(spark, emb, path, n_probe=2)
+        for residual, path in ivfpq_paths.items()
+    }
     assert recall[True] >= recall[False], recall
 
 
-def test_ivfpq_topk_explicit_centroids(spark, sf_dir):
-    """A refined coarse quantizer passed with its matching assignment
-    is honored as THE probe geometry: every hit's list id must be
-    probed under those refined centroids (ADVICE r4: a persisted
-    index's actual coarse quantizer travels with its assign frame)."""
+def test_ivfpq_topk_explicit_centroids(spark, sf_dir, tmp_path):
+    """A Lloyd-refined coarse quantizer persisted with its lists is
+    honored as THE probe geometry: every hit's list id must be probed
+    under those refined centroids (ADVICE r4: a persisted index's
+    actual coarse quantizer travels with its lists)."""
     from cli_rag_spark.functions.vectors import cosine_distance
-    from cli_rag_spark.operators.ann import kmeans_refine
 
     emb = load_table(spark, sf_dir, "embeddings")
-    codes, cb, _, seeded = _seeded_frames(emb)
-    refined = kmeans_refine(emb, seeded, n_iters=1)
-    assign = assign_centroids(emb, refined)
-    q = _queries(emb, [0])
-    out = knn_join_ivfpq(
-        q, codes, cb, assign, refined, k=10, n_probe=2, m_subspaces=M
+    path = str(tmp_path / "ivfpq_refined_coarse")
+    build_ivfpq_index(
+        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC,
+        coarse_refine_iters=1, residual=False,
     )
+    refined = spark.read.parquet(f"{path}/centroids")
+    assert {tuple(r.cvec) for r in refined.collect()} != {
+        tuple(r.cvec) for r in seed_centroids(emb, 8).collect()
+    }
+    q = _queries(emb, [0])
+    out = knn_join_ivfpq(q, path, k=10, n_probe=2)
     hit_cids = {
         r.cid
-        for r in assign.join(
+        for r in _lists(spark, path).join(
             out.select("vec_id"), "vec_id"
         ).select("cid").collect()
     }
@@ -319,71 +346,121 @@ def test_default_pq_geometry_pinned():
         default_pq_geometry(64, -1)
 
 
-def test_build_ivfpq_index_roundtrip_and_validation(spark, sf_dir, tmp_path):
-    """The persisted IVFPQ artifact (r12): build writes the four
-    children + meta; read returns frames that reproduce the live
-    computation exactly; geometry mismatches are rejected O(1)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
-    from cli_rag_spark.operators.pq import (
-        build_ivfpq_index,
-        build_pq_codebook,
-        ivfpq_index_ready,
-        knn_join_ivfpq,
-        pq_encode,
-        read_ivfpq_index,
-    )
-    from cli_rag_spark.sources.documents import load_table
-
+def test_build_ivfpq_index_roundtrip_and_validation(spark, sf_dir, ivfpq_paths):
+    """The persisted IVFPQ artifact (r12): every child reproduces the
+    live computation exactly — the seeded quantizer, the seeded
+    codebook, and per vector its assigned list with its codes — and the
+    dispatch gate validates the build dim from the sidecar alone."""
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
-    path = str(tmp_path / "ivfpq")
-    # residual=False: this test pins the RAW-vector roundtrip (the
-    # live recomputation below scores through the raw LUT); the
-    # default build is residual since r14
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=False
-    )
+    # the raw artifact: the live recomputation below encodes raw vectors
+    path = ivfpq_paths[False]
     assert ivfpq_index_ready(spark, path, 64)
-    assert ivfpq_index_ready(spark, path, 64, m_subspaces=4)
     assert not ivfpq_index_ready(spark, path, 32)
-    assert not ivfpq_index_ready(spark, path, 64, m_subspaces=8)
-    assert not ivfpq_index_ready(spark, str(tmp_path / "nope"), 64)
-    with pytest.raises(ValueError, match="m_subspaces=4"):
-        read_ivfpq_index(spark, path, m_subspaces=8)
-    with pytest.raises(ValueError, match="n_centroids=8"):
-        read_ivfpq_index(spark, path, n_centroids=16)
+    assert not ivfpq_index_ready(spark, path + "_nope", 64)
 
-    codes, cb, assign, cent = read_ivfpq_index(
-        spark, path, m_subspaces=4, k_codes=16, dim=64, n_centroids=8
+    cb_live = build_pq_codebook(emb, 4, 16)
+    cent_live = seed_centroids(emb, 8)
+    codes_live = {}
+    for r in pq_encode(emb, cb_live, 4).collect():
+        codes_live.setdefault(r.vec_id, {})[r.m] = r.code
+    live = {
+        (r.cid, r.vec_id, tuple(codes_live[r.vec_id][m] for m in range(4)))
+        for r in assign_centroids(emb, cent_live).collect()
+    }
+    persisted = {
+        (r.cid, r.vec_id, tuple(r.codes))
+        for r in _lists(spark, path).collect()
+    }
+    assert persisted == live
+
+    def rows(df, *cols):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        )
+
+    assert rows(spark.read.parquet(f"{path}/codebook"), "m", "code", "cvec") \
+        == rows(cb_live, "m", "code", "cvec")
+    assert rows(spark.read.parquet(f"{path}/centroids"), "cid", "cvec") == rows(
+        cent_live.select("cid", F.col("cvec").cast("array<double>")),
+        "cid", "cvec",
     )
     q = emb.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    persisted = {
-        tuple(r)
-        for r in knn_join_ivfpq(q, codes, cb, assign, cent, k=3, n_probe=2).collect()
-    }
-    # live recomputation from the same seeded artifacts
-    cb_live = build_pq_codebook(emb, 4, 16)
-    cent_live = seed_centroids(emb, 8)
-    live = {
-        tuple(r)
-        for r in knn_join_ivfpq(
-            q,
-            pq_encode(emb, cb_live, 4),
-            cb_live,
-            assign_centroids(emb, cent_live),
-            cent_live,
-            k=3,
-            n_probe=2,
-        ).collect()
-    }
-    assert persisted == live
+    assert knn_join_ivfpq(q, path, k=3, n_probe=2).count() == 12
+
+
+def test_ivfpq_open_runs_no_spark_job(spark, sf_dir, ivfpq_paths):
+    """The sidecar records every child's read-back schema, so opening a
+    raw or a residual artifact and building the search frame infers
+    nothing and runs no Spark job; the recorded schema is the one
+    inference would find."""
+    import uuid
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = _queries(emb, [0, 1])
+    sc = spark.sparkContext
+    group = f"ivfpq_open_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "knn_join_ivfpq plan")
+    try:
+        frames = [
+            knn_join_ivfpq(q, path, k=3, n_probe=2)
+            for path in ivfpq_paths.values()
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert all(f.columns == ["query_id", "vec_id", "est_d2", "rank"]
+               for f in frames)
+    path = ivfpq_paths[True]
+    schemas = _ivfpq_meta(spark, path)["schemas"]
+    assert sorted(schemas) == ["centroids", "codebook", "lists", "resid_terms"]
+    assert sorted(_ivfpq_meta(spark, ivfpq_paths[False])["schemas"]) == [
+        "centroids", "codebook", "lists"
+    ]
+    for name, schema in schemas.items():
+        assert spark.read.parquet(f"{path}/{name}").schema.jsonValue() == schema
+
+
+def test_ivfpq_stale_sidecar_rebuilds_and_is_never_probed(
+    spark, sf_dir, tmp_path, ivfpq_paths
+):
+    """An artifact whose sidecar lacks the version and the recorded
+    child schemas (the older layout's sidecar) is not ready for
+    dispatch — the dispatcher falls back instead of probing it — is
+    refused by knn_join_ivfpq, and is rebuilt by a reuse build."""
+    import shutil
+
+    from cli_rag_spark.operators.knn import knn_join_auto
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "stale")
+    shutil.copytree(ivfpq_paths[False], path)
+
+    def drop(meta):
+        del meta["schemas"], meta["version"]
+
+    _rewrite_ivfpq_sidecar(path, drop)
+    assert not ivfpq_index_ready(spark, path, 64)
+    q = _queries(emb, [0, 1])
+    with pytest.raises(ValueError, match="rebuild"):
+        knn_join_ivfpq(q, path, k=3, n_probe=2)
+    auto = knn_join_auto(
+        q, emb, k=3, dim=64, ivfpq_path=path,
+        n_queries=10_000, n_index=2_000_000,
+    )
+    assert not any("stale" in f for f in auto.inputFiles())
+    build_ivfpq_index(
+        emb, path, n_centroids=8, m_subspaces=M, k_codes=KC, residual=False,
+        reuse_if_exists=True,
+    )
+    meta = _ivfpq_meta(spark, path)
+    assert meta["version"] == 2 and "schemas" in meta
+    assert ivfpq_index_ready(spark, path, 64)
 
 
 def test_build_ivfpq_index_empty_input_raises(spark, tmp_path):
@@ -475,7 +552,9 @@ def test_pq_encode_gemm_matches_hof(spark, sf_dir):
     assert hof == gemm
 
 
-def test_build_ivfpq_residual_flag_default_and_optout(spark, sf_dir, tmp_path):
+def test_build_ivfpq_residual_flag_default_and_optout(
+    spark, sf_dir, tmp_path, ivfpq_paths
+):
     """The DEFAULT build is residual-encoded (r14, VERDICT r13 #1 —
     residual books ~double shortlist coverage at every R on clustered
     geometry and raw codes rank a home list at noise level), and the
@@ -493,46 +572,30 @@ def test_build_ivfpq_residual_flag_default_and_optout(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivfpq_default_flag")
     build_ivfpq_index(emb, path, n_centroids=8, m_subspaces=4, k_codes=16)
     assert _ivfpq_meta(spark, path)["residual"] is True
-    raw_path = str(tmp_path / "ivfpq_raw_flag")
-    build_ivfpq_index(
-        emb, raw_path, n_centroids=8, m_subspaces=4, k_codes=16,
-        residual=False,
-    )
-    assert _ivfpq_meta(spark, raw_path)["residual"] is False
+    assert _ivfpq_meta(spark, ivfpq_paths[False])["residual"] is False
 
 
 def test_residual_adc_terms_persisted_matches_on_the_fly(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivfpq_paths
 ):
     """The r15 decomposition's query-independent terms table (VERDICT
     r14 #1): a residual build persists ``resid_terms`` = [cid, m,
-    code, 2·c_m·r + r·r] and read_ivfpq_terms returns it; the values
-    are bit-identical to residual_adc_terms derived from the same
-    persisted codebook + centroids, so knn_join_ivfpq scores the same
-    with either frame; a raw artifact has no terms child and the
-    reader answers None."""
-    from pyspark.sql import functions as F
+    code, 2·c_m·r + r·r], bit-identical to residual_adc_terms derived
+    from the same persisted codebook + centroids, and knn_join_ivfpq
+    scores with it; a raw artifact has no terms child and its sidecar
+    says so."""
+    import os
 
-    from cli_rag_spark.operators.pq import (
-        build_ivfpq_index,
-        knn_join_ivfpq,
-        read_ivfpq_index,
-        read_ivfpq_terms,
-        residual_adc_terms,
-    )
-    from cli_rag_spark.sources.documents import load_table
+    from cli_rag_spark.operators.pq import residual_adc_terms
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
-    path = str(tmp_path / "ivfpq_terms")
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_subspaces=4, k_codes=16, residual=True
-    )
+    path = ivfpq_paths[True]
     assert _ivfpq_meta(spark, path)["resid_terms"] is True
-    codes, cb, assign, cent = read_ivfpq_index(spark, path)
-    persisted = read_ivfpq_terms(spark, path)
-    assert persisted is not None
+    cb = spark.read.parquet(f"{path}/codebook")
+    cent = spark.read.parquet(f"{path}/centroids")
+    persisted = spark.read.parquet(f"{path}/resid_terms")
     on_the_fly = {
         tuple(r) for r in residual_adc_terms(cb, cent).collect()
     }
@@ -541,23 +604,10 @@ def test_residual_adc_terms_persisted_matches_on_the_fly(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    with_persisted, with_derived = (
-        {
-            tuple(r)
-            for r in knn_join_ivfpq(
-                q, codes, cb, assign, cent, k=5, n_probe=2, m_subspaces=4,
-                resid_terms=terms,
-            ).collect()
-        }
-        for terms in (persisted, residual_adc_terms(cb, cent))
-    )
-    assert with_persisted == with_derived and len(with_persisted) == 15
-    raw_path = str(tmp_path / "ivfpq_terms_raw")
-    build_ivfpq_index(
-        emb, raw_path, n_centroids=8, m_subspaces=4, k_codes=16,
-        residual=False,
-    )
-    assert read_ivfpq_terms(spark, raw_path) is None
+    assert knn_join_ivfpq(q, path, k=5, n_probe=2).count() == 15
+    raw_path = ivfpq_paths[False]
+    assert _ivfpq_meta(spark, raw_path)["resid_terms"] is False
+    assert not os.path.exists(f"{raw_path}/resid_terms")
 
 
 def test_ivfpq_reuse_if_exists_skips_rebuild_on_identical_input(
@@ -644,14 +694,7 @@ def test_ivfpq_reuse_if_exists_rebuilds_on_param_or_terms_mismatch(
     with open(meta_file) as f:
         assert _json.load(f)["n_centroids"] == 4
     # (b) simulate a pre-r15 residual build: resid_terms flag stripped
-    with open(meta_file) as f:
-        meta = _json.load(f)
-    meta["resid_terms"] = False
-    with open(meta_file, "w") as f:
-        _json.dump(meta, f)
-    crc = os.path.join(path, "._ivfpq_meta.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _rewrite_ivfpq_sidecar(path, lambda meta: meta.update(resid_terms=False))
     build_ivfpq_index(
         emb, path, n_centroids=4, m_subspaces=4, k_codes=16,
         residual=True, reuse_if_exists=True,
