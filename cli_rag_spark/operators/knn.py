@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cli_rag_spark.deploy import ensure_package_on_executors
 from cli_rag_spark.functions.vectors import (
     cosine_distance,
     dot,
@@ -74,6 +75,44 @@ def knn_join(
         .where(F.col("rank") <= k)
         .select(query_id, index_id, dist_col, "rank")
     )
+
+
+def _topk_rows(dist, ids, k: int):
+    """Per-row top-``k`` of a (queries × index rows) distance block by
+    (dist, id) — the total order :func:`knn_join`'s window ranks by.
+    Returns the kept ``(row, col)`` index pairs, row by row in that
+    order, with non-finite distances dropped. ``dist`` is modified in
+    place (NaN → +inf).
+
+    Partition → survivors → lexsort: ``np.partition`` finds each row's
+    k-th smallest distance, every column at or below it survives (so a
+    tie at the boundary keeps all its members and the id tiebreak
+    decides among them), and one ``np.lexsort`` by (row, dist, id)
+    orders the survivors before each row is cut at k. NaN distances
+    (zero-norm vectors) become +inf first: they sort last and are
+    dropped by the isfinite filter, never poisoning the k-th threshold.
+    Worst case is an all-tied row, which keeps the whole row — no more
+    work than a full per-row sort and no more memory than an id-ordered
+    copy of the block. Exactly ``min(k, n_cols)`` pairs per row before
+    the isfinite filter, so the output stays bounded on duplicate-heavy
+    data."""
+    import numpy as np
+
+    top = min(k, dist.shape[1])
+    if top <= 0:
+        none = np.empty(0, dtype=np.intp)
+        return none, none
+    dist[np.isnan(dist)] = np.inf
+    kth = np.partition(dist, top - 1, axis=1)[:, top - 1]
+    rows, cols = np.nonzero(dist <= kth[:, None])
+    d = dist[rows, cols]
+    order = np.lexsort((ids[cols], d, rows))
+    rows, cols, d = rows[order], cols[order], d[order]
+    # rows are sorted, so a survivor's rank is its offset from the
+    # first survivor of its row
+    rank = np.arange(len(rows)) - np.searchsorted(rows, rows)
+    keep = (rank < top) & np.isfinite(d)
+    return rows[keep], cols[keep]
 
 
 def knn_join_gemm(
@@ -202,7 +241,7 @@ def knn_join_gemm(
                 with np.errstate(divide="ignore", invalid="ignore"):
                     dist = 1.0 - (qm @ mat.T) / np.outer(qn, inorm)
                 if round_digits is not None:
-                    # round BEFORE the per-batch argpartition so the
+                    # round BEFORE the per-batch top-k cut so the
                     # candidate cut and the final global ranking (also
                     # on rounded values) agree at tie boundaries — an
                     # unrounded cut could drop a candidate that ties
@@ -210,29 +249,19 @@ def knn_join_gemm(
                     dist = np.round(dist, round_digits)
                 if exclude_self:
                     dist[qi[:, None] == ids[None, :]] = np.inf
-                top = min(k, dist.shape[1])
                 # batch-local top-k by the SAME total order the final
-                # window uses — (dist, id) lexicographic — via a
-                # stable double argsort: columns pre-ordered by id,
-                # then a stable sort on dist keeps id order within
-                # ties. Exactly k rows per (query, batch) — bounded
-                # output even on duplicate-heavy data — and ties at
-                # the kth distance resolve identically to knn_join.
-                # NaN distances (zero-norm vectors) sort last and are
-                # dropped by the isfinite filter, never poisoning the
-                # cut the way a NaN kth-threshold would.
-                id_order = np.argsort(ids)
-                sel = id_order[
-                    np.argsort(dist[:, id_order], axis=1, kind="stable")[:, :top]
-                ]
-                rows_q = np.repeat(qi, top)
-                rows_i = ids[sel].ravel()
-                rows_d = np.take_along_axis(dist, sel, axis=1).ravel()
-                keep = np.isfinite(rows_d)
+                # window uses, (dist, id): partition → survivors ≤ the
+                # kth distance → lexsort, cut at k (_topk_rows). Ties
+                # at the kth distance resolve identically to knn_join;
+                # an all-tied row costs no more than a full sort
+                r, c = _topk_rows(dist, ids, k)
                 yield pd.DataFrame(
-                    {"query_id": rows_q[keep], "vec_id": rows_i[keep], "dist": rows_d[keep]}
+                    {"query_id": qi[r], "vec_id": ids[c], "dist": dist[r, c]}
                 )
 
+    # score calls the module-level _topk_rows, which executor workers
+    # unpickle by reference: they must be able to import the package
+    ensure_package_on_executors(queries.sparkSession)
     cand = src.mapInPandas(score, "query_id long, vec_id long, dist double")
     dist = F.col("dist")
     if round_digits is not None:
@@ -914,6 +943,17 @@ def ndcg_at_k(
 # are at the job floor and the expression form wins by staying
 # whole-stage-codegen JVM with zero Python workers; above it GEMM is
 # strictly faster.
+# Re-measured with the partial top-k GEMM kernel (sf0.1, 2000 index
+# rows, dim 64, k 8, local[4], cached inputs, noop writes, 7
+# interleaved reps per point, 2 runs per kernel, steal ≤ 0.01 CPU-s):
+# expression / GEMM medians were 460-469 / 169-188 ms at Q=16 (2.0e6
+# pair-ops), 725-749 / 152-159 ms at Q=31 (4.0e6) and 1,366-1,408 /
+# 152-174 ms at Q=62 (7.9e6), with the old full-argsort kernel and
+# the new one alike. The cheaper kernel did not move the crossover:
+# at these shapes a batch block is ≤ 62 rows and its selection is
+# noise next to the job floor. On a 4-core host the crossover already
+# sits below 2e6 on both kernels; retuning the constant would move
+# dispatch pins and plan shapes, so it is left as measured in r9.
 EXPR_MAX_PAIR_OPS = 4_000_000
 # GEMM_MAX_QUERIES — knn_join_gemm collects the query side to the
 # driver (its own hard cap, ~0.5 GB at 1M x dim 64).
@@ -1038,10 +1078,13 @@ def knn_join_auto(
     unit-normalized vectors) — ranks, not raw scores, are the
     cross-strategy contract on the approximate paths.
 
-    Shape discovery costs at most three tiny jobs (a count per side
-    plus one row for dim), all skippable by passing ``n_queries`` /
-    ``n_index`` / ``dim`` — at 100 TB those numbers come from table
-    metadata, not a scan. The index gates read sidecars only, no
+    Shape discovery fires three eager actions — one ``first()`` row
+    for dim and a count per side — each skippable by passing ``dim`` /
+    ``n_index`` / ``n_queries`` (at 100 TB those numbers come from
+    table metadata, not a scan). A limit-style action can take more
+    than one job, and the GEMM route adds its query collect: a traced
+    rag_exact op counts 6 eager jobs (``knn.eager_jobs``) of its 8
+    knn jobs. The index gates read sidecars only, no
     Spark job. IVF is only eligible when ``ivf_path`` holds an index
     that :func:`~cli_rag_spark.operators.ann.ivf_index_ready`
     validates against ``n_centroids`` (resolved from the sidecar when

@@ -117,6 +117,22 @@ def test_gemm_tie_boundary_matches_window_path(spark):
     assert [r[1] for r in sorted(b, key=lambda r: r[3])] == [0, 1, 2]
 
 
+def test_gemm_heavy_ties_across_batches_and_blocks(spark, sf_dir):
+    """Many queries, distances rounded to 2 digits (heavily tied) and
+    self-matches excluded: with the index in 7 partitions and 16-query
+    blocks, kth-distance ties straddle both batch and query-block
+    boundaries, and the GEMM path must still return exactly
+    knn_join's rows."""
+    emb = load_table(spark, sf_dir, "embeddings").repartition(7)
+    q = _queries(emb, 60)
+    a = sorted(map(tuple, knn_join(q, emb, k=5, exclude_self=True, round_digits=2).collect()))
+    b = sorted(map(tuple, knn_join_gemm(
+        q, emb, k=5, exclude_self=True, round_digits=2, queries_per_block=16
+    ).collect()))
+    assert len(a) == 60 * 5
+    assert a == b
+
+
 def test_gemm_zero_norm_vectors_dont_poison_batch(spark):
     """A zero-norm index vector scores NaN against every query; the
     batch-local cut must still keep the finite neighbors (a NaN kth

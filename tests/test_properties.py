@@ -8,11 +8,13 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cli_rag_spark.operators.chunk import cut_clean, cut_reference
 from cli_rag_spark.operators.embed import mock_embed_py
+from cli_rag_spark.operators.knn import _topk_rows
 
 texts = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF), max_size=400
@@ -114,6 +116,56 @@ def test_cosine_scale_invariance(c, a):
     if _norm(a) == 0 or _norm(scaled) == 0:
         return
     assert abs(_cos_dist(a, scaled)) < 1e-6
+
+
+@st.composite
+def _distance_blocks(draw):
+    """A (rows × cols) distance block as the GEMM kernel sees it after
+    rounding: heavy ties (1–2 digits), NaN cells and whole NaN rows
+    (zero-norm vectors), +inf cells (exclude_self), rows with fewer
+    than k finite values, unique but unsorted ids, and k up to past
+    the column count."""
+    n_rows = draw(st.integers(min_value=1, max_value=6))
+    n_cols = draw(st.integers(min_value=1, max_value=30))
+    digits = draw(st.integers(min_value=1, max_value=2))
+    cell = st.one_of(
+        st.floats(min_value=0.0, max_value=2.0).map(lambda x: round(x, digits)),
+        st.just(math.nan),
+        st.just(math.inf),
+    )
+    dist = np.array(
+        draw(st.lists(cell, min_size=n_rows * n_cols, max_size=n_rows * n_cols)),
+        dtype=np.float64,
+    ).reshape(n_rows, n_cols)
+    nan_rows = draw(st.lists(st.booleans(), min_size=n_rows, max_size=n_rows))
+    dist[np.array(nan_rows)] = math.nan
+    ids = np.array(
+        draw(st.lists(st.integers(min_value=-10**6, max_value=10**6),
+                      min_size=n_cols, max_size=n_cols, unique=True)),
+        dtype=np.int64,
+    )
+    k = draw(st.integers(min_value=1, max_value=n_cols + 3))
+    return dist, ids, k
+
+
+@given(_distance_blocks())
+@settings(max_examples=300, deadline=None)
+def test_gemm_partial_topk_equals_stable_double_argsort(block):
+    """knn_join_gemm's batch-local selection (partition → survivors →
+    lexsort) keeps exactly the (row, col) pairs, in the same order, as
+    a full stable double argsort: columns pre-ordered by id, a stable
+    sort on dist, the first min(k, cols) per row, non-finite dropped."""
+    dist, ids, k = block
+    top = min(k, dist.shape[1])
+    id_order = np.argsort(ids)
+    sel = id_order[np.argsort(dist[:, id_order], axis=1, kind="stable")[:, :top]]
+    ref_rows = np.repeat(np.arange(dist.shape[0]), top)
+    ref_cols = sel.ravel()
+    finite = np.isfinite(np.take_along_axis(dist, sel, axis=1).ravel())
+
+    rows, cols = _topk_rows(dist.copy(), ids, k)
+    assert rows.tolist() == ref_rows[finite].tolist()
+    assert cols.tolist() == ref_cols[finite].tolist()
 
 
 @given(st.lists(st.text(alphabet="ab ", min_size=1, max_size=12), min_size=1, max_size=30))
