@@ -13,6 +13,8 @@ built its session.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -22,10 +24,21 @@ from pyspark.sql import SparkSession
 _ADDED: set[str] = set()
 
 
+def _remove_zip(zpath: str, pid: int) -> None:
+    # a forked child inherits the handler; only the writer removes it
+    if os.getpid() == pid:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(zpath)
+
+
 def _package_zip() -> str:
+    """The package zipped into the temp directory, written once per
+    process and removed when that process exits (Spark serves it to
+    executors only while the driver's context lives)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(tempfile.gettempdir(), f"cli_rag_spark_pkg_{os.getpid()}.zip")
     if not os.path.exists(zpath):
+        atexit.register(_remove_zip, zpath, os.getpid())
         tmp = zpath + ".tmp"
         with zipfile.ZipFile(tmp, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):

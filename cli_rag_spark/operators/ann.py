@@ -16,9 +16,10 @@ Everything is DataFrame ops:
   expressible: the judged path) or Lloyd-refined via
   ``kmeans_refine`` (posexplode → groupBy(cid, pos) elementwise mean —
   one shuffle per iteration, map-side combined);
-* assignment — crossJoin against the **broadcast** centroid table +
-  ``min_by`` (partial-aggregating groupBy: shuffle is N narrow rows,
-  never N×C);
+* assignment — one f64 GEMM per Arrow batch against the collected
+  centroid matrix (:func:`assign_centroids_gemm`: no shuffle, no N×C
+  rows), with the crossJoin + ``min_by`` expression form
+  :func:`assign_centroids` as its SQL-replayable twin;
 * probe + search — each query's ``n_probe`` nearest lists
   (:func:`_probe_lists`), candidates joined on cid (a literal cid
   list for :func:`ivf_topk_persisted`, so row groups are pruned), then
@@ -97,15 +98,6 @@ def assign_centroids(
     )
 
 
-# Above this many N·C·dim candidate element-ops, the interpreted-HOF
-# crossJoin assignment leaves the fixture regime and the Arrow/GEMM
-# twin below is the right physical plan (same measured ~30× gap as
-# paired_cosine_distance vs the HOF form; the r12 ivfpq build at
-# N=2M × C=1414 × dim 64 is 1.8e11 element-ops — hours interpreted,
-# ~a minute as per-batch GEMM).
-GEMM_ASSIGN_MIN_OPS = 2_000_000_000
-
-
 def assign_centroids_gemm(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -114,21 +106,22 @@ def assign_centroids_gemm(
     round_digits: int = 6,
     metric: str = "cosine",
 ) -> DataFrame:
-    """Arrow/GEMM twin of :func:`assign_centroids` for index BUILDS at
-    scale — same [id_col, cid] result, pinned identical in
-    tests/test_pq.py: distances are rounded to ``round_digits`` before
-    the argmin and ties break to the lowest cid, exactly the min_by
-    struct order, so the two physical forms agree bit-for-bit.
+    """Arrow/GEMM twin of :func:`assign_centroids`, the assignment every
+    index build and Lloyd iteration runs — same [id_col, cid] result,
+    pinned identical in tests/test_pq.py: distances are rounded to
+    ``round_digits`` before the argmin and ties break to the lowest
+    cid, exactly the min_by struct order, so the two physical forms
+    agree bit-for-bit.
 
     Plan: the centroid matrix (C·dim doubles — broadcast-sized by the
     default_n_centroids clamp) rides into ``mapInPandas`` as a task
     closure; each Arrow batch of vectors is scored with one f64 GEMM
     and emits only (id, cid). The corpus never shuffles and no N×C
-    candidate rows exist anywhere — vs the HOF crossJoin form whose
-    per-element interpreted lambdas dominate past
-    ``GEMM_ASSIGN_MIN_OPS``. NaN distances (zero-norm rows under
-    cosine) are mapped to +inf so they lose to every real distance —
-    matching Spark's NaN-sorts-greatest semantics in the min_by."""
+    candidate rows exist anywhere — vs the HOF crossJoin form's
+    N·C·dim per-element interpreted lambdas. NaN distances (zero-norm
+    rows under cosine) are mapped to +inf so they lose to every real
+    distance — matching Spark's NaN-sorts-greatest semantics in the
+    min_by."""
     import numpy as np
 
     if metric not in ("cosine", "l2"):
@@ -139,15 +132,18 @@ def assign_centroids_gemm(
         (int(r["cid"]), [float(x) for x in r["cvec"]])
         for r in centroids.collect()
     )
+    schema = StructType([
+        StructField(id_col, vectors.schema[id_col].dataType),
+        StructField("cid", LongType()),
+    ])
+    if not cent_rows:
+        # no centroid, no nearest one: the crossJoin form is empty too
+        return vectors.sparkSession.createDataFrame([], schema)
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
     cmat = np.array([v for _, v in cent_rows], dtype=np.float64)
     use_cos = metric == "cosine"
     cnorm = np.linalg.norm(cmat, axis=1) if use_cos else None
     csq = None if use_cos else np.einsum("ij,ij->i", cmat, cmat)
-    schema = StructType([
-        StructField(id_col, vectors.schema[id_col].dataType),
-        StructField("cid", LongType()),
-    ])
 
     def score(batches):
         for pdf in batches:
@@ -181,42 +177,6 @@ def assign_centroids_gemm(
     )
 
 
-def assign_centroids_auto(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    metric: str = "cosine",
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Route the assignment between the two bit-identical physical
-    forms by workload size: the JVM-side HOF crossJoin
-    (:func:`assign_centroids`, whole-stage-codegen-adjacent and
-    SQL-oracle-replayable — right while N·C·dim element-ops sit under
-    ``GEMM_ASSIGN_MIN_OPS``) vs the Arrow/GEMM map
-    (:func:`assign_centroids_gemm`). Shape discovery costs one count
-    + one metadata-cheap first() when ``n_rows``/dim aren't known;
-    the centroid count comes from a count() on what is by contract a
-    tiny frame."""
-    if n_rows is None:
-        n_rows = vectors.count()
-    c = centroids.count()
-    row0 = (
-        vectors.where(F.col(vec_col).isNotNull())
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .first()
-    )
-    dim = int(row0["d"]) if row0 is not None and row0["d"] else 0
-    if n_rows * c * dim > GEMM_ASSIGN_MIN_OPS:
-        return assign_centroids_gemm(
-            vectors, centroids, id_col, vec_col, round_digits, metric
-        )
-    return assign_centroids(
-        vectors, centroids, id_col, vec_col, round_digits, metric
-    )
-
-
 def kmeans_refine(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -234,14 +194,13 @@ def kmeans_refine(
     must be bit-reproducible across engines (partial-sum order drift
     in avg() is ~1e-15 relative; rounding absorbs it). ``metric``
     selects the assignment distance (see :func:`assign_centroids`);
-    the mean-update step is metric-independent. Each iteration's
-    assignment routes through :func:`assign_centroids_auto` (r12):
-    under the element-ops envelope the HOF form runs (fixture-scale
-    plans unchanged); past it the bit-identical Arrow/GEMM twin makes
-    Lloyd refinement affordable at corpus scale (2M × C=1414 × dim 64
-    is 1.8e11 interpreted element-ops per iteration otherwise)."""
+    the mean-update step is metric-independent. Each iteration
+    assigns with :func:`assign_centroids_gemm` (one centroid collect,
+    then a per-batch GEMM), which keeps Lloyd refinement affordable at
+    corpus scale (2M × C=1414 × dim 64 is 1.8e11 interpreted
+    element-ops per iteration in the HOF form)."""
     for _ in range(n_iters):
-        assign = assign_centroids_auto(
+        assign = assign_centroids_gemm(
             vectors, centroids, id_col, vec_col, metric=metric
         )
         mean_val = F.avg(F.col("val").cast("double"))
@@ -684,14 +643,10 @@ def build_ivf_index(
         centroids, dim = _train_quantizer(
             vectors, n_centroids, refine_iters, id_col, vec_col, round_digits
         )
-        # size-routed assignment: the interpreted-HOF crossJoin
-        # evaluates N·C·dim element-ops in codegen (~1.8e11 at
-        # 2M×1414×64); the Arrow/GEMM twin is bit-identical (pinned in
-        # tests). n_rows is already known from the fingerprint agg.
+        # the GEMM assignment is bit-identical to the HOF crossJoin
+        # form (pinned in tests) without its N·C·dim interpreted ops
         assigned = vectors.join(
-            assign_centroids_auto(
-                vectors, centroids, id_col, vec_col, n_rows=n_rows
-            ),
+            assign_centroids_gemm(vectors, centroids, id_col, vec_col),
             id_col,
         )
         _write_sorted_lists(
@@ -891,14 +846,8 @@ def append_ivf_index(
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     index = read_ivf_index(spark, path)
     centroids = read_ivf_centroids(spark, path)
-    # one count serves both the size-routed assignment (the GEMM twin
-    # past the interpreted-HOF envelope, bit-identical by the pinned
-    # contract) and the file sizing below
-    n_batch = new_vectors.count()
     assigned = new_vectors.join(
-        assign_centroids_auto(
-            new_vectors, centroids, id_col, vec_col, n_rows=n_batch
-        ),
+        assign_centroids_gemm(new_vectors, centroids, id_col, vec_col),
         id_col,
     )
     # column order must match the existing files (append does not
@@ -906,7 +855,8 @@ def append_ivf_index(
     assigned = assigned.select(*index.columns)
     # the batch's footer stats prune exactly like the base files' (a
     # batch spans fewer lists, so its per-file cid ranges are
-    # naturally tighter)
+    # naturally tighter); its row count sizes the files
+    n_batch = new_vectors.count()
     _write_sorted_lists(
         assigned, path, n_batch, int(meta["dim"]), int(meta["n_centroids"]),
         id_col, mode="append",

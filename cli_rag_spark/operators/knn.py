@@ -5,14 +5,17 @@ The reference answers one query at a time against the whole index
 The Spark-worthy generalization is a *join*: for every row of a query
 DataFrame, the top-k nearest rows of an index DataFrame.
 
-Two physical strategies, picked by data shape:
+One exact kernel and one approximate one:
 
-* ``knn_join`` (exact): broadcast the smaller side, crossJoin, score,
-  then ``row_number() over (partition by query order by dist, id)``.
-  Cost O(Q·N·d) compute but only ONE shuffle (the window's partition
-  by query id), and the broadcast means the big side never moves.
-  Right answer when Q·N is small enough to afford exactness — and the
-  per-query partitioning means it scales out linearly in Q.
+* ``knn_join_gemm`` (exact brute force): the collected query matrix is
+  broadcast once; each Arrow batch of the index is scored in place
+  with one f64 GEMM per query block and emits its batch-local top-k,
+  and one window per query picks the global top-k. The index never
+  moves; the shuffle carries candidate rows only. :func:`knn_join`
+  is its JVM-only expression form (crossJoin + HOF cosine + window):
+  the judged queries and the bit-identity tests call it directly, and
+  no dispatcher routes to it. Both drop NULL, zero-norm and
+  non-finite vectors on either side, which have no cosine distance.
 
 * ``knn_join_lsh`` (approximate, the 100 TB path): random-hyperplane
   LSH — sign-bit signatures chopped into bands; candidate pairs are
@@ -21,7 +24,7 @@ Two physical strategies, picked by data shape:
   hash join on a compact key, so candidate generation is
   O(matching pairs), not O(Q·N). Projections are seeded and
   broadcast as literal arrays, so the whole plan stays deterministic
-  and JVM-side. See operators/ann.py for the single-query IVF analog.
+  and JVM-side. See operators/ann.py for the IVF analog.
 """
 
 from __future__ import annotations
@@ -50,19 +53,25 @@ def knn_join(
     index_id: str = "vec_id",
     index_vec: str = "embedding",
     dist_col: str = "dist",
-    broadcast_queries: bool = True,
     exclude_self: bool = False,
     round_digits: int | None = 6,
 ) -> DataFrame:
-    """Exact brute-force kNN join.
+    """Exact brute-force kNN join in SQL expressions.
 
     Returns ``[query_id, vec_id, dist, rank]`` with rank 1..k per query,
-    deterministic ties via (dist, index_id).
+    deterministic ties via (dist, index_id). NULL, zero-norm and
+    non-finite vectors on either side are dropped before the crossJoin
+    (the squared norm must be positive and finite), as the GEMM kernel
+    drops them, so they yield no row instead of a NULL or NaN distance
+    or an ANSI divide-by-zero.
     """
-    q = queries.select(F.col(query_id), F.col(query_vec))
-    if broadcast_queries:
-        q = F.broadcast(q)
-    joined = index.crossJoin(q) if broadcast_queries else q.crossJoin(index)
+    def scorable(df: DataFrame, vec: str) -> DataFrame:
+        sq = dot(F.col(vec), F.col(vec))
+        # Spark orders NaN above +inf, so this also drops NaN norms
+        return df.where((sq > 0) & (sq < float("inf")))
+
+    q = scorable(queries.select(F.col(query_id), F.col(query_vec)), query_vec)
+    joined = scorable(index, index_vec).crossJoin(F.broadcast(q))
     if exclude_self:
         joined = joined.where(F.col(query_id) != F.col(index_id))
     dist = cosine_distance(F.col(index_vec), F.col(query_vec))
@@ -179,9 +188,9 @@ def knn_join_gemm(
     # one job: collect at most cap+1 rows (a size already deemed
     # driver-safe) and check the count locally — a separate count()
     # would evaluate the query-side plan twice. NULL query vectors are
-    # unrepresentable in the GEMM operand and are dropped here (they
-    # previously crashed the matrix build — ADVICE r10 adjacent fix);
-    # the expression path is the one that carries NULL-dist semantics.
+    # unrepresentable in the GEMM operand and are dropped here, as NULL
+    # index vectors are below; zero-norm rows score NaN and are dropped
+    # by _topk_rows.
     q_rows = (
         queries.select(query_id, query_vec)
         .where(F.col(query_vec).isNotNull())
@@ -219,7 +228,7 @@ def knn_join_gemm(
     bc = queries.sparkSession.sparkContext.broadcast((qids_all, qmat_all))
     n_per_block = max(1, int(queries_per_block))
 
-    src = index.select(
+    src = index.where(F.col(index_vec).isNotNull()).select(
         F.col(index_id).cast("long").alias("_iid"),
         F.col(index_vec).cast("array<double>").alias("_ivec"),
     )
@@ -933,28 +942,6 @@ def ndcg_at_k(
 
 # --- strategy auto-dispatch (r9, VERDICT r8 "Next round #5") ----------
 
-# Crossover constants, measured/derived r9 (ledger in BENCH.md):
-#
-# EXPR_MAX_PAIR_OPS — measured at sf0.1 (2000 index rows, dim 64,
-# best-of-2 noop-materialized): the interpreted-HOF expression path
-# costs ~0.2 s per 1e6 pair-ops (Q=100: 1.3e7 ops -> 2.8 s; Q=1000:
-# 1.3e8 -> 33 s) while the GEMM path sits at its ~0.3 s job floor
-# until ~1e9 ops (Q=2000: 2.6e8 -> 0.55 s). Below ~4e6 pair-ops both
-# are at the job floor and the expression form wins by staying
-# whole-stage-codegen JVM with zero Python workers; above it GEMM is
-# strictly faster.
-# Re-measured with the partial top-k GEMM kernel (sf0.1, 2000 index
-# rows, dim 64, k 8, local[4], cached inputs, noop writes, 7
-# interleaved reps per point, 2 runs per kernel, steal ≤ 0.01 CPU-s):
-# expression / GEMM medians were 460-469 / 169-188 ms at Q=16 (2.0e6
-# pair-ops), 725-749 / 152-159 ms at Q=31 (4.0e6) and 1,366-1,408 /
-# 152-174 ms at Q=62 (7.9e6), with the old full-argsort kernel and
-# the new one alike. The cheaper kernel did not move the crossover:
-# at these shapes a batch block is ≤ 62 rows and its selection is
-# noise next to the job floor. On a 4-core host the crossover already
-# sits below 2e6 on both kernels; retuning the constant would move
-# dispatch pins and plan shapes, so it is left as measured in r9.
-EXPR_MAX_PAIR_OPS = 4_000_000
 # GEMM_MAX_QUERIES — knn_join_gemm collects the query side to the
 # driver (its own hard cap, ~0.5 GB at 1M x dim 64).
 GEMM_MAX_QUERIES = 1_000_000
@@ -996,29 +983,30 @@ def choose_knn_strategy(
     ivfpq_available: bool = False,
 ) -> str:
     """Pick the E7 physical strategy from the workload shape — one of
-    five: ``"exact"`` (expression kNN), ``"gemm"`` (BLAS brute force),
-    ``"ivf"`` (persisted inverted-file probe), ``"ivfpq"`` (persisted
-    coarse-list-pruned ADC join — the sub-linear escape past the GEMM
-    envelope, VERDICT r11 #1) or ``"lsh"`` (hyperplane banding). Pure
-    arithmetic on three numbers, so the choice is deterministic,
-    testable, and free (the fuzzy-join analog, choose_fuzzy_strategy,
-    must sample the data because gram selectivity isn't visible in
-    row counts; here pair-ops = Q·N·dim IS the cost model).
+    four: ``"gemm"`` (BLAS brute force), ``"ivf"`` (persisted
+    inverted-file probe), ``"ivfpq"`` (persisted coarse-list-pruned ADC
+    join — the sub-linear escape past the GEMM envelope, VERDICT r11
+    #1) or ``"lsh"`` (hyperplane banding). Pure arithmetic on three
+    numbers, so the choice is deterministic, testable, and free (the
+    fuzzy-join analog, choose_fuzzy_strategy, must sample the data
+    because gram selectivity isn't visible in row counts; here
+    pair-ops = Q·N·dim IS the cost model).
 
-    Precedence: exact expression while the whole workload sits at the
-    job floor; exact GEMM while brute force is affordable and the
+    Precedence: exact GEMM while brute force is affordable and the
     collected query MATRIX (n_queries·dim elements, not just rows —
-    ADVICE r9) fits the driver budget; then the approximate
-    strategies, SUB-LINEAR before flat — IVF when a dim-validated
-    persisted f64 index exists (probe cost O(rows in probed lists),
-    exact distances within the probed lists — the best recall per
-    candidate); else IVFPQ when a persisted build_ivfpq_index
-    artifact validates (the same list pruning over ~M-byte code rows
-    instead of dim·8-byte embeddings — candidates Q·n_probe·(N/C)·M
-    narrow rows; the r11 routed measurement put the flat Θ(Q·N)
-    paths 27-57× behind per pair-op past the GEMM envelope); else
-    LSH banding (index-free, candidate cost O(colliding pairs ×
-    dim)).
+    ADVICE r9) fits the driver budget, at every size down to one
+    query: the expression form wins only below ~3e5 pair-ops, by about
+    one job (SCALING.md), so it is not a strategy. Then the
+    approximate strategies, SUB-LINEAR before flat — IVF when a
+    dim-validated persisted f64 index exists (probe cost O(rows in
+    probed lists), exact distances within the probed lists — the best
+    recall per candidate); else IVFPQ when a persisted
+    build_ivfpq_index artifact validates (the same list pruning over
+    ~M-byte code rows instead of dim·8-byte embeddings — candidates
+    Q·n_probe·(N/C)·M narrow rows; the r11 routed measurement put the
+    flat Θ(Q·N) paths 27-57× behind per pair-op past the GEMM
+    envelope); else LSH banding (index-free, candidate cost
+    O(colliding pairs × dim)).
 
     There is no flat-PQ strategy: flat ADC is IVFADC probing every
     list, so it is the ``"ivfpq"`` route over a raw
@@ -1028,13 +1016,10 @@ def choose_knn_strategy(
         raise ValueError(
             f"shape must be non-negative, got ({n_queries}, {n_index}, {dim})"
         )
-    ops = n_queries * n_index * dim
-    if ops <= EXPR_MAX_PAIR_OPS:
-        return "exact"
     if (
         n_queries <= GEMM_MAX_QUERIES
         and n_queries * dim <= GEMM_MAX_QUERY_ELEMS
-        and ops <= GEMM_MAX_PAIR_OPS
+        and n_queries * n_index * dim <= GEMM_MAX_PAIR_OPS
     ):
         return "gemm"
     if ivf_available:
@@ -1069,10 +1054,10 @@ def knn_join_auto(
     ivfpq_rerank: int | None = None,
 ) -> DataFrame:
     """E7 with the physical strategy chosen by
-    :func:`choose_knn_strategy` (exact, gemm, ivf, ivfpq or lsh) —
-    same ``[query_id, index_id, dist, rank]`` contract as every member
+    :func:`choose_knn_strategy` (gemm, ivf, ivfpq or lsh) — same
+    ``[query_id, index_id, dist, rank]`` contract as every member
     strategy. The ``dist`` column carries each strategy's native
-    score: exact/GEMM/IVF/LSH and the reranked IVFPQ route emit
+    score: GEMM/IVF/LSH and the reranked IVFPQ route emit
     cosine distance; the IVFPQ route with ``ivfpq_rerank=0`` emits the
     ADC squared-L2 estimate (rank-equivalent to cosine on
     unit-normalized vectors) — ranks, not raw scores, are the
@@ -1133,16 +1118,12 @@ def knn_join_auto(
     ``exclude_self`` on the approximate strategies (which lack the
     flag natively) is honored by requesting k+1, dropping self rows,
     and re-ranking — the ivf_recall_stats discipline; like any
-    approximate top-k, fewer than k rows can come back.
-
-    The exact strategies return bit-identical results to each other
-    (tests pin this), so a dispatch flip between "exact" and "gemm"
-    as data grows never changes answers — only the plan."""
+    approximate top-k, fewer than k rows can come back."""
     if dim is None:
         # discover from a NON-NULL row: size(NULL) is -1 under the
         # legacy conf and a NULL/empty first row must not zero the
         # pair-ops model and route a corpus-scale workload to the
-        # exact crossJoin path (r9 review)
+        # GEMM brute force (r9 review)
         row = (
             index.where(F.col(index_vec).isNotNull())
             .select(F.size(F.col(index_vec)).alias("d"))
@@ -1201,11 +1182,6 @@ def knn_join_auto(
     strategy = choose_knn_strategy(
         n_queries, n_index, dim, ivf_available=ivf_ok, ivfpq_available=ivfpq_ok
     )
-    if strategy == "exact":
-        return knn_join(
-            queries, index, k, query_id, query_vec, index_id, index_vec,
-            dist_col, exclude_self=exclude_self, round_digits=round_digits,
-        )
     if strategy == "gemm":
         return knn_join_gemm(
             queries, index, k, query_id, query_vec, index_id, index_vec,

@@ -19,10 +19,10 @@ part of this repo's 100 TB mandate rather than a reference port.
 
 Scale shapes:
 * codebook: M×K rows, broadcast everywhere — never a shuffle side;
-* encode: one explode to N·M sub-vector rows, broadcast-join the
-  codebook, ``min_by`` argmin — the N·M·K candidate evaluations live
-  inside one partial-aggregating stage (same shape as
-  ann.assign_centroids); encode is the one-time index build;
+* encode: the one-time index build — one squared-L2 GEMM per
+  subspace per Arrow batch (:func:`pq_encode_gemm`, the shape of
+  ann.assign_centroids_gemm); :func:`pq_encode` is its explode +
+  broadcast-join + ``min_by`` expression twin;
 * ADC scan: the probed lists' packed code rows (one ``(cid, id,
   codes)`` row of M narrow ints per vector) posexplode and
   broadcast-join the per-query M·K lookup table, then sum — the
@@ -71,12 +71,11 @@ from pyspark.sql import functions as F
 
 from cli_rag_spark.functions.vectors import dot, l2_sq
 from cli_rag_spark.operators.ann import (
-    GEMM_ASSIGN_MIN_OPS,
     _probe_lists,
     _read_back_schema,
     _train_quantizer,
     _write_sorted_lists,
-    assign_centroids_auto,
+    assign_centroids_gemm,
     default_n_centroids,
     kmeans_refine,
 )
@@ -226,8 +225,8 @@ def pq_encode_gemm(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """Arrow/GEMM twin of :func:`pq_encode` for index BUILDS at scale
-    — same [id_col, m, code] result, pinned identical in
+    """Arrow/GEMM twin of :func:`pq_encode`, the encoder every IVFPQ
+    build runs — same [id_col, m, code] result, pinned identical in
     tests/test_pq.py (distances rounded to ``round_digits`` before
     the argmin, ties → lowest code — codewords are scanned in
     ascending code order so NumPy's first-minimum argmin IS the
@@ -650,12 +649,12 @@ def build_ivfpq_index(
     ``coarse_refine_iters`` Lloyd-refines the coarse quantizer before
     assignment; ``refine_iters`` Lloyd-refines each PQ sub-codebook
     before encoding (both 0 → pure seeded, SQL-oracle-replayable).
-    The corpus-side assignment goes through
-    :func:`~cli_rag_spark.operators.ann.assign_centroids_auto` — the
-    GEMM twin takes over past the interpreted-HOF envelope, pinned
-    bit-identical at fixture scale in tests/test_pq.py. It is computed
+    The corpus-side assignment is
+    :func:`~cli_rag_spark.operators.ann.assign_centroids_gemm` and the
+    encoder :func:`pq_encode_gemm`, each pinned bit-identical to its
+    expression twin in tests/test_pq.py. The assignment is computed
     once per build and feeds both the residual lineage and ``lists``;
-    the encoders' ``(id, m, code)`` rows are packed into ``lists`` once,
+    the encoder's ``(id, m, code)`` rows are packed into ``lists`` once,
     at build time.
 
     ``residual=True`` — the DEFAULT since r14 (VERDICT r13 #1) —
@@ -772,9 +771,8 @@ def build_ivfpq_index(
         # the N·C assignment runs once: it feeds the residual lineage
         # (read by the codebook seed, the refinement and the encoder)
         # and the lists
-        assign = assign_centroids_auto(
+        assign = assign_centroids_gemm(
             vectors, centroids, id_col, vec_col, round_digits=round_digits,
-            n_rows=n_rows,
         ).localCheckpoint(eager=True)
         if residual:
             # encode x − centroid(x): the codebook trains on — and the
@@ -820,17 +818,12 @@ def build_ivfpq_index(
                 id_col, enc_col, round_digits,
             )
         codebook = write_child(codebook, "codebook")
-        # same size-routing rule as the assignment: the encoder
-        # evaluates N·K·dim element ops (bit-identical twins, pinned in
-        # tests)
-        encode = (
-            pq_encode_gemm if n_rows * k_codes * dim > GEMM_ASSIGN_MIN_OPS
-            else pq_encode
-        )
         # pack each vector's M (m, code) rows into one codes array in
         # subspace order, next to its list id
         lists = (
-            encode(enc_src, codebook, m_subspaces, id_col, enc_col, round_digits)
+            pq_encode_gemm(
+                enc_src, codebook, m_subspaces, id_col, enc_col, round_digits
+            )
             .groupBy(id_col)
             .agg(
                 F.transform(

@@ -217,14 +217,14 @@ def q_knn_join_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E7 through the strategy AUTO-DISPATCH (operators/knn.py
     knn_join_auto, r9): the selector reads the workload shape
-    (|Q|·|N|·dim pair-ops) and routes to exact-expression / GEMM /
-    IVF / LSH. On the fixture's all-pairs shape (500×500×64 = 1.6e7
-    pair-ops at sf0.01, 2000×2000×64 = 2.6e8 at sf0.1) the measured
-    crossover picks the GEMM path at both scales — asserted in
-    tests/test_knn.py, which also pins the other three choices on
-    their shapes. Both exact strategies are bit-identical, so the
-    oracle is plain brute force: the driver proves the dispatcher
-    returns the exact answer, whatever path it routed."""
+    (|Q|·|N|·dim pair-ops) and routes to GEMM / IVF / IVFPQ / LSH.
+    The fixture's all-pairs shape (500×500×64 = 1.6e7 pair-ops at
+    sf0.01, 2000×2000×64 = 2.6e8 at sf0.1) sits inside the GEMM
+    envelope at both scales — asserted in tests/test_knn.py, which
+    also pins the other choices on their shapes. The GEMM kernel is
+    bit-identical to the expression form, so the oracle is plain brute
+    force: the driver proves the dispatcher returns the exact answer,
+    whatever path it routed."""
     from cli_rag_spark.operators.knn import knn_join_auto
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -399,16 +399,16 @@ def test_choose_knn_strategy_pinned_choices():
     import pytest
 
     from cli_rag_spark.operators.knn import (
-        EXPR_MAX_PAIR_OPS,
         GEMM_MAX_PAIR_OPS,
         GEMM_MAX_QUERIES,
         choose_knn_strategy,
     )
 
-    # fixture interactive shape: 20 queries x 2000 rows x dim 64
-    assert choose_knn_strategy(20, 2_000, 64) == "exact"
-    # all-pairs fixture shapes (sf0.01 and sf0.1): past the measured
-    # expr crossover, well inside the GEMM envelope
+    # brute force is GEMM at every size inside its envelope, down to
+    # one query against one row
+    assert choose_knn_strategy(1, 1, 1) == "gemm"
+    assert choose_knn_strategy(20, 2_000, 64) == "gemm"
+    # all-pairs fixture shapes (sf0.01 and sf0.1)
     assert choose_knn_strategy(500, 500, 64) == "gemm"
     assert choose_knn_strategy(2_000, 2_000, 64) == "gemm"
     # corpus-scale: brute force out of envelope -> index strategies
@@ -419,9 +419,6 @@ def test_choose_knn_strategy_pinned_choices():
     # driver-collect cap: a huge query side skips GEMM even when the
     # pair-ops envelope would allow it
     assert choose_knn_strategy(GEMM_MAX_QUERIES + 1, 100, 64) in ("ivf", "lsh")
-    # boundary exactness
-    assert choose_knn_strategy(1, EXPR_MAX_PAIR_OPS, 1) == "exact"
-    assert choose_knn_strategy(1, EXPR_MAX_PAIR_OPS + 1, 1) == "gemm"
     with pytest.raises(ValueError, match="non-negative"):
         choose_knn_strategy(-1, 10, 64)
 
@@ -437,9 +434,10 @@ def test_knn_join_auto_routes_gemm_on_fixture_allpairs(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_knn_join_auto_exact_path_plan_and_equivalence(spark, sf_dir):
-    """Small-Q shape routes to the expression path (no Python stage in
-    the plan) and returns exactly knn_join's rows."""
+def test_knn_join_auto_small_shape_gemm_plan_and_equivalence(spark, sf_dir):
+    """A 5-query shape, far below any crossover, runs the GEMM kernel
+    (the Arrow stage is in the plan, no cartesian product) and returns
+    exactly knn_join's rows."""
     from cli_rag_spark.operators.knn import knn_join, knn_join_auto
     from cli_rag_spark.sources.documents import load_table
 
@@ -449,9 +447,46 @@ def test_knn_join_auto_exact_path_plan_and_equivalence(spark, sf_dir):
     )
     auto = knn_join_auto(q, emb, k=3)
     plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "ArrowEval" not in plan
+    assert "MapInPandas" in plan and "CartesianProduct" not in plan
     want = {tuple(r) for r in knn_join(q, emb, k=3).collect()}
     assert {tuple(r) for r in auto.collect()} == want
+
+
+def test_degenerate_rows_one_answer_on_every_route(spark):
+    """NULL, zero-norm and NaN vectors have no cosine distance:
+    knn_join, knn_join_gemm, and knn_join_auto at the default shape and
+    at a hinted 10,000 × 10,000 shape return the same rows — none for
+    the degenerate index rows."""
+    from cli_rag_spark.operators.knn import knn_join_auto
+
+    q = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "query_id long, query_vec array<double>"
+    )
+    for bad in (None, [0.0, 0.0], [float("nan"), 1.0]):
+        idx = spark.createDataFrame(
+            [(1, bad), (2, [1.0, 2.0]), (4, [1.0, 0.1])],
+            "vec_id long, embedding array<double>",
+        )
+        want = {(1, 4, 1), (1, 2, 2)}
+        for out in (
+            knn_join(q, idx, k=2),
+            knn_join_gemm(q, idx, k=2),
+            knn_join_auto(q, idx, k=2),
+            knn_join_auto(q, idx, k=2, n_queries=10_000, n_index=10_000),
+        ):
+            rows = out.collect()
+            assert {(r["query_id"], r["vec_id"], r["rank"]) for r in rows} == want
+            assert all(r["dist"] is not None for r in rows)
+    # a degenerate QUERY yields no row on either kernel
+    idx = spark.createDataFrame(
+        [(2, [1.0, 2.0]), (4, [1.0, 0.1])], "vec_id long, embedding array<double>"
+    )
+    dq = spark.createDataFrame(
+        [(1, None), (3, [0.0, 0.0]), (5, [float("nan"), 1.0])],
+        "query_id long, query_vec array<double>",
+    )
+    assert knn_join(dq, idx, k=2).collect() == []
+    assert knn_join_gemm(dq, idx, k=2).collect() == []
 
 
 def test_knn_join_auto_ivf_path_with_validated_index(spark, sf_dir, tmp_path):
@@ -535,8 +570,8 @@ def test_knn_join_auto_lsh_fallback_without_index(spark, sf_dir):
 
 def test_knn_join_auto_dim_discovery_guards(spark):
     """r9 review: NULL/empty embeddings must not zero the pair-ops
-    model (dim=0 would route corpus-scale shapes to the exact
-    crossJoin) — discovery skips NULL rows and raises on empty
+    model (dim=0 would route corpus-scale shapes to the GEMM brute
+    force) — discovery skips NULL rows and raises on empty
     vectors; an index with no scorable rows returns empty."""
     import pytest
 
@@ -557,14 +592,12 @@ def test_knn_join_auto_dim_discovery_guards(spark):
     )
     with pytest.raises(ValueError, match="empty/invalid vectors"):
         knn_join_auto(q, bad, k=1, n_queries=10_000_000, n_index=10**9)
-    # no scorable rows at all -> dispatches (exact path) without
-    # crashing; the exact operator's own NULL semantics apply
-    # (NULL-embedding rows score NULL dist)
+    # no scorable rows at all -> dispatches without crashing and
+    # returns no rows (NULL vectors have no distance)
     none_idx = spark.createDataFrame(
         [(1, None)], "vec_id long, embedding array<double>"
     )
-    rows = knn_join_auto(q, none_idx, k=1).collect()
-    assert all(r["dist"] is None for r in rows)
+    assert knn_join_auto(q, none_idx, k=1).collect() == []
 
 
 def test_choose_knn_strategy_gemm_elems_gate():

@@ -489,13 +489,12 @@ def _with_null_vector_row(spark, emb):
 def test_assign_centroids_gemm_matches_hof(spark, sf_dir):
     """The Arrow/GEMM assignment twin is bit-identical to the
     interpreted-HOF crossJoin form under both metrics — the contract
-    that lets build_ivfpq_index route by size without changing any
-    persisted artifact — including a NULL vector, which both drop."""
+    that lets every index build assign on GEMM while the SQL oracle
+    replays the HOF form — including a NULL vector, which both drop."""
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.ann import (
         assign_centroids,
-        assign_centroids_auto,
         assign_centroids_gemm,
         seed_centroids,
     )
@@ -515,25 +514,13 @@ def test_assign_centroids_gemm_matches_hof(spark, sf_dir):
             for r in assign_centroids_gemm(emb, cent, metric=metric).collect()
         }
         assert hof == gemm
-    # the auto router picks the HOF form at fixture scale (under the
-    # ops envelope) and the GEMM form when told the corpus is big;
-    # both produce the same assignment either way
-    auto = {
-        (r["vec_id"], r["cid"])
-        for r in assign_centroids_auto(emb, cent).collect()
-    }
-    hof_cos = {
-        (r["vec_id"], r["cid"])
-        for r in assign_centroids(emb, cent).collect()
-    }
-    assert auto == hof_cos
 
 
 def test_pq_encode_gemm_matches_hof(spark, sf_dir):
     """The Arrow/GEMM encoder twin is bit-identical to the
-    interpreted-HOF pq_encode — the build_ivfpq_index size-routing
-    contract (same rounded-then-argmin, ties -> lowest code; a NULL
-    vector gets no code in either)."""
+    interpreted-HOF pq_encode — the contract that lets
+    build_ivfpq_index encode on GEMM (same rounded-then-argmin, ties ->
+    lowest code; a NULL vector gets no code in either)."""
     from pyspark.sql import functions as F
 
     from cli_rag_spark.operators.pq import (
@@ -719,7 +706,6 @@ def _crash_encoders(monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("encoder crashed")
 
-    monkeypatch.setattr(pq_mod, "pq_encode", boom)
     monkeypatch.setattr(pq_mod, "pq_encode_gemm", boom)
 
 

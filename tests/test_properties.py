@@ -655,7 +655,7 @@ def test_choose_knn_strategy_total_and_safe(q, n, dim, ivf, ivfpq):
     s = choose_knn_strategy(
         q, n, dim, ivf_available=ivf, ivfpq_available=ivfpq
     )
-    assert s in ("exact", "gemm", "ivf", "ivfpq", "lsh")
+    assert s in ("gemm", "ivf", "ivfpq", "lsh")
     if s == "ivf":
         assert ivf
     if s == "ivfpq":
@@ -680,7 +680,7 @@ def test_choose_knn_strategy_growth_monotone(q, n, dim):
     gets a full scan)."""
     from cli_rag_spark.operators.knn import choose_knn_strategy
 
-    order = {"exact": 0, "gemm": 1, "lsh": 2}
+    order = {"gemm": 0, "lsh": 1}
     base = choose_knn_strategy(q, n, dim)
     for q2, n2, d2 in ((q * 10, n, dim), (q, n * 10, dim), (q, n, dim * 4)):
         grown = choose_knn_strategy(q2, n2, d2)
