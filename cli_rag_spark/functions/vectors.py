@@ -12,9 +12,11 @@ DuckDB oracle (``list_cosine_similarity``), and (c) keep the whole
 query inside one Catalyst plan so filter pushdown / top-k selection
 still apply.
 
-A NumPy ``pandas_udf`` variant exists in ``operators/knn.py`` for the
-many-query batch case where a BLAS matmul beats per-row expression
-evaluation; both are tested against each other (SURVEY §5.2 layer 3).
+The many-query scorers (``operators/knn.py`` knn_join,
+``operators/ann.py`` assign_centroids, ``operators/pq.py`` pq_encode)
+instead score each Arrow batch with one f64 BLAS matmul, which beats
+per-row expression evaluation; their tests replay them in DuckDB
+(SURVEY §5.2 layer 3).
 
 All arithmetic is f64: fixture embeddings are ``array<float>`` and are
 cast element-wise before multiplication, matching the reference's f64

@@ -17,9 +17,8 @@ Everything is DataFrame ops:
   ``kmeans_refine`` (posexplode → groupBy(cid, pos) elementwise mean —
   one shuffle per iteration, map-side combined);
 * assignment — one f64 GEMM per Arrow batch against the collected
-  centroid matrix (:func:`assign_centroids_gemm`: no shuffle, no N×C
-  rows), with the crossJoin + ``min_by`` expression form
-  :func:`assign_centroids` as its SQL-replayable twin;
+  centroid matrix (:func:`assign_centroids`: no shuffle, no N×C
+  rows; the SQL oracles replay it as a rounded-distance argmin);
 * probe + search — each query's ``n_probe`` nearest lists
   (:func:`_probe_lists`), candidates joined on cid (a literal cid
   list for :func:`ivf_topk_persisted`, so row groups are pruned), then
@@ -38,7 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cli_rag_spark.functions.vectors import cosine_distance, l2_sq
+from cli_rag_spark.functions.vectors import cosine_distance
 
 _META_NAME = "_ivf_meta.json"
 
@@ -66,62 +65,23 @@ def assign_centroids(
     round_digits: int = 6,
     metric: str = "cosine",
 ) -> DataFrame:
-    """[id_col, cid]: each vector's nearest centroid.
+    """[id_col, cid]: each vector's nearest centroid — the assignment
+    every index build, Lloyd iteration and judged clustering runs.
 
     ``metric='cosine'`` (IVF coarse quantizer) or ``'l2'`` (squared
     euclidean — the PQ sub-codebook metric, so Lloyd refinement of PQ
     codebooks assigns with the same distance the encoder uses).
-
-    Plan: crossJoin(broadcast(centroids)) → rounded dist →
-    ``min_by(cid, (dist, cid))`` — the N×C candidate rows exist only
-    inside one partial-aggregating stage; the shuffle carries N narrow
-    (id, min-struct) rows. NULL vectors are unscorable and dropped, as
-    in :func:`assign_centroids_gemm`.
-    """
-    if metric == "cosine":
-        dist = cosine_distance(F.col(vec_col), F.col("cvec"))
-    elif metric == "l2":
-        dist = l2_sq(
-            F.col(vec_col).cast("array<double>"),
-            F.col("cvec").cast("array<double>"),
-        )
-    else:
-        raise ValueError(f"unknown metric {metric!r} (cosine|l2)")
-    scored = (
-        vectors.select(id_col, vec_col)
-        .where(F.col(vec_col).isNotNull())
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("_d", F.round(dist, round_digits))
-    )
-    return scored.groupBy(id_col).agg(
-        F.min_by(F.col("cid"), F.struct(F.col("_d"), F.col("cid"))).alias("cid")
-    )
-
-
-def assign_centroids_gemm(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    metric: str = "cosine",
-) -> DataFrame:
-    """Arrow/GEMM twin of :func:`assign_centroids`, the assignment every
-    index build and Lloyd iteration runs — same [id_col, cid] result,
-    pinned identical in tests/test_pq.py: distances are rounded to
-    ``round_digits`` before the argmin and ties break to the lowest
-    cid, exactly the min_by struct order, so the two physical forms
-    agree bit-for-bit.
+    Distances are rounded to ``round_digits`` before the argmin and
+    ties break to the lowest cid, so the DuckDB oracles replay the
+    assignment as a rounded-distance ``row_number`` over (dist, cid).
 
     Plan: the centroid matrix (C·dim doubles — broadcast-sized by the
-    default_n_centroids clamp) rides into ``mapInPandas`` as a task
-    closure; each Arrow batch of vectors is scored with one f64 GEMM
-    and emits only (id, cid). The corpus never shuffles and no N×C
-    candidate rows exist anywhere — vs the HOF crossJoin form's
-    N·C·dim per-element interpreted lambdas. NaN distances (zero-norm
-    rows under cosine) are mapped to +inf so they lose to every real
-    distance — matching Spark's NaN-sorts-greatest semantics in the
-    min_by."""
+    default_n_centroids clamp) is collected once and rides into
+    ``mapInPandas`` as a task closure; each Arrow batch of vectors is
+    scored with one f64 GEMM and emits only (id, cid). The corpus never
+    shuffles and no N×C candidate rows exist anywhere. NaN distances
+    (zero-norm rows under cosine) are mapped to +inf so they lose to
+    every real distance, and NULL vectors are unscorable and dropped."""
     import numpy as np
 
     if metric not in ("cosine", "l2"):
@@ -137,7 +97,7 @@ def assign_centroids_gemm(
         StructField("cid", LongType()),
     ])
     if not cent_rows:
-        # no centroid, no nearest one: the crossJoin form is empty too
+        # no centroid, no nearest one
         return vectors.sparkSession.createDataFrame([], schema)
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
     cmat = np.array([v for _, v in cent_rows], dtype=np.float64)
@@ -168,8 +128,7 @@ def assign_centroids_gemm(
             best = cids[np.argmin(d, axis=1)]
             yield pdf[[id_col]].assign(cid=best)
 
-    # NULL vectors can't ride the ndarray stack; they are unscorable
-    # under either physical form, so drop them here explicitly
+    # NULL vectors are unscorable and can't ride the ndarray stack
     return (
         vectors.select(id_col, vec_col)
         .where(F.col(vec_col).isNotNull())
@@ -187,20 +146,17 @@ def kmeans_refine(
     metric: str = "cosine",
 ) -> DataFrame:
     """Lloyd iterations on the coarse quantizer. Per iteration: one
-    assignment (broadcast crossJoin + min_by) and one elementwise mean
-    (posexplode → groupBy(cid, pos) avg → re-pack ordered by pos).
-    Empty clusters keep their previous centroid. ``round_digits``
-    rounds each refined centroid component — pass it when the result
-    must be bit-reproducible across engines (partial-sum order drift
-    in avg() is ~1e-15 relative; rounding absorbs it). ``metric``
-    selects the assignment distance (see :func:`assign_centroids`);
-    the mean-update step is metric-independent. Each iteration
-    assigns with :func:`assign_centroids_gemm` (one centroid collect,
-    then a per-batch GEMM), which keeps Lloyd refinement affordable at
-    corpus scale (2M × C=1414 × dim 64 is 1.8e11 interpreted
-    element-ops per iteration in the HOF form)."""
+    assignment (:func:`assign_centroids` — one centroid collect, then
+    a per-batch GEMM) and one elementwise mean (posexplode →
+    groupBy(cid, pos) avg → re-pack ordered by pos). Empty clusters
+    keep their previous centroid. ``round_digits`` rounds each refined
+    centroid component — pass it when the result must be
+    bit-reproducible across engines (partial-sum order drift in avg()
+    is ~1e-15 relative; rounding absorbs it). ``metric`` selects the
+    assignment distance (see :func:`assign_centroids`); the
+    mean-update step is metric-independent."""
     for _ in range(n_iters):
-        assign = assign_centroids_gemm(
+        assign = assign_centroids(
             vectors, centroids, id_col, vec_col, metric=metric
         )
         mean_val = F.avg(F.col("val").cast("double"))
@@ -448,7 +404,7 @@ def tune_n_probe(
         raise ValueError(
             f"target_recall must be in (0, 1], got {target_recall}"
         )
-    from cli_rag_spark.operators.knn import knn_join_gemm
+    from cli_rag_spark.operators.knn import knn_join
 
     meta = _read_ivf_meta(spark, path)
     c = int(meta["n_centroids"])
@@ -460,9 +416,9 @@ def tune_n_probe(
         if not meta.get("n_rows") or dim <= 0:
             raise ValueError(f"IVF index at {path} has no scorable vectors")
         # exact ground truth over the index's own vectors, computed once
-        exact = knn_join_gemm(
-            queries, index, k=k, dim=dim
-        ).localCheckpoint(eager=True)
+        exact = knn_join(queries, index, k=k, dim=dim).localCheckpoint(
+            eager=True
+        )
     # Pure power-of-two ladder from 1 up to C (ADVICE r11: the earlier
     # ladder jumped 1 → default_n_probe(C) → doubling, so at large C
     # the returned width could overshoot the minimal sufficient width
@@ -643,10 +599,8 @@ def build_ivf_index(
         centroids, dim = _train_quantizer(
             vectors, n_centroids, refine_iters, id_col, vec_col, round_digits
         )
-        # the GEMM assignment is bit-identical to the HOF crossJoin
-        # form (pinned in tests) without its N·C·dim interpreted ops
         assigned = vectors.join(
-            assign_centroids_gemm(vectors, centroids, id_col, vec_col),
+            assign_centroids(vectors, centroids, id_col, vec_col),
             id_col,
         )
         _write_sorted_lists(
@@ -847,7 +801,7 @@ def append_ivf_index(
     index = read_ivf_index(spark, path)
     centroids = read_ivf_centroids(spark, path)
     assigned = new_vectors.join(
-        assign_centroids_gemm(new_vectors, centroids, id_col, vec_col),
+        assign_centroids(new_vectors, centroids, id_col, vec_col),
         id_col,
     )
     # column order must match the existing files (append does not
@@ -877,9 +831,9 @@ def knn_join_ivf(
     round_digits: int = 6,
     validate_cid: bool = True,
 ) -> DataFrame:
-    """Approximate batch kNN JOIN via IVF bucketing — the 4th physical
-    strategy next to knn_join (exact window), knn_join_gemm (exact
-    BLAS), and knn_join_lsh (hyperplane bands): each query probes its
+    """Approximate batch kNN JOIN via IVF bucketing — the physical
+    strategy next to knn_join (exact BLAS brute force) and
+    knn_join_lsh (hyperplane bands): each query probes its
     ``n_probe`` nearest coarse centroids and scores only index rows
     assigned to those lists.
 
@@ -889,7 +843,7 @@ def knn_join_ivf(
     the lists are ranked by the quantizer it was built with (the
     artifact's own ``_centroids``; see :func:`_ivf_quantizer`).
     Otherwise assignment is computed on the fly against the seeded
-    quantizer (broadcast crossJoin + partial-agg, the operators above).
+    quantizer (:func:`assign_centroids`, one GEMM per Arrow batch).
     Candidate generation is ONE equi-join on the narrow cid key (cost
     O(rows in probed lists), never Q·N), then exact rescoring and a
     per-query top-k window — same deterministic (dist, id) contract as
@@ -928,15 +882,20 @@ def ivf_topk_persisted(
 ) -> DataFrame:
     """Top-k against a PERSISTED IVF index, fully from its artifacts:
     the ``_centroids`` sidecar picks the probe lists, the cid-pruned
-    parquet scan supplies candidates, the exact kernel rescoring stays
-    deterministic ((dist, id) ordering). Nothing is re-derived from
-    the raw vectors — probing a Lloyd-refined index uses the refined
-    quantizer it was built with, by construction.
+    parquet scan supplies candidates, and :func:`~cli_rag_spark.
+    operators.knn.knn_join` over the one-row query table rescores them
+    with the exact kernel ((dist, id) ordering). Nothing is re-derived
+    from the raw vectors — probing a Lloyd-refined index uses the
+    refined quantizer it was built with, by construction. Returns
+    ``[id, dist]`` in rank order.
 
     Plan shape at scale: centroid sidecar is tiny (C rows, broadcast);
     the candidate read is a row-group-pruned scan (cid min/max stats)
-    of the ``n_probe`` probed lists; top-k is TakeOrderedAndProject.
+    of the ``n_probe`` probed lists, the ``cid IN (...)`` literal list
+    the probe collects.
     """
+    from cli_rag_spark.operators.knn import knn_join
+
     meta = _read_ivf_meta(spark, path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     probed = _probe_lists(
@@ -947,14 +906,12 @@ def ivf_topk_persisted(
     candidates = read_ivf_index(spark, path).where(
         F.col("cid").isin(probe_cids)
     )
+    query = query_vec_df.select(F.lit(0).alias("query_id"), "query_vec")
     return (
-        candidates.crossJoin(F.broadcast(query_vec_df))
-        .select(
-            id_col,
-            F.round(
-                cosine_distance(F.col(vec_col), F.col("query_vec")), round_digits
-            ).alias("dist"),
+        knn_join(
+            query, candidates, k, index_id=id_col, index_vec=vec_col,
+            round_digits=round_digits, dim=meta.get("dim"),
         )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+        .orderBy("rank")
+        .select(id_col, "dist")
     )

@@ -7,15 +7,14 @@ DataFrame, the top-k nearest rows of an index DataFrame.
 
 One exact kernel and one approximate one:
 
-* ``knn_join_gemm`` (exact brute force): the collected query matrix is
+* ``knn_join`` (exact brute force): the collected query matrix is
   broadcast once; each Arrow batch of the index is scored in place
   with one f64 GEMM per query block and emits its batch-local top-k,
   and one window per query picks the global top-k. The index never
-  moves; the shuffle carries candidate rows only. :func:`knn_join`
-  is its JVM-only expression form (crossJoin + HOF cosine + window):
-  the judged queries and the bit-identity tests call it directly, and
-  no dispatcher routes to it. Both drop NULL, zero-norm and
-  non-finite vectors on either side, which have no cosine distance.
+  moves; the shuffle carries candidate rows only. NULL, zero-norm and
+  non-finite vectors on either side have no cosine distance and yield
+  no row. The judged queries' DuckDB oracles replay it as rounded
+  ``1 - list_cosine_similarity`` ranked by (dist, id).
 
 * ``knn_join_lsh`` (approximate, the 100 TB path): random-hyperplane
   LSH — sign-bit signatures chopped into bands; candidate pairs are
@@ -36,54 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cli_rag_spark.deploy import ensure_package_on_executors
-from cli_rag_spark.functions.vectors import (
-    cosine_distance,
-    dot,
-    paired_cosine_distance,
-)
+from cli_rag_spark.functions.vectors import paired_cosine_distance
 from cli_rag_spark.sources.artifacts import content_fingerprint, read_json_sidecar
-
-
-def knn_join(
-    queries: DataFrame,
-    index: DataFrame,
-    k: int,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
-    dist_col: str = "dist",
-    exclude_self: bool = False,
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Exact brute-force kNN join in SQL expressions.
-
-    Returns ``[query_id, vec_id, dist, rank]`` with rank 1..k per query,
-    deterministic ties via (dist, index_id). NULL, zero-norm and
-    non-finite vectors on either side are dropped before the crossJoin
-    (the squared norm must be positive and finite), as the GEMM kernel
-    drops them, so they yield no row instead of a NULL or NaN distance
-    or an ANSI divide-by-zero.
-    """
-    def scorable(df: DataFrame, vec: str) -> DataFrame:
-        sq = dot(F.col(vec), F.col(vec))
-        # Spark orders NaN above +inf, so this also drops NaN norms
-        return df.where((sq > 0) & (sq < float("inf")))
-
-    q = scorable(queries.select(F.col(query_id), F.col(query_vec)), query_vec)
-    joined = scorable(index, index_vec).crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.where(F.col(query_id) != F.col(index_id))
-    dist = cosine_distance(F.col(index_vec), F.col(query_vec))
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
-    w = Window.partitionBy(query_id).orderBy(F.col(dist_col).asc(), F.col(index_id).asc())
-    return (
-        joined.withColumn(dist_col, dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, index_id, dist_col, "rank")
-    )
 
 
 def _topk_rows(dist, ids, k: int):
@@ -124,7 +77,7 @@ def _topk_rows(dist, ids, k: int):
     return rows[keep], cols[keep]
 
 
-def knn_join_gemm(
+def knn_join(
     queries: DataFrame,
     index: DataFrame,
     k: int,
@@ -140,16 +93,21 @@ def knn_join_gemm(
     max_query_elems: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact brute-force kNN join on the BLAS path — same contract and
-    results as :func:`knn_join`, different physical strategy.
+    """Exact brute-force kNN join on the BLAS path.
 
-    The per-pair expression form evaluates ~Q·N·d interpreted lambda
-    ops; this one broadcasts the (collected) query matrix once per
-    executor via ``sc.broadcast`` — the query side is the broadcast
-    side by contract, exactly as in :func:`knn_join` — and scores each
-    Arrow batch of the index against it with one f64 GEMM per query
-    block, emitting only per-batch top-k candidates. The final global
-    top-k per query is one window over ≤ k rows per (query, batch).
+    Returns ``[query_id, vec_id, dist, rank]`` with rank 1..k per query,
+    deterministic ties via (dist, index_id). NULL, zero-norm and
+    non-finite vectors on either side yield no row: they have no cosine
+    distance. Contract: both id columns are integral and come back cast
+    to long, and the query side is collected to the driver, within the
+    element budget below.
+
+    The (collected) query matrix is broadcast once per executor via
+    ``sc.broadcast`` — the query side is the broadcast side by
+    contract — and each Arrow batch of the index is scored against it
+    with one f64 GEMM per query block, emitting only per-batch top-k
+    candidates. The final global top-k per query is one window over
+    ≤ k rows per (query, batch).
 
     Scale: the index never moves (scored in place, batch by batch) and
     carries NO per-row query payload (an earlier formulation packed
@@ -199,7 +157,7 @@ def knn_join_gemm(
     )
     if len(q_rows) > row_cap:
         raise ValueError(
-            f"knn_join_gemm collects the query side to the driver and the "
+            f"knn_join collects the query side to the driver and the "
             f"query side exceeds the collect budget (row cap {row_cap} = "
             f"min(max_queries={max_queries}, max_query_elems="
             f"{max_query_elems} / dim)); use knn_join_lsh for large query "
@@ -214,7 +172,7 @@ def knn_join_gemm(
         actual_elems = len(q_rows) * max_width
         if actual_elems > max_query_elems:
             raise ValueError(
-                f"knn_join_gemm: collected query matrix would be "
+                f"knn_join: collected query matrix would be "
                 f"{actual_elems} f64 elements (> max_query_elems="
                 f"{max_query_elems}); pass dim= so the guard applies "
                 f"before the collect, and use knn_join_lsh for this shape"
@@ -261,8 +219,8 @@ def knn_join_gemm(
                 # batch-local top-k by the SAME total order the final
                 # window uses, (dist, id): partition → survivors ≤ the
                 # kth distance → lexsort, cut at k (_topk_rows). Ties
-                # at the kth distance resolve identically to knn_join;
-                # an all-tied row costs no more than a full sort
+                # at the kth distance resolve as the window resolves
+                # them; an all-tied row costs no more than a full sort
                 r, c = _topk_rows(dist, ids, k)
                 yield pd.DataFrame(
                     {"query_id": qi[r], "vec_id": ids[c], "dist": dist[r, c]}
@@ -308,24 +266,13 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 
 
 def lsh_signature(vec_col, planes: list[list[float]]):
-    """Array of sign bits (0/1) of the vector projected on each plane —
-    pure JVM expression (zip_with/aggregate per plane). Oracle-exact
-    twin of :func:`lsh_signature_pandas`; kept for SQL replayability
-    and cross-impl tests."""
-    bits = [
-        (dot(vec_col, F.array(*[F.lit(v) for v in plane])) >= 0).cast("int")
-        for plane in planes
-    ]
-    return F.array(*bits)
-
-
-def lsh_signature_pandas(vec_col, planes: list[list[float]]):
-    """Vectorized twin of :func:`lsh_signature`: all plane projections
-    of an Arrow batch in ONE GEMM (rows × dim @ dim × planes) instead
-    of n_planes interpreted HOF dots per row (~10× at dim 64). Sign
-    bits are scale-free, so f64 summation-order drift vs the HOF form
-    can only flip a bit when a projection is within ~1e-12 of zero —
-    vanishing for non-degenerate data."""
+    """Array of sign bits (0/1) of the vector projected on each plane:
+    all plane projections of an Arrow batch in ONE GEMM (rows × dim @
+    dim × planes). The LSH oracles replay the bits in DuckDB with each
+    dot spelled out as a left-to-right sum; sign bits are scale-free,
+    so f64 summation-order drift between the two can only flip a bit
+    when a projection is within ~1e-12 of zero — vanishing for
+    non-degenerate data."""
     from pyspark.sql.functions import pandas_udf
 
     planes_t = [list(r) for r in zip(*planes)]  # dim × n_planes
@@ -422,7 +369,7 @@ def knn_join_lsh(
     planes = _hyperplanes(dim, n_planes, seed)
 
     def with_bands(df: DataFrame, vec: str, prefix: str) -> DataFrame:
-        sig = lsh_signature_pandas(F.col(vec), planes)
+        sig = lsh_signature(F.col(vec), planes)
         df = df.withColumn("_sig", sig)
         # band value: the slice of sign bits joined to a string key
         bands = F.array(*[
@@ -569,7 +516,7 @@ def _lsh_rung_recalls(
     planes = _hyperplanes(dim, n_planes, seed)
 
     def with_sig_bands(df: DataFrame, id_c: str, vec: str, prefix: str):
-        sig = lsh_signature_pandas(F.col(vec), planes)
+        sig = lsh_signature(F.col(vec), planes)
         df = df.select(id_c, vec).withColumn(f"{prefix}sig", sig)
         bands = F.array(*[
             F.struct(
@@ -699,7 +646,7 @@ def tune_lsh_bands(
     if n_planes < 1:
         raise ValueError(f"n_planes must be >= 1, got {n_planes}")
     if exact is None:
-        exact = knn_join_gemm(queries, index, k=k, dim=dim).localCheckpoint(
+        exact = knn_join(queries, index, k=k, dim=dim).localCheckpoint(
             eager=True
         )
     ladder = [b for b in range(1, n_planes + 1) if n_planes % b == 0]
@@ -847,28 +794,28 @@ def hard_negatives(
     irrelevant, which is exactly what a bi-encoder needs to learn
     from. ``positives`` is DF[query_id, index_id].
 
-    Exact form: score everything (the knn_join broadcast shape),
-    anti-join the positive pairs on (query, id), then one top-k
-    window — the exclusion happens BEFORE ranking, so negatives never
-    underfill however many positives a query has (a shortlist-then-
-    filter spelling can't promise that). At corpus scale swap the
-    scoring stage for the LSH/IVF candidate chains (operators/ann.py)
-    — the anti-join + window tail is unchanged.
+    Exact form: the top-(k + P) of :func:`knn_join`, where P is the
+    largest positive count of any query (one small agg job), then an
+    anti-join of the positive pairs on (query, id) and one top-k
+    window. At most P of a query's top-(k + P) are its positives, so
+    the k nearest non-positives are always among the rest: negatives
+    never underfill however many positives a query has (a fixed
+    shortlist-then-filter spelling can't promise that). NULL,
+    zero-norm and non-finite vectors yield no row, as in knn_join. At
+    corpus scale swap the scoring stage for the LSH/IVF candidate
+    chains (operators/ann.py) — the anti-join + window tail is
+    unchanged.
 
     Returns [query_id, index_id, dist, neg_rank] with neg_rank 1..k,
     ties deterministic on (dist, index_id)."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    q = F.broadcast(queries.select(F.col(query_id), F.col(query_vec)))
-    joined = index.crossJoin(q)
-    if exclude_self:
-        joined = joined.where(F.col(query_id) != F.col(index_id))
-    dist = cosine_distance(F.col(index_vec), F.col(query_vec))
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
-    scored = joined.withColumn(dist_col, dist).join(
-        positives.select(query_id, index_id), [query_id, index_id], "anti"
-    )
+    pos = positives.select(query_id, index_id)
+    n_pos = pos.groupBy(query_id).count().agg(F.max("count")).first()[0] or 0
+    scored = knn_join(
+        queries, index, k + n_pos, query_id, query_vec, index_id, index_vec,
+        dist_col, exclude_self=exclude_self, round_digits=round_digits,
+    ).join(pos, [query_id, index_id], "anti")
     w = Window.partitionBy(query_id).orderBy(F.col(dist_col).asc(), F.col(index_id).asc())
     return (
         scored.withColumn("neg_rank", F.row_number().over(w))
@@ -942,7 +889,7 @@ def ndcg_at_k(
 
 # --- strategy auto-dispatch (r9, VERDICT r8 "Next round #5") ----------
 
-# GEMM_MAX_QUERIES — knn_join_gemm collects the query side to the
+# GEMM_MAX_QUERIES — knn_join collects the query side to the
 # driver (its own hard cap, ~0.5 GB at 1M x dim 64).
 GEMM_MAX_QUERIES = 1_000_000
 # GEMM_MAX_QUERY_ELEMS — the dim-aware form of the same driver-collect
@@ -995,8 +942,7 @@ def choose_knn_strategy(
     Precedence: exact GEMM while brute force is affordable and the
     collected query MATRIX (n_queries·dim elements, not just rows —
     ADVICE r9) fits the driver budget, at every size down to one
-    query: the expression form wins only below ~3e5 pair-ops, by about
-    one job (SCALING.md), so it is not a strategy. Then the
+    query: :func:`knn_join` is the one exact kernel. Then the
     approximate strategies, SUB-LINEAR before flat — IVF when a
     dim-validated persisted f64 index exists (probe cost O(rows in
     probed lists), exact distances within the probed lists — the best
@@ -1183,7 +1129,7 @@ def knn_join_auto(
         n_queries, n_index, dim, ivf_available=ivf_ok, ivfpq_available=ivfpq_ok
     )
     if strategy == "gemm":
-        return knn_join_gemm(
+        return knn_join(
             queries, index, k, query_id, query_vec, index_id, index_vec,
             dist_col, exclude_self=exclude_self, round_digits=round_digits,
             dim=dim,

@@ -20,9 +20,8 @@ part of this repo's 100 TB mandate rather than a reference port.
 Scale shapes:
 * codebook: M×K rows, broadcast everywhere — never a shuffle side;
 * encode: the one-time index build — one squared-L2 GEMM per
-  subspace per Arrow batch (:func:`pq_encode_gemm`, the shape of
-  ann.assign_centroids_gemm); :func:`pq_encode` is its explode +
-  broadcast-join + ``min_by`` expression twin;
+  subspace per Arrow batch (:func:`pq_encode`, the shape of
+  ann.assign_centroids);
 * ADC scan: the probed lists' packed code rows (one ``(cid, id,
   codes)`` row of M narrow ints per vector) posexplode and
   broadcast-join the per-query M·K lookup table, then sum — the
@@ -75,7 +74,7 @@ from cli_rag_spark.operators.ann import (
     _read_back_schema,
     _train_quantizer,
     _write_sorted_lists,
-    assign_centroids_gemm,
+    assign_centroids,
     default_n_centroids,
     kmeans_refine,
 )
@@ -92,7 +91,6 @@ __all__ = [
     "pq_encode",
     "refine_pq_codebook",
     "knn_join_ivfpq",
-    "pq_encode_gemm",
     "default_pq_geometry",
     "default_rerank_depth",
     "residual_codebook",
@@ -195,51 +193,19 @@ def pq_encode(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """[id_col, m, code]: each vector's per-subspace nearest codeword
-    (squared L2, rounded, ties → lowest code). NULL vectors are
-    unscorable and dropped, as in :func:`pq_encode_gemm`."""
-    v = vectors.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-    )
-    ds = _d_sub(F.col("_v"), m_subspaces)
-    subs = v.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.lit(m_subspaces - 1))).alias("m"),
-        F.col("_v"),
-    ).select(
-        id_col, "m", F.slice("_v", F.col("m") * ds + 1, ds).alias("subvec")
-    )
-    scored = subs.join(F.broadcast(codebook), "m").withColumn(
-        "_d", F.round(l2_sq(F.col("subvec"), F.col("cvec")), round_digits)
-    )
-    return scored.groupBy(id_col, "m").agg(
-        F.min_by(F.col("code"), F.struct(F.col("_d"), F.col("code"))).alias("code")
-    )
+    """[id_col, m, code]: each vector's per-subspace nearest codeword —
+    the encoder every IVFPQ build runs. Squared L2 distances are
+    rounded to ``round_digits`` before the argmin and ties go to the
+    lowest code (codewords are scanned in ascending code order, so
+    NumPy's first-minimum argmin is that tie-break), which the DuckDB
+    oracles replay as a rounded ``list_sum(list_transform(...))``
+    ``row_number`` over (d2, code).
 
-
-def pq_encode_gemm(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    m_subspaces: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Arrow/GEMM twin of :func:`pq_encode`, the encoder every IVFPQ
-    build runs — same [id_col, m, code] result, pinned identical in
-    tests/test_pq.py (distances rounded to ``round_digits`` before
-    the argmin, ties → lowest code — codewords are scanned in
-    ascending code order so NumPy's first-minimum argmin IS the
-    min_by struct tie-break).
-
-    The interpreted-HOF encoder evaluates N·K·dim element ops through
-    per-element lambdas; at the r12 default geometry for a 2M × 64
-    corpus (m=8 × K=256) that is 3.3e10 ops — hours. Here the M
-    codebook matrices (M·K·d_sub doubles, tiny) ride into
-    ``mapInPandas`` as a closure and each Arrow batch is scored with
-    one squared-L2 GEMM expansion per subspace, emitting only the
-    N·M narrow code rows. NULL vectors are unscorable and dropped,
-    as in assign_centroids_gemm."""
+    The M codebook matrices (M·K·d_sub doubles, tiny) are collected
+    once and ride into ``mapInPandas`` as a closure; each Arrow batch
+    is scored with one squared-L2 GEMM expansion per subspace, emitting
+    only the N·M narrow code rows. NULL vectors are unscorable and
+    dropped."""
     import numpy as np
 
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -650,9 +616,9 @@ def build_ivfpq_index(
     assignment; ``refine_iters`` Lloyd-refines each PQ sub-codebook
     before encoding (both 0 → pure seeded, SQL-oracle-replayable).
     The corpus-side assignment is
-    :func:`~cli_rag_spark.operators.ann.assign_centroids_gemm` and the
-    encoder :func:`pq_encode_gemm`, each pinned bit-identical to its
-    expression twin in tests/test_pq.py. The assignment is computed
+    :func:`~cli_rag_spark.operators.ann.assign_centroids` and the
+    encoder :func:`pq_encode`, each pinned against its DuckDB replay
+    in tests/test_pq.py. The assignment is computed
     once per build and feeds both the residual lineage and ``lists``;
     the encoder's ``(id, m, code)`` rows are packed into ``lists`` once,
     at build time.
@@ -771,7 +737,7 @@ def build_ivfpq_index(
         # the N·C assignment runs once: it feeds the residual lineage
         # (read by the codebook seed, the refinement and the encoder)
         # and the lists
-        assign = assign_centroids_gemm(
+        assign = assign_centroids(
             vectors, centroids, id_col, vec_col, round_digits=round_digits,
         ).localCheckpoint(eager=True)
         if residual:
@@ -821,7 +787,7 @@ def build_ivfpq_index(
         # pack each vector's M (m, code) rows into one codes array in
         # subspace order, next to its list id
         lists = (
-            pq_encode_gemm(
+            pq_encode(
                 enc_src, codebook, m_subspaces, id_col, enc_col, round_digits
             )
             .groupBy(id_col)

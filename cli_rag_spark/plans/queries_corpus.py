@@ -241,9 +241,9 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): bucket embeddings by nearest
-    coarse centroid (the IVF assignment operator — broadcast crossJoin
-    + min_by, shuffle of N narrow rows), then mark rows with a
-    LOWER-ID near neighbor in the SAME cluster as dups. Within-cluster
+    coarse centroid (the IVF assignment operator — one GEMM per Arrow
+    batch against the collected centroids, no shuffle), then mark rows
+    with a LOWER-ID near neighbor in the SAME cluster as dups. Within-cluster
     scoring is the bucketed blocked-GEMM kernel (embedding_near_pairs
     with bucket_col="cid"): O(Σ cluster²) BLAS work, pair rows never
     materialize, and the f64 rounding matches the SQL oracle exactly

@@ -25,7 +25,6 @@ from cli_rag_spark.operators.ann import (
 from cli_rag_spark.operators.knn import (
     _hyperplanes,
     knn_join,
-    knn_join_gemm,
     knn_join_lsh,
 )
 from cli_rag_spark.operators.mmr import mmr_oracle_sql, mmr_rerank
@@ -201,16 +200,15 @@ def q_lsh_recall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_join_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every vector queries the whole index (k=3, self excluded) on
-    the GEMM physical path (knn_join_gemm): query blocks broadcast,
-    index scored in place partition-by-partition with one f64 matmul
-    per (block × partition) — the all-pairs workload the expression
-    form can't sustain at scale."""
+    """Every vector queries the whole index (k=3, self excluded):
+    query blocks broadcast, index scored in place
+    partition-by-partition with one f64 matmul per (block × partition)
+    — the all-pairs workload of the exact kernel."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = knn_join_gemm(queries, emb, k=3, exclude_self=True)
+    out = knn_join(queries, emb, k=3, exclude_self=True)
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy("query_id", "rank")
 
 
@@ -221,10 +219,9 @@ def q_knn_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture's all-pairs shape (500×500×64 = 1.6e7 pair-ops at
     sf0.01, 2000×2000×64 = 2.6e8 at sf0.1) sits inside the GEMM
     envelope at both scales — asserted in tests/test_knn.py, which
-    also pins the other choices on their shapes. The GEMM kernel is
-    bit-identical to the expression form, so the oracle is plain brute
-    force: the driver proves the dispatcher returns the exact answer,
-    whatever path it routed."""
+    also pins the other choices on their shapes. The oracle is plain
+    brute force: the driver proves the dispatcher returns the exact
+    answer, whatever path it routed."""
     from cli_rag_spark.operators.knn import knn_join_auto
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -619,9 +616,7 @@ def q_tuner_widths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # headline's most expensive entry, paid twice). Values unchanged:
     # both tuners scored against this exact frame before, just
     # re-derived.
-    from cli_rag_spark.operators.knn import knn_join_gemm
-
-    exact = knn_join_gemm(
+    exact = knn_join(
         qset, emb, k=TUNE_K, dim=LSH_DIM
     ).localCheckpoint(eager=True)
     # r16 (guide §2.6 — overlap independent jobs): the two ladder

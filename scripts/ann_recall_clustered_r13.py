@@ -94,7 +94,7 @@ def stage_main(spark, args) -> None:
     )
     from cli_rag_spark.operators.knn import (
         default_lsh_geometry,
-        knn_join_gemm,
+        knn_join,
         knn_join_lsh,
         rerank_exact,
     )
@@ -112,7 +112,7 @@ def stage_main(spark, args) -> None:
                       "n_index": n_index, "nq": nq, "k": k}), flush=True)
 
     t0 = time.perf_counter()
-    exact = knn_join_gemm(queries, emb, k=k, dim=dim).localCheckpoint(
+    exact = knn_join(queries, emb, k=k, dim=dim).localCheckpoint(
         eager=True
     )
     print(json.dumps({"row": "gemm_exact",
@@ -209,7 +209,7 @@ def stage_residual(spark, args) -> None:
     coverage-vs-R curve for the residual artifact beside the raw
     rows, plus the dispatched default chain."""
     from cli_rag_spark.operators.ann import default_n_probe
-    from cli_rag_spark.operators.knn import knn_join_gemm, rerank_exact
+    from cli_rag_spark.operators.knn import knn_join, rerank_exact
     from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
         build_ivfpq_index,
@@ -224,7 +224,7 @@ def stage_residual(spark, args) -> None:
     print(json.dumps({"stage": "residual", "corpus": sf_dir,
                       "n_index": n_index, "nq": nq, "k": k}), flush=True)
     t0 = time.perf_counter()
-    exact = knn_join_gemm(queries, emb, k=k, dim=dim).localCheckpoint(
+    exact = knn_join(queries, emb, k=k, dim=dim).localCheckpoint(
         eager=True
     )
     print(json.dumps({"row": "gemm_exact",
@@ -293,7 +293,7 @@ def stage_dim192(spark, args) -> None:
     from cli_rag_spark.operators.ann import default_n_probe
     from cli_rag_spark.operators.knn import (
         default_lsh_geometry,
-        knn_join_gemm,
+        knn_join,
         knn_join_lsh,
         rerank_exact,
     )
@@ -311,7 +311,7 @@ def stage_dim192(spark, args) -> None:
     print(json.dumps({"stage": "dim192", "dim": dim, "corpus": sf_dir,
                       "n_index": n_index, "nq": nq}), flush=True)
     t0 = time.perf_counter()
-    exact = knn_join_gemm(queries, emb, k=k, dim=dim).localCheckpoint(
+    exact = knn_join(queries, emb, k=k, dim=dim).localCheckpoint(
         eager=True
     )
     print(json.dumps({"row": "gemm_exact",
@@ -362,7 +362,7 @@ def stage_n8m(spark, args) -> None:
     """One measured point toward the predicted ~50M crossover: GEMM
     (linear in N) vs the IVFPQ probe (N^(3/4)) at N=8M."""
     from cli_rag_spark.operators.ann import default_n_probe
-    from cli_rag_spark.operators.knn import knn_join_gemm, rerank_exact
+    from cli_rag_spark.operators.knn import knn_join, rerank_exact
     from cli_rag_spark.sources.artifacts import read_json_sidecar
     from cli_rag_spark.operators.pq import (
         build_ivfpq_index,
@@ -376,7 +376,7 @@ def stage_n8m(spark, args) -> None:
     print(json.dumps({"stage": "n8m", "corpus": sf_dir,
                       "n_index": n_index, "nq": nq}), flush=True)
     t0 = time.perf_counter()
-    exact = knn_join_gemm(queries, emb, k=k, dim=dim).localCheckpoint(
+    exact = knn_join(queries, emb, k=k, dim=dim).localCheckpoint(
         eager=True
     )
     gemm_sec = round(time.perf_counter() - t0, 2)

@@ -192,11 +192,11 @@ def _ivf_recall_at_scale(spark, sf_dir) -> dict:
     """recall@3 of the grown-C probe vs EXACT ground truth, at BOTH
     probe widths — the measurement VERDICT r10 #1 demanded: the speed
     rows alone could certify an index that is fast and useless at
-    100×. Ground truth is knn_join_gemm over the same 10 queries (10·N
+    100×. Ground truth is knn_join over the same 10 queries (10·N
     ·dim pair-ops — ~1.3e9 at the 2M-vector 1000× dir, still inside
     the GEMM envelope). Not part of any timed row."""
     from cli_rag_spark.operators.ann import default_n_probe, knn_join_ivf
-    from cli_rag_spark.operators.knn import knn_join_gemm, topk_recall
+    from cli_rag_spark.operators.knn import knn_join, topk_recall
 
     emb, index, c, queries = _ivf_sqrtc_parts(spark, sf_dir)
     # two query sets: the in-sample set (each query IS an index row —
@@ -224,7 +224,7 @@ def _ivf_recall_at_scale(spark, sf_dir) -> dict:
     )
     out = {"C": c, "n_probe_rule": default_n_probe(c)}
     for qlabel, qset in (("", queries), ("_oos", perturbed)):
-        exact = knn_join_gemm(qset, emb, k=3, dim=64)
+        exact = knn_join(qset, emb, k=3, dim=64)
         for label, probe in (("fixed2", 2), ("rule", default_n_probe(c))):
             approx = knn_join_ivf(
                 qset, index, k=3, n_centroids=c, n_probe=probe,

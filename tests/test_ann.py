@@ -692,7 +692,7 @@ def test_ivf_rung_recalls_match_sequential(spark, sf_dir, tmp_path):
         knn_join_ivf,
         read_ivf_index,
     )
-    from cli_rag_spark.operators.knn import knn_join_gemm, topk_recall
+    from cli_rag_spark.operators.knn import knn_join, topk_recall
     from cli_rag_spark.sources.documents import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -705,7 +705,7 @@ def test_ivf_rung_recalls_match_sequential(spark, sf_dir, tmp_path):
         F.col("embedding").alias("query_vec"),
     )
     k = 3
-    exact = knn_join_gemm(q, emb, k=k, dim=64).localCheckpoint(eager=True)
+    exact = knn_join(q, emb, k=k, dim=64).localCheckpoint(eager=True)
     widths = [1, 2, 4, 8]
     batched = _ivf_rung_recalls(q, index, exact, k, c, widths)
     for w in widths:

@@ -1,12 +1,12 @@
-"""kNN physical-strategy equivalence: the GEMM path must reproduce
-the expression path exactly (same contract, different kernel) —
-SURVEY §5.2 layer 3 cross-impl checking."""
+"""The exact kNN kernel against the DuckDB replay the judged oracles
+use — SURVEY §5.2 layer 3 cross-engine checking."""
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
-from cli_rag_spark.operators.knn import knn_join, knn_join_gemm
+from cli_rag_spark.operators.knn import knn_join
 from cli_rag_spark.sources.documents import load_table
 
 
@@ -16,12 +16,66 @@ def _queries(emb, n):
     )
 
 
-def test_gemm_matches_expression_path(spark, sf_dir):
+def _duck(sf_dir: str | None = None):
+    """A DuckDB connection with the fixture's ``embeddings`` view."""
+    con = duckdb.connect()
+    if sf_dir is not None:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+        )
+    return con
+
+
+def _values(rows, id_col: str, vec_col: str) -> str:
+    """(id, vector) rows as a DuckDB table expression."""
+    body = ", ".join(f"({i}, {[float(x) for x in v]!r}::DOUBLE[])" for i, v in rows)
+    return f"SELECT * FROM (VALUES {body}) t({id_col}, {vec_col})"
+
+
+_FIXTURE_INDEX = "SELECT vec_id, embedding FROM embeddings"
+
+
+def _fixture_queries(n: int) -> str:
+    return (
+        "SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings "
+        f"WHERE vec_id < {n}"
+    )
+
+
+def _duck_distances(queries_sql: str, index_sql: str, exclude_self: bool, digits: int) -> str:
+    """The judged oracles' distance table: rounded
+    ``1 - list_cosine_similarity`` per (query, index row)."""
+    self_cut = "WHERE e.vec_id <> q.query_id" if exclude_self else ""
+    return f"""
+        q AS ({queries_sql}), e AS ({index_sql}), d AS (
+            SELECT q.query_id, e.vec_id,
+                   round(1 - list_cosine_similarity(
+                       e.embedding::DOUBLE[], q.query_vec::DOUBLE[]), {digits}) AS dist
+            FROM q, e {self_cut}
+        )"""
+
+
+def _duck_knn(con, queries_sql, index_sql, k, exclude_self=False, digits=6):
+    """Sorted ``(query_id, vec_id, dist, rank)`` rows of the DuckDB
+    kNN replay: each query's distances numbered by (dist, vec_id)."""
+    return sorted(con.execute(f"""
+        WITH {_duck_distances(queries_sql, index_sql, exclude_self, digits)}
+        SELECT query_id, vec_id, dist, rank FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY query_id ORDER BY dist, vec_id) AS rank
+            FROM d
+        ) WHERE rank <= {k}
+    """).fetchall())
+
+
+def test_knn_join_matches_duckdb_replay(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queries(emb, 25)
-    a = sorted(map(tuple, knn_join(q, emb, k=4, exclude_self=True).collect()))
-    b = sorted(map(tuple, knn_join_gemm(q, emb, k=4, exclude_self=True).collect()))
-    assert a == b
+    want = _duck_knn(
+        _duck(sf_dir), _fixture_queries(25), _FIXTURE_INDEX, 4, exclude_self=True
+    )
+    assert len(want) == 25 * 4
+    assert sorted(map(tuple, knn_join(q, emb, k=4, exclude_self=True).collect())) == want
 
 
 def test_gemm_multiblock(spark, sf_dir):
@@ -29,7 +83,7 @@ def test_gemm_multiblock(spark, sf_dir):
     duplicate or drop candidates."""
     emb = load_table(spark, sf_dir, "embeddings").repartition(7)
     q = _queries(emb, 60)
-    out = knn_join_gemm(q, emb, k=2, queries_per_block=16)
+    out = knn_join(q, emb, k=2, queries_per_block=16)
     rows = out.collect()
     assert len(rows) == 60 * 2
     per_q = {}
@@ -40,25 +94,34 @@ def test_gemm_multiblock(spark, sf_dir):
     assert all(r["dist"] == 0.0 for r in rows if r["rank"] == 1 and r["vec_id"] == r["query_id"])
 
 
-def test_lsh_signature_pandas_matches_expression(spark, sf_dir):
-    """The GEMM signature path must produce bit-identical signatures
-    to the HOF expression form the oracle SQL replays."""
-    from cli_rag_spark.operators.knn import (
-        _hyperplanes,
-        lsh_signature,
-        lsh_signature_pandas,
+def test_lsh_signature_matches_duckdb_replay(spark, sf_dir):
+    """The GEMM signature must produce bit-identical sign bits to the
+    spelled-out dots of the DuckDB LSH oracles."""
+    from cli_rag_spark.operators.knn import _hyperplanes, lsh_signature
+    from cli_rag_spark.plans.queries_vectors import (
+        LSH_DIM,
+        LSH_PLANES,
+        LSH_SEED,
+        _lsh_scored_ctes,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes(64, 16, seed=42)
-    both = emb.select(
-        "vec_id",
-        lsh_signature(F.col("embedding"), planes).alias("expr_sig"),
-        lsh_signature_pandas(F.col("embedding"), planes).alias("gemm_sig"),
-    ).collect()
-    assert len(both) > 0
-    for r in both:
-        assert list(r["expr_sig"]) == list(r["gemm_sig"]), r["vec_id"]
+    planes = _hyperplanes(LSH_DIM, LSH_PLANES, seed=LSH_SEED)
+    got = {
+        r["vec_id"]: list(r["sig"])
+        for r in emb.select(
+            "vec_id", lsh_signature(F.col("embedding"), planes).alias("sig")
+        ).collect()
+    }
+    bits = ", ".join(f"b{j}" for j in range(LSH_PLANES))
+    want = {
+        vid: list(sig)
+        for vid, sig in _duck(sf_dir).execute(
+            f"WITH {_lsh_scored_ctes()} SELECT vec_id, [{bits}] FROM sig"
+        ).fetchall()
+    }
+    assert len(want) > 0
+    assert got == want
 
 
 def test_lsh_recall_against_exact(spark, sf_dir):
@@ -85,24 +148,23 @@ def test_lsh_recall_against_exact(spark, sf_dir):
 def test_gemm_max_queries_guard(spark, sf_dir):
     """The driver collect is capped: exceeding max_queries must raise
     with a pointer at the LSH path, and a cap-sized run must still
-    match the expression path exactly."""
+    match the DuckDB replay exactly."""
     import pytest
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queries(emb, 25)
     with pytest.raises(ValueError, match="knn_join_lsh"):
-        knn_join_gemm(q, emb, k=2, max_queries=10)
-    a = sorted(map(tuple, knn_join(q, emb, k=2).collect()))
-    b = sorted(map(tuple, knn_join_gemm(q, emb, k=2, max_queries=25).collect()))
-    assert a == b
+        knn_join(q, emb, k=2, max_queries=10)
+    want = _duck_knn(_duck(sf_dir), _fixture_queries(25), _FIXTURE_INDEX, 2)
+    assert sorted(map(tuple, knn_join(q, emb, k=2, max_queries=25).collect())) == want
 
 
 def test_gemm_tie_boundary_matches_window_path(spark):
     """Ties at the kth distance: duplicate vectors mean several
     candidates share the kth rounded distance; the batch-local cut
     must keep every tied candidate so the global (dist, id) tiebreak
-    matches knn_join. Small batches force the tie to straddle
-    batch boundaries."""
+    matches the DuckDB replay's window. Small batches force the tie to
+    straddle batch boundaries."""
     vecs = [
         (i, [1.0, 0.0]) for i in range(6)      # identical: all dist 0 to [1,0]
     ] + [
@@ -110,9 +172,11 @@ def test_gemm_tie_boundary_matches_window_path(spark):
     ]
     index = spark.createDataFrame(vecs, ["vec_id", "embedding"]).repartition(5)
     q = spark.createDataFrame([(100, [1.0, 0.0])], ["query_id", "query_vec"])
-    a = sorted(map(tuple, knn_join(q, index, k=3).collect()))
-    b = sorted(map(tuple, knn_join_gemm(q, index, k=3).collect()))
-    assert a == b
+    b = sorted(map(tuple, knn_join(q, index, k=3).collect()))
+    assert b == _duck_knn(
+        _duck(), _values([(100, [1.0, 0.0])], "query_id", "query_vec"),
+        _values(vecs, "vec_id", "embedding"), 3,
+    )
     # the id tiebreak must pick the SMALLEST ids among the dist-0 ties
     assert [r[1] for r in sorted(b, key=lambda r: r[3])] == [0, 1, 2]
 
@@ -121,12 +185,15 @@ def test_gemm_heavy_ties_across_batches_and_blocks(spark, sf_dir):
     """Many queries, distances rounded to 2 digits (heavily tied) and
     self-matches excluded: with the index in 7 partitions and 16-query
     blocks, kth-distance ties straddle both batch and query-block
-    boundaries, and the GEMM path must still return exactly
-    knn_join's rows."""
+    boundaries, and knn_join must still return exactly the DuckDB
+    replay's rows."""
     emb = load_table(spark, sf_dir, "embeddings").repartition(7)
     q = _queries(emb, 60)
-    a = sorted(map(tuple, knn_join(q, emb, k=5, exclude_self=True, round_digits=2).collect()))
-    b = sorted(map(tuple, knn_join_gemm(
+    a = _duck_knn(
+        _duck(sf_dir), _fixture_queries(60), _FIXTURE_INDEX, 5,
+        exclude_self=True, digits=2,
+    )
+    b = sorted(map(tuple, knn_join(
         q, emb, k=5, exclude_self=True, round_digits=2, queries_per_block=16
     ).collect()))
     assert len(a) == 60 * 5
@@ -136,14 +203,13 @@ def test_gemm_heavy_ties_across_batches_and_blocks(spark, sf_dir):
 def test_gemm_zero_norm_vectors_dont_poison_batch(spark):
     """A zero-norm index vector scores NaN against every query; the
     batch-local cut must still keep the finite neighbors (a NaN kth
-    threshold would discard the whole batch) and drop the NaN rows,
-    exactly like the expression path's isfinite contract."""
+    threshold would discard the whole batch) and drop the NaN rows."""
     index = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
         ["vec_id", "embedding"],
     ).repartition(3)  # small batches: some contain the zero vector
     q = spark.createDataFrame([(100, [1.0, 0.0])], ["query_id", "query_vec"])
-    rows = sorted(knn_join_gemm(q, index, k=3).collect(), key=lambda r: r["rank"])
+    rows = sorted(knn_join(q, index, k=3).collect(), key=lambda r: r["rank"])
     assert [r["vec_id"] for r in rows] == [1, 3, 2]
     assert all(r["vec_id"] != 0 for r in rows)
 
@@ -340,6 +406,46 @@ def test_hard_negatives_excludes_self(spark):
     assert [r["vec_id"] for r in rows] == [2]
 
 
+def test_hard_negatives_cut_matches_duckdb_replay(spark):
+    """hard_negatives ranks knn_join's top-(k + P), P the largest
+    positive count of any query, so it must equal the DuckDB replay
+    that anti-joins the positives from EVERY distance: one query has
+    no positive, and the other's positive 4 ties the (k + P)-th
+    distance, where the id tiebreak keeps 5 and cuts 6."""
+    import math
+
+    from cli_rag_spark.operators.knn import hard_negatives
+
+    angles = {1: 0.1, 2: 0.2, 3: 0.3, 4: 0.3, 5: 0.3, 6: 0.3, 7: 0.5}
+    vecs = [(i, [math.cos(t), math.sin(t)]) for i, t in angles.items()]
+    qs = [(100, [1.0, 0.0]), (101, [1.0, 0.0])]
+    pos = [(101, 1), (101, 4)]
+    index = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(qs, "query_id long, query_vec array<double>")
+    positives = spark.createDataFrame(pos, "query_id long, vec_id long")
+    got = sorted(map(tuple, hard_negatives(queries, index, positives, k=3).collect()))
+    pos_sql = ", ".join(f"({q}, {v})" for q, v in pos)
+    want = sorted(_duck().execute(f"""
+        WITH {_duck_distances(_values(qs, "query_id", "query_vec"),
+                              _values(vecs, "vec_id", "embedding"), True, 6)},
+        pos AS (SELECT * FROM (VALUES {pos_sql}) t(query_id, vec_id)),
+        neg AS (
+            SELECT * FROM d WHERE NOT EXISTS (
+                SELECT 1 FROM pos
+                WHERE pos.query_id = d.query_id AND pos.vec_id = d.vec_id)
+        )
+        SELECT query_id, vec_id, dist, neg_rank FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY query_id ORDER BY dist, vec_id) AS neg_rank
+            FROM neg
+        ) WHERE neg_rank <= 3
+    """).fetchall())
+    assert [(r[0], r[1]) for r in got] == [
+        (100, 1), (100, 2), (100, 3), (101, 2), (101, 3), (101, 5)
+    ]
+    assert got == want
+
+
 def test_hard_negatives_k_guard(spark):
     import pytest as _pytest
 
@@ -454,30 +560,32 @@ def test_knn_join_auto_small_shape_gemm_plan_and_equivalence(spark, sf_dir):
 
 def test_degenerate_rows_one_answer_on_every_route(spark):
     """NULL, zero-norm and NaN vectors have no cosine distance:
-    knn_join, knn_join_gemm, and knn_join_auto at the default shape and
-    at a hinted 10,000 × 10,000 shape return the same rows — none for
-    the degenerate index rows."""
-    from cli_rag_spark.operators.knn import knn_join_auto
+    knn_join, knn_join_auto at the default shape and at a hinted
+    10,000 × 10,000 shape, and hard_negatives return the same rows —
+    none for the degenerate index rows."""
+    from cli_rag_spark.operators.knn import hard_negatives, knn_join_auto
 
     q = spark.createDataFrame(
         [(1, [1.0, 0.0])], "query_id long, query_vec array<double>"
     )
+    no_pos = spark.createDataFrame([], "query_id long, vec_id long")
+    # 1 - 1/sqrt(1.01) and 1 - 1/sqrt(5), rounded to 6 digits
+    want = {(1, 4, 0.004963, 1), (1, 2, 0.552786, 2)}
     for bad in (None, [0.0, 0.0], [float("nan"), 1.0]):
         idx = spark.createDataFrame(
             [(1, bad), (2, [1.0, 2.0]), (4, [1.0, 0.1])],
             "vec_id long, embedding array<double>",
         )
-        want = {(1, 4, 1), (1, 2, 2)}
         for out in (
             knn_join(q, idx, k=2),
-            knn_join_gemm(q, idx, k=2),
             knn_join_auto(q, idx, k=2),
             knn_join_auto(q, idx, k=2, n_queries=10_000, n_index=10_000),
+            # the bad row carries the query's id: keep self rows, so
+            # only its vector can drop it
+            hard_negatives(q, idx, no_pos, k=2, exclude_self=False),
         ):
-            rows = out.collect()
-            assert {(r["query_id"], r["vec_id"], r["rank"]) for r in rows} == want
-            assert all(r["dist"] is not None for r in rows)
-    # a degenerate QUERY yields no row on either kernel
+            assert {tuple(r) for r in out.collect()} == want
+    # a degenerate QUERY yields no row
     idx = spark.createDataFrame(
         [(2, [1.0, 2.0]), (4, [1.0, 0.1])], "vec_id long, embedding array<double>"
     )
@@ -486,7 +594,7 @@ def test_degenerate_rows_one_answer_on_every_route(spark):
         "query_id long, query_vec array<double>",
     )
     assert knn_join(dq, idx, k=2).collect() == []
-    assert knn_join_gemm(dq, idx, k=2).collect() == []
+    assert hard_negatives(dq, idx, no_pos, k=2).collect() == []
 
 
 def test_knn_join_auto_ivf_path_with_validated_index(spark, sf_dir, tmp_path):
@@ -621,7 +729,7 @@ def test_choose_knn_strategy_gemm_elems_gate():
 
 
 def test_gemm_query_elems_guard(spark, sf_dir):
-    """knn_join_gemm bounds the driver collect in ELEMENTS: with dim
+    """knn_join bounds the driver collect in ELEMENTS: with dim
     passed the cap applies BEFORE the collect (row_cap = elems/dim);
     without dim the collected rows' actual width is re-checked."""
     import pytest
@@ -629,11 +737,11 @@ def test_gemm_query_elems_guard(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queries(emb, 5)
     with pytest.raises(ValueError, match="collect budget"):
-        knn_join_gemm(q, emb, k=1, dim=64, max_query_elems=64)
+        knn_join(q, emb, k=1, dim=64, max_query_elems=64)
     with pytest.raises(ValueError, match="max_query_elems"):
-        knn_join_gemm(q, emb, k=1, max_query_elems=64)
+        knn_join(q, emb, k=1, max_query_elems=64)
     # generous budget: unchanged results
-    ok = knn_join_gemm(q, emb, k=2, dim=64)
+    ok = knn_join(q, emb, k=2, dim=64)
     want = {tuple(r) for r in knn_join(q, emb, k=2).collect()}
     assert {tuple(r) for r in ok.collect()} == want
 
@@ -757,8 +865,6 @@ def test_gemm_null_lead_vector_still_guarded(spark):
     width before the collect when dim is omitted)."""
     import pytest
 
-    from cli_rag_spark.operators.knn import knn_join_gemm
-
     wide = [float(i) for i in range(64)]
     q = spark.createDataFrame(
         [(1, None), (2, wide), (3, wide)],
@@ -771,10 +877,10 @@ def test_gemm_null_lead_vector_still_guarded(spark):
     # even though the first row is NULL (the old first-row check let
     # this straight through to the scorer)
     with pytest.raises(ValueError, match="max_query_elems"):
-        knn_join_gemm(q, idx, k=1, max_query_elems=64)
+        knn_join(q, idx, k=1, max_query_elems=64)
     # same shape, generous budget: scores fine; the NULL query row is
     # unrepresentable in the GEMM operand and drops
-    ok = knn_join_gemm(q, idx, k=1).collect()
+    ok = knn_join(q, idx, k=1).collect()
     assert {r["query_id"] for r in ok} == {2, 3}
 
 
@@ -1125,7 +1231,6 @@ def test_lsh_rung_recalls_match_sequential(spark, sf_dir):
 
     from cli_rag_spark.operators.knn import (
         _lsh_rung_recalls,
-        knn_join_gemm,
         knn_join_lsh,
         topk_recall,
     )
@@ -1135,7 +1240,7 @@ def test_lsh_rung_recalls_match_sequential(spark, sf_dir):
     )
     q = _queries(emb, 8)
     k = 3
-    exact = knn_join_gemm(q, emb, k=k, dim=64).localCheckpoint(eager=True)
+    exact = knn_join(q, emb, k=k, dim=64).localCheckpoint(eager=True)
     for batch in ([1, 2], [4, 8], [8, 16], [16]):
         batched = _lsh_rung_recalls(
             q, emb, exact, k, 64, batch, n_planes=16, seed=42

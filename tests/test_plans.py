@@ -448,12 +448,13 @@ def test_late_r7_plan_shapes(spark, sf_dir):
     assert "Exchange hashpartitioning(afp#" in plan
     assert "Exchange hashpartitioning(payload" not in plan
 
-    # hard negatives: query side broadcasts (the index never moves),
-    # positives exclude via a real anti join, ranking via one window
+    # hard negatives: query side broadcasts (the index never moves, it
+    # is scored in place by knn_join's GEMM), positives exclude via a
+    # real anti join, ranking via one window
     plan = _plan(spark, sf_dir, "hard_negative_mining")
-    assert "BroadcastNestedLoopJoin" in plan  # scored crossJoin, build=queries
+    assert "MapInPandas" in plan
     assert "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
     # Q21 shape: the double correlation is semi + anti keyed joins on
     # the pre-aggregated grain — no nested-loop, no cartesian

@@ -486,57 +486,76 @@ def _with_null_vector_row(spark, emb):
     return emb.unionByName(null_row)
 
 
-def test_assign_centroids_gemm_matches_hof(spark, sf_dir):
-    """The Arrow/GEMM assignment twin is bit-identical to the
-    interpreted-HOF crossJoin form under both metrics — the contract
-    that lets every index build assign on GEMM while the SQL oracle
-    replays the HOF form — including a NULL vector, which both drop."""
-    from pyspark.sql import functions as F
+def _duck_rows(sf_dir: str, sql: str) -> set:
+    """Rows of ``sql`` run by DuckDB over the fixture's ``embeddings``."""
+    import duckdb
 
-    from cli_rag_spark.operators.ann import (
-        assign_centroids,
-        assign_centroids_gemm,
-        seed_centroids,
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
     )
+    return set(con.execute(sql).fetchall())
+
+
+def test_assign_centroids_matches_duckdb_replay(spark, sf_dir):
+    """The GEMM assignment equals the oracles' DuckDB replay under both
+    metrics — rounded cosine (``_assign_cte``) and rounded squared L2
+    summed left to right, each argmin tie-broken by the lower cid —
+    and a NULL vector gets no row."""
+    from cli_rag_spark.operators.ann import assign_centroids, seed_centroids
+    from cli_rag_spark.plans.queries_vectors import _assign_cte
     from cli_rag_spark.sources.documents import load_table
 
     emb = _with_null_vector_row(
         spark, load_table(spark, sf_dir, "embeddings")
     )
     cent = seed_centroids(emb, 8)
+    seeds = """cent AS (
+        SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
+        FROM embeddings WHERE vec_id < 8
+    )"""
+    l2 = """round(list_sum(list_transform(range(1, 65),
+        i -> (e.embedding[i]::DOUBLE - c.cvec[i]) * (e.embedding[i]::DOUBLE - c.cvec[i]))), 6)"""
+    want = {
+        "cosine": _duck_rows(
+            sf_dir, f"WITH {seeds}, {_assign_cte('a', 'cent')} SELECT * FROM a"
+        ),
+        "l2": _duck_rows(sf_dir, f"""
+            WITH {seeds}
+            SELECT vec_id, cid FROM (
+                SELECT e.vec_id, c.cid, row_number() OVER (
+                    PARTITION BY e.vec_id ORDER BY {l2}, c.cid) AS rn
+                FROM embeddings e, cent c
+            ) WHERE rn = 1
+        """),
+    }
     for metric in ("cosine", "l2"):
-        hof = {
+        got = {
             (r["vec_id"], r["cid"])
             for r in assign_centroids(emb, cent, metric=metric).collect()
         }
-        gemm = {
-            (r["vec_id"], r["cid"])
-            for r in assign_centroids_gemm(emb, cent, metric=metric).collect()
-        }
-        assert hof == gemm
+        assert len(want[metric]) == 500
+        assert got == want[metric], metric
 
 
-def test_pq_encode_gemm_matches_hof(spark, sf_dir):
-    """The Arrow/GEMM encoder twin is bit-identical to the
-    interpreted-HOF pq_encode — the contract that lets
-    build_ivfpq_index encode on GEMM (same rounded-then-argmin, ties ->
-    lowest code; a NULL vector gets no code in either)."""
-    from pyspark.sql import functions as F
-
-    from cli_rag_spark.operators.pq import (
-        build_pq_codebook,
-        pq_encode,
-        pq_encode_gemm,
-    )
+def test_pq_encode_matches_duckdb_replay(spark, sf_dir):
+    """The GEMM encoder equals the IVFPQ oracles' DuckDB replay (the
+    ``codes`` CTE: rounded squared L2 per subspace, ties -> lowest
+    code) on the seeded codebook; a NULL vector gets no code."""
+    from cli_rag_spark.operators.pq import build_pq_codebook, pq_encode
+    from cli_rag_spark.plans.queries_vectors import _IVFPQ_EST_CTES, PQ_K, PQ_M
     from cli_rag_spark.sources.documents import load_table
 
     emb = _with_null_vector_row(
         spark, load_table(spark, sf_dir, "embeddings")
     )
-    cb = build_pq_codebook(emb, 4, 16)
-    hof = {tuple(r) for r in pq_encode(emb, cb, 4).collect()}
-    gemm = {tuple(r) for r in pq_encode_gemm(emb, cb, 4).collect()}
-    assert hof == gemm
+    cb = build_pq_codebook(emb, PQ_M, PQ_K)
+    got = {tuple(r) for r in pq_encode(emb, cb, PQ_M).collect()}
+    want = _duck_rows(
+        sf_dir, f"WITH {_IVFPQ_EST_CTES} SELECT vec_id, m, code FROM codes"
+    )
+    assert len(want) == 500 * PQ_M
+    assert got == want
 
 
 def test_build_ivfpq_residual_flag_default_and_optout(
@@ -706,7 +725,7 @@ def _crash_encoders(monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("encoder crashed")
 
-    monkeypatch.setattr(pq_mod, "pq_encode_gemm", boom)
+    monkeypatch.setattr(pq_mod, "pq_encode", boom)
 
 
 def _assert_crashed_rebuild_keeps_artifact(

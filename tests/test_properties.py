@@ -151,7 +151,7 @@ def _distance_blocks(draw):
 @given(_distance_blocks())
 @settings(max_examples=300, deadline=None)
 def test_gemm_partial_topk_equals_stable_double_argsort(block):
-    """knn_join_gemm's batch-local selection (partition → survivors →
+    """knn_join's batch-local selection (partition → survivors →
     lexsort) keeps exactly the (row, col) pairs, in the same order, as
     a full stable double argsort: columns pre-ordered by id, a stable
     sort on dist, the first min(k, cols) per row, non-finite dropped."""
