@@ -7,6 +7,4 @@ from cli_rag_spark.functions.vectors import (  # noqa: F401
     cosine_similarity,
     dot,
     l2_norm,
-    l2_normalize,
-    vector_mean,
 )

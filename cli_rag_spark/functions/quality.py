@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.let import let
 from cli_rag_spark.functions.text import STOPWORDS, tokens
 
 # Gopher-ish acceptance thresholds (A1.1, adapted: the corpus has no
@@ -63,14 +64,12 @@ def top_word_fraction(text: Column) -> Column:
     """Fraction of tokens equal to the single most frequent token —
     Gopher's repetition signal reduced to words. max over distinct
     tokens of its occurrence count, divided by token count."""
-    toks = _toks(text)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda d: F.size(F.filter(toks, lambda t: t == d)),
-        )
-    )
-    return F.when(F.size(toks) > 0, top.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
+    return let(_toks(text), lambda toks: F.when(
+        F.size(toks) > 0,
+        F.array_max(F.transform(
+            F.array_distinct(toks), lambda d: F.size(F.filter(toks, lambda t: t == d))
+        )).cast("double") / F.size(toks),
+    ).otherwise(F.lit(0.0)))
 
 
 def duplicate_word_fraction(text: Column) -> Column:

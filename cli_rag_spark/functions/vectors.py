@@ -30,10 +30,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _as_double(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     """Sequential-sum dot product of two array columns (f64)."""
     return F.aggregate(
@@ -55,12 +51,6 @@ def l2_sq(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize; zero vectors map to NULL elements (caller filters)."""
-    n = l2_norm(a)
-    return F.transform(_as_double(a), lambda x: x / n)
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
@@ -96,10 +86,3 @@ def paired_cosine_distance(a: Column, b: Column) -> Column:
             return pd.Series(1.0 - num / den)
 
     return _paired(a, b)
-
-
-def vector_mean(a: Column) -> Column:
-    """Elementwise mean is an aggregate, not a scalar — see
-    ``operators/ann.py`` for centroid computation; this helper is the
-    scalar mean of one vector's elements (used by quality checks)."""
-    return F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x) / F.size(a)

@@ -36,6 +36,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.let import let
 from cli_rag_spark.functions.text import tokens
 
 _SEP = "|"
@@ -75,21 +76,19 @@ def _initial_symbols(word) -> F.Column:
 def pair_counts(syms_freq: DataFrame) -> DataFrame:
     """(a, b, n): corpus-weighted adjacent-pair frequencies of the
     current symbol sequences. explode + groupBy — map-side combined."""
-    arr = F.filter(F.split(F.col("syms"), _SEP_RE), lambda x: x != "")
+    syms = F.filter(F.split(F.col("syms"), _SEP_RE), lambda x: x != "")
     pairs = syms_freq.select(
         "freq",
-        F.explode(
-            F.when(
-                F.size(arr) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(arr) - 1),
-                    lambda i: F.struct(
-                        F.element_at(arr, i).alias("a"),
-                        F.element_at(arr, i + 1).alias("b"),
-                    ),
+        F.explode(let(syms, lambda arr: F.when(
+            F.size(arr) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(arr) - 1),
+                lambda i: F.struct(
+                    F.element_at(arr, i).alias("a"),
+                    F.element_at(arr, i + 1).alias("b"),
                 ),
-            ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-        ).alias("p"),
+            ),
+        ).otherwise(F.array().cast("array<struct<a:string,b:string>>")))).alias("p"),
     )
     return pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b")).agg(
         F.sum("freq").alias("n")

@@ -41,6 +41,7 @@ from cli_rag_spark.functions.hashing import (
     md5_int60,
     minhash_coeffs,
 )
+from cli_rag_spark.functions.let import let
 from cli_rag_spark.functions.text import fingerprint, tokens, word_shingles
 from cli_rag_spark.session import spread_small_input
 
@@ -775,19 +776,13 @@ def dedup_spans(
             f"column(s) {sorted(taken)} collide with dedup_spans "
             f"internal names {sorted(reserved)}"
         )
-    words = F.split(F.col(text_col), " ")
-    n_segs = F.ceil(F.size(words) / F.lit(span_words)).cast("int")
     segs = df.select(
         F.col(id_col),
         *[F.col(c) for c in carry],
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_segs - 1),
-                lambda i: F.array_join(
-                    F.slice(words, i * span_words + 1, span_words), " "
-                ),
-            )
-        ).alias("seg_idx", "seg"),
+        F.posexplode(let(F.split(F.col(text_col), " "), lambda words: F.transform(
+            F.sequence(F.lit(0), F.ceil(F.size(words) / F.lit(span_words)).cast("int") - 1),
+            lambda i: F.array_join(F.slice(words, i * span_words + 1, span_words), " "),
+        ))).alias("seg_idx", "seg"),
     ).withColumn("_fp", F.md5(F.col("seg")))
     if checkpoint:
         # the segment stream fans into BOTH the first-occurrence

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
+from cli_rag_spark.functions.let import let
+
 DEFAULT_DIM = 8
 
 
@@ -45,7 +47,8 @@ def mock_embedding_expr(text: Column, dim: int = DEFAULT_DIM) -> Column:
     dim_i = (md5_int60(i || '|' || text) % 10000) / 10000 - 0.5, then
     L2-normalized. Identical formula runs in DuckDB (the oracle), so
     chunk→embed→index→search pipelines are value-checkable without a
-    model server. JVM-side only — no Python in the plan.
+    model server. JVM-side only — no Python in the plan. The vector and
+    its norm are bound once per row with :func:`let`: ``dim`` md5s a row.
     """
     raw = [
         (
@@ -54,9 +57,10 @@ def mock_embedding_expr(text: Column, dim: int = DEFAULT_DIM) -> Column:
         ).cast("double") / 10000.0 - 0.5
         for i in range(dim)
     ]
-    vec = F.array(*raw)
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
-    return F.transform(vec, lambda x: F.round(x / norm, 9))
+    return let(F.array(*raw), lambda vec: let(
+        F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x)),
+        lambda norm: F.transform(vec, lambda x: F.round(x / norm, 9)),
+    ))
 
 
 def mock_embedding_sql(text_expr: str, dim: int = DEFAULT_DIM) -> str:

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.let import let
+
 Q_MAX = 127
 
 
@@ -33,12 +35,12 @@ def quantize_expr(vec: Column) -> tuple[Column, Column]:
     """(q: array<tinyint>, scale: double). NULL scale ⇔ zero vector."""
     scale = (max_abs(vec) / F.lit(float(Q_MAX)))
     scale = F.when(scale > 0, scale)
-    q = F.transform(
+    q = let(scale, lambda s: F.transform(
         vec,
-        lambda x: F.when(scale.isNull(), F.lit(0))
-        .otherwise(F.floor(x.cast("double") / scale + F.lit(0.5)))
+        lambda x: F.when(s.isNull(), F.lit(0))
+        .otherwise(F.floor(x.cast("double") / s + F.lit(0.5)))
         .cast("tinyint"),
-    )
+    ))
     return q, scale
 
 

@@ -105,12 +105,8 @@ def q_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     qvec = mock_embedding_expr(F.lit(QUERY_TEXT), DEFAULT_DIM)
     shortlist = (
-        docs.select(
-            "doc_id",
-            F.round(
-                cosine_distance(mock_embedding_expr(F.col("text"), DEFAULT_DIM), qvec), 6
-            ).alias("_d"),
-        )
+        docs.withColumn("embedding", mock_embedding_expr(F.col("text"), DEFAULT_DIM))
+        .select("doc_id", F.round(cosine_distance(F.col("embedding"), qvec), 6).alias("_d"))
         .orderBy(F.col("_d").asc(), F.col("doc_id").asc())
         .limit(MAXSIM_SHORTLIST)
         .select("doc_id")

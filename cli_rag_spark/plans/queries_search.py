@@ -37,12 +37,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cosine_topk_docs(docs: DataFrame) -> DataFrame:
     qvec = mock_embedding_expr(F.lit(QUERY), DEFAULT_DIM)
     top = (
-        docs.select(
-            "doc_id",
-            F.round(
-                cosine_distance(mock_embedding_expr(F.col("text"), DEFAULT_DIM), qvec), 6
-            ).alias("dist"),
-        )
+        docs.withColumn("embedding", mock_embedding_expr(F.col("text"), DEFAULT_DIM))
+        .select("doc_id", F.round(cosine_distance(F.col("embedding"), qvec), 6).alias("dist"))
         .orderBy(F.col("dist").asc(), F.col("doc_id").asc())
         .limit(TOPK)
     )

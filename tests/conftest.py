@@ -20,6 +20,20 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def untruncated_plans(spark):
+    """Plan strings with no field list elided, so expression counts in
+    ``queryExecution()`` strings are exact."""
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "100000")
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.let import let
 from cli_rag_spark.operators.context import assemble_context, rag_prompt
 from cli_rag_spark.operators.embed import embed, mock_embed_py, mock_embedding_expr
 from cli_rag_spark.operators.index import DimensionError, build_index, validate_dimension
@@ -45,6 +46,44 @@ class TestMockEmbedder:
         spark_vec = embed(df, mode="mock", dim=8).collect()[0]["embedding"]
         py_vec = mock_embed_py("some text", 8)
         assert all(abs(a - b) < 1e-9 for a, b in zip(spark_vec, py_vec))
+
+    @pytest.mark.parametrize("dim", [1, 8, 64])
+    def test_plan_evaluates_each_md5_once(self, spark, untruncated_plans, dim):
+        # the raw vector and its norm are bound once per row, not
+        # recomputed inside the per-element normalize lambda
+        df = spark.createDataFrame([("a",)], "t string")
+        assert _md5_count(df.select(mock_embedding_expr(F.col("t"), dim).alias("e"))) == dim
+
+    @pytest.mark.parametrize("dim", [1, 8, 64])
+    def test_bit_identical_to_python_twin(self, spark, dim):
+        chunk = ("table scan hash join " * 30)[:500]
+        df = spark.createDataFrame([(0, ""), (1, None), (2, chunk)], "i int, t string")
+        got = {
+            r.i: r.e
+            for r in df.select("i", mock_embedding_expr(F.col("t"), dim).alias("e")).collect()
+        }
+        assert got[0] == mock_embed_py("", dim)
+        assert got[1] == [None] * dim
+        assert got[2] == mock_embed_py(chunk, dim)
+
+
+def _md5_count(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("md5(")
+
+
+def test_let_binds_value_once_and_passes_null(spark, untruncated_plans):
+    df = spark.createDataFrame([("a",), (None,)], "t string")
+    out = df.select(
+        F.col("t"),
+        let(F.md5(F.col("t")), lambda v: F.struct(
+            v.isNull().alias("is_null"),
+            F.transform(F.array(*map(F.lit, "123")), lambda x: F.concat(v, x)).alias("xs"),
+        )).alias("r"),
+    )
+    assert _md5_count(out) == 1
+    got = {row.t: (row.r.is_null, row.r.xs) for row in out.collect()}
+    h = "0cc175b9c0f1b6a831c399e269772661"  # md5("a")
+    assert got == {"a": (False, [h + "1", h + "2", h + "3"]), None: (True, [None] * 3)}
 
 
 class TestIndexBuild:

@@ -7,9 +7,12 @@ or adds a full sort should fail HERE, not at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import __spark_entry__ as entrymod
+from cli_rag_spark.operators.embed import DEFAULT_DIM
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -21,6 +24,16 @@ def test_topk_never_full_sorts(spark, sf_dir):
     for name in ("cosine_topk", "hamming_topk", "quantized_topk", "mock_index_topk"):
         plan = _plan(spark, sf_dir, name)
         assert "TakeOrderedAndProject" in plan, name
+
+
+def test_inline_cosine_sites_embed_text_once(spark, sf_dir, untruncated_plans):
+    # cosine_distance names its operand three times (dot and both
+    # norms); the text embedding is staged as a column, so the plan
+    # evaluates its DEFAULT_DIM md5s once per row, not three times
+    for name in ("hybrid_rrf_topk", "maxsim_rerank"):
+        df = entrymod.queries()[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"md5\((cast\()?concat\(\d+\|, text#", plan)) == DEFAULT_DIM, name
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
